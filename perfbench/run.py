@@ -54,8 +54,9 @@ def fail(msg):
 def source_digest():
     """Digest of everything the build reads, so a changed checkout rebuilds."""
     h = hashlib.sha256()
-    tops = [os.path.join(ROOT, "src", "main"), os.path.join(HERE, "src"),
-            os.path.join(HERE, "build.sbt"), os.path.join(HERE, "project", "build.properties")]
+    tops = [os.path.join(ROOT, "src", "main"), os.path.join(ROOT, "build.sbt"),
+            os.path.join(HERE, "src"), os.path.join(HERE, "build.sbt"),
+            os.path.join(HERE, "project", "build.properties")]
     for top in tops:
         paths = [top] if os.path.isfile(top) else sorted(
             os.path.join(d, f) for d, _, fs in os.walk(top) for f in fs)
