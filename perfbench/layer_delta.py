@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Layer-delta report: compares the per-layer metrics of traced runs.
 
-    python3 perfbench/run.py --workload ingest_gate --seed 1 --seconds 10 --trace 1 \
+    python3 perfbench/run.py --workload ingest_gate --seed 1 --seconds 1 --trace 1 \
         --keep-record base-gate.json          # on the base commit
     python3 perfbench/run.py ... --keep-record new-gate.json    # on the change
     python3 perfbench/layer_delta.py --base base-*.json --new new-*.json

@@ -10,9 +10,6 @@ import statistics
 # Traced calls into the program's modules, named <module>.<call>.
 SPANS = ("etl.demo_csv_run", "sip.save", "rdf.turtle_write", "manifest.verify",
          "text.stream_novel", "text.probe", "text.prepare", "sim.ivf_topk")
-# archive_sip's layers are only computed for the readable report and the
-# layer-delta tool: that workload is not in BENCHMARK.json (see README).
-ARCHIVE_ONLY = ("etl.", "sip.", "rdf.", "manifest.")
 
 # Per traced call (means over the run's calls, except `calls`).
 SPAN_METRICS = (("calls", "count"), ("wall_ms", "ms"), ("driver_ms", "ms"),
@@ -30,29 +27,16 @@ OTHER_LAYER_METRICS = (
     ("jvm.gc_ms", "ms"), ("jvm.jit_ms", "ms"), ("all.jobs", "count"),
     ("all.driver_ms", "ms"), ("trace.overhead_pct", "%"), ("trace.callback_ms", "ms"))
 
-# Which samples make each workload's end-to-end metrics.
+# Per workload: the samples behind op_p50_ms, and the counter and the
+# summed samples behind items_per_s. round_s is the whole operation
+# (`round_ms`, recorded by the harness) in every workload.
 E2E = {
-    "archive_sip": {"op": "sip_ms", "read": "verify_ms", "items": "sip.records",
-                    "items_over": "sip_ms"},
-    "ingest_gate": {"op": "commit_ms", "read": "lookup_ms", "items": "gate.offered",
-                    "items_over": "gate_call_ms"},
-    "curate_batch": {"op": "prepare_ms", "read": "ann_ms", "items": "curate.docs",
-                     "items_over": "prepare_ms"},
+    "archive_sip": {"op": "save_ms", "items": "sip.records", "items_over": "round_ms"},
+    "ingest_gate": {"op": "commit_ms", "items": "gate.offered", "items_over": "gate_call_ms"},
+    "curate_batch": {"op": "prepare_ms", "items": "curate.docs", "items_over": "prepare_ms"},
 }
-# The read latency (lookup, ANN query) is printed but not a driver metric:
-# its run-to-run spread reached 0.2-0.4 on a shared 4-core host.
-E2E_UNITS = (("op_p50_ms", "ms"), ("items_per_s", "1/s"), ("heap_live_mb", "MB"),
-             ("setup_s", "s"))
-
-# The names the workloads' own results go by, for the readable report.
-READABLE = {
-    "archive_sip": {"op": ("sip_s", "s", 1e-3), "read": ("verify_ms", "ms", 1.0),
-                    "items": ("records_per_s", "1/s")},
-    "ingest_gate": {"op": ("commit", "ms", 1.0), "read": ("lookup", "ms", 1.0),
-                    "items": ("docs_per_s", "1/s")},
-    "curate_batch": {"op": ("prepare_s", "s", 1e-3), "read": ("ann_s", "s", 1e-3),
-                     "items": ("docs_per_s", "1/s")},
-}
+E2E_UNITS = (("op_p50_ms", "ms"), ("round_s", "s"), ("items_per_s", "1/s"),
+             ("heap_live_mb", "MB"), ("setup_s", "s"))
 
 TAIL_PERCENTILES = (99.9, 99.0, 90.0)
 MIN_BEYOND = 10
@@ -173,16 +157,19 @@ def _samples(raw, name, traced=None):
     return s.get(name + "@traced", []) if traced else s.get(name, [])
 
 
-def e2e_metrics(raw):
-    w = raw["info"]["workload"]
-    spec = E2E[w]
+def e2e_metrics(raw, traced=False):
+    """The end-to-end metrics over the untraced operations, or over the
+    traced ones (traced=True), or over both (None)."""
+    spec = E2E[raw["info"]["workload"]]
     c = raw.get("counters", {})
-    over = sum(_samples(raw, spec["items_over"], False)) / 1000.0
+    over = sum(_samples(raw, spec["items_over"], traced)) / 1000.0
+    rounds = _samples(raw, "round_ms", traced)
     return {
-        "op_p50_ms": median(_samples(raw, spec["op"], False)),
+        "op_p50_ms": median(_samples(raw, spec["op"], traced)),
+        "round_s": median(rounds) / 1000.0 if rounds else None,
         "items_per_s": c.get(spec["items"], 0.0) / over if over > 0 else None,
         "heap_live_mb": c.get("heap_live_mb"),
-        "setup_s": median(raw.get("samples", {}).get("setup_s", [])),
+        "setup_s": c.get("setup_s"),
     }
 
 
@@ -231,7 +218,7 @@ def trace_overhead(raw, ops):
     """Tracing overhead in percent, and how it was measured: traced against
     untraced operations of the same run where both exist, else the time
     spent in the tracing callbacks as a share of the traced operations."""
-    op = E2E[raw["info"]["workload"]]["op"]
+    op = "round_ms"
     traced, plain = _samples(raw, op, True), _samples(raw, op, False)
     if traced and plain:
         return 100.0 * (median(traced) / median(plain) - 1.0), \
@@ -264,34 +251,32 @@ def report(raw, traced, leftovers=(), out=None):
         if out is not None:
             print(line, file=out)
 
-    spec, names = E2E[w], READABLE[w]
+    spec = E2E[w]
     say("workload %s, seed %s, %d core(s), %s s timed, trace %s" % (
         w, raw["info"].get("seed"), raw["info"].get("cores", 0), raw["info"].get("seconds"),
         "on" if traced else "off"))
-    for key in ("op", "read"):
-        label, unit, scale = names[key]
-        vals = [v * scale for v in _samples(raw, spec[key], None if traced else False)]
-        if label.endswith(("_s", "_ms")):
-            say("  %-16s %s (n=%d, median)" % (label, _fmt(median(vals), unit), len(vals)))
-            continue
-        say("  %-16s %s (n=%d)" % (label + "_p50_" + unit, _fmt(median(vals), unit), len(vals)))
+    names = sorted({n.split("@")[0] for n in raw.get("samples", {})})
+    for name in names:
+        vals = _samples(raw, name, None if traced else False)
         tail = tail_percentile(vals) if vals else None
-        if tail:
-            say("  %-16s %s (n=%d)" % ("%s_p%g_%s" % (label, tail[0], unit), _fmt(tail[1], unit), len(vals)))
-        else:
-            say("  %-16s n/a: a p90 needs 100 samples, the run has %d" % (
-                label + "_p90_" + unit, len(vals)))
-    e2e = e2e_metrics(raw)
+        say("  %-28s p50 %s%s (n=%d)" % (name, _fmt(median(vals), "ms"), "" if tail is None else
+                                         ", p%g %s" % (tail[0], _fmt(tail[1], "ms")), len(vals)))
+    say("  (a p90 needs at least 100 samples, so that 10 lie beyond it)")
+    which = None if traced else False
+    e2e = e2e_metrics(raw, which)
     c = raw.get("counters", {})
-    say("  %-16s %s (%d units over %d timed calls)" % (
-        names["items"][0], _fmt(e2e["items_per_s"], "1/s"), c.get(spec["items"], 0),
-        len(_samples(raw, spec["items_over"], None if traced else False))))
-    say("  %-16s %s (n=%d, median; session start %.2f s and warm-up %.2f s once)" % (
-        "setup_s", _fmt(e2e["setup_s"], "s"), len(raw.get("samples", {}).get("setup_s", [])),
-        c.get("session_s", 0.0), c.get("warmup_s", 0.0)))
-    say("  %-16s session %.2f s, set-up %.2f s, warm-up %.2f s, timed %.2f s" % (
-        "run", c.get("session_s", 0.0), sum(raw.get("samples", {}).get("setup_s", [])),
-        c.get("warmup_s", 0.0), c.get("timed_s", 0.0)))
+    say("  %-16s %s (n=%d, median of the operations)" % (
+        "op_p50_ms", _fmt(e2e["op_p50_ms"], "ms"), len(_samples(raw, spec["op"], which))))
+    say("  %-16s %s (n=%d, median of the operations)" % (
+        "round_s", _fmt(e2e["round_s"], "s"), len(_samples(raw, "round_ms", which))))
+    say("  %-16s %s (%d %s over %d timed calls)" % (
+        "items_per_s", _fmt(e2e["items_per_s"], "1/s"), c.get(spec["items"], 0), spec["items"],
+        len(_samples(raw, spec["items_over"], which))))
+    say("  %-16s %s (n=1: JVM start to the first timed operation; of it session %.2f s, "
+        "set-up %.2f s, warm-up %.2f s)" % (
+            "setup_s", _fmt(e2e["setup_s"], "s"), c.get("session_s", 0.0),
+            c.get("setup_only_s", 0.0), c.get("warmup_s", 0.0)))
+    say("  %-16s %.2f s" % ("timed", c.get("timed_s", 0.0)))
     say("  %-16s %s (heap after a full GC at the end of the timed phase)" % (
         "heap_live_mb", _fmt(e2e["heap_live_mb"], "MB")))
     say("  %-16s %.4g (%d failed of %d attempted)" % ("failed_frac", failed_frac(attempted, failed),
@@ -316,8 +301,7 @@ def report(raw, traced, leftovers=(), out=None):
             if layers[name + ".calls"]:
                 say("  %-20s " % name + " ".join(
                     "%s=%.4g" % (m, layers[name + "." + m]) for m, _ in SPAN_METRICS))
-        metrics = {k: {"value": v, "unit": units[k]} for k, v in layers.items()
-                   if not k.startswith(ARCHIVE_ONLY)}
+        metrics = {k: {"value": v, "unit": units[k]} for k, v in layers.items()}
     else:
         metrics = {k: {"value": e2e[k], "unit": u} for k, u in E2E_UNITS}
     missing = [k for k, m in metrics.items() if m["value"] is None]

@@ -2,7 +2,7 @@
 """Benchmark driver: builds the program and the harness from source, runs
 one workload in a fresh JVM, checks its outputs and prints the metrics.
 
-    python3 perfbench/run.py --workload archive_sip --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload archive_sip --seed 1 --seconds 1 --trace 0
 
 Run it from the root of a checkout. The last line of standard output is one
 JSON object: {"correct", "attempted", "failed", "metrics"}. Every file the run
@@ -129,11 +129,14 @@ def run_jvm(classpath, args, run_root):
     return rc, raw, log
 
 
-def check_repeats(raw, workload, seed):
+def check_repeats(raw, workload, seed, store):
     """Outputs that must repeat exactly for a seed (the gate's kept count
-    per batch, the prepared rows' digest) are kept per checkout and seed,
-    and each later run with that seed is compared with them. Returns the
-    mismatches."""
+    per batch, the prepared rows' digest) are compared with the values
+    committed in perfbench/expected.json and with those of the first
+    correct run of the seed in this checkout (.bench_build/expect/). A
+    stored value is never replaced. Returns the mismatches."""
+    with open(os.path.join(HERE, "expected.json")) as f:
+        committed = json.load(f).get(workload, {}).get(str(seed), {})
     path = os.path.join(BUILD, "expect", "%s-%d.json" % (workload, seed))
     seen = {}
     if os.path.exists(path):
@@ -141,19 +144,19 @@ def check_repeats(raw, workload, seed):
             seen = json.load(f)
     errors = []
     for key, value in raw.get("expect", {}).items():
-        old = seen.get(key)
-        if isinstance(value, dict):
-            old = old or {}
-            errors += ["%s[%s] is %s, was %s" % (key, k, v, old[k])
-                       for k, v in value.items() if k in old and old[k] != v]
-            seen[key] = dict(old, **value)
-        else:
-            if old is not None and old != value:
-                errors.append("%s is %s, was %s" % (key, value, old))
-            seen[key] = value
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    with open(path, "w") as f:
-        json.dump(seen, f)
+        for ref, where in ((committed, "perfbench/expected.json"), (seen, "an earlier run")):
+            old = ref.get(key)
+            if isinstance(value, dict) and old is not None:
+                errors += ["%s[%s] is %s, %s has %s" % (key, k, v, where, old[k])
+                           for k, v in value.items() if k in old and old[k] != v]
+            elif old is not None and old != value:
+                errors.append("%s is %s, %s has %s" % (key, value, where, old))
+        seen[key] = dict(value, **seen.get(key, {})) if isinstance(value, dict) \
+            else seen.get(key, value)
+    if store and not errors:
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        with open(path, "w") as f:
+            json.dump(seen, f)
     return errors
 
 
@@ -183,9 +186,9 @@ def main():
         with open(args.keep_record, "w") as f:
             json.dump(raw, f)
     result = metrics.report(raw, traced=bool(args.trace), leftovers=leftovers, out=sys.stdout)
-    for e in check_repeats(raw, args.workload, args.seed):
+    for e in check_repeats(raw, args.workload, args.seed, store=result["correct"]):
         result["correct"] = False
-        print("  FAILED: output differs from an earlier run with this seed: " + e)
+        print("  FAILED: output differs for this seed: " + e)
     if rc != 0:
         result["correct"] = False
         print("perfbench: the run exited with %d, see %s" % (rc, log))

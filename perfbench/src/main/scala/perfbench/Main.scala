@@ -22,36 +22,44 @@ final class Record {
   def add(name: String, v: Double): Unit =
     counters(name) = counters.getOrElse(name, 0.0) + v
 
-  /** Drops what set-up and warm-up recorded, except the set-up times.
-    * Workload counters have dotted names. */
+  /** Drops what the warm-up recorded. Workload counters have dotted
+    * names. */
   def resetForTimedPhase(): Unit = {
-    samples.keys.filter(_ != "setup_s").toSeq.foreach(samples.remove)
+    samples.clear()
     counters.keys.filter(_.contains('.')).toSeq.foreach(counters.remove)
   }
 }
 
-/** A benchmark workload: a set-up step that can be repeated, an untimed
-  * warm-up, and the operation the timed phase repeats. */
+/** A benchmark workload. Only `op` is timed and traced: staging its
+  * inputs and checking its outputs are the benchmark's own Spark work and
+  * stay outside the operation's span. */
 trait Workload {
-  /** Builds fresh inputs and program state; the last repetition's state
-    * is the one the timed phase uses. */
-  def setup(rep: Int): Unit
-  def warmup(): Unit
-  /** One timed operation; throws when an output check fails. */
+  /** Builds the inputs and program state the operations use. */
+  def setup(): Unit
+  /** Untimed work after set-up, so the timed operations run warm. */
+  def warmup(): Unit = ()
+  /** Writes the inputs of operation `i`. */
+  def stage(i: Int): Unit = ()
+  /** Operation `i`: the calls into the program and nothing else. */
   def op(i: Int): Unit
+  /** Checks the outputs of operation `i`; throws when a check fails. */
+  def verify(i: Int): Unit = ()
   /** Untimed checks over the whole run. */
   def finish(): Unit = ()
 }
 
 final class Ctx(val spark: SparkSession, val root: String, val seed: Long,
                 val trace: Boolean, val tracer: Tracer, val rec: Record) {
+  /** Whether the current operation is traced. */
+  var opTraced = false
+
   def check(ok: Boolean, what: => String): Unit =
     if (!ok) throw new IllegalStateException(s"output check failed: $what")
 
-  /** Records a sample; samples taken while tracing get an "@traced"
+  /** Records a sample; samples of traced operations get an "@traced"
     * suffix, so one run compares traced and untraced operations. */
   def sample(name: String, v: Double): Unit =
-    rec.sample(if (tracer.on) name + "@traced" else name, v)
+    rec.sample(if (opTraced) name + "@traced" else name, v)
 
   def timed[T](name: String)(body: => T): T = {
     val t0 = Clock.nowMs
@@ -64,12 +72,11 @@ final class Ctx(val spark: SparkSession, val root: String, val seed: Long,
 /** Runs one workload:
   *   Main --workload <name> --seed <n> --seconds <s> --trace <0|1>
   *        --root <scratch dir> --out <record.json>
-  * Set-up runs `setupReps` times, then one warm-up, then operations until
-  * the time is up. With tracing on, every other operation is traced, so
-  * the same run also measures the tracing overhead. */
+  * Set-up, then the warm-up, then operations until the time is up.
+  * `setup_s` runs from the JVM's start to the first timed operation. With
+  * tracing on, every other operation is traced, so a run of several
+  * operations also measures the tracing overhead. */
 object Main {
-  val setupReps = 3
-
   def main(args: Array[String]): Unit = {
     val startMs = java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime.toDouble
     val opts = args.grouped(2).collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
@@ -131,26 +138,30 @@ object Main {
 
     var fatal: Throwable = null
     try {
-      (0 until setupReps).foreach { r =>
-        val s0 = Clock.nowMs
-        w.setup(r)
-        rec.sample("setup_s", (Clock.nowMs - s0) / 1000.0)
-      }
+      val s0 = Clock.nowMs
+      w.setup()
       val wu0 = Clock.nowMs
       w.warmup()
+      rec.counters("setup_only_s") = (wu0 - s0) / 1000.0
       rec.counters("warmup_s") = (Clock.nowMs - wu0) / 1000.0
+      rec.counters("setup_s") = (Clock.nowMs - startMs) / 1000.0
       rec.resetForTimedPhase()
 
-      val gc0 = Jvm.gcMs
-      val jit0 = Jvm.jitMs
       val deadline = Clock.nowMs + seconds * 1000.0
       var i = 0
       while (Clock.nowMs < deadline) {
-        val on = trace && i % 2 == 0
+        ctx.opTraced = trace && i % 2 == 0
         tracer.runId = i
         rec.attempted += 1
         try {
-          traced(on) { tracer.span("op") { w.op(i) } }
+          w.stage(i)
+          val (gc0, jit0) = (Jvm.gcMs, Jvm.jitMs)
+          try traced(ctx.opTraced) { ctx.timed("round_ms") { tracer.span("op") { w.op(i) } } }
+          finally {
+            rec.add("gc_ms", (Jvm.gcMs - gc0).toDouble)
+            rec.add("jit_ms", (Jvm.jitMs - jit0).toDouble)
+          }
+          w.verify(i)
         } catch {
           case e: Exception =>
             rec.failed += 1
@@ -158,9 +169,8 @@ object Main {
         }
         i += 1
       }
+      ctx.opTraced = false
       rec.counters("timed_s") = (Clock.nowMs - deadline) / 1000.0 + seconds
-      rec.counters("gc_ms") = (Jvm.gcMs - gc0).toDouble
-      rec.counters("jit_ms") = (Jvm.jitMs - jit0).toDouble
       rec.counters("heap_live_mb") = Jvm.liveHeapMb(spark.sparkContext)
       rec.counters("trace.callback_ms") = CallbackTime.ms
       w.finish()

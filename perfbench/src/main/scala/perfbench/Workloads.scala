@@ -57,48 +57,48 @@ final class ArchiveSip(c: Ctx) extends Workload {
   import c._
   val records = 100
   private val ids = graft.ids.Identifiers.default
-  private var in: String = _
-  private var archive: Gen.Archive = _
+  private val in = s"$root/sip-in"
+  private val archive = Gen.archive(seed, records)
   private var vocab: DataFrame = _
+  private var statuses: Map[String, Long] = _
+  private var graphCount: Observation = _
 
-  def setup(rep: Int): Unit = {
-    in = s"$root/sip-in/r$rep"
-    archive = Gen.archive(seed, records)
+  private def out(i: Int) = s"$root/sip-out/op$i"
+
+  def setup(): Unit = {
     Gen.writeString(s"$in/metadata.csv", archive.metadata)
     Gen.writeString(s"$in/droid.csv", archive.droid)
     Gen.writeString(s"$in/vocab.csv", Gen.vocabCsv)
     vocab = spark.read.option("header", "true").csv(s"$in/vocab.csv")
   }
 
-  def warmup(): Unit = ()
-
   def op(i: Int): Unit = {
-    val dir = s"$root/sip-out/op$i"
-    val sipDir = s"$dir/sip"
-    val ttl = s"$dir/graph.ttl"
-    val graphCount = Observation("graph")
-    val statuses = timed("sip_ms") {
-      val triples = tracer.span("etl.demo_csv_run") {
-        graft.etl.DemoCsv.run(spark, s"$in/metadata.csv", s"$in/droid.csv", vocab)
-      }
+    val sipDir = s"${out(i)}/sip"
+    graphCount = Observation(s"graph-$i")
+    val triples = tracer.span("etl.demo_csv_run") {
+      graft.etl.DemoCsv.run(spark, s"$in/metadata.csv", s"$in/droid.csv", vocab)
+    }
+    timed("save_ms") {
       tracer.span("sip.save") {
         graft.sip.Sip.save(spark, triples, sipDir, ids, timestamp = "2025-01-01T00:00:00Z")
       }
-      tracer.span("rdf.turtle_write") {
-        graft.rdf.io.Turtle.write(triples.observe(graphCount, count(lit(1)).as("n")), ttl)
-      }
-      timed("verify_ms") {
-        tracer.span("manifest.verify") {
-          val manifest = graft.manifest.Manifest.loadJson(spark, s"$sipDir/${ids.manifestFilename}")
-          val scan = graft.manifest.Manifest.scanDirectory(spark, sipDir,
-            ignore = Seq(ids.manifestFilename, ids.eventlogFilename))
-          graft.manifest.Manifest.reconcile(manifest, scan)
-            .groupBy("status").count().collect()
-            .map(r => r.getString(0) -> r.getLong(1)).toMap
-        }
-      }
     }
-    // output checks (untimed)
+    tracer.span("rdf.turtle_write") {
+      graft.rdf.io.Turtle.write(triples.observe(graphCount, count(lit(1)).as("n")),
+        s"${out(i)}/graph.ttl")
+    }
+    statuses = tracer.span("manifest.verify") {
+      val manifest = graft.manifest.Manifest.loadJson(spark, s"$sipDir/${ids.manifestFilename}")
+      val scan = graft.manifest.Manifest.scanDirectory(spark, sipDir,
+        ignore = Seq(ids.manifestFilename, ids.eventlogFilename))
+      graft.manifest.Manifest.reconcile(manifest, scan)
+        .groupBy("status").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+    }
+  }
+
+  override def verify(i: Int): Unit = {
+    val sipDir = s"${out(i)}/sip"
     val resources = 1 + archive.series + 2 * archive.records
     check(statuses == Map("ok" -> resources.toLong),
       s"reconcile gave $statuses, expected only ok x $resources")
@@ -107,7 +107,7 @@ final class ArchiveSip(c: Ctx) extends Workload {
       s"${files.size} files in the SIP, expected $resources resources + manifest + eventlog")
     // Turtle.write puts each predicate-object pair of a subject block on
     // its own indented line, so those lines count the triples
-    val written = Files2.visibleFiles(ttl).map { p =>
+    val written = Files2.visibleFiles(s"${out(i)}/graph.ttl").map { p =>
       val s = Files.lines(p)
       try s.filter(_.startsWith("    ")).count() finally s.close()
     }.sum
@@ -117,40 +117,43 @@ final class ArchiveSip(c: Ctx) extends Workload {
     rec.add("sip.files", files.size)
     rec.add("sip.bytes", files.map(Files.size(_)).sum.toDouble)
     rec.add("sip.triples", graph.toDouble)
-    Files2.deleteTree(dir)
+    Files2.deleteTree(out(i))
   }
 }
 
 /** ingest_gate: closed loop over the persistent-checkpoint near-duplicate
-  * gate. Each operation stages `filesPerRound` micro-batch files, drains
-  * them through `streamNovel` (one file per micro-batch), then runs
+  * gate. Each operation drains `batchesPerRound` staged micro-batch files
+  * through `streamNovel` (one file per micro-batch), then runs
   * `lookupsPerRound` probe lookups against the same index. */
 final class IngestGate(c: Ctx) extends Workload {
   import c._
-  val corpusDocs = 10000
-  val batchDocs = 1000
+  val corpusDocs = 4000
+  val batchDocs = 500
   val buckets = 8
   val compactEvery = 4
-  val filesPerRound = 6
-  val lookupsPerRound = 6
+  val warmupBatches = 1
+  val batchesPerRound = 3
+  val lookupsPerRound = 3
 
   private val progress = new ProgressListener
   spark.streams.addListener(progress)
 
+  private val dir = s"$root/gate"
+  private val table = "gate_index"
   private var corpus: IndexedSeq[Array[String]] = _
-  private var dir: String = _
-  private var table: String = _
   private var stream: DataFrame = _
   private var nextBatch = 0
   private var nextLookup = 0
-  private var staged = 0
+  private var checked = 0
+  private var progressSeen = 0
+  private val lookups = scala.collection.mutable.ArrayBuffer[Array[Row]]()
   private val planted = scala.collection.mutable.Set[Long]()
   private val keptByBatch = scala.collection.mutable.LinkedHashMap[Long, Long]()
 
   /** Stages the next `n` batch files and `lookups` probe files; batch
     * file times increase, so the stream takes them in order, one per
     * micro-batch. */
-  private def stage(n: Int, lookups: Int): Unit = {
+  private def stageFiles(n: Int, lookups: Int): Unit = {
     val batches = (nextBatch until nextBatch + n).map { b =>
       val (docs, p) = Gen.gateBatch(seed, b, batchDocs, 1000000L + b.toLong * batchDocs, corpus)
       planted ++= p
@@ -167,16 +170,29 @@ final class IngestGate(c: Ctx) extends Workload {
     nextBatch += n
   }
 
-  private def drainBatches(): Unit = {
-    val before = progress.count
-    timed("gate_call_ms") {
-      tracer.span("text.stream_novel") {
-        graft.text.IncrementalDedup.streamNovel(stream, table, buckets, s"$dir/out",
-          compactEvery = compactEvery, checkpointDir = Some(s"$dir/ckpt"))
+  private def drain(): Unit = timed("gate_call_ms") {
+    tracer.span("text.stream_novel") {
+      graft.text.IncrementalDedup.streamNovel(stream, table, buckets, s"$dir/out",
+        compactEvery = compactEvery, checkpointDir = Some(s"$dir/ckpt"))
+    }
+  }
+
+  private def lookup(): Unit = {
+    val f = s"$dir/probe/lookup-$nextLookup.parquet"
+    nextLookup += 1
+    lookups += timed("lookup_ms") {
+      tracer.span("text.probe") {
+        graft.text.IncrementalDedup.probe(spark, spark.read.parquet(f), table).collect()
       }
     }
+  }
+
+  /** Records the drained micro-batches' progress and checks the batches
+    * and lookups since the last check: no planted exact copy is kept,
+    * every lookup finds its 2 planted index copies. */
+  private def checkRound(): Unit = {
     org.apache.spark.PerfbenchBus.drain(spark.sparkContext)
-    progress.records.drop(before).foreach { p =>
+    progress.records.drop(progressSeen).foreach { p =>
       val d = p("durations").asInstanceOf[Map[String, Long]]
       sample("commit_ms", p("batch_ms").asInstanceOf[Long].toDouble)
       sample("streaming.add_batch_ms", d.getOrElse("addBatch", 0L).toDouble)
@@ -185,10 +201,10 @@ final class IngestGate(c: Ctx) extends Workload {
       sample("streaming.query_planning_ms", d.getOrElse("queryPlanning", 0L).toDouble)
       sample("streaming.wal_commit_ms", d.getOrElse("walCommit", 0L).toDouble)
     }
-    val newIds = (staged until nextBatch).map(_.toLong)
-    staged = nextBatch
+    progressSeen = progress.count
+    val newIds = (checked until nextBatch).map(_.toLong)
+    checked = nextBatch
     rec.add("gate.offered", newIds.size * batchDocs.toDouble)
-    // output checks (untimed): no planted exact copy is kept
     val kept = spark.read.parquet(newIds.map(b => s"$dir/out/batch=$b"): _*)
       .select("doc_id").collect().map(_.getLong(0))
     rec.add("gate.kept", kept.length)
@@ -196,20 +212,14 @@ final class IngestGate(c: Ctx) extends Workload {
     check(leaked == 0, s"$leaked planted exact duplicates kept in batches $newIds")
     val perBatch = kept.groupBy(id => (id - 1000000L) / batchDocs)
     newIds.foreach(b => keptByBatch(b) = perBatch.get(b).fold(0L)(_.length.toLong))
-  }
-
-  private def lookup(): Unit = {
-    val f = s"$dir/probe/lookup-$nextLookup.parquet"
-    nextLookup += 1
-    val hits = timed("lookup_ms") {
-      tracer.span("text.probe") {
-        graft.text.IncrementalDedup.probe(spark, spark.read.parquet(f), table).collect()
-      }
+    lookups.foreach { hits =>
+      val hitDocs = hits.map(_.getLong(0)).distinct.length
+      check(hitDocs >= 2, s"probe found $hitDocs of the 2 planted index copies")
+      rec.add("probe.docs", 5)
+      rec.add("probe.hit_docs", hitDocs)
     }
-    val hitDocs = hits.map(_.getLong(0)).distinct.length
-    check(hitDocs >= 2, s"probe found $hitDocs of the 2 planted index copies")
-    rec.add("probe.docs", 5)
-    rec.add("probe.hit_docs", hitDocs)
+    lookups.clear()
+    if (trace) snapshotSources()
   }
 
   /** Table state through the program's own metadata calls; live files
@@ -232,44 +242,43 @@ final class IngestGate(c: Ctx) extends Workload {
       "table_bytes" -> st.liveBytes)
   }
 
-  def setup(rep: Int): Unit = {
+  def setup(): Unit = {
     corpus = Gen.gateCorpus(seed, corpusDocs)
-    dir = s"$root/gate/r$rep"
-    table = s"gate_index_r$rep"
     Files2.writeDocs(spark, Seq(corpus.indices.map(i => Gen.Doc(i.toLong, Gen.text(corpus(i)))) ->
       s"$dir/corpus.parquet"))
     graft.text.IncrementalDedup.buildIndex(spark.read.parquet(s"$dir/corpus.parquet"),
       table, buckets)
   }
 
-  /** Two batches and one lookup on the last set-up's index; the first
-    * timed round (batches 2-7) holds the compactions after batches 3 and 7.
-    * The stream needs its first file before it can be defined. */
-  def warmup(): Unit = {
-    stage(2, 1)
+  /** `warmupBatches` batches and one lookup. The stream needs its first
+    * file before it can be defined. */
+  override def warmup(): Unit = {
+    stageFiles(warmupBatches, 1)
     stream = graft.streaming.Streaming.fileStream(spark, s"$dir/in", Some(1))
-    drainBatches()
+    drain()
     lookup()
-    if (trace) snapshotSources()
+    checkRound()
   }
 
+  override def stage(i: Int): Unit = stageFiles(batchesPerRound, lookupsPerRound)
+
   def op(i: Int): Unit = {
-    stage(filesPerRound, lookupsPerRound)
-    drainBatches()
+    drain()
     (0 until lookupsPerRound).foreach(_ => lookup())
-    if (tracer.on) snapshotSources()
   }
+
+  override def verify(i: Int): Unit = checkRound()
 
   override def finish(): Unit =
     rec.expect("kept_by_batch") = keptByBatch.map { case (b, n) => b.toString -> n }
 }
 
 /** curate_batch: one pass of training-data preparation of a seeded
-  * corpus to a noop sink, then IVF top-10 for each of `queryRounds` fresh
-  * query sets against a seeded vector store. Set-up writes the vector
-  * store and trains the IVF codebook (the first ivfTopK call on a corpus
-  * trains and caches it). prepare is a batch job that runs once per
-  * process, so it is timed cold, as its users pay it. */
+  * corpus to a noop sink, then IVF top-10 for `queryRounds` fresh query
+  * sets against a seeded vector store. Set-up writes the corpus and the
+  * vector store and trains the IVF codebook (the first ivfTopK call on a
+  * corpus trains and caches it). prepare is a batch job that runs once
+  * per process, so it is not warmed up. */
 final class CurateBatch(c: Ctx) extends Workload {
   import c._
   val corpusDocs = 10000
@@ -280,9 +289,12 @@ final class CurateBatch(c: Ctx) extends Workload {
   val queryRounds = 2
   val k = 10
 
-  private var dir: String = _
+  private val dir = s"$root/curate"
   private var nextQuery = 0
-  private var firstAnswer: Array[Row] = _
+  private var setupAnswer: Array[Row] = _
+  private var queryFiles: Seq[String] = Nil
+  private var answers: Seq[Array[Row]] = Nil
+  private var prepared: Observation = _
 
   private def vecDf(vs: Seq[(Long, Array[Float])]): DataFrame = {
     val schema = StructType(Seq(
@@ -298,61 +310,55 @@ final class CurateBatch(c: Ctx) extends Workload {
     f
   }
 
+  private def ivf(queryFile: String): Array[Row] =
+    graft.sim.Ivf.ivfTopK(spark.read.parquet(queryFile), spark.read.parquet(s"$dir/vectors"), k)
+      .collect()
+
   private def pairs(rs: Array[Row]): Set[(Long, Long)] =
     rs.map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
 
-  def setup(rep: Int): Unit = {
-    dir = s"$root/curate/r$rep"
-    nextQuery = 0
-    vecDf(Gen.vectors(seed, vectors, dim)).write.mode("overwrite").parquet(s"$dir/vectors")
-    firstAnswer = graft.sim.Ivf.ivfTopK(spark.read.parquet(queryFile()),
-      spark.read.parquet(s"$dir/vectors"), k).collect()
-  }
-
-  /** Writes the corpus, and checks the recall of the set-up's IVF
-    * answer against exact search. */
-  def warmup(): Unit = {
+  def setup(): Unit = {
     val (docs, eval) = Gen.curationCorpus(seed, corpusDocs, evalDocs)
     Files2.writeDocs(spark, Seq(docs -> s"$dir/docs.parquet", eval -> s"$dir/eval.parquet"))
+    vecDf(Gen.vectors(seed, vectors, dim)).write.mode("overwrite").parquet(s"$dir/vectors")
+    setupAnswer = ivf(queryFile())
+  }
+
+  /** Checks the recall of the set-up's IVF answer against exact search. */
+  override def warmup(): Unit = {
     val exact = pairs(graft.sim.Similarity.bruteForceTopK(spark.read.parquet(s"$dir/queries-0"),
       spark.read.parquet(s"$dir/vectors"), k).collect())
-    val recall = exact.intersect(pairs(firstAnswer)).size.toDouble / exact.size
+    val recall = exact.intersect(pairs(setupAnswer)).size.toDouble / exact.size
     rec.info("ann_recall_at_10") = recall
     check(recall >= 0.9, f"IVF recall@10 $recall%.3f below 0.9")
   }
 
-  /** prepare to a noop sink; returns the output's (rows, digest). */
-  private def prepare(): (Long, Long) = {
-    val obs = Observation("prepare")
+  override def stage(i: Int): Unit = queryFiles = Seq.fill(queryRounds)(queryFile())
+
+  def op(i: Int): Unit = {
+    prepared = Observation(s"prepare-$i")
     timed("prepare_ms") {
       tracer.span("text.prepare") {
         val out = graft.text.TrainingData.prepare(spark.read.parquet(s"$dir/docs.parquet"),
           spark.read.parquet(s"$dir/eval.parquet"))
-        out.observe(obs, count(lit(1)).as("n"),
+        out.observe(prepared, count(lit(1)).as("n"),
             bit_xor(xxhash64(out.columns.map(col).toIndexedSeq: _*)).as("h"))
           .write.format("noop").mode("overwrite").save()
       }
     }
-    val m = obs.get
-    (m("n").asInstanceOf[Long], m("h").asInstanceOf[Long])
+    answers = queryFiles.map(q => timed("ann_ms") { tracer.span("sim.ivf_topk") { ivf(q) } })
   }
 
-  def op(i: Int): Unit = {
-    val qFiles = Seq.fill(queryRounds)(queryFile())
-    val got = prepare()
-    qFiles.foreach { q =>
-      val top = timed("ann_ms") {
-        tracer.span("sim.ivf_topk") {
-          graft.sim.Ivf.ivfTopK(spark.read.parquet(q), spark.read.parquet(s"$dir/vectors"), k)
-            .collect()
-        }
-      }
-      check(top.length == queries * k, s"ivfTopK returned ${top.length} rows, expected ${queries * k}")
-    }
-    // output checks (untimed)
-    check(got._1 > 0, "prepare kept no documents")
+  /** prepare keeps documents; its (rows, XOR of row hashes) must repeat
+    * for the seed; every query gets k answers. */
+  override def verify(i: Int): Unit = {
+    answers.foreach(top => check(top.length == queries * k,
+      s"ivfTopK returned ${top.length} rows, expected ${queries * k}"))
+    val m = prepared.get
+    val (rows, digest) = (m("n").asInstanceOf[Long], m("h").asInstanceOf[Long])
+    check(rows > 0, "prepare kept no documents")
     rec.add("curate.docs", corpusDocs)
-    rec.add("curate.kept", got._1.toDouble)
-    rec.expect("prepare_rows_digest") = Seq(got._1, got._2)
+    rec.add("curate.kept", rows.toDouble)
+    rec.expect("prepare_rows_digest") = Seq(rows, digest)
   }
 }

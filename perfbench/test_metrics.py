@@ -6,10 +6,12 @@ import io
 import json
 import os
 import sys
+import tempfile
 import unittest
 
 sys.dont_write_bytecode = True
 import metrics  # noqa: E402
+import run  # noqa: E402
 
 
 def span(id_, name, start, end, parent=0):
@@ -122,9 +124,9 @@ class FailedFraction(unittest.TestCase):
     def gate_record():
         return {"info": {"workload": "ingest_gate", "seed": 1, "cores": 4, "seconds": 1},
                 "attempted": 2, "failed": 0, "failures": [],
-                "samples": {"setup_s": [3.0, 2.0, 2.5], "commit_ms": [1000.0, 1200.0, 3000.0],
-                            "lookup_ms": [500.0, 700.0], "gate_call_ms": [8000.0]},
-                "counters": {"gate.offered": 4000.0, "heap_live_mb": 300.0},
+                "samples": {"commit_ms": [1000.0, 1200.0, 3000.0], "lookup_ms": [500.0, 700.0],
+                            "gate_call_ms": [8000.0], "round_ms": [9000.0, 11000.0]},
+                "counters": {"gate.offered": 4000.0, "heap_live_mb": 300.0, "setup_s": 2.5},
                 "sources": [], "spans": [], "jobs": [], "phases": []}
 
 
@@ -135,23 +137,36 @@ class Report(unittest.TestCase):
         m = r["metrics"]
         self.assertEqual(set(m), {k for k, _ in metrics.E2E_UNITS})
         self.assertEqual(m["op_p50_ms"], {"value": 1200.0, "unit": "ms"})
+        self.assertEqual(m["round_s"]["value"], 10.0)
         self.assertEqual(m["items_per_s"]["value"], 500.0)
         self.assertEqual(m["setup_s"]["value"], 2.5)
+
+    def test_an_operation_without_samples_is_not_correct(self):
+        raw = FailedFraction.gate_record()
+        del raw["samples"]["round_ms"]
+        self.assertFalse(metrics.report(raw, traced=False, out=io.StringIO())["correct"])
 
     def test_traced_run_reports_every_layer_metric(self):
         raw = FailedFraction.gate_record()
         raw["spans"] = [span(1, "op", 0, 100), span(2, "text.probe", 10, 40, parent=1)]
         raw["jobs"] = [job(12, 30)]
-        raw["samples"]["commit_ms@traced"] = [1500.0]
+        raw["samples"]["round_ms@traced"] = [12500.0]
         r = metrics.report(raw, traced=True, out=io.StringIO())
         names = {n + "." + m for n in metrics.SPANS for m, _ in metrics.SPAN_METRICS}
         names |= {n for n, _ in metrics.OTHER_LAYER_METRICS}
-        self.assertEqual(set(r["metrics"]),
-                         {n for n in names if not n.startswith(metrics.ARCHIVE_ONLY)})
+        self.assertEqual(set(r["metrics"]), names)
         self.assertEqual(r["metrics"]["text.probe.jobs"]["value"], 1.0)
         self.assertEqual(r["metrics"]["text.probe.driver_ms"]["value"], 12.0)
-        # traced median 1500 against untraced median 1200
+        # traced round 12500 ms against the untraced median 10000 ms
         self.assertAlmostEqual(r["metrics"]["trace.overhead_pct"]["value"], 25.0)
+
+    def test_a_single_traced_operation_reports_callback_time(self):
+        raw = FailedFraction.gate_record()
+        raw["samples"] = {"round_ms@traced": [100.0]}
+        raw["spans"] = [span(1, "op", 0, 100)]
+        raw["counters"]["trace.callback_ms"] = 2.0
+        r = metrics.report(raw, traced=True, out=io.StringIO())
+        self.assertAlmostEqual(r["metrics"]["trace.overhead_pct"]["value"], 2.0)
 
     def test_names_and_units_match_benchmark_json(self):
         path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "BENCHMARK.json")
@@ -162,6 +177,43 @@ class Report(unittest.TestCase):
             got = metrics.report(raw, traced=traced, out=io.StringIO())["metrics"]
             self.assertEqual({k: m["unit"] for k, m in got.items()},
                              {m["name"]: m["unit"] for m in bench[key]})
+
+
+class RepeatCheck(unittest.TestCase):
+    """Outputs that must repeat for a seed: the committed values and the
+    first correct run in the checkout are kept; a mismatch never replaces
+    them."""
+
+    def setUp(self):
+        self.tmp = tempfile.TemporaryDirectory()
+        self.saved = run.HERE, run.BUILD
+        run.HERE, run.BUILD = self.tmp.name, os.path.join(self.tmp.name, "build")
+        with open(os.path.join(run.HERE, "expected.json"), "w") as f:
+            json.dump({"ingest_gate": {"1": {"kept_by_batch": {"0": 440}}}}, f)
+
+    def tearDown(self):
+        run.HERE, run.BUILD = self.saved
+        self.tmp.cleanup()
+
+    @staticmethod
+    def raw(kept, digest=(5, 9)):
+        return {"expect": {"kept_by_batch": kept, "prepare_rows_digest": list(digest)}}
+
+    def test_committed_values_are_checked_on_the_first_run(self):
+        self.assertEqual(run.check_repeats(self.raw({"0": 440}), "ingest_gate", 1, True), [])
+        errors = run.check_repeats(self.raw({"0": 439}), "ingest_gate", 1, True)
+        self.assertEqual(len(errors), 2)  # the committed value and the stored first run
+
+    def test_a_mismatch_does_not_replace_the_stored_value(self):
+        self.assertEqual(run.check_repeats(self.raw({"0": 1, "1": 2}), "ingest_gate", 7, True), [])
+        self.assertEqual(len(run.check_repeats(self.raw({"1": 3}, (5, 8)), "ingest_gate", 7, True)), 2)
+        # the third run agrees with the first, not with the mismatching second
+        self.assertEqual(run.check_repeats(self.raw({"1": 2, "2": 4}), "ingest_gate", 7, True), [])
+        self.assertEqual(len(run.check_repeats(self.raw({"2": 5}), "ingest_gate", 7, True)), 1)
+
+    def test_a_failed_run_stores_nothing(self):
+        run.check_repeats(self.raw({"0": 1}), "ingest_gate", 8, False)
+        self.assertEqual(run.check_repeats(self.raw({"0": 2}), "ingest_gate", 8, True), [])
 
 
 if __name__ == "__main__":
