@@ -186,12 +186,15 @@ def main():
         with open(args.keep_record, "w") as f:
             json.dump(raw, f)
     result = metrics.report(raw, traced=bool(args.trace), leftovers=leftovers, out=sys.stdout)
-    for e in check_repeats(raw, args.workload, args.seed, store=result["correct"]):
-        result["correct"] = False
-        print("  FAILED: output differs for this seed: " + e)
+    errors = ["output differs for this seed: " + e
+              for e in check_repeats(raw, args.workload, args.seed, store=result["correct"])]
     if rc != 0:
+        errors.append("the run exited with %d, see %s" % (rc, log))
+    for e in errors:
+        print("  FAILED: " + e)
+    if errors:
         result["correct"] = False
-        print("perfbench: the run exited with %d, see %s" % (rc, log))
+        result["failed"] = max(result["failed"], 1)
     print(json.dumps(result))
     sys.exit(0 if result["correct"] else 1)
 
