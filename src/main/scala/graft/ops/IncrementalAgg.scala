@@ -424,33 +424,28 @@ object IncrementalAgg {
     * The index therefore records its owning checkpoint
     * (`_graft_stream_owner` beside the partials) on first ingest, and
     * a streamAppend under any OTHER checkpoint fails LOUDLY: resume
-    * the owning checkpoint (pass `checkpointDir` explicitly for
-    * continuing ingest — the default fresh temp dir is a ONE-SHOT
-    * drain), or rebuild the index (buildIndex's overwrite clears the
-    * claim). */
+    * the owning checkpoint (continuing ingest passes a persistent
+    * `checkpointDir`; see [[graft.streaming.Streaming.runBatches]]),
+    * or rebuild the index (buildIndex's overwrite clears the claim).
+    * A one-shot call (`checkpointDir = None`) deletes its checkpoint
+    * on return, so it is the index's LAST stream ingest until a
+    * rebuild: the claim then names a checkpoint that is gone, and
+    * every later streamAppend fails — resuming that path included,
+    * since Spark would start it over from batch id 0. */
   def streamAppend(stream: DataFrame, name: String, buckets: Int,
                    groupCol: String, valueCol: String,
                    consolidateEvery: Int = 8, maxFilesPerBucket: Int = 4,
                    checkpointDir: Option[String] = None): Unit = {
-    val ckpt = checkpointDir.getOrElse(
-      java.nio.file.Files.createTempDirectory(
-        graft.streaming.Streaming.scratchBase, "graft-ckpt-incagg")
-        .toString)
-    claimStreamOwner(stream.sparkSession, partialsTable(name), ckpt)
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], id: Long) =>
-        val spark = batch.sparkSession
-        append(batch.toDF(), name, buckets, groupCol, valueCol,
-          tag = s"sb$id")
-        if (consolidateEvery > 0 && (id + 1) % consolidateEvery == 0)
-          consolidate(spark, name, maxFilesPerBucket)
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckpt)
-      .start()
-    q.awaitTermination()
+    graft.streaming.Streaming.withCheckpoint("incagg", checkpointDir) {
+      ckpt =>
+        claimStreamOwner(stream.sparkSession, partialsTable(name), ckpt)
+        graft.streaming.Streaming.runBatches(stream, "incagg", Some(ckpt)) {
+          (batch, id) =>
+            append(batch, name, buckets, groupCol, valueCol, tag = s"sb$id")
+            if (consolidateEvery > 0 && (id + 1) % consolidateEvery == 0)
+              consolidate(batch.sparkSession, name, maxFilesPerBucket)
+        }
+    }
   }
 
   /** One checkpoint owns an index's stream ingest for life (see
@@ -478,11 +473,23 @@ object IncrementalAgg {
       // qualify the STORED owner too: a marker written before
       // qualification (the unqualified '/tmp/ckpt' spelling) must
       // still match its own checkpoint after an upgrade
-      case Some(owner) => require(qualify(owner) == canon,
-        s"$table's stream ingest is owned by checkpoint $owner; a " +
-          s"different checkpoint ($canon) would restart batch ids and " +
-          "collide with committed idempotency tags — resume the owning " +
-          "checkpoint or rebuild the index")
+      case Some(owner) =>
+        // the owner's batch ids live in its `metadata` + offset log: a
+        // deleted (one-shot) or emptied owner checkpoint, even when
+        // passed back by path, restarts ids at 0 just like a new one
+        val ownerCanon = qualify(owner)
+        val ownerMeta = new org.apache.hadoop.fs.Path(ownerCanon, "metadata")
+        require(ownerMeta.getFileSystem(spark.sparkContext
+            .hadoopConfiguration).exists(ownerMeta),
+          s"$table's stream ingest is owned by checkpoint $owner, which " +
+            "is gone or never started (a one-shot streamAppend deletes " +
+            "its checkpoint on return); its batch ids cannot be resumed " +
+            "— rebuild the index")
+        require(ownerCanon == canon,
+          s"$table's stream ingest is owned by checkpoint $owner; a " +
+            s"different checkpoint ($canon) would restart batch ids and " +
+            "collide with committed idempotency tags — resume the owning " +
+            "checkpoint or rebuild the index")
       case None => graft.sources.Bucketed.writeMarker(fs, loc,
         "_graft_stream_owner", "graft-stream-owner-v1", canon)
     }

@@ -321,21 +321,11 @@ object CurationQueries {
       // setting — NOT the session's batch shuffle width: every state
       // partition pays store open/commit on every micro-batch
       graft.streaming.Streaming.withStatePartitions(s, Some(8)) {
-        val q = stream.toDF().writeStream
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[
-              org.apache.spark.sql.Row], id: Long) =>
-            b.withColumn("batch", lit(id))
-              .coalesce(1).write.mode("overwrite").parquet(s"$base/out/b=$id")
-            ()
-          }
-          .outputMode("update")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation",
-            java.nio.file.Files.createTempDirectory(
-              graft.streaming.Streaming.scratchBase, "graft-ckpt-q136")
-              .toString)
-          .start()
-        q.awaitTermination()
+        graft.streaming.Streaming.runBatches(stream.toDF(), "q136",
+            outputMode = "update") { (b, id) =>
+          b.withColumn("batch", lit(id))
+            .coalesce(1).write.mode("overwrite").parquet(s"$base/out/b=$id")
+        }
       }
       val w = Window.partitionBy("group", "q_e4")
         .orderBy(col("batch").desc)

@@ -3,6 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.streaming.{GateMetrics, Streaming}
 
 /** Index-and-probe incremental ANN — the embeddings counterpart of
   * [[graft.text.IncrementalDedup]]: at 100 TB the steady state is not
@@ -381,13 +382,6 @@ object IncrementalAnn {
       withMetrics = false, reArrivalGuard = reArrivalGuard,
       attrCols = attrCols)._1
 
-  /** Per-batch vector-gate metrics — counted BEFORE the kept postings
-    * are appended (the [[graft.text.IncrementalDedup.GateMetrics]]
-    * pre-append judgment semantics). */
-  private[graft] final case class GateMetrics(nIn: Long, nKept: Long,
-                                              nIndexHits: Long,
-                                              nBatchHits: Long)
-
   /** `attrCols`: batch columns carried into the kept postings (the
     * [[buildIndex]] attr contract) so a GATED index keeps serving
     * FILTERED search — without this a gate appending attr-less rows to
@@ -477,17 +471,10 @@ object IncrementalAnn {
     * corpus AND every previously-kept vector without rescanning
     * either. Periodic [[compactIndex]] keeps per-bucket file counts
     * bounded (the run-forever contract). Returns the kept vectors'
-    * (id, centroid) rows. */
-  /** `checkpointDir = None` (default) is the ONE-SHOT mode: each
-    * invocation wipes the output and uses a throwaway checkpoint, so
-    * the whole available stream reprocesses and batch ids restart at
-    * 0 — `dropReArrivals`' provenance domain is then a single
-    * invocation. Passing a PERSISTENT `checkpointDir` keeps output and
-    * metrics across invocations: Structured Streaming resumes with
-    * monotonic batch ids and AvailableNow processes only newly-arrived
-    * data, which is what makes the re-arrival guard correct across
-    * restarts (an old id re-delivered in a new file lands in a
-    * strictly newer batch than its posting's tag). */
+    * (id, centroid) rows. The loop is [[Streaming.gateLoop]];
+    * `checkpointDir`: see [[Streaming.runBatches]], and the text
+    * gate ([[graft.text.IncrementalDedup.streamNovel]]) for what it
+    * means to `dropReArrivals`. */
   def streamNovel(stream: DataFrame, table: String, buckets: Int,
                   cents: Array[Array[Double]], outDir: String,
                   thresholdE6: Long, nProbe: Int = 8,
@@ -497,53 +484,14 @@ object IncrementalAnn {
                   dropReArrivals: Boolean = false,
                   attrCols: Seq[String] = Nil,
                   checkpointDir: Option[String] = None): DataFrame = {
-    val spark = stream.sparkSession
-    if (checkpointDir.isEmpty) {
-      val out = new org.apache.hadoop.fs.Path(outDir)
-      out.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(out, true)
-      metricsDir.foreach(m => graft.streaming.GateMetricsLog.clear(spark, m))
+    val bc = stream.sparkSession.sparkContext.broadcast(cents)
+    Streaming.gateLoop(stream, "vgate", table, outDir, compactEvery,
+        maxFilesPerBucket, metricsDir, checkpointDir) { (batch, id) =>
+      val (kept, metrics) = gateBatchFull(batch, table, buckets, bc.value,
+        thresholdE6, nProbe, withMetrics = metricsDir.isDefined,
+        reArrivalGuard = if (dropReArrivals) Some(id) else None,
+        attrCols = attrCols)
+      (kept.select(col("id"), col("centroid")), metrics)
     }
-    val bc = spark.sparkContext.broadcast(cents)
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], id: Long) =>
-        // one OVERWRITTEN dir per batch id — the q130 at-least-once
-        // doctrine; gateBatch's self-exclusion + symmetric in-batch
-        // rule make the replayed kept set identical
-        val (kept, metrics) =
-          graft.sources.Bucketed.profPhase(s"vgate-batch $id gate+append") {
-            gateBatchFull(batch.toDF(), table,
-              buckets, bc.value, thresholdE6, nProbe,
-              withMetrics = metricsDir.isDefined,
-              reArrivalGuard = if (dropReArrivals) Some(id) else None,
-              attrCols = attrCols)
-          }
-        graft.sources.Bucketed.profPhase(s"vgate-batch $id out") {
-          kept.select(col("id"), col("centroid"))
-            .write.mode("overwrite").parquet(s"$outDir/batch=$id")
-        }
-        // opt-in observability, same shape + pre-append semantics as
-        // the text gate's (IncrementalDedup.streamNovel), folded
-        // periodically so the log stays bounded (GateMetricsLog)
-        for (m <- metricsDir; gm <- metrics)
-          graft.streaming.GateMetricsLog.write(spark, m, id,
-            gm.nIn, gm.nKept, gm.nIndexHits, gm.nBatchHits)
-        if (compactEvery > 0 && (id + 1) % compactEvery == 0) {
-          graft.sources.IndexMaintenance.compactPostings(spark, table,
-            maxFilesPerBucket)
-          metricsDir.foreach(m =>
-            graft.streaming.GateMetricsLog.compact(spark, m, id))
-        }
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir.getOrElse(
-        java.nio.file.Files.createTempDirectory(
-          graft.streaming.Streaming.scratchBase, "graft-ckpt-vnovel")
-          .toString))
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(outDir).drop("batch")
   }
 }

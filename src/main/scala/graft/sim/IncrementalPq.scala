@@ -362,14 +362,13 @@ object IncrementalPq {
                    vnTable: Option[String] = None,
                    compactEvery: Int = 8, maxFilesPerBucket: Int = 4,
                    checkpointDir: Option[String] = None): Unit = {
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], id: Long) =>
+    graft.streaming.Streaming.runBatches(stream, "pq", checkpointDir) {
+      (batch, id) =>
         graft.sources.Bucketed.profPhase(s"pq-batch $id") {
         val spark = batch.sparkSession
         vnTable.foreach(t => IncrementalAnn.appendToIndex(
-          batch.toDF(), t, buckets, coarse, attrCols))
-        appendToIndex(batch.toDF(), codeTable, buckets, coarse, books,
+          batch, t, buckets, coarse, attrCols))
+        appendToIndex(batch, codeTable, buckets, coarse, books,
           residual, attrCols)
         if (compactEvery > 0 && (id + 1) % compactEvery == 0) {
           graft.sources.Bucketed.profPhase(s"pq-batch $id compact") {
@@ -396,15 +395,7 @@ object IncrementalPq {
             commitPair(spark, codeTable, t)
           })
         }
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir.getOrElse(
-        java.nio.file.Files.createTempDirectory(
-          graft.streaming.Streaming.scratchBase, "graft-ckpt-pq")
-          .toString))
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** Per-query probe lists with the coarse dot for each probed

@@ -4,6 +4,16 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+/** One novelty-gate batch's counts: rows in, rows kept, and the
+  * distinct rows dropped for an index match and for an in-batch match.
+  * Counted BEFORE the kept rows' postings are appended, so the
+  * index-hit count reflects the index the batch was judged against
+  * (counting lazily after the append would see the batch's own kept
+  * postings). */
+private[graft] final case class GateMetrics(nIn: Long, nKept: Long,
+                                            nIndexHits: Long,
+                                            nBatchHits: Long)
+
 /** Bounded-file-count log for the novel-gates' per-batch metrics
   * ([[graft.text.IncrementalDedup.streamNovel]] /
   * [[graft.sim.IncrementalAnn.streamNovel]]). One tiny metrics row per
@@ -41,10 +51,10 @@ private[graft] object GateMetricsLog {
     fs(spark, dir).delete(new Path(dir), true)
 
   /** Write batch `id`'s metrics row (overwrite — replay-idempotent). */
-  def write(spark: SparkSession, dir: String, id: Long, nIn: Long,
-            nKept: Long, nIndexHits: Long, nBatchHits: Long): Unit = {
+  def write(spark: SparkSession, dir: String, id: Long,
+            m: GateMetrics): Unit = {
     import spark.implicits._
-    Seq((id, nIn, nKept, nIndexHits, nBatchHits))
+    Seq((id, m.nIn, m.nKept, m.nIndexHits, m.nBatchHits))
       .toDF("batch", "n_in", "n_kept", "n_index_hits", "n_batch_hits")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/b$id")
   }

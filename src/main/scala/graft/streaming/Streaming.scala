@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, Trigger}
 
 /** Structured Streaming pipelines. The reference has no streaming
   * machinery (SURVEY §2.13) — its closest constructs are the append-only
@@ -105,9 +106,11 @@ object Streaming {
     } else reader.parquet(path)
   }
 
-  /** Run-scoped scratch base: tmpfs when available (checkpoints, memory
-    * targets, and per-run staging all terminate within the call, so RAM
-    * beats disk and nothing needs to survive the process). */
+  /** Scratch base for state that lives no longer than one call: tmpfs
+    * when available, since one-shot checkpoints and per-run staging
+    * are rewritten on every micro-batch and RAM beats disk. Whatever
+    * lands here occupies RAM until deleted, so every user deletes its
+    * own entries ([[runBatches]] does so for fresh checkpoints). */
   def scratchBase: java.nio.file.Path = {
     val shm = java.nio.file.Paths.get("/dev/shm")
     if (java.nio.file.Files.isDirectory(shm) &&
@@ -201,21 +204,12 @@ object Streaming {
                          nBuckets: Int = 32): DataFrame = {
     require(nBuckets >= 1, "nBuckets must be >= 1")
     val spark = stream.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
     val tPath = new org.apache.hadoop.fs.Path(targetDir)
-    val fs = tPath.getFileSystem(hconf)
-    fs.delete(tPath, true)
-    val ckBase = scratchBase
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        mergeBatch(batch.toDF(), targetDir, keys, orderCols, nBuckets)
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory(ckBase, "graft-ckpt-upsert")
-          .toString)
-      .start()
-    q.awaitTermination()
+    tPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(tPath, true)
+    runBatches(stream, "upsert") { (batch, _) =>
+      mergeBatch(batch, targetDir, keys, orderCols, nBuckets)
+    }
     spark.read.parquet(targetDir).drop("__bucket")
   }
 
@@ -240,30 +234,17 @@ object Streaming {
     * CDC-style streams apply directly. Cost per batch is
     * O(buckets the batch's keys hash to), never O(table).
     *
-    * CONTINUING ingest must pass `checkpointDir` and resume it every
-    * call: the checkpoint is what makes a re-invocation process only
-    * the NEW source files. The default (a fresh temp checkpoint) is a
-    * ONE-SHOT drain — calling it again re-reads the whole source
-    * directory (O(all files), not O(new)) and, being latest-batch-wins,
-    * would regress keys other writers updated in between back to the
-    * re-streamed values. */
+    * `checkpointDir`: see [[runBatches]]. Being latest-batch-wins,
+    * a second ONE-SHOT call over the same source would also regress
+    * keys other writers updated in between back to the re-streamed
+    * values — continuing ingest must resume a persistent checkpoint. */
   def mergeStreamIntoBucketed(stream: DataFrame, table: String,
                               deleteCol: Option[String] = None,
-                              checkpointDir: Option[String] = None): Unit = {
-    val spark = stream.sparkSession
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.sources.Bucketed.mergeByKey(spark, table, batch.toDF(),
-          deleteCol)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir.getOrElse(
-        java.nio.file.Files.createTempDirectory(scratchBase,
-          "graft-ckpt-gmerge").toString))
-      .start()
-    q.awaitTermination()
-  }
+                              checkpointDir: Option[String] = None): Unit =
+    runBatches(stream, "gmerge", checkpointDir) { (batch, _) =>
+      graft.sources.Bucketed.mergeByKey(stream.sparkSession, table, batch,
+        deleteCol)
+    }
 
   /** In-stream exact dedup — the continuous-ingest form of
     * `Dedup.exact` (q21): keep the first-arriving document per
@@ -328,14 +309,7 @@ object Streaming {
   /** Run any streaming DataFrame to completion over the currently
     * available data (Trigger.AvailableNow) into an in-memory table;
     * returns the result. Complete mode for aggregations, Update for
-    * stateful maps.
-    *
-    * The checkpoint here is run-scoped scratch (the query terminates
-    * within the call), so it goes to tmpfs when available — every
-    * micro-batch commits offset/state files, and putting those on RAM
-    * instead of disk cuts the fixed per-batch latency. A production
-    * deployment of these pipelines supplies its own DURABLE
-    * checkpointLocation on its writeStream.
+    * stateful maps. The checkpoint is a ONE-SHOT one ([[runBatches]]).
     *
     * `statePartitions` sizes the stateful-operator partitioning for THIS
     * query (set/restored around `start()`, which is when Spark locks
@@ -351,35 +325,130 @@ object Streaming {
                       outputMode: String = "complete",
                       statePartitions: Option[Int] = None): DataFrame = {
     val spark = stream.sparkSession
-    val base = scratchBase
     withStatePartitions(spark, statePartitions) {
-      val q = stream.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(outputMode)
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory(base, s"graft-ckpt-$name")
-            .toString)
-        .start()
-      q.awaitTermination()
+      drain(stream.writeStream.format("memory").queryName(name)
+        .outputMode(outputMode), name, None)
     }
     spark.table(name)
   }
 
+  /** Run `stream` to completion over the currently available data
+    * (Trigger.AvailableNow), handing each micro-batch and its batch id
+    * to `body` — the one driver behind every foreachBatch sink in the
+    * engine. foreachBatch runs batches serially and AT LEAST ONCE: a
+    * batch whose effect landed before the checkpoint committed is
+    * replayed under the same id, so `body` must make a replay
+    * idempotent. `name` names the checkpoint; `outputMode` is the
+    * stream's (Update for stateful maps).
+    *
+    * `checkpointDir = None` (default) is the ONE-SHOT mode: a fresh
+    * `graft-ckpt-<name>` checkpoint under [[scratchBase]], deleted
+    * when the call returns or throws. Every one-shot call therefore
+    * reprocesses the whole available source, and batch ids restart at
+    * 0. CONTINUING ingest passes a PERSISTENT `checkpointDir` and
+    * resumes it on every call: Structured Streaming continues with
+    * monotonic batch ids and processes only newly-arrived source
+    * files. A caller's checkpoint is never deleted. */
+  def runBatches(stream: DataFrame, name: String,
+                 checkpointDir: Option[String] = None,
+                 outputMode: String = "append")
+                (body: (DataFrame, Long) => Unit): Unit =
+    drain(stream.writeStream.outputMode(outputMode)
+      .foreachBatch((batch: Dataset[Row], id: Long) => body(batch.toDF(), id)),
+      name, checkpointDir)
+
+  /** The novelty gates' shared micro-batch loop
+    * ([[graft.text.IncrementalDedup.streamNovel]],
+    * [[graft.sim.IncrementalAnn.streamNovel]]): `gate` judges batch
+    * `id` against the index `table`, appends the kept rows' postings,
+    * and returns the kept rows to emit plus its opt-in metrics. Each
+    * batch's kept rows OVERWRITE `outDir/batch=<id>`: foreachBatch is
+    * at-least-once, and a replayed batch appending to a flat dir would
+    * duplicate them (the gates make the replayed kept set identical).
+    * Metrics land in `metricsDir`'s [[GateMetricsLog]], overwritten
+    * per batch id. Every `compactEvery`-th batch compacts the postings
+    * — appends grow per-bucket file counts O(batches) otherwise, and
+    * compaction preserves the posting SET, so it is verdict-neutral —
+    * and folds the metrics log. A ONE-SHOT run ([[runBatches]]) wipes
+    * the output and metrics first, since its batch ids restart at 0;
+    * a persistent checkpoint keeps both across calls. Returns every
+    * kept row in `outDir`. */
+  private[graft] def gateLoop(stream: DataFrame, name: String,
+                              table: String, outDir: String,
+                              compactEvery: Int, maxFilesPerBucket: Int,
+                              metricsDir: Option[String],
+                              checkpointDir: Option[String])
+                             (gate: (DataFrame, Long) =>
+                               (DataFrame, Option[GateMetrics])): DataFrame = {
+    val spark = stream.sparkSession
+    if (checkpointDir.isEmpty) {
+      val out = new org.apache.hadoop.fs.Path(outDir)
+      out.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(out, true)
+      metricsDir.foreach(m => GateMetricsLog.clear(spark, m))
+    }
+    runBatches(stream, name, checkpointDir) { (batch, id) =>
+      import graft.sources.Bucketed.profPhase
+      val (kept, metrics) =
+        profPhase(s"$name-batch $id gate+append")(gate(batch, id))
+      profPhase(s"$name-batch $id out") {
+        kept.write.mode("overwrite").parquet(s"$outDir/batch=$id")
+      }
+      for (m <- metricsDir; gm <- metrics)
+        GateMetricsLog.write(spark, m, id, gm)
+      if (compactEvery > 0 && (id + 1) % compactEvery == 0) {
+        profPhase(s"$name-batch $id compact") {
+          graft.sources.IndexMaintenance.compactPostings(spark, table,
+            maxFilesPerBucket)
+        }
+        metricsDir.foreach(m => GateMetricsLog.compact(spark, m, id))
+      }
+    }
+    spark.read.parquet(outDir).drop("batch")
+  }
+
+  /** `body` over the caller's checkpoint, or over a fresh
+    * `graft-ckpt-<name>` under [[scratchBase]] that is deleted once
+    * `body` returns or throws — the checkpoint half of
+    * [[runBatches]], for callers that need the resolved path before
+    * the stream starts. */
+  private[graft] def withCheckpoint[A](name: String,
+                                       checkpointDir: Option[String])
+                                      (body: String => A): A =
+    checkpointDir match {
+      case Some(dir) => body(dir)
+      case None =>
+        val dir = java.nio.file.Files
+          .createTempDirectory(scratchBase, s"graft-ckpt-$name").toFile
+        try body(dir.toString)
+        finally org.apache.hadoop.fs.FileUtil.fullyDelete(dir)
+    }
+
+  /** Start `writer` under AvailableNow on its checkpoint and wait for it
+    * to drain. The stop in `finally` makes sure no batch still runs
+    * when [[withCheckpoint]] deletes a fresh checkpoint (an interrupted
+    * wait leaves the query running). */
+  private def drain(writer: DataStreamWriter[Row], name: String,
+                    checkpointDir: Option[String]): Unit =
+    withCheckpoint(name, checkpointDir) { ckpt =>
+      val q = writer.trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", ckpt).start()
+      try q.awaitTermination() finally q.stop()
+    }
+
   /** Size the stateful-operator partitioning for a stream started inside
     * `body` — the shared mechanism behind [[runAvailableNow]]'s
-    * `statePartitions`, exposed for callers that own their writeStream
-    * (foreachBatch sinks). Spark locks `spark.sql.shuffle.partitions`
-    * into the checkpoint at `start()` and there is no per-query knob;
-    * unlike batch plans — where AQE coalesces oversized shuffles —
-    * every state partition carries per-batch store open/commit
-    * overhead on EVERY micro-batch forever, so the count must be sized
-    * to the state volume explicitly (measured locally: a 3-batch
-    * flatMapGroupsWithState stream over sf0.1 drops from ~3.3 s to
-    * ~0.7 s per batch going from 32 to 4 state partitions). The
-    * override is session-scoped while `body` runs — callers composing
-    * OTHER work on the same session concurrently should pass None.
+    * `statePartitions`, exposed for [[runBatches]] callers. Spark
+    * locks `spark.sql.shuffle.partitions` into the checkpoint at
+    * `start()` and there is no per-query knob; unlike batch plans —
+    * where AQE coalesces oversized shuffles — every state partition
+    * carries per-batch store open/commit overhead on EVERY micro-batch
+    * forever, so the count must be sized to the state volume
+    * explicitly (measured locally: a 3-batch flatMapGroupsWithState
+    * stream over sf0.1 drops from ~3.3 s to ~0.7 s per batch going
+    * from 32 to 4 state partitions). The override is session-scoped
+    * while `body` runs — callers composing OTHER work on the same
+    * session concurrently should pass None.
     * Restores an UNSET key by unsetting, not by writing the default
     * back as explicit. */
   def withStatePartitions[A](spark: SparkSession, statePartitions: Option[Int])

@@ -399,25 +399,14 @@ object IncrementalBm25 {
                    attrCols: Seq[String] = Nil,
                    compactEvery: Int = 8, maxFilesPerBucket: Int = 4,
                    checkpointDir: Option[String] = None): Unit = {
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], id: Long) =>
-        val spark = batch.sparkSession
-        appendToIndex(batch.toDF(), name, buckets, textCol, idCol,
-          attrCols)
+    graft.streaming.Streaming.runBatches(stream, "bm25", checkpointDir) {
+      (batch, id) =>
+        appendToIndex(batch, name, buckets, textCol, idCol, attrCols)
         if (compactEvery > 0 && (id + 1) % compactEvery == 0) {
-          compactIndex(spark, name, maxFilesPerBucket)
-          repairStats(spark, name)
+          compactIndex(batch.sparkSession, name, maxFilesPerBucket)
+          repairStats(batch.sparkSession, name)
         }
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir.getOrElse(
-        java.nio.file.Files.createTempDirectory(
-          graft.streaming.Streaming.scratchBase, "graft-ckpt-bm25")
-          .toString))
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** Per-query BM25 top-`k` — (query_id, doc_id, score_e6, n_terms,

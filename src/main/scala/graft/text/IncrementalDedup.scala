@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.streaming.{GateMetrics, Streaming}
 
 /** Index-and-probe incremental near-duplicate detection — the operator a
   * CONTINUOUSLY-INGESTING corpus actually runs. The whole-corpus batch
@@ -233,17 +234,9 @@ object IncrementalDedup {
       k, numHashes, bands, withMetrics = false,
       reArrivalGuard = reArrivalGuard)._1
 
-  /** Per-batch gate metrics, counted from the very DataFrames the
-    * verdict used — BEFORE the kept bands are appended, so the
-    * index-hit count reflects the index the batch was judged against
-    * (counting lazily after the append would see the batch's own
-    * kept bands). */
-  private[graft] final case class GateMetrics(nIn: Long, nKept: Long,
-                                              nIndexHits: Long,
-                                              nBatchHits: Long)
-
-  /** [[gateBatch]], optionally with [[GateMetrics]] — the two drop-set
-    * counts cost two extra small jobs, so they are opt-in. */
+  /** [[gateBatch]], optionally with its [[GateMetrics]], counted from
+    * the very DataFrames the verdict used — the two drop-set counts
+    * cost two extra small jobs, so they are opt-in. */
   private[graft] def gateBatchFull(batch: DataFrame, table: String,
                                    buckets: Int, textCol: String, idCol: String,
                                    k: Int, numHashes: Int, bands: Int,
@@ -321,17 +314,16 @@ object IncrementalDedup {
     * against the corpus AND every previously-kept doc without ever
     * rescanning either. Returns the kept docs. Per batch: sign the
     * batch, one co-located index join, one self band join, one
-    * bucketed append — O(batch + matched buckets). */
-  /** `checkpointDir = None` (default) is the ONE-SHOT mode: each
-    * invocation wipes the output and uses a throwaway checkpoint, so
-    * the whole available stream reprocesses and batch ids restart at
-    * 0 — `dropReArrivals`' provenance domain is then a single
-    * invocation. Passing a PERSISTENT `checkpointDir` keeps output and
-    * metrics across invocations: Structured Streaming resumes with
-    * monotonic batch ids and AvailableNow processes only newly-arrived
-    * data, which is what makes the re-arrival guard correct across
-    * restarts (an old id re-delivered in a new file lands in a
-    * strictly newer batch than its posting's tag). */
+    * bucketed append — O(batch + matched buckets). The loop (output
+    * per batch id, opt-in metrics, compaction cadence) is
+    * [[Streaming.gateLoop]].
+    *
+    * `checkpointDir`: see [[Streaming.runBatches]]. In
+    * one-shot mode `dropReArrivals`' provenance domain is a single
+    * invocation; a persistent checkpoint's monotonic batch ids make the
+    * re-arrival guard correct across restarts (an old id re-delivered
+    * in a new file lands in a strictly newer batch than its posting's
+    * tag). */
   def streamNovel(stream: DataFrame, table: String, buckets: Int,
                   outDir: String,
                   textCol: String = "text", idCol: String = "doc_id",
@@ -340,63 +332,12 @@ object IncrementalDedup {
                   maxFilesPerBucket: Int = 4,
                   metricsDir: Option[String] = None,
                   dropReArrivals: Boolean = false,
-                  checkpointDir: Option[String] = None): DataFrame = {
-    val spark = stream.sparkSession
-    if (checkpointDir.isEmpty) {
-      val out = new org.apache.hadoop.fs.Path(outDir)
-      out.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(out, true)
-      metricsDir.foreach(m => graft.streaming.GateMetricsLog.clear(spark, m))
+                  checkpointDir: Option[String] = None): DataFrame =
+    Streaming.gateLoop(stream, "gate", table, outDir,
+        compactEvery, maxFilesPerBucket, metricsDir, checkpointDir) {
+      (batch, id) =>
+        gateBatchFull(batch, table, buckets, textCol, idCol, k, numHashes,
+          bands, withMetrics = metricsDir.isDefined,
+          reArrivalGuard = if (dropReArrivals) Some(id) else None)
     }
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], id: Long) =>
-        // one OVERWRITTEN dir per batch id: foreachBatch is
-        // at-least-once, and a replayed batch appending to a flat dir
-        // would duplicate its kept docs (the index re-append is
-        // harmless — duplicate band rows produce the same matches,
-        // and the next compaction pass dedups them away)
-        val (kept, metrics) =
-          graft.sources.Bucketed.profPhase(s"gate-batch $id gate+append") {
-            gateBatchFull(batch.toDF(),
-              table, buckets, textCol, idCol, k, numHashes, bands,
-              withMetrics = metricsDir.isDefined,
-              reArrivalGuard = if (dropReArrivals) Some(id) else None)
-          }
-        graft.sources.Bucketed.profPhase(s"gate-batch $id out") {
-          kept.write.mode("overwrite").parquet(s"$outDir/batch=$id")
-        }
-        // OPT-IN per-batch gate metrics (the run-forever operator's
-        // observability), overwritten per batch id so replays stay
-        // idempotent, periodically folded so the log's own file count
-        // stays bounded (GateMetricsLog). Off by default — the
-        // drop-set counts cost two extra joins a bench steady state
-        // should not pay
-        for (m <- metricsDir; gm <- metrics)
-          graft.streaming.GateMetricsLog.write(spark, m, id,
-            gm.nIn, gm.nKept, gm.nIndexHits, gm.nBatchHits)
-        // every append leaves ≥1 new file per touched bucket; a gate
-        // that runs forever needs the periodic rewrite or per-bucket
-        // file counts (and with them listing + footer-read cost) grow
-        // O(batches). Verdict-neutral: compaction preserves the band
-        // SET, so it can run between any two batches.
-        if (compactEvery > 0 && (id + 1) % compactEvery == 0) {
-          graft.sources.Bucketed.profPhase(s"gate-batch $id compact") {
-            graft.sources.IndexMaintenance.compactPostings(spark, table,
-              maxFilesPerBucket)
-          }
-          metricsDir.foreach(m =>
-            graft.streaming.GateMetricsLog.compact(spark, m, id))
-        }
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir.getOrElse(
-        java.nio.file.Files.createTempDirectory(
-          graft.streaming.Streaming.scratchBase, "graft-ckpt-novel")
-          .toString))
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(outDir).drop("batch")
-  }
 }

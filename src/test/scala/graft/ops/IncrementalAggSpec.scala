@@ -149,4 +149,61 @@ class IncrementalAggSpec extends SparkSuite {
       assert(src.count() == 64)
     } finally drop()
   }
+
+  /** A source dir under a fresh base, a stream over it, and the base
+    * deleted after `f`. */
+  private def withSource(f: (String, () => DataFrame) => Unit): Unit = {
+    val base = java.nio.file.Files.createTempDirectory(
+      graft.streaming.Streaming.scratchBase, "graft-incagg-src").toString
+    val stream = () => spark.readStream.schema(rows(0, 0).schema)
+      .parquet(s"$base/src")
+    try f(base, stream)
+    finally org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(base))
+  }
+
+  test("a persistent checkpoint resumes: the second call ingests only the new files") {
+    withSource { (base, stream) =>
+      try {
+        IncrementalAgg.buildIndex(rows(0, 0), name, buckets, "g", "v")
+        val ckpt = Some(s"$base/ckpt")
+        rows(0, 30).write.mode("append").parquet(s"$base/src")
+        IncrementalAgg.streamAppend(stream(), name, buckets, "g", "v",
+          checkpointDir = ckpt)
+        assert(served() == oracle(rows(0, 30)))
+        rows(30, 64).write.mode("append").parquet(s"$base/src")
+        IncrementalAgg.streamAppend(stream(), name, buckets, "g", "v",
+          checkpointDir = ckpt)
+        assert(served() == oracle(rows(0, 64)))
+      } finally drop()
+    }
+  }
+
+  test("a one-shot streamAppend's deleted checkpoint cannot be resumed: later ingest fails, drops no rows") {
+    withSource { (base, stream) =>
+      try {
+        IncrementalAgg.buildIndex(rows(0, 0), name, buckets, "g", "v")
+        rows(0, 30).write.mode("append").parquet(s"$base/src")
+        IncrementalAgg.streamAppend(stream(), name, buckets, "g", "v")
+        assert(served() == oracle(rows(0, 30)))
+        val loc = new org.apache.hadoop.fs.Path(
+          spark.sessionState.catalog.getTableMetadata(
+            org.apache.spark.sql.catalyst.TableIdentifier(s"${name}_partials"))
+            .location)
+        val owner = graft.sources.Bucketed.readMarker(
+          loc.getFileSystem(spark.sparkContext.hadoopConfiguration), loc,
+          "_graft_stream_owner", "graft-stream-owner-v1")
+        assert(owner.isDefined, "the one-shot call must claim the index")
+        // passing the deleted owner path back would restart Spark's
+        // batch ids at 0, and batch 0 would find the committed sb0 tag
+        rows(30, 64).write.mode("append").parquet(s"$base/src")
+        for (ckpt <- Seq(owner, None)) {
+          val e = intercept[IllegalArgumentException](
+            IncrementalAgg.streamAppend(stream(), name, buckets, "g", "v",
+              checkpointDir = ckpt))
+          assert(e.getMessage.contains("rebuild the index"), e.getMessage)
+        }
+        assert(served() == oracle(rows(0, 30)))
+      } finally drop()
+    }
+  }
 }

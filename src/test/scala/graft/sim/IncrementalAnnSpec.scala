@@ -155,12 +155,59 @@ class IncrementalAnnSpec extends SparkSuite {
       assert(k1 == ref.head, s"batch1 kept $k1")
       // pre-append metrics: 100 is an index hit (dups corpus vec(3)),
       // 102 an in-batch hit (dups 101, larger id)
-      assert(m1.contains(IncrementalAnn.GateMetrics(4L, 2L, 1L, 1L)),
+      assert(m1.contains(graft.streaming.GateMetrics(4L, 2L, 1L, 1L)),
         s"metrics $m1")
       val k2 = IncrementalAnn.gateBatch(b2.toDF("id", "vec"), table,
           buckets, cents, thresholdE6 = 990000L, nProbe = 2)
         .select("id").as[Long].collect().toSet
       assert(k2 == ref(1), s"batch2 kept $k2")
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+  }
+
+  test("streamNovel runs the vector gate per micro-batch over a file stream") {
+    try {
+      val novelA = Array.tabulate(dim)(d =>
+        (d + 1) * 0.25 * (if (d % 2 == 0) 1 else -1))
+      val novelB = Array.tabulate(dim)(d =>
+        (dim - d) * 0.25 * (if (d % 3 == 0) 1 else -1))
+      val novelC = Array.tabulate(dim)(d =>
+        (if (d < dim / 2) 1.0 else -0.5) * (d + 2) * 0.125)
+      IncrementalAnn.buildIndex(corpus, table, buckets, cents)
+      val base = java.nio.file.Files
+        .createTempDirectory("graft-vnovel").toString
+      def writeFile(name: String, mtimeMs: Long,
+                    rows: Seq[(Long, Array[Double])]): Unit = {
+        val stage = java.nio.file.Files.createTempDirectory("graft-vnovel-st")
+        rows.toDF("id", "vec").coalesce(1)
+          .write.mode("overwrite").parquet(stage.toString)
+        val part = stage.toFile.listFiles()
+          .filter(_.getName.endsWith(".parquet")).head
+        val dest = new java.io.File(s"$base/src", name)
+        dest.getParentFile.mkdirs()
+        java.nio.file.Files.copy(part.toPath, dest.toPath)
+        assert(dest.setLastModified(mtimeMs))
+      }
+      // batch 0: 100 index-dup of corpus vec(3), 101 novel, 102
+      // in-batch dup of 101, 103 novel; batch 1: 200 dup of the
+      // batch-0-KEPT 101, 201 index-dup of corpus vec(7), 202 novel
+      writeFile("f1.parquet", 1000000L, Seq((100L, vec(3)), (101L, novelA),
+        (102L, novelA), (103L, novelB)))
+      writeFile("f2.parquet", 2000000L,
+        Seq((200L, novelA), (201L, vec(7)), (202L, novelC)))
+      val kept = IncrementalAnn.streamNovel(
+          graft.streaming.Streaming.fileStream(spark, s"$base/src",
+            maxFilesPerTrigger = Some(1)),
+          table, buckets, cents, s"$base/out", thresholdE6 = 990000L,
+          nProbe = 2, metricsDir = Some(s"$base/metrics"))
+        .select("id").as[Long].collect().toSet
+      assert(kept == Set(101L, 103L, 202L), s"kept $kept")
+      // pre-append counts: 200 is an index hit in ITS batch, against
+      // the postings batch 0 appended
+      val metrics = graft.streaming.GateMetricsLog.read(spark, s"$base/metrics")
+        .select("batch", "n_in", "n_kept", "n_index_hits", "n_batch_hits")
+        .as[(Long, Long, Long, Long, Long)].collect().toSet
+      assert(metrics == Set((0L, 4L, 2L, 1L, 1L), (1L, 3L, 1L, 2L, 0L)),
+        s"metrics $metrics")
     } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 

@@ -18,7 +18,7 @@ class GateMetricsLogSpec extends SparkSuite {
     GateMetricsLog.clear(spark, dir)
     val compactEvery = 4
     for (id <- 0L until 18L) {
-      GateMetricsLog.write(spark, dir, id, 10 + id, id, 1, 0)
+      GateMetricsLog.write(spark, dir, id, GateMetrics(10 + id, id, 1, 0))
       if ((id + 1) % compactEvery == 0)
         GateMetricsLog.compact(spark, dir, id)
     }
@@ -34,11 +34,12 @@ class GateMetricsLogSpec extends SparkSuite {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-gmetrics2").toString + "/m"
     GateMetricsLog.clear(spark, dir)
-    for (id <- 0L until 4L) GateMetricsLog.write(spark, dir, id, 100 + id, 1, 0, 0)
+    for (id <- 0L until 4L)
+      GateMetricsLog.write(spark, dir, id, GateMetrics(100 + id, 1, 0, 0))
     GateMetricsLog.compact(spark, dir, 3L)
     // simulate the crash window: a batch dir that SHOULD have been
     // deleted by the fold reappears (both generations visible)
-    GateMetricsLog.write(spark, dir, 2L, 102, 1, 0, 0)
+    GateMetricsLog.write(spark, dir, 2L, GateMetrics(102, 1, 0, 0))
     assert(rowsOf(dir) == (0L until 4L).map(id => (id, 100 + id)).toSet,
       "duplicate generations must reconcile by batch id")
     // replaying the SAME fold (at-least-once) heals the layout: the
@@ -49,7 +50,8 @@ class GateMetricsLogSpec extends SparkSuite {
     assert(rowsOf(dir) == (0L until 4L).map(id => (id, 100 + id)).toSet)
     // the other crash window: a TORN generation (no _SUCCESS — crash
     // mid-write) is discarded and refolded from the intact inputs
-    for (id <- 4L until 6L) GateMetricsLog.write(spark, dir, id, 100 + id, 1, 0, 0)
+    for (id <- 4L until 6L)
+      GateMetricsLog.write(spark, dir, id, GateMetrics(100 + id, 1, 0, 0))
     val torn = new java.io.File(dir, "g5")
     assert(torn.mkdirs())
     GateMetricsLog.compact(spark, dir, 5L)
@@ -73,7 +75,7 @@ class GateMetricsLogSpec extends SparkSuite {
       "not parquet".getBytes)
     assert(GateMetricsLog.read(spark, torn).count() == 0)
     // a committed write beside the torn dir reads back — torn skipped
-    GateMetricsLog.write(spark, torn, 7L, 42, 1, 0, 0)
+    GateMetricsLog.write(spark, torn, 7L, GateMetrics(42, 1, 0, 0))
     assert(rowsOf(torn) == Set((7L, 42L)))
   }
 
@@ -81,8 +83,10 @@ class GateMetricsLogSpec extends SparkSuite {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-gmetrics3").toString + "/m"
     GateMetricsLog.clear(spark, dir)
-    for (id <- 0L until 3L) GateMetricsLog.write(spark, dir, id, id, 0, 0, 0)
-    GateMetricsLog.write(spark, dir, 1L, 1, 0, 0, 0) // replay of batch 1
+    for (id <- 0L until 3L)
+      GateMetricsLog.write(spark, dir, id, GateMetrics(id, 0, 0, 0))
+    // replay of batch 1
+    GateMetricsLog.write(spark, dir, 1L, GateMetrics(1, 0, 0, 0))
     GateMetricsLog.compact(spark, dir, 2L)
     assert(rowsOf(dir) == Set((0L, 0L), (1L, 1L), (2L, 2L)))
   }
