@@ -357,14 +357,14 @@ object ScaleProbe {
         val src = d.select(pmod(col("doc_id"), lit(4096)).as("g"),
           length(col("text")).cast("long").as("v"))
         graft.ops.IncrementalAgg.buildIndex(src, aggName, buckets = 16,
-          "g", "v")
+          "g", Seq("v"))
         spark.table(s"${aggName}_partials").count()
       }
       time("incagg_append", f) {
         val batch = replicated(1).limit(500)
           .select(pmod(col("doc_id") + lit(70000000L), lit(4096)).as("g"),
             length(col("text")).cast("long").as("v"))
-        graft.ops.IncrementalAgg.append(batch, aggName, 16, "g", "v",
+        graft.ops.IncrementalAgg.append(batch, aggName, 16, "g", Seq("v"),
           tag = "sp1")
         500L
       }
@@ -416,7 +416,7 @@ object ScaleProbe {
         graft.sources.Bucketed.setRetention(spark, mrgName, 6)
         graft.sources.Replication.bootstrap(spark, mrgName, dstName, 64)
         graft.ops.Ivm.create(spark, mrgName,
-          ivmName, 16, "k", "v")
+          ivmName, 16, "k", Seq("v"))
         spark.table(mrgName).count()
       }
       time("merge_batch", f) {
@@ -431,7 +431,7 @@ object ScaleProbe {
       // the view refreshes off the SAME merge delta: per-changed-files
       // cost, flat vs the table's factor like replica_sync
       time("ivm_refresh", f) {
-        graft.ops.Ivm.refresh(spark, mrgName, ivmName, 16, "k", "v")
+        graft.ops.Ivm.refresh(spark, mrgName, ivmName, 16, "k", Seq("v"))
       }
       spark.sql(s"DROP TABLE IF EXISTS ${ivmName}_partials")
       spark.sql(s"DROP TABLE IF EXISTS $dstName")
@@ -530,7 +530,7 @@ object ScaleProbe {
       val jgV = s"graft_scaleprobe_jagg_v_x$f"
       time("joinagg_build", f) {
         graft.ops.Ivm.createJoinAgg(spark, jvA, jvB, "j", jgV, 16,
-          "w", "v")
+          "w", Seq("v"))
         graft.ops.Ivm.serve(spark, jgV).count()
       }
       time("joinagg_fact_batch", f) {
@@ -539,7 +539,7 @@ object ScaleProbe {
             lit(-9L).as("v"))
         graft.sources.Bucketed.mergeByKey(spark, jvA, batch)
         graft.ops.Ivm.refreshJoinAgg(spark, jvA, jvB, "j", jgV, 16,
-          "w", "v")._1
+          "w", Seq("v"))._1
       }
       spark.sql(s"DROP TABLE IF EXISTS ${jgV}_partials")
       // LEFT-OUTER join view: the fact case refreshes like the inner
@@ -569,7 +569,7 @@ object ScaleProbe {
       val jglV = s"graft_scaleprobe_jaggl_v_x$f"
       time("joinaggleft_build", f) {
         graft.ops.Ivm.createJoinAggLeft(spark, jvA, jvB, "j", jglV,
-          16, "w", "v")
+          16, "w", Seq("v"))
         graft.ops.Ivm.serve(spark, jglV).count()
       }
       time("joinaggleft_fact_batch", f) {
@@ -578,7 +578,7 @@ object ScaleProbe {
             lit(-7L).as("v"))
         graft.sources.Bucketed.mergeByKey(spark, jvA, batch)
         graft.ops.Ivm.refreshJoinAggLeft(spark, jvA, jvB, "j", jglV,
-          16, "w", "v")._1
+          16, "w", Seq("v"))._1
       }
       spark.sql(s"DROP TABLE IF EXISTS ${jglV}_partials")
       // round 14: FULL-outer view + the rollup FOLLOWING the pair as
@@ -593,7 +593,7 @@ object ScaleProbe {
           aKey = "k", bKey = "j")
         graft.sources.Bucketed.setRetention(spark, fvV, 6)
         graft.sources.Bucketed.setRetention(spark, s"${fvV}_orphans", 6)
-        graft.ops.Ivm.createOverFull(spark, fvV, fvR, 16, "w", "v")
+        graft.ops.Ivm.createOverFull(spark, fvV, fvR, 16, "w", Seq("v"))
         spark.table(fvV).count()
       }
       time("full_pair_rollup_batch", f) {
@@ -602,7 +602,7 @@ object ScaleProbe {
             lit(-3L).as("v"))
         graft.sources.Bucketed.mergeByKey(spark, jvA, batch)
         graft.ops.Ivm.refreshJoinFull(spark, jvA, jvB, "j", fvV)
-        graft.ops.Ivm.refreshOverFull(spark, fvV, fvR, 16, "w", "v")._1
+        graft.ops.Ivm.refreshOverFull(spark, fvV, fvR, 16, "w", Seq("v"))._1
       }
       Seq(s"${fvR}_partials", s"${fvV}_orphans", fvV, ojV, jvV, jvB,
         jvA).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
@@ -619,9 +619,9 @@ object ScaleProbe {
           (col("doc_id") % 997L).as("v1"))
         graft.sources.Bucketed.save(src, mmName, Seq("k"), 64)
         graft.sources.Bucketed.setRetention(spark, mmName, 6)
-        graft.ops.Ivm.createMulti(spark, mmName, mmV, 16, "g",
+        graft.ops.Ivm.create(spark, mmName, mmV, 16, "g",
           Seq("v0", "v1"))
-        graft.ops.Ivm.serveMulti(spark, mmV).count()
+        graft.ops.Ivm.serve(spark, mmV).count()
       }
       time("multimeasure_refresh", f) {
         val batch = replicated(1).limit(8)
@@ -629,7 +629,7 @@ object ScaleProbe {
             pmod(col("doc_id"), lit(4096)).as("g"),
             lit(-1L).as("v0"), lit(2L).as("v1"))
         graft.sources.Bucketed.mergeByKey(spark, mmName, batch)
-        graft.ops.Ivm.refreshMulti(spark, mmName, mmV, 16, "g",
+        graft.ops.Ivm.refresh(spark, mmName, mmV, 16, "g",
           Seq("v0", "v1"))
       }
       Seq(s"${mmV}_partials", mmName).foreach(t =>

@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.col
 
 import graft.sources.{Bucketed, Replication}
 
@@ -35,36 +35,53 @@ import graft.sources.{Bucketed, Replication}
 object Ivm {
 
   /** Build the view over `source`'s current head and bookmark that
-    * generation. `groupCol`/`valueCol` name the source columns
-    * (value pre-quantized long — the house sum doctrine). */
+    * generation. `groupCol`/`valueCols` name the source columns
+    * (measures pre-quantized long — the house sum doctrine; their
+    * ORDER fixes the view's measure indexes,
+    * [[IncrementalAgg.buildIndex]]). Returns the bookmark. */
   def create(spark: SparkSession, source: String, view: String,
-             buckets: Int, groupCol: String, valueCol: String): Long =
-    createSourceCore(spark, source, view)(head =>
-      IncrementalAgg.buildIndex(
-        head.select(col(groupCol), col(valueCol)),
-        view, buckets, groupCol, valueCol))
-
-  /** ONE copy of the source-view create protocol (the single/multi
-    * twins' shared shell — COVERAGE's deferred fold, round 15): pin
-    * the source head, hand it to the family's build, bookmark the
-    * pinned generation. */
-  private def createSourceCore(spark: SparkSession, source: String,
-                               view: String)(
-      build: DataFrame => Unit): Long = {
+             buckets: Int, groupCol: String,
+             valueCols: Seq[String]): Long = {
     val gen = Bucketed.currentGeneration(spark, source)
-    build(Bucketed.loadAsOf(spark, source, gen))
+    IncrementalAgg.buildIndex(Bucketed.loadAsOf(spark, source, gen),
+      view, buckets, groupCol, valueCols)
     Replication.writeBookmark(spark, s"${view}_partials", gen)
     gen
   }
 
-  /** ONE copy of the source-view refresh walk (single/multi twins'
-    * shared core): bookmark/rebuild/retention checks, then per
-    * consecutive retained generation pair hand the pair's delta to the
-    * family's exactly-once apply and advance the bookmark. The
-    * consecutive-pairs crash doctrine is documented on [[refresh]]. */
-  private def refreshSourceCore(spark: SparkSession, source: String,
-                                view: String)(
-      applyPair: (Long, Long, DataFrame) => Unit): Long = {
+  /** Land one pair's delta (`groupCol`, `valueCols`, `change`) as
+    * exactly-once partials: its inserts append under `<tag>-i`, its
+    * deletes retract under `<tag>-d`, each half skipped when its
+    * sentinel already landed — the one apply step every aggregate
+    * view's walk shares. */
+  private def applyDelta(delta: DataFrame, view: String, buckets: Int,
+                         groupCol: String, valueCols: Seq[String],
+                         tag: String): Unit = {
+    val sel = (groupCol +: valueCols).map(col)
+    val dV = delta.select(sel :+ col("change"): _*)
+      .localCheckpoint(eager = false) // one eval feeds both halves
+    IncrementalAgg.append(
+      dV.filter(col("change") === "insert").select(sel: _*),
+      view, buckets, groupCol, valueCols, s"$tag-i")
+    IncrementalAgg.retract(
+      dV.filter(col("change") === "delete").select(sel: _*),
+      view, buckets, groupCol, valueCols, s"$tag-d")
+  }
+
+  /** Bring the view up to `source`'s head, one CONSECUTIVE generation
+    * pair at a time — each pair's delta applied as one append + one
+    * retract (each exactly-once under its `ivm-<a>-<b>` tag), the
+    * bookmark advancing after each pair. Consecutive pairs, not one
+    * net diff, is what makes retry safe: a (from, head) span RESHAPES
+    * if the source commits between a crash and the retry, and the
+    * reshaped span's fresh tag would re-apply the crashed span's
+    * already-landed partials — per-pair spans are immutable, so a
+    * replayed pair finds its sentinels and skips exactly. The
+    * `valueCols` must match the create's, in order. No-op when caught
+    * up. Returns the new bookmark. */
+  def refresh(spark: SparkSession, source: String, view: String,
+              buckets: Int, groupCol: String,
+              valueCols: Seq[String]): Long = {
     val partials = s"${view}_partials"
     val from = Replication.bookmark(spark, partials).getOrElse(
       throw new IllegalStateException(
@@ -82,62 +99,25 @@ object Ivm {
     retained.dropWhile(_ < from).takeWhile(_ <= head)
       .sliding(2).foreach {
         case Seq(a, b) =>
-          val diff = Bucketed.diffGenerations(spark, source, a, b)
-            .localCheckpoint(eager = false) // one eval feeds both halves
-          applyPair(a, b, diff)
+          applyDelta(Bucketed.diffGenerations(spark, source, a, b), view,
+            buckets, groupCol, valueCols, s"ivm-$a-$b")
           Replication.writeBookmark(spark, partials, b)
         case _ => ()
       }
     head
   }
 
-  /** ONE copy of the source-view repair precondition + recompute shell
-    * (single/multi twins): caught-up check, then the family recomputes
-    * the retraction-ledger groups from the source's current head. */
-  private def repairSourceCore(spark: SparkSession, source: String,
-                               view: String)(
-      recompute: (DataFrame, DataFrame) => Int): Int = {
+  /** Repair the join-following aggregate `view` once every (source,
+    * side) bookmark is caught up to its source's head (repairing
+    * against an unapplied head would fold deltas in ahead of their
+    * exactly-once application): the retracted groups recompute from
+    * `raw`, the CURRENT rows the view aggregates. ONE copy of the
+    * contract. Returns buckets rewritten. */
+  private def repairCaughtUp(spark: SparkSession, view: String,
+                             buckets: Int, sides: Seq[(String, Char)],
+                             raw: => DataFrame, groupCol: String,
+                             valueCols: Seq[String]): Int = {
     val partials = s"${view}_partials"
-    val from = Replication.bookmark(spark, partials).getOrElse(
-      throw new IllegalStateException(s"$view has no bookmark"))
-    val head = Bucketed.currentGeneration(spark, source)
-    require(from == head,
-      s"$view is at generation $from but $source is at $head — " +
-        "refresh before repairing")
-    recompute(Bucketed.load(spark, source),
-      retractedGroups(spark, partials))
-  }
-
-  /** Bring the view up to `source`'s head, one CONSECUTIVE generation
-    * pair at a time — each pair's delta applied as one append + one
-    * retract (each exactly-once under its `ivm-<a>-<b>` tag), the
-    * bookmark advancing after each pair. Consecutive pairs, not one
-    * net diff, is what makes retry safe: a (from, head) span RESHAPES
-    * if the source commits between a crash and the retry, and the
-    * reshaped span's fresh tag would re-apply the crashed span's
-    * already-landed partials — per-pair spans are immutable, so a
-    * replayed pair finds its sentinels and skips exactly. No-op when
-    * caught up. Returns the new bookmark. */
-  def refresh(spark: SparkSession, source: String, view: String,
-              buckets: Int, groupCol: String, valueCol: String): Long =
-    refreshSourceCore(spark, source, view) { (a, b, diff) =>
-      IncrementalAgg.append(
-        diff.filter(col("change") === "insert")
-          .select(col(groupCol), col(valueCol)),
-        view, buckets, groupCol, valueCol, s"ivm-$a-$b-i")
-      IncrementalAgg.retract(
-        diff.filter(col("change") === "delete")
-          .select(col(groupCol), col(valueCol)),
-        view, buckets, groupCol, valueCol, s"ivm-$a-$b-d")
-    }
-
-  /** Require every (source, side) bookmark on `partials` caught up to
-    * its source's head — the repair families' shared precondition
-    * (repairing against an unapplied head would fold deltas in ahead
-    * of their exactly-once application). ONE copy of the contract. */
-  private def requireCaughtUp(spark: SparkSession, partials: String,
-                              view: String,
-                              sides: Seq[(String, Char)]): Unit =
     for ((src, side) <- sides) {
       val bm = joinBookmark(spark, partials, side).getOrElse(
         throw new IllegalStateException(
@@ -147,6 +127,9 @@ object Ivm {
         s"$view's side-$side bookmark is at $bm but $src is at $head — " +
           "refresh before repairing")
     }
+    IncrementalAgg.repairGroups(spark, view, buckets, raw, groupCol,
+      valueCols, retractedGroups(spark, partials))
+  }
 
   /** The groups the view's own partials mark as carrying outstanding
     * retractions (`retr > 0`, tag rows excluded) — ONE copy of the
@@ -163,56 +146,6 @@ object Ivm {
   /** The view's current rollup — [[IncrementalAgg.serve]]. */
   def serve(spark: SparkSession, view: String): DataFrame =
     IncrementalAgg.serve(spark, view)
-
-  // ---- MULTI-MEASURE source-following view -----------------------------
-
-  /** [[create]]'s N-measure twin: ONE maintained view serving
-    * count/sum/min/max/avg of SEVERAL quantized measures (the common
-    * reporting shape — previously one view per measure). Same walk,
-    * same exactly-once tags, one partials table
-    * ([[IncrementalAgg.buildIndexMulti]]'s wide positional layout:
-    * the `valueCols` ORDER at create time fixes the measure
-    * indexes). */
-  def createMulti(spark: SparkSession, source: String, view: String,
-                  buckets: Int, groupCol: String,
-                  valueCols: Seq[String]): Long =
-    createSourceCore(spark, source, view)(head =>
-      IncrementalAgg.buildIndexMulti(
-        head.select((groupCol +: valueCols).map(col): _*),
-        view, buckets, groupCol, valueCols))
-
-  /** [[refresh]]'s N-measure twin — the same walk and crash doctrine
-    * ([[refreshSourceCore]]), every measure folded in the one pair
-    * delta. The `valueCols` must match the create's, in order. */
-  def refreshMulti(spark: SparkSession, source: String, view: String,
-                   buckets: Int, groupCol: String,
-                   valueCols: Seq[String]): Long = {
-    val sel = (groupCol +: valueCols).map(col)
-    refreshSourceCore(spark, source, view) { (a, b, diff) =>
-      IncrementalAgg.appendMulti(
-        diff.filter(col("change") === "insert").select(sel: _*),
-        view, buckets, groupCol, valueCols, s"ivmm-$a-$b-i")
-      IncrementalAgg.retractMulti(
-        diff.filter(col("change") === "delete").select(sel: _*),
-        view, buckets, groupCol, valueCols, s"ivmm-$a-$b-d")
-    }
-  }
-
-  /** [[repair]]'s N-measure twin — all measures' extrema restored in
-    * the one touched-bucket pass ([[repairSourceCore]]). Requires the
-    * view caught up. */
-  def repairMulti(spark: SparkSession, source: String, view: String,
-                  buckets: Int, groupCol: String,
-                  valueCols: Seq[String]): Int =
-    repairSourceCore(spark, source, view) { (head, retracted) =>
-      IncrementalAgg.repairGroupsMulti(spark, view, buckets,
-        head.select((groupCol +: valueCols).map(col): _*),
-        groupCol, valueCols, retracted)
-    }
-
-  /** The multi-measure view's rollup — [[IncrementalAgg.serveMulti]]. */
-  def serveMulti(spark: SparkSession, view: String): DataFrame =
-    IncrementalAgg.serveMulti(spark, view)
 
   // ---- JOIN-view maintenance ------------------------------------------
 
@@ -577,102 +510,16 @@ object Ivm {
     * [[serveJoinFull]] unions: `SELECT g, aggs FROM (left ∪
     * null-extended orphans) GROUP BY g` stays maintained while
     * [[refreshJoinFull]] churns both tables. Orphan rows null-fill
-    * the columns they lack (an A-side `valueCol` contributes null —
-    * counted, not summed; a B-side `groupCol` carries through), the
-    * exact FULL JOIN aggregation semantics. Both tables must retain
-    * generations back to the bookmarks ([[Bucketed.setRetention]] on
-    * the view AND `<view>_orphans`). Returns (genLeft, genOrphans). */
+    * the columns they lack, the exact FULL JOIN aggregation
+    * semantics: measures may come from EITHER side (an A-side measure
+    * is null on orphan rows, a B-side measure null on partnerless-A
+    * rows; counted, not summed, both ways) and a B-side `groupCol`
+    * carries through. Both tables must retain generations back to
+    * the bookmarks ([[Bucketed.setRetention]] on the view AND
+    * `<view>_orphans`). Returns (genLeft, genOrphans). */
   def createOverFull(spark: SparkSession, fullView: String,
                      rollup: String, buckets: Int, groupCol: String,
-                     valueCol: String): (Long, Long) = {
-    val orphans = orphanTable(fullView)
-    val gl = Bucketed.currentGeneration(spark, fullView)
-    val go = Bucketed.currentGeneration(spark, orphans)
-    val leftSchema = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(fullView)).schema
-    val base = Bucketed.loadAsOf(spark, fullView, gl)
-      .select(col(groupCol), col(valueCol))
-      .unionByName(
-        conformTo(leftSchema, Bucketed.loadAsOf(spark, orphans, go))
-          .select(col(groupCol), col(valueCol)))
-    IncrementalAgg.buildIndex(base, rollup, buckets, groupCol, valueCol)
-    val partials = s"${rollup}_partials"
-    writeJoinBookmark(spark, partials, 'l', gl)
-    writeJoinBookmark(spark, partials, 'o', go)
-    (gl, go)
-  }
-
-  /** Bring the pair rollup up to both tables' heads: each table walks
-    * its own bookmark ([[refresh]]'s doctrine twice), pair deltas
-    * landing as exactly-once append/retract partials — orphan deltas
-    * null-fill to the left part's shape first, so a customer flipping
-    * between matched and orphaned retracts from one table's fold and
-    * appends in the other's, meeting in the same group. Call after
-    * [[refreshJoinFull]] for a state consistent with
-    * [[serveJoinFull]]; a refresh racing the view's own folds the
-    * remainder next time — each side is individually exact. Pure
-    * delta on both tables: O(changed files), never the A-scan the
-    * outer row views pay. Returns (headLeft, headOrphans). */
-  def refreshOverFull(spark: SparkSession, fullView: String,
-                      rollup: String, buckets: Int, groupCol: String,
-                      valueCol: String): (Long, Long) =
-    overFullCore(spark, fullView, rollup, "createOverFull",
-      Seq(groupCol, valueCol))(
-      (batch, tag) => { IncrementalAgg.append(batch, rollup, buckets,
-        groupCol, valueCol, tag); () },
-      (batch, tag) => { IncrementalAgg.retract(batch, rollup, buckets,
-        groupCol, valueCol, tag); () })
-
-  /** The two-table pair walk [[refreshOverFull]] and
-    * [[refreshOverFullMulti]] share — each table walks its own
-    * bookmark, pair deltas null-filled to the left part's shape (an
-    * orphan delta lacks the A-side columns; the left part lacks
-    * nothing), handed to `appendBatch`/`retractBatch` already
-    * selected to `cols`. */
-  private def overFullCore(spark: SparkSession, fullView: String,
-                           rollup: String, createHint: String,
-                           cols: Seq[String])(
-                           appendBatch: (DataFrame, String) => Unit,
-                           retractBatch: (DataFrame, String) => Unit)
-      : (Long, Long) = {
-    val partials = s"${rollup}_partials"
-    val leftSchema = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(fullView)).schema
-    val typeOf = leftSchema.fields.map(f => f.name -> f.dataType).toMap
-    val selCols = cols.map(col)
-    def advance(src: String, side: Char): Long =
-      walkPairs(spark, src, side, partials, rollup, createHint) {
-        (x, y) =>
-          val delta = Bucketed.diffGenerations(spark, src, x, y)
-            .localCheckpoint(eager = false) // one eval, both halves
-          val have = delta.columns.toSet
-          val sel = delta.select(
-            cols.map(c =>
-              if (have(c)) col(c)
-              else lit(null).cast(typeOf(c)).as(c)) :+ col("change"): _*)
-          appendBatch(
-            sel.filter(col("change") === "insert").select(selCols: _*),
-            s"ivf$side-$x-$y-i")
-          retractBatch(
-            sel.filter(col("change") === "delete").select(selCols: _*),
-            s"ivf$side-$x-$y-d")
-          ()
-      }
-    val hl = advance(fullView, 'l')
-    val ho = advance(orphanTable(fullView), 'o')
-    (hl, ho)
-  }
-
-  /** [[createOverFull]]'s N-measure twin: one pair-following rollup
-    * serving count and per-measure sum/min/max/avg over the FULL
-    * JOIN — measures may come from EITHER side (an A-side measure is
-    * null on orphan rows, a B-side measure null on partnerless-A
-    * rows; counted, not summed, both ways). Returns (genLeft,
-    * genOrphans). */
-  def createOverFullMulti(spark: SparkSession, fullView: String,
-                          rollup: String, buckets: Int,
-                          groupCol: String,
-                          valueCols: Seq[String]): (Long, Long) = {
+                     valueCols: Seq[String]): (Long, Long) = {
     val orphans = orphanTable(fullView)
     val gl = Bucketed.currentGeneration(spark, fullView)
     val go = Bucketed.currentGeneration(spark, orphans)
@@ -683,85 +530,81 @@ object Ivm {
       .unionByName(
         conformTo(leftSchema, Bucketed.loadAsOf(spark, orphans, go))
           .select(sel: _*))
-    IncrementalAgg.buildIndexMulti(base, rollup, buckets, groupCol,
-      valueCols)
+    IncrementalAgg.buildIndex(base, rollup, buckets, groupCol, valueCols)
     val partials = s"${rollup}_partials"
     writeJoinBookmark(spark, partials, 'l', gl)
     writeJoinBookmark(spark, partials, 'o', go)
     (gl, go)
   }
 
-  /** [[refreshOverFull]]'s N-measure twin — the same two-bookmark
-    * pair walk ([[overFullCore]]), every measure folded in each
-    * table's delta. `valueCols` must match the create's, in order.
-    * Returns (headLeft, headOrphans). */
-  def refreshOverFullMulti(spark: SparkSession, fullView: String,
-                           rollup: String, buckets: Int,
-                           groupCol: String,
-                           valueCols: Seq[String]): (Long, Long) =
-    overFullCore(spark, fullView, rollup, "createOverFullMulti",
-      groupCol +: valueCols)(
-      (batch, tag) => { IncrementalAgg.appendMulti(batch, rollup,
-        buckets, groupCol, valueCols, tag); () },
-      (batch, tag) => { IncrementalAgg.retractMulti(batch, rollup,
-        buckets, groupCol, valueCols, tag); () })
-
-  /** [[repairOverFull]]'s N-measure twin — every measure's extrema
-    * restored from the CURRENT served union, NULL group included.
-    * Returns buckets rewritten. */
-  def repairOverFullMulti(spark: SparkSession, fullView: String,
-                          rollup: String, buckets: Int,
-                          groupCol: String,
-                          valueCols: Seq[String]): Int = {
+  /** Bring the pair rollup up to both tables' heads: each table walks
+    * its own bookmark ([[refresh]]'s doctrine twice), pair deltas
+    * landing as exactly-once append/retract partials — orphan deltas
+    * null-fill to the left part's shape first (an orphan delta lacks
+    * the A-side columns; the left part lacks nothing), so a customer
+    * flipping between matched and orphaned retracts from one table's
+    * fold and appends in the other's, meeting in the same group. Call
+    * after [[refreshJoinFull]] for a state consistent with
+    * [[serveJoinFull]]; a refresh racing the view's own folds the
+    * remainder next time — each side is individually exact. Pure
+    * delta on both tables: O(changed files), never the A-scan the
+    * outer row views pay. `valueCols` must match the create's, in
+    * order. Returns (headLeft, headOrphans). */
+  def refreshOverFull(spark: SparkSession, fullView: String,
+                      rollup: String, buckets: Int, groupCol: String,
+                      valueCols: Seq[String]): (Long, Long) = {
     val partials = s"${rollup}_partials"
-    requireCaughtUp(spark, partials, rollup,
-      Seq((fullView, 'l'), (orphanTable(fullView), 'o')))
-    IncrementalAgg.repairGroupsMulti(spark, rollup, buckets,
-      serveJoinFull(spark, fullView)
-        .select((groupCol +: valueCols).map(col): _*),
-      groupCol, valueCols, retractedGroups(spark, partials))
+    val deltaSchema = spark.sessionState.catalog.getTableMetadata(
+      spark.sessionState.sqlParser.parseTableIdentifier(fullView)).schema
+      .add("change", "string")
+    def advance(src: String, side: Char): Long =
+      walkPairs(spark, src, side, partials, rollup, "createOverFull") {
+        (x, y) =>
+          applyDelta(
+            conformTo(deltaSchema, Bucketed.diffGenerations(spark, src, x, y)),
+            rollup, buckets, groupCol, valueCols, s"ivf$side-$x-$y")
+      }
+    val hl = advance(fullView, 'l')
+    val ho = advance(orphanTable(fullView), 'o')
+    (hl, ho)
   }
 
-  /** [[repair]]'s pair-rollup twin: retracted groups recompute from
+  /** [[repair]]'s pair-rollup form: retracted groups recompute from
     * the CURRENT served union ([[serveJoinFull]]) — the NULL group
-    * repairs like any other (null-safe group match). Requires both
-    * bookmarks caught up to their tables' heads. Returns buckets
-    * rewritten. */
+    * repairs like any other (null-safe group match), every measure's
+    * extrema restored in the one pass. Requires both bookmarks caught
+    * up to their tables' heads. Returns buckets rewritten. */
   def repairOverFull(spark: SparkSession, fullView: String,
                      rollup: String, buckets: Int, groupCol: String,
-                     valueCol: String): Int = {
-    val partials = s"${rollup}_partials"
-    requireCaughtUp(spark, partials, rollup,
-      Seq((fullView, 'l'), (orphanTable(fullView), 'o')))
-    val retracted = retractedGroups(spark, partials)
-    IncrementalAgg.repairGroups(spark, rollup, buckets,
-      serveJoinFull(spark, fullView).select(col(groupCol), col(valueCol)),
-      groupCol, valueCol, retracted)
-  }
+                     valueCols: Seq[String]): Int =
+    repairCaughtUp(spark, rollup, buckets,
+      Seq((fullView, 'l'), (orphanTable(fullView), 'o')),
+      serveJoinFull(spark, fullView), groupCol, valueCols)
 
   // ---- single-view JOIN + AGGREGATE maintenance ------------------------
 
-  /** Materialize `SELECT g, count, sum, … FROM a JOIN b ON on GROUP BY
-    * g` in ONE maintained view — where [[createJoin]]+[[create]] costs
-    * two materialized tables and two maintenance passes, the join
-    * delta feeds the aggregate partials DIRECTLY: ΔV of the inner
-    * join (the [[refreshJoin]] decomposition ΔA⋈B_old ∪ A_new⋈ΔB)
-    * lands as [[IncrementalAgg.append]]/[[IncrementalAgg.retract]]
-    * partials, each generation-pair half exactly-once under its
-    * derived tag. The view is an [[IncrementalAgg]] index: serve /
-    * consolidate / repair all carry over. `valueCol` pre-quantized
-    * long (the house sum doctrine); both bookmarks live on the
-    * partials table. Returns (genA, genB). */
+  /** Materialize `SELECT g, count, and per measure sum/min/max/avg
+    * FROM a JOIN b ON on GROUP BY g` in ONE maintained view — where
+    * [[createJoin]]+[[create]] costs two materialized tables and two
+    * maintenance passes, the join delta feeds the aggregate partials
+    * DIRECTLY: ΔV of the inner join (the [[refreshJoin]]
+    * decomposition ΔA⋈B_old ∪ A_new⋈ΔB) lands as
+    * [[IncrementalAgg.append]]/[[IncrementalAgg.retract]] partials,
+    * each generation-pair half exactly-once under its derived tag.
+    * The view is an [[IncrementalAgg]] index: serve / consolidate /
+    * repair all carry over. `valueCols` pre-quantized long (the house
+    * sum doctrine), their order fixing the measure indexes; both
+    * bookmarks live on the partials table. Returns (genA, genB). */
   def createJoinAgg(spark: SparkSession, a: String, b: String,
                     on: String, view: String, buckets: Int,
-                    groupCol: String, valueCol: String): (Long, Long) = {
+                    groupCol: String,
+                    valueCols: Seq[String]): (Long, Long) = {
     val ga = Bucketed.currentGeneration(spark, a)
     val gb = Bucketed.currentGeneration(spark, b)
     IncrementalAgg.buildIndex(
       Bucketed.loadAsOf(spark, a, ga)
-        .join(Bucketed.loadAsOf(spark, b, gb), on)
-        .select(col(groupCol), col(valueCol)),
-      view, buckets, groupCol, valueCol)
+        .join(Bucketed.loadAsOf(spark, b, gb), on),
+      view, buckets, groupCol, valueCols)
     val partials = s"${view}_partials"
     writeJoinBookmark(spark, partials, 'a', ga)
     writeJoinBookmark(spark, partials, 'b', gb)
@@ -803,51 +646,26 @@ object Ivm {
     * until [[repairJoinAgg]]. Returns (headA, headB). */
   def refreshJoinAgg(spark: SparkSession, a: String, b: String,
                      on: String, view: String, buckets: Int,
-                     groupCol: String, valueCol: String): (Long, Long) =
-    refreshJoinAggCore(spark, a, b, on, view, "createJoinAgg") {
-      (dV0, tag) =>
-        val dV = dV0.select(col(groupCol), col(valueCol), col("change"))
-          .localCheckpoint(eager = false) // one eval, both halves
-        IncrementalAgg.append(
-          dV.filter(col("change") === "insert")
-            .select(col(groupCol), col(valueCol)),
-          view, buckets, groupCol, valueCol, s"$tag-i")
-        IncrementalAgg.retract(
-          dV.filter(col("change") === "delete")
-            .select(col(groupCol), col(valueCol)),
-          view, buckets, groupCol, valueCol, s"$tag-d")
-        ()
-    }
-
-  /** The two-phase pinned walk [[refreshJoinAgg]] and
-    * [[refreshJoinAggMulti]] share — the durable-pin recovery
-    * protocol lives ONCE here; `applyDelta` lands one pair's joined
-    * delta (columns: the join's, plus `change`) as that family's
-    * exactly-once partials under the given `jagg<side>-<x>-<y>` tag
-    * prefix. */
-  private def refreshJoinAggCore(spark: SparkSession, a: String,
-                                 b: String, on: String, view: String,
-                                 createHint: String)(
-                                 applyDelta: (DataFrame, String) => Unit)
-      : (Long, Long) = {
+                     groupCol: String,
+                     valueCols: Seq[String]): (Long, Long) = {
     val partials = s"${view}_partials"
     def walk(src: String, side: Char, partner: DataFrame): Long =
-      walkPairs(spark, src, side, partials, view, createHint) {
+      walkPairs(spark, src, side, partials, view, "createJoinAgg") {
         (x, y) =>
           applyDelta(
             Bucketed.diffGenerations(spark, src, x, y).join(partner, on),
-            s"jagg$side-$x-$y")
+            view, buckets, groupCol, valueCols, s"jagg$side-$x-$y")
       }
     // recovery: a durable pin means a phase 2 crashed mid-flight —
-    // finish it under the ORIGINAL A pin before anything else (see
-    // refreshJoinAgg's scaladoc: the lost-ΔA⋈ΔB analysis)
+    // finish it under the ORIGINAL A pin before anything else (the
+    // lost-ΔA⋈ΔB analysis above)
     joinBookmark(spark, partials, 'p').foreach { pa =>
       walk(b, 'b', Bucketed.loadAsOf(spark, a, pa))
       clearJoinBookmark(spark, partials, 'p')
     }
     val gb0 = joinBookmark(spark, partials, 'b').getOrElse(
       throw new IllegalStateException(
-        s"$view has no side-b bookmark — $createHint it first"))
+        s"$view has no side-b bookmark — createJoinAgg it first"))
     val ha = walk(a, 'a', Bucketed.loadAsOf(spark, b, gb0))
     writeJoinBookmark(spark, partials, 'p', ha)
     val hb = walk(b, 'b', Bucketed.loadAsOf(spark, a, ha))
@@ -855,88 +673,26 @@ object Ivm {
     (ha, hb)
   }
 
-  // ---- single-view JOIN + aggregate, N measures ------------------------
-
-  /** [[createJoinAgg]]'s N-measure twin: `SELECT g, count, and per
-    * measure sum/min/max/avg FROM a JOIN b ON on GROUP BY g` in ONE
-    * maintained view — the reporting shape over a join that
-    * previously cost one join+agg view per measure. The `valueCols`
-    * order fixes the wide partials layout
-    * ([[IncrementalAgg.buildIndexMulti]]). Returns (genA, genB). */
-  def createJoinAggMulti(spark: SparkSession, a: String, b: String,
-                         on: String, view: String, buckets: Int,
-                         groupCol: String,
-                         valueCols: Seq[String]): (Long, Long) = {
-    val ga = Bucketed.currentGeneration(spark, a)
-    val gb = Bucketed.currentGeneration(spark, b)
-    IncrementalAgg.buildIndexMulti(
-      Bucketed.loadAsOf(spark, a, ga)
-        .join(Bucketed.loadAsOf(spark, b, gb), on)
-        .select((groupCol +: valueCols).map(col): _*),
-      view, buckets, groupCol, valueCols)
-    val partials = s"${view}_partials"
-    writeJoinBookmark(spark, partials, 'a', ga)
-    writeJoinBookmark(spark, partials, 'b', gb)
-    (ga, gb)
-  }
-
-  /** [[refreshJoinAgg]]'s N-measure twin — the same two-phase pinned
-    * walk and crash doctrine ([[refreshJoinAggCore]]), every measure
-    * folded in each pair's one joined delta. `valueCols` must match
-    * the create's, in order. Returns (headA, headB). */
-  def refreshJoinAggMulti(spark: SparkSession, a: String, b: String,
-                          on: String, view: String, buckets: Int,
-                          groupCol: String,
-                          valueCols: Seq[String]): (Long, Long) =
-    refreshJoinAggCore(spark, a, b, on, view, "createJoinAggMulti") {
-      (dV0, tag) =>
-        val sel = (groupCol +: valueCols).map(col)
-        val dV = dV0.select(sel :+ col("change"): _*)
-          .localCheckpoint(eager = false) // one eval, both halves
-        IncrementalAgg.appendMulti(
-          dV.filter(col("change") === "insert").select(sel: _*),
-          view, buckets, groupCol, valueCols, s"$tag-i")
-        IncrementalAgg.retractMulti(
-          dV.filter(col("change") === "delete").select(sel: _*),
-          view, buckets, groupCol, valueCols, s"$tag-d")
-        ()
-    }
-
-  /** [[repairJoinAgg]]'s N-measure twin: every measure's extrema
-    * restored in the one touched-bucket pass over the CURRENT join.
-    * Requires both bookmarks caught up. Returns buckets rewritten. */
-  def repairJoinAggMulti(spark: SparkSession, a: String, b: String,
-                         on: String, view: String, buckets: Int,
-                         groupCol: String,
-                         valueCols: Seq[String]): Int = {
-    val partials = s"${view}_partials"
-    requireCaughtUp(spark, partials, view, Seq((a, 'a'), (b, 'b')))
-    IncrementalAgg.repairGroupsMulti(spark, view, buckets,
-      Bucketed.load(spark, a).join(Bucketed.load(spark, b), on)
-        .select((groupCol +: valueCols).map(col): _*),
-      groupCol, valueCols, retractedGroups(spark, partials))
-  }
-
   // ---- single-view LEFT-OUTER join + aggregate -------------------------
 
-  /** [[createJoinAgg]]'s LEFT-outer twin: `SELECT g, aggs FROM a LEFT
+  /** [[createJoinAgg]]'s LEFT-outer form: `SELECT g, aggs FROM a LEFT
     * JOIN b ON on GROUP BY g` in ONE maintained view. Null extension
     * is first-class: an A row with no partner contributes ONE row
     * with B's columns null — a B-side `groupCol` groups it under the
     * NULL group (a real group, served and maintained like any other),
-    * a B-side `valueCol` contributes null (count counts the row,
+    * a B-side measure contributes null (count counts the row,
     * sum/min/max skip it — [[IncrementalAgg]]'s house semantics).
     * Returns (genA, genB). */
   def createJoinAggLeft(spark: SparkSession, a: String, b: String,
                         on: String, view: String, buckets: Int,
-                        groupCol: String, valueCol: String): (Long, Long) = {
+                        groupCol: String,
+                        valueCols: Seq[String]): (Long, Long) = {
     val ga = Bucketed.currentGeneration(spark, a)
     val gb = Bucketed.currentGeneration(spark, b)
     IncrementalAgg.buildIndex(
       Bucketed.loadAsOf(spark, a, ga)
-        .join(Bucketed.loadAsOf(spark, b, gb), Seq(on), "left")
-        .select(col(groupCol), col(valueCol)),
-      view, buckets, groupCol, valueCol)
+        .join(Bucketed.loadAsOf(spark, b, gb), Seq(on), "left"),
+      view, buckets, groupCol, valueCols)
     val partials = s"${view}_partials"
     writeJoinBookmark(spark, partials, 'a', ga)
     writeJoinBookmark(spark, partials, 'b', gb)
@@ -966,29 +722,11 @@ object Ivm {
   def refreshJoinAggLeft(spark: SparkSession, a: String, b: String,
                          on: String, view: String, buckets: Int,
                          groupCol: String,
-                         valueCol: String): (Long, Long) =
-    joinAggLeftCore(spark, a, b, on, view, "createJoinAggLeft",
-      Seq(groupCol, valueCol))(
-      (batch, tag) => { IncrementalAgg.append(batch, view, buckets,
-        groupCol, valueCol, tag); () },
-      (batch, tag) => { IncrementalAgg.retract(batch, view, buckets,
-        groupCol, valueCol, tag); () })
-
-  /** The two-phase left-outer walk [[refreshJoinAggLeft]] and
-    * [[refreshJoinAggLeftMulti]] share — the group-recompute phase 2
-    * under the durable A pin lives ONCE here; `appendBatch` /
-    * `retractBatch` land a batch already selected to `cols` as that
-    * family's exactly-once partials under the given tag. */
-  private def joinAggLeftCore(spark: SparkSession, a: String,
-                              b: String, on: String, view: String,
-                              createHint: String, cols: Seq[String])(
-                              appendBatch: (DataFrame, String) => Unit,
-                              retractBatch: (DataFrame, String) => Unit)
-      : (Long, Long) = {
+                         valueCols: Seq[String]): (Long, Long) = {
     val partials = s"${view}_partials"
-    val sel = cols.map(col)
+    val sel = (groupCol +: valueCols).map(col)
     def phase2(pin: Long): Long =
-      walkPairs(spark, b, 'b', partials, view, createHint) {
+      walkPairs(spark, b, 'b', partials, view, "createJoinAggLeft") {
         (x, y) =>
           val touched = Bucketed.diffGenerations(spark, b, x, y)
             .filter(col(on).isNotNull).select(on).distinct()
@@ -1000,8 +738,10 @@ object Ivm {
             Bucketed.loadAsOf(spark, b, bGen)
               .join(touched, Seq(on), "left_semi"),
             Seq(on), "left").select(sel: _*)
-          appendBatch(slice(y), s"jaL-b-$x-$y-i")
-          retractBatch(slice(x), s"jaL-b-$x-$y-d")
+          IncrementalAgg.append(slice(y), view, buckets, groupCol,
+            valueCols, s"jaL-b-$x-$y-i")
+          IncrementalAgg.retract(slice(x), view, buckets, groupCol,
+            valueCols, s"jaL-b-$x-$y-d")
           ()
       }
     // recovery: a durable pin means a phase 2 crashed mid-flight —
@@ -1012,20 +752,13 @@ object Ivm {
     }
     val gb0 = joinBookmark(spark, partials, 'b').getOrElse(
       throw new IllegalStateException(
-        s"$view has no side-b bookmark — $createHint it first"))
-    val ha = walkPairs(spark, a, 'a', partials, view, createHint) {
+        s"$view has no side-b bookmark — createJoinAggLeft it first"))
+    val ha = walkPairs(spark, a, 'a', partials, view, "createJoinAggLeft") {
       (x, y) =>
-        val dV = Bucketed.diffGenerations(spark, a, x, y)
-          .join(Bucketed.loadAsOf(spark, b, gb0), Seq(on), "left")
-          .select(sel :+ col("change"): _*)
-          .localCheckpoint(eager = false) // one eval, both halves
-        appendBatch(
-          dV.filter(col("change") === "insert").select(sel: _*),
-          s"jaL-a-$x-$y-i")
-        retractBatch(
-          dV.filter(col("change") === "delete").select(sel: _*),
-          s"jaL-a-$x-$y-d")
-        ()
+        applyDelta(
+          Bucketed.diffGenerations(spark, a, x, y)
+            .join(Bucketed.loadAsOf(spark, b, gb0), Seq(on), "left"),
+          view, buckets, groupCol, valueCols, s"jaL-a-$x-$y")
     }
     writeJoinBookmark(spark, partials, 'p', ha)
     val hb = phase2(ha)
@@ -1033,94 +766,28 @@ object Ivm {
     (ha, hb)
   }
 
-  // ---- single-view LEFT-OUTER join + aggregate, N measures -------------
-
-  /** [[createJoinAggLeft]]'s N-measure twin: `SELECT g, count, and
-    * per measure sum/min/max/avg FROM a LEFT JOIN b ON on GROUP BY g`
-    * in ONE maintained view — null extension first-class for EVERY
-    * measure (a B-side measure contributes null on partnerless rows:
-    * counted, not summed). Returns (genA, genB). */
-  def createJoinAggLeftMulti(spark: SparkSession, a: String, b: String,
-                             on: String, view: String, buckets: Int,
-                             groupCol: String,
-                             valueCols: Seq[String]): (Long, Long) = {
-    val ga = Bucketed.currentGeneration(spark, a)
-    val gb = Bucketed.currentGeneration(spark, b)
-    IncrementalAgg.buildIndexMulti(
-      Bucketed.loadAsOf(spark, a, ga)
-        .join(Bucketed.loadAsOf(spark, b, gb), Seq(on), "left")
-        .select((groupCol +: valueCols).map(col): _*),
-      view, buckets, groupCol, valueCols)
-    val partials = s"${view}_partials"
-    writeJoinBookmark(spark, partials, 'a', ga)
-    writeJoinBookmark(spark, partials, 'b', gb)
-    (ga, gb)
-  }
-
-  /** [[refreshJoinAggLeft]]'s N-measure twin — the same two-phase
-    * walk, durable pin, and 0↔1-transition-by-recompute doctrine
-    * ([[joinAggLeftCore]]), every measure folded in each slice.
-    * `valueCols` must match the create's, in order. */
-  def refreshJoinAggLeftMulti(spark: SparkSession, a: String,
-                              b: String, on: String, view: String,
-                              buckets: Int, groupCol: String,
-                              valueCols: Seq[String]): (Long, Long) =
-    joinAggLeftCore(spark, a, b, on, view, "createJoinAggLeftMulti",
-      groupCol +: valueCols)(
-      (batch, tag) => { IncrementalAgg.appendMulti(batch, view,
-        buckets, groupCol, valueCols, tag); () },
-      (batch, tag) => { IncrementalAgg.retractMulti(batch, view,
-        buckets, groupCol, valueCols, tag); () })
-
-  /** [[repairJoinAggLeft]]'s N-measure twin — every measure's extrema
-    * restored from the CURRENT left join, NULL group included.
-    * Returns buckets rewritten. */
-  def repairJoinAggLeftMulti(spark: SparkSession, a: String,
-                             b: String, on: String, view: String,
-                             buckets: Int, groupCol: String,
-                             valueCols: Seq[String]): Int = {
-    val partials = s"${view}_partials"
-    requireCaughtUp(spark, partials, view, Seq((a, 'a'), (b, 'b')))
-    IncrementalAgg.repairGroupsMulti(spark, view, buckets,
-      Bucketed.load(spark, a)
-        .join(Bucketed.load(spark, b), Seq(on), "left")
-        .select((groupCol +: valueCols).map(col): _*),
-      groupCol, valueCols, retractedGroups(spark, partials))
-  }
-
-  /** [[repairJoinAgg]]'s left-outer twin: recompute the retracted
+  /** [[repairJoinAgg]]'s left-outer form: recompute the retracted
     * groups' partials from the CURRENT left join — the NULL group
     * (partnerless A rows under a B-side groupCol) repairs like any
     * other ([[IncrementalAgg.repairGroups]]' null-safe group match).
     * Requires both bookmarks caught up. Returns buckets rewritten. */
   def repairJoinAggLeft(spark: SparkSession, a: String, b: String,
                         on: String, view: String, buckets: Int,
-                        groupCol: String, valueCol: String): Int = {
-    val partials = s"${view}_partials"
-    requireCaughtUp(spark, partials, view, Seq((a, 'a'), (b, 'b')))
-    val retracted = retractedGroups(spark, partials)
-    IncrementalAgg.repairGroups(spark, view, buckets,
-      Bucketed.load(spark, a)
-        .join(Bucketed.load(spark, b), Seq(on), "left")
-        .select(col(groupCol), col(valueCol)),
-      groupCol, valueCol, retracted)
-  }
+                        groupCol: String, valueCols: Seq[String]): Int =
+    repairCaughtUp(spark, view, buckets, Seq((a, 'a'), (b, 'b')),
+      Bucketed.load(spark, a).join(Bucketed.load(spark, b), Seq(on), "left"),
+      groupCol, valueCols)
 
-  /** [[repair]]'s join+agg twin: recompute the retracted groups'
+  /** [[repair]]'s join+agg form: recompute the retracted groups'
     * partials from the CURRENT join (one semi-joined pass over
     * a ⋈ b, rewritten at O(touched buckets)). Requires both bookmarks
     * caught up to their sources' heads. Returns buckets rewritten. */
   def repairJoinAgg(spark: SparkSession, a: String, b: String,
                     on: String, view: String, buckets: Int,
-                    groupCol: String, valueCol: String): Int = {
-    val partials = s"${view}_partials"
-    requireCaughtUp(spark, partials, view, Seq((a, 'a'), (b, 'b')))
-    val retracted = retractedGroups(spark, partials)
-    IncrementalAgg.repairGroups(spark, view, buckets,
-      Bucketed.load(spark, a).join(Bucketed.load(spark, b), on)
-        .select(col(groupCol), col(valueCol)),
-      groupCol, valueCol, retracted)
-  }
+                    groupCol: String, valueCols: Seq[String]): Int =
+    repairCaughtUp(spark, view, buckets, Seq((a, 'a'), (b, 'b')),
+      Bucketed.load(spark, a).join(Bucketed.load(spark, b), on),
+      groupCol, valueCols)
 
   /** Restore exact min/max for every group the deltas retracted: the
     * retracted groups are read from the view's own partials
@@ -1133,10 +800,17 @@ object Ivm {
     * unapplied deltas into the repaired groups ahead of their
     * exactly-once application. Returns buckets rewritten. */
   def repair(spark: SparkSession, source: String, view: String,
-             buckets: Int, groupCol: String, valueCol: String): Int =
-    repairSourceCore(spark, source, view) { (head, retracted) =>
-      IncrementalAgg.repairGroups(spark, view, buckets,
-        head.select(col(groupCol), col(valueCol)),
-        groupCol, valueCol, retracted)
-    }
+             buckets: Int, groupCol: String,
+             valueCols: Seq[String]): Int = {
+    val partials = s"${view}_partials"
+    val from = Replication.bookmark(spark, partials).getOrElse(
+      throw new IllegalStateException(s"$view has no bookmark"))
+    val head = Bucketed.currentGeneration(spark, source)
+    require(from == head,
+      s"$view is at generation $from but $source is at $head — " +
+        "refresh before repairing")
+    IncrementalAgg.repairGroups(spark, view, buckets,
+      Bucketed.load(spark, source), groupCol, valueCols,
+      retractedGroups(spark, partials))
+  }
 }

@@ -304,8 +304,7 @@ object CurationQueries {
     // two execution models
     "q136_stream_quantiles" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val base = graft.streaming.Streaming.scratchBase.resolve(
-        s"graft-q136-${System.nanoTime()}").toString
+      val base = Setup.scratchDir("q136")
       val d = docs(s, dir).select("source", "doc_id", "n_chars")
       // staged source files: fixture INPUT, shared across executions
       // (Setup.stageOnce); the stream, its state, checkpoint and

@@ -49,12 +49,12 @@ object RelationalQueries {
       // the join view is a governed source in its own right: retain
       // its delta history so the rollup view can follow it
       graft.sources.Bucketed.setRetention(s, view, 10)
-      graft.ops.Ivm.create(s, view, rollup, 8, "nat", "v")
+      graft.ops.Ivm.create(s, view, rollup, 8, "nat", Seq("v"))
       // the SINGLE-view join+agg twin over the same two sources (same
       // initial generations — no commit since createJoin): q178 pins
       // that one maintained view computes what the q173+q174
       // two-table composition computes
-      graft.ops.Ivm.createJoinAgg(s, a, b, "cust", jagg, 8, "nat", "v")
+      graft.ops.Ivm.createJoinAgg(s, a, b, "cust", jagg, 8, "nat", Seq("v"))
       // side A: append the odd orders, then bump v for k % 9 == 0
       graft.sources.Bucketed.save(o.filter(col("k") % 2 === 1),
         a, Seq("k"), 8, mode = org.apache.spark.sql.SaveMode.Append)
@@ -170,18 +170,18 @@ object RelationalQueries {
       // to these bookmarks
       graft.sources.Bucketed.setRetention(s, full, 32)
       graft.sources.Bucketed.setRetention(s, s"${full}_orphans", 32)
-      graft.ops.Ivm.createOverFull(s, full, roll, 8, "nat", "v")
+      graft.ops.Ivm.createOverFull(s, full, roll, 8, "nat", Seq("v"))
       // the N-measure pair rollup beside it: one A-side measure (v —
       // null on orphan rows) and one B-side (acct — null on
       // partnerless orders), so q189 exercises BOTH null-fill
       // directions of the pair walk
-      graft.ops.Ivm.createOverFullMulti(s, full, roll2, 8, "nat",
+      graft.ops.Ivm.createOverFull(s, full, roll2, 8, "nat",
         Seq("v", "acct"))
       // the LEFT-outer join+agg single view over the same initial
       // generations: per-nation rollup of orders LEFT JOIN customer —
       // partnerless orders aggregate under the NULL nation group
       graft.ops.Ivm.createJoinAggLeft(s, a, b, "cust", jaggL, 8,
-        "nat", "v")
+        "nat", Seq("v"))
       // side A: append the odd orders (customers whose orders are all
       // odd transition 0→1 — their create-time orphans retract), bump
       // v for k % 9 == 0, then delete every order of cust % 13 == 6
@@ -666,11 +666,11 @@ object RelationalQueries {
       Setup.once(s"q154:$dir") {
         graft.ops.IncrementalAgg.buildIndex(
           li.filter(col("l_orderkey") % 3 === 0), name, buckets = 8,
-          "g", "v")
+          "g", Seq("v"))
         graft.ops.IncrementalAgg.append(
-          li.filter(col("l_orderkey") % 3 === 1), name, 8, "g", "v", "b1")
+          li.filter(col("l_orderkey") % 3 === 1), name, 8, "g", Seq("v"), "b1")
         graft.ops.IncrementalAgg.append(
-          li.filter(col("l_orderkey") % 3 === 2), name, 8, "g", "v", "b2")
+          li.filter(col("l_orderkey") % 3 === 2), name, 8, "g", Seq("v"), "b2")
         graft.ops.IncrementalAgg.consolidate(s, name, maxFilesPerBucket = 1)
         ()
       }
@@ -692,11 +692,11 @@ object RelationalQueries {
       val gonePred = col("g") % 37 === 0 && col("l_orderkey") % 5 === 0
       Setup.once(s"q155:$dir") {
         graft.ops.IncrementalAgg.buildIndex(li, name, buckets = 8,
-          "g", "v")
+          "g", Seq("v"))
         val gone = li.filter(gonePred)
-        graft.ops.IncrementalAgg.retract(gone, name, 8, "g", "v", "d0")
+        graft.ops.IncrementalAgg.retract(gone, name, 8, "g", Seq("v"), "d0")
         graft.ops.IncrementalAgg.repairGroups(s, name, 8,
-          li.filter(!gonePred), "g", "v", gone.select("g"))
+          li.filter(!gonePred), "g", Seq("v"), gone.select("g"))
         ()
       }
       graft.ops.IncrementalAgg.serve(s, name).orderBy("g")
@@ -1196,8 +1196,8 @@ object RelationalQueries {
     // plain GROUP BY over the recomputed join (the oracle)
     "q174_composed_ivm" -> ((s, dir) => {
       val (_, _, view, rollup, _) = q173Tables(s, dir)
-      graft.ops.Ivm.refresh(s, view, rollup, 8, "nat", "v")
-      graft.ops.Ivm.repair(s, view, rollup, 8, "nat", "v")
+      graft.ops.Ivm.refresh(s, view, rollup, 8, "nat", Seq("v"))
+      graft.ops.Ivm.repair(s, view, rollup, 8, "nat", Seq("v"))
       graft.ops.Ivm.serve(s, rollup).orderBy("g")
     }),
 
@@ -1211,8 +1211,8 @@ object RelationalQueries {
     // answers to
     "q178_joinagg_ivm" -> ((s, dir) => {
       val (a, b, _, _, jagg) = q173Tables(s, dir)
-      graft.ops.Ivm.refreshJoinAgg(s, a, b, "cust", jagg, 8, "nat", "v")
-      graft.ops.Ivm.repairJoinAgg(s, a, b, "cust", jagg, 8, "nat", "v")
+      graft.ops.Ivm.refreshJoinAgg(s, a, b, "cust", jagg, 8, "nat", Seq("v"))
+      graft.ops.Ivm.repairJoinAgg(s, a, b, "cust", jagg, 8, "nat", Seq("v"))
       graft.ops.Ivm.serve(s, jagg).orderBy("g")
     }),
 
@@ -1260,9 +1260,9 @@ object RelationalQueries {
     "q182_joinagg_left_ivm" -> ((s, dir) => {
       val (a, b, _, _, jaggL, _, _) = q177Tables(s, dir)
       graft.ops.Ivm.refreshJoinAggLeft(s, a, b, "cust", jaggL, 8,
-        "nat", "v")
+        "nat", Seq("v"))
       graft.ops.Ivm.repairJoinAggLeft(s, a, b, "cust", jaggL, 8,
-        "nat", "v")
+        "nat", Seq("v"))
       graft.ops.Ivm.serve(s, jaggL).orderBy("g")
     }),
 
@@ -1286,7 +1286,7 @@ object RelationalQueries {
         graft.sources.Bucketed.save(
           li.filter(col("id") % 2 === 0), src, Seq("id"), 8)
         graft.sources.Bucketed.setRetention(s, src, 8)
-        graft.ops.Ivm.create(s, src, view, 8, "g", "v")
+        graft.ops.Ivm.create(s, src, view, 8, "g", Seq("v"))
         graft.sources.Bucketed.save(
           li.filter(col("id") % 2 === 1), src, Seq("id"), 8,
           mode = org.apache.spark.sql.SaveMode.Append)
@@ -1294,7 +1294,7 @@ object RelationalQueries {
           li.filter(col("id") % 13 === 2)
             .select(col("id"), col("g"), col("v"), lit(true).as("del")),
           deleteCol = Some("del"))
-        graft.ops.Ivm.refresh(s, src, view, 8, "g", "v")
+        graft.ops.Ivm.refresh(s, src, view, 8, "g", Seq("v"))
         ()
       }
       graft.ops.Ivm.serve(s, view).orderBy("g")
@@ -1317,7 +1317,7 @@ object RelationalQueries {
         graft.sources.Bucketed.save(
           li.filter(col("id") % 2 === 0), src, Seq("id"), 8)
         graft.sources.Bucketed.setRetention(s, src, 8)
-        graft.ops.Ivm.create(s, src, view, 8, "g", "v")
+        graft.ops.Ivm.create(s, src, view, 8, "g", Seq("v"))
         graft.sources.Bucketed.save(
           li.filter(col("id") % 2 === 1), src, Seq("id"), 8,
           mode = org.apache.spark.sql.SaveMode.Append)
@@ -1325,8 +1325,8 @@ object RelationalQueries {
           li.filter(col("id") % 13 === 2)
             .select(col("id"), col("g"), col("v"), lit(true).as("del")),
           deleteCol = Some("del"))
-        graft.ops.Ivm.refresh(s, src, view, 8, "g", "v")
-        graft.ops.Ivm.repair(s, src, view, 8, "g", "v")
+        graft.ops.Ivm.refresh(s, src, view, 8, "g", Seq("v"))
+        graft.ops.Ivm.repair(s, src, view, 8, "g", Seq("v"))
         ()
       }
       graft.ops.Ivm.serve(s, view).orderBy("g")
@@ -1352,7 +1352,7 @@ object RelationalQueries {
         graft.sources.Bucketed.save(
           li.filter(col("id") % 2 === 0), src, Seq("id"), 8)
         graft.sources.Bucketed.setRetention(s, src, 8)
-        graft.ops.Ivm.createMulti(s, src, view, 8, "g",
+        graft.ops.Ivm.create(s, src, view, 8, "g",
           Seq("v0", "v1"))
         graft.sources.Bucketed.save(
           li.filter(col("id") % 2 === 1), src, Seq("id"), 8,
@@ -1366,13 +1366,13 @@ object RelationalQueries {
             .select(col("id"), col("g"), col("v0"), col("v1"),
               lit(true).as("del")),
           deleteCol = Some("del"))
-        graft.ops.Ivm.refreshMulti(s, src, view, 8, "g",
+        graft.ops.Ivm.refresh(s, src, view, 8, "g",
           Seq("v0", "v1"))
-        graft.ops.Ivm.repairMulti(s, src, view, 8, "g",
+        graft.ops.Ivm.repair(s, src, view, 8, "g",
           Seq("v0", "v1"))
         ()
       }
-      graft.ops.Ivm.serveMulti(s, view).orderBy("g")
+      graft.ops.Ivm.serve(s, view).orderBy("g")
     }),
 
     // Rollup FOLLOWING the full-outer pair: a materialized per-nation
@@ -1387,8 +1387,8 @@ object RelationalQueries {
     "q184_full_pair_rollup" -> ((s, dir) => {
       val (a, b, _, full, _, roll, _) = q177Tables(s, dir)
       graft.ops.Ivm.refreshJoinFull(s, a, b, "cust", full)
-      graft.ops.Ivm.refreshOverFull(s, full, roll, 8, "nat", "v")
-      graft.ops.Ivm.repairOverFull(s, full, roll, 8, "nat", "v")
+      graft.ops.Ivm.refreshOverFull(s, full, roll, 8, "nat", Seq("v"))
+      graft.ops.Ivm.repairOverFull(s, full, roll, 8, "nat", Seq("v"))
       graft.ops.Ivm.serve(s, roll).orderBy("g")
     }),
 
@@ -1437,7 +1437,7 @@ object RelationalQueries {
         graft.sources.Bucketed.setRetention(s, a, 8)
         graft.sources.Bucketed.save(c, b, Seq("cust"), 8)
         graft.sources.Bucketed.setRetention(s, b, 8)
-        graft.ops.Ivm.createJoinAggMulti(s, a, b, "cust", view, 8,
+        graft.ops.Ivm.createJoinAgg(s, a, b, "cust", view, 8,
           "nat", Seq("v", "w"))
         graft.sources.Bucketed.save(o.filter(col("k") % 2 === 1),
           a, Seq("k"), 8, mode = org.apache.spark.sql.SaveMode.Append)
@@ -1449,13 +1449,13 @@ object RelationalQueries {
           c.filter(col("cust") % 10 === 3)
             .select(col("cust"), col("nat"), lit(true).as("del")),
           deleteCol = Some("del"))
-        graft.ops.Ivm.refreshJoinAggMulti(s, a, b, "cust", view, 8,
+        graft.ops.Ivm.refreshJoinAgg(s, a, b, "cust", view, 8,
           "nat", Seq("v", "w"))
-        graft.ops.Ivm.repairJoinAggMulti(s, a, b, "cust", view, 8,
+        graft.ops.Ivm.repairJoinAgg(s, a, b, "cust", view, 8,
           "nat", Seq("v", "w"))
         ()
       }
-      graft.ops.Ivm.serveMulti(s, view).orderBy("g")
+      graft.ops.Ivm.serve(s, view).orderBy("g")
     }),
 
     // Multi-measure LEFT-outer join+agg in ONE maintained view: the
@@ -1485,7 +1485,7 @@ object RelationalQueries {
         graft.sources.Bucketed.save(c.filter(col("cust") % 7 =!= 2),
           b, Seq("cust"), 8)
         graft.sources.Bucketed.setRetention(s, b, 8)
-        graft.ops.Ivm.createJoinAggLeftMulti(s, a, b, "cust", view, 8,
+        graft.ops.Ivm.createJoinAggLeft(s, a, b, "cust", view, 8,
           "nat", Seq("v", "w"))
         graft.sources.Bucketed.save(o.filter(col("k") % 2 === 1),
           a, Seq("k"), 8, mode = org.apache.spark.sql.SaveMode.Append)
@@ -1500,13 +1500,13 @@ object RelationalQueries {
           c.filter(col("cust") % 10 === 3)
             .select(col("cust"), col("nat"), lit(true).as("del")),
           deleteCol = Some("del"))
-        graft.ops.Ivm.refreshJoinAggLeftMulti(s, a, b, "cust", view,
+        graft.ops.Ivm.refreshJoinAggLeft(s, a, b, "cust", view,
           8, "nat", Seq("v", "w"))
-        graft.ops.Ivm.repairJoinAggLeftMulti(s, a, b, "cust", view,
+        graft.ops.Ivm.repairJoinAggLeft(s, a, b, "cust", view,
           8, "nat", Seq("v", "w"))
         ()
       }
-      graft.ops.Ivm.serveMulti(s, view).orderBy("g")
+      graft.ops.Ivm.serve(s, view).orderBy("g")
     }),
 
     // Multi-measure rollup FOLLOWING the full-outer pair: the q184
@@ -1518,11 +1518,11 @@ object RelationalQueries {
     "q189_full_pair_multi" -> ((s, dir) => {
       val (a, b, _, full, _, _, roll2) = q177Tables(s, dir)
       graft.ops.Ivm.refreshJoinFull(s, a, b, "cust", full)
-      graft.ops.Ivm.refreshOverFullMulti(s, full, roll2, 8, "nat",
+      graft.ops.Ivm.refreshOverFull(s, full, roll2, 8, "nat",
         Seq("v", "acct"))
-      graft.ops.Ivm.repairOverFullMulti(s, full, roll2, 8, "nat",
+      graft.ops.Ivm.repairOverFull(s, full, roll2, 8, "nat",
         Seq("v", "acct"))
-      graft.ops.Ivm.serveMulti(s, roll2).orderBy("g")
+      graft.ops.Ivm.serve(s, roll2).orderBy("g")
     }),
 
     // CDC from plain SQL: the graft_changes TVF resolves at analysis

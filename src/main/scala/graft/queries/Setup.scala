@@ -40,6 +40,26 @@ private[queries] object Setup {
     }
   }
 
+  // RAM scratch (Streaming.scratchBase) the returned frames read
+  // lazily, so it cannot go when the query returns: one shutdown hook
+  // deletes every registered dir when the JVM exits
+  private val atExit =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private lazy val exitHook = sys.addShutdownHook(atExit.forEach(d =>
+    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(d))))
+  private def deleteAtExit(dir: String): String = {
+    exitHook
+    atExit.add(dir)
+    dir
+  }
+
+  /** A fresh per-execution scratch dir `graft-<query>-<nanoTime>`
+    * under [[graft.streaming.Streaming.scratchBase]], deleted at JVM
+    * exit. */
+  def scratchDir(query: String): String =
+    deleteAtExit(graft.streaming.Streaming.scratchBase
+      .resolve(s"graft-$query-${System.nanoTime()}").toString)
+
   /** Stage the streaming fixtures' SOURCE files once per (query, dir):
     * each part writes as a single parquet file `f<i>.parquet` with an
     * ascending pinned mtime (the file-stream arrival order), under a
@@ -47,8 +67,9 @@ private[queries] object Setup {
     * INPUTS — fixture setup, the q123/q128 amortization doctrine — so
     * repeat executions share them while the operators under measurement
     * (gates, ingest, index commits: each execution's own fresh tables,
-    * checkpoints and outputs) still run in full every time. Returns the
-    * source dir to stream from. */
+    * checkpoints and outputs) still run in full every time. The
+    * staged dir is deleted at JVM exit. Returns the source dir to
+    * stream from. */
   def stageOnce(key: String, dir: String,
                 parts: Seq[org.apache.spark.sql.DataFrame]): String = {
     // pid in the path (ADVICE r14): the memo is per-JVM, so a SECOND
@@ -57,9 +78,9 @@ private[queries] object Setup {
     // stream is mid-read; a process-unique dir restores the isolation
     // the old per-execution nanoTime paths had, while the per-process
     // sharing (the whole point of stageOnce) is untouched
-    val base = graft.streaming.Streaming.scratchBase
+    val base = deleteAtExit(graft.streaming.Streaming.scratchBase
       .resolve(s"graft-stage-$key-${dirTag(dir)}-" +
-        ProcessHandle.current().pid().toString).toString
+        ProcessHandle.current().pid().toString).toString)
     once(s"stage:$key:$dir") {
       val root = new java.io.File(base)
       if (root.exists()) {

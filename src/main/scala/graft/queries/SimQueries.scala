@@ -308,8 +308,7 @@ object SimQueries {
       val cents = graft.sim.Pinned.ivfCentroids()
       graft.sim.IncrementalAnn.buildIndex(
         e.filter(col("id") % 4 =!= 0), table, buckets = 8, cents)
-      val base = graft.streaming.Streaming.scratchBase.resolve(
-        s"graft-q132-${System.nanoTime()}").toString
+      val base = Setup.scratchDir("q132")
       val stream = e.filter(col("id") % 4 === 0)
         .withColumn("b", pmod(floor(col("id") / 4), lit(4)))
       // staged source files: fixture INPUT, shared across executions

@@ -466,8 +466,7 @@ object TextQueries {
       val table = s"graft_q130_idx_$tag"
       graft.text.IncrementalDedup.buildIndex(
         d.filter(col("doc_id") % 3 =!= 0), table, buckets = 8)
-      val base = graft.streaming.Streaming.scratchBase.resolve(
-        s"graft-q130-${System.nanoTime()}").toString
+      val base = Setup.scratchDir("q130")
       val stream = d.filter(col("doc_id") % 3 === 0)
         .withColumn("b", pmod(floor(col("doc_id") / 3), lit(4)))
       // staged source files: fixture INPUT, shared across executions

@@ -255,7 +255,7 @@ class PlanSpec extends SparkSuite {
     // column on write; an equality predicate on it must become a
     // PartitionFilter (pruned at file LISTING — zero bytes read from
     // other partitions), not a post-scan Filter
-    val out = java.nio.file.Files.createTempDirectory("graft-part").toString
+    val out = tempDir("graft-part").toString
     Tables.events(spark, dir)
       .withColumn("event_date", to_date(col("ts")))
       .write.mode("overwrite").partitionBy("event_date").parquet(out)

@@ -1,6 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session — sbt
@@ -28,6 +30,21 @@ object SparkSpec {
   }
 }
 
-abstract class SparkSuite extends AnyFunSuite {
+abstract class SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.spark
+
+  private val tempDirs =
+    new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+
+  /** A fresh `<prefix>…` directory under the JVM temp dir, deleted
+    * with its contents after the suite's last test. */
+  def tempDir(prefix: String): Path = {
+    val dir = Files.createTempDirectory(prefix)
+    tempDirs.add(dir.toFile)
+    dir
+  }
+
+  override protected def afterAll(): Unit =
+    try tempDirs.forEach(d => org.apache.hadoop.fs.FileUtil.fullyDelete(d))
+    finally super.afterAll()
 }

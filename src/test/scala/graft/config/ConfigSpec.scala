@@ -1,10 +1,9 @@
 package graft.config
 
 import java.nio.file.Files
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Mirrors razulibs tests/test_config.py:17-61 (flat-YAML subset). */
-class ConfigSpec extends AnyFunSuite {
+class ConfigSpec extends graft.SparkSuite {
 
   private val yaml =
     """# test configuration
@@ -22,7 +21,7 @@ class ConfigSpec extends AnyFunSuite {
       |""".stripMargin
 
   private def configFile: String = {
-    val f = Files.createTempFile("graft-config", ".yaml")
+    val f = tempDir("graft-config").resolve("config.yaml")
     Files.writeString(f, yaml)
     f.toString
   }

@@ -9,7 +9,7 @@ import graft.rdf.NS
 class DemoCsvSpec extends graft.SparkSuite {
 
   private lazy val dir = {
-    val d = Files.createTempDirectory("graft-demo").toString
+    val d = tempDir("graft-demo").toString
     val header = ("Plaats;Doos-nummer;Inventarisnummer;Volgnummer;Serie;" +
       "Datering;Volgordenummer;Titel;Beschrijving voorkant;Bijzonderheden;" +
       "Plaats 1;Plaats 2;Plaats 3;Schaal;Coördinaat - Linksonder;" +

@@ -12,7 +12,7 @@ class ManifestSpec extends graft.SparkSuite {
       java.util.Arrays.asList(df.collect(): _*), df.schema)
 
   private def mkTree(): String = {
-    val dir = Files.createTempDirectory("graft-manifest").toString
+    val dir = tempDir("graft-manifest").toString
     Files.createDirectories(JPaths.get(s"$dir/sub"))
     Files.writeString(JPaths.get(s"$dir/a.txt"), "hello world")
     Files.writeString(JPaths.get(s"$dir/sub/b.meta.json"), """{"x":1}""")
@@ -76,7 +76,7 @@ class ManifestSpec extends graft.SparkSuite {
   test("K3/S7 JSON save/load round-trip") {
     val dir = mkTree()
     val manifest = Manifest.scanDirectory(spark, dir)
-    val out = Files.createTempDirectory("graft-mjson").toString + "/m.json"
+    val out = tempDir("graft-mjson").toString + "/m.json"
     Manifest.saveJson(manifest, out)
     val loaded = Manifest.loadJson(spark, out)
     val a = manifest.select("path", "md5hash", "size").collect()

@@ -42,18 +42,18 @@ class IncrementalAggSpec extends SparkSuite {
 
   test("serve equals raw groupBy through build/append/retract/repair/consolidate") {
     try {
-      IncrementalAgg.buildIndex(rows(0, 50), name, buckets, "g", "v")
+      IncrementalAgg.buildIndex(rows(0, 50), name, buckets, "g", Seq("v"))
       assert(served() == oracle(rows(0, 50)) && served().nonEmpty)
 
       // appends advance every aggregate (same groups touched again)
-      assert(IncrementalAgg.append(rows(50, 80), name, buckets, "g", "v", "b1"))
-      assert(IncrementalAgg.append(rows(80, 95), name, buckets, "g", "v", "b2"))
+      assert(IncrementalAgg.append(rows(50, 80), name, buckets, "g", Seq("v"), "b1"))
+      assert(IncrementalAgg.append(rows(80, 95), name, buckets, "g", Seq("v"), "b2"))
       assert(served() == oracle(rows(0, 95)))
 
       // retraction: count/sum/avg exact immediately; the touched
       // groups' min/max serve as NULL, not a stale bound
       val gone = rows(20, 40)
-      assert(IncrementalAgg.retract(gone, name, buckets, "g", "v", "d0"))
+      assert(IncrementalAgg.retract(gone, name, buckets, "g", Seq("v"), "d0"))
       val remaining = rows(0, 20).unionByName(rows(40, 95))
       val afterRetract = served()
       val exact = oracle(remaining)
@@ -66,34 +66,47 @@ class IncrementalAggSpec extends SparkSuite {
       // repair restores exact min/max for the touched groups at
       // O(touched buckets)
       val n = IncrementalAgg.repairGroups(spark, name, buckets, remaining,
-        "g", "v", gone.select("g"))
+        "g", Seq("v"), gone.select("g"))
       assert(n > 0)
       assert(served() == exact)
 
       // consolidation changes nothing observable
       IncrementalAgg.consolidate(spark, name, maxFilesPerBucket = 1)
       assert(served() == exact)
-    } finally drop()
+
+      // serve's naming rule: one measure serves bare names, two or
+      // more suffix every measure column with its index
+      assert(IncrementalAgg.serve(spark, name).columns.toSeq ==
+        Seq("g", "n", "sum_q", "min_q", "max_q", "avg_e6"))
+      IncrementalAgg.buildIndex(rows(0, 50).withColumn("w", col("v") * 2),
+        s"${name}_2", buckets, "g", Seq("v", "w"))
+      assert(IncrementalAgg.serve(spark, s"${name}_2").columns.toSeq ==
+        Seq("g", "n", "sum_q_0", "min_q_0", "max_q_0", "avg_e6_0",
+          "sum_q_1", "min_q_1", "max_q_1", "avg_e6_1"))
+    } finally {
+      drop()
+      spark.sql(s"DROP TABLE IF EXISTS ${name}_2_partials")
+    }
   }
 
   test("appends are exactly-once under replay, including replay after consolidation") {
     try {
-      IncrementalAgg.buildIndex(rows(0, 30), name, buckets, "g", "v")
-      assert(IncrementalAgg.append(rows(30, 60), name, buckets, "g", "v", "b1"))
+      IncrementalAgg.buildIndex(rows(0, 30), name, buckets, "g", Seq("v"))
+      assert(IncrementalAgg.append(rows(30, 60), name, buckets, "g", Seq("v"), "b1"))
       val once = served()
       // same-tag replay before consolidation: skipped
-      assert(!IncrementalAgg.append(rows(30, 60), name, buckets, "g", "v", "b1"))
+      assert(!IncrementalAgg.append(rows(30, 60), name, buckets, "g", Seq("v"), "b1"))
       assert(served() == once)
       // consolidation merges data rows but PRESERVES sentinels —
       // replay after it is still skipped (content-dedup could not
       // catch this: the merged rows no longer match the batch's)
       IncrementalAgg.consolidate(spark, name, maxFilesPerBucket = 1)
       assert(served() == once)
-      assert(!IncrementalAgg.append(rows(30, 60), name, buckets, "g", "v", "b1"))
+      assert(!IncrementalAgg.append(rows(30, 60), name, buckets, "g", Seq("v"), "b1"))
       assert(served() == once)
       // a genuinely new batch with identical CONTENT still lands —
       // only the tag decides (two identical batches are legitimate)
-      assert(IncrementalAgg.append(rows(30, 60), name, buckets, "g", "v", "b2"))
+      assert(IncrementalAgg.append(rows(30, 60), name, buckets, "g", Seq("v"), "b2"))
       assert(served() == oracle(rows(0, 60).unionByName(rows(30, 60))))
     } finally drop()
   }
@@ -103,8 +116,8 @@ class IncrementalAggSpec extends SparkSuite {
       val only5 = Seq((5L, 10L), (5L, 20L)).toDF("g", "v")
       val others = Seq((1L, 1L), (2L, 2L)).toDF("g", "v")
       IncrementalAgg.buildIndex(only5.unionByName(others), name, buckets,
-        "g", "v")
-      IncrementalAgg.retract(only5, name, buckets, "g", "v", "d0")
+        "g", Seq("v"))
+      IncrementalAgg.retract(only5, name, buckets, "g", Seq("v"), "d0")
       assert(served() == oracle(others))
     } finally drop()
   }
@@ -113,7 +126,7 @@ class IncrementalAggSpec extends SparkSuite {
     try {
       // index holds ONLY group 1 — most of the 8 buckets have no files
       IncrementalAgg.buildIndex(Seq((1L, 1L)).toDF("g", "v"), name,
-        buckets = 8, "g", "v")
+        buckets = 8, "g", Seq("v"))
       def bucketOf(g: Long): Int = spark.range(1)
         .select(pmod(hash(lit(g)), lit(8)).cast("int")).head().getInt(0)
       val g2 = (2L to 100L).find(g => bucketOf(g) != bucketOf(1L)).get
@@ -121,7 +134,7 @@ class IncrementalAggSpec extends SparkSuite {
       // recomputed partials must still stage (the explicit-target
       // rewrite cannot silently skip file-less buckets)
       val raw = Seq((1L, 1L), (g2, 5L), (g2, 7L)).toDF("g", "v")
-      IncrementalAgg.repairGroups(spark, name, 8, raw, "g", "v",
+      IncrementalAgg.repairGroups(spark, name, 8, raw, "g", Seq("v"),
         Seq(g2).toDF("g"))
       assert(IncrementalAgg.serve(spark, name)
         .filter(col("g") === g2)
@@ -134,44 +147,39 @@ class IncrementalAggSpec extends SparkSuite {
   test("streaming ingest: foreachBatch ids are idempotency tags; serve matches batch") {
     try {
       val all = rows(0, 64)
-      IncrementalAgg.buildIndex(rows(0, 0), name, buckets, "g", "v")
+      IncrementalAgg.buildIndex(rows(0, 0), name, buckets, "g", Seq("v"))
       val src = all.repartition(4) // 4-ish micro-batches under AvailableNow
-      val dirIn = java.nio.file.Files.createTempDirectory(
-        graft.streaming.Streaming.scratchBase, "graft-incagg-in")
+      val dirIn = tempDir("graft-incagg-in")
       all.write.mode("overwrite").parquet(dirIn.toString)
       val stream = spark.readStream
         .schema(all.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(dirIn.toString)
-      IncrementalAgg.streamAppend(stream, name, buckets, "g", "v",
+      IncrementalAgg.streamAppend(stream, name, buckets, "g", Seq("v"),
         consolidateEvery = 2, maxFilesPerBucket = 2)
       assert(served() == oracle(all))
       assert(src.count() == 64)
     } finally drop()
   }
 
-  /** A source dir under a fresh base, a stream over it, and the base
-    * deleted after `f`. */
+  /** A source dir under a fresh base and a stream over it. */
   private def withSource(f: (String, () => DataFrame) => Unit): Unit = {
-    val base = java.nio.file.Files.createTempDirectory(
-      graft.streaming.Streaming.scratchBase, "graft-incagg-src").toString
-    val stream = () => spark.readStream.schema(rows(0, 0).schema)
-      .parquet(s"$base/src")
-    try f(base, stream)
-    finally org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(base))
+    val base = tempDir("graft-incagg-src").toString
+    f(base, () => spark.readStream.schema(rows(0, 0).schema)
+      .parquet(s"$base/src"))
   }
 
   test("a persistent checkpoint resumes: the second call ingests only the new files") {
     withSource { (base, stream) =>
       try {
-        IncrementalAgg.buildIndex(rows(0, 0), name, buckets, "g", "v")
+        IncrementalAgg.buildIndex(rows(0, 0), name, buckets, "g", Seq("v"))
         val ckpt = Some(s"$base/ckpt")
         rows(0, 30).write.mode("append").parquet(s"$base/src")
-        IncrementalAgg.streamAppend(stream(), name, buckets, "g", "v",
+        IncrementalAgg.streamAppend(stream(), name, buckets, "g", Seq("v"),
           checkpointDir = ckpt)
         assert(served() == oracle(rows(0, 30)))
         rows(30, 64).write.mode("append").parquet(s"$base/src")
-        IncrementalAgg.streamAppend(stream(), name, buckets, "g", "v",
+        IncrementalAgg.streamAppend(stream(), name, buckets, "g", Seq("v"),
           checkpointDir = ckpt)
         assert(served() == oracle(rows(0, 64)))
       } finally drop()
@@ -181,9 +189,9 @@ class IncrementalAggSpec extends SparkSuite {
   test("a one-shot streamAppend's deleted checkpoint cannot be resumed: later ingest fails, drops no rows") {
     withSource { (base, stream) =>
       try {
-        IncrementalAgg.buildIndex(rows(0, 0), name, buckets, "g", "v")
+        IncrementalAgg.buildIndex(rows(0, 0), name, buckets, "g", Seq("v"))
         rows(0, 30).write.mode("append").parquet(s"$base/src")
-        IncrementalAgg.streamAppend(stream(), name, buckets, "g", "v")
+        IncrementalAgg.streamAppend(stream(), name, buckets, "g", Seq("v"))
         assert(served() == oracle(rows(0, 30)))
         val loc = new org.apache.hadoop.fs.Path(
           spark.sessionState.catalog.getTableMetadata(
@@ -198,7 +206,7 @@ class IncrementalAggSpec extends SparkSuite {
         rows(30, 64).write.mode("append").parquet(s"$base/src")
         for (ckpt <- Seq(owner, None)) {
           val e = intercept[IllegalArgumentException](
-            IncrementalAgg.streamAppend(stream(), name, buckets, "g", "v",
+            IncrementalAgg.streamAppend(stream(), name, buckets, "g", Seq("v"),
               checkpointDir = ckpt))
           assert(e.getMessage.contains("rebuild the index"), e.getMessage)
         }

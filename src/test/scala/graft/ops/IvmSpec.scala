@@ -31,7 +31,7 @@ class IvmSpec extends SparkSuite {
     val table = "graft_ivm_src"; val view = "graft_ivm_view"
     try {
       src(table, (0 until 60).map(i => (i.toLong, i % 5L, i.toLong)))
-      Ivm.create(spark, table, view, 4, "g", "v")
+      Ivm.create(spark, table, view, 4, "g", Seq("v"))
       assert(served(view) == truth(table))
       // append new ids, update (delete+insert in the delta), delete
       Bucketed.save((60 until 80).map(i => (i.toLong, i % 5L, i.toLong))
@@ -43,10 +43,10 @@ class IvmSpec extends SparkSuite {
       Bucketed.mergeByKey(spark, table,
         (0 until 80 by 11).map(i => (i.toLong, i % 5L, 0L, true))
           .toDF("id", "g", "v", "del"), deleteCol = Some("del"))
-      Ivm.refresh(spark, table, view, 4, "g", "v")
+      Ivm.refresh(spark, table, view, 4, "g", Seq("v"))
       assert(served(view) == truth(table))
       // a replayed refresh (same bookmark path) changes nothing
-      Ivm.refresh(spark, table, view, 4, "g", "v")
+      Ivm.refresh(spark, table, view, 4, "g", Seq("v"))
       assert(served(view) == truth(table))
       // groups that saw retractions serve null min/max (the q155
       // contract); untouched groups keep exact extrema
@@ -56,7 +56,7 @@ class IvmSpec extends SparkSuite {
         "retracted groups must serve null min until repair")
       // repair recomputes the retracted groups from the source's
       // current rows: exact min/max everywhere, count/sum unchanged
-      assert(Ivm.repair(spark, table, view, 4, "g", "v") > 0)
+      assert(Ivm.repair(spark, table, view, 4, "g", Seq("v")) > 0)
       assert(served(view) == truth(table))
       val mmTruth = Bucketed.load(spark, table).groupBy("g")
         .agg(min("v").as("mn"), max("v").as("mx"))
@@ -70,7 +70,7 @@ class IvmSpec extends SparkSuite {
       Bucketed.mergeByKey(spark, table,
         Seq((999L, 0L, 999L)).toDF("id", "g", "v"))
       val e = intercept[IllegalArgumentException] {
-        Ivm.repair(spark, table, view, 4, "g", "v")
+        Ivm.repair(spark, table, view, 4, "g", Seq("v"))
       }
       assert(e.getMessage.contains("refresh before repairing"))
     } finally {
@@ -83,7 +83,7 @@ class IvmSpec extends SparkSuite {
     val table = "graft_ivm_crash"; val view = "graft_ivm_crash_view"
     try {
       src(table, (0 until 30).map(i => (i.toLong, i % 3L, i.toLong)))
-      val g0 = Ivm.create(spark, table, view, 4, "g", "v")
+      val g0 = Ivm.create(spark, table, view, 4, "g", Seq("v"))
       Bucketed.mergeByKey(spark, table,
         Seq((100L, 1L, 100L), (101L, 2L, 101L)).toDF("id", "g", "v"))
       val g1 = Bucketed.currentGeneration(spark, table)
@@ -92,9 +92,9 @@ class IvmSpec extends SparkSuite {
       val diff = Bucketed.diffGenerations(spark, table, g0, g1)
       IncrementalAgg.append(
         diff.filter(col("change") === "insert").select("g", "v"),
-        view, 4, "g", "v", s"ivm-$g0-$g1-i")
+        view, 4, "g", Seq("v"), s"ivm-$g0-$g1-i")
       // the retried refresh skips the landed half, applies the rest
-      Ivm.refresh(spark, table, view, 4, "g", "v")
+      Ivm.refresh(spark, table, view, 4, "g", Seq("v"))
       assert(served(view) == truth(table))
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $table")
@@ -108,13 +108,13 @@ class IvmSpec extends SparkSuite {
       Bucketed.save((0 until 20).map(i => (i.toLong, i % 3L, i.toLong))
         .toDF("id", "g", "v"), table, Seq("id"), 4)
       Bucketed.setRetention(spark, table, 2)
-      Ivm.create(spark, table, view, 4, "g", "v")
+      Ivm.create(spark, table, view, 4, "g", Seq("v"))
       (1 to 3).foreach { i =>
         Bucketed.mergeByKey(spark, table,
           Seq((i.toLong, i % 3L, -1L)).toDF("id", "g", "v"))
       }
       val e = intercept[IllegalStateException] {
-        Ivm.refresh(spark, table, view, 4, "g", "v")
+        Ivm.refresh(spark, table, view, 4, "g", Seq("v"))
       }
       assert(e.getMessage.contains("recreate"))
     } finally {
@@ -588,7 +588,7 @@ class IvmSpec extends SparkSuite {
     val view = "graft_jagg_view"
     try {
       mkJoinSources(a, b)
-      Ivm.createJoinAgg(spark, a, b, "j", view, 4, "nm", "v")
+      Ivm.createJoinAgg(spark, a, b, "j", view, 4, "nm", Seq("v"))
       assert(jaggServed(view) == jaggTruth(a, b))
       // side A: append + update + join-key move + delete; side B:
       // rename a dim (moves its groups' rows to a new group) + delete
@@ -607,13 +607,13 @@ class IvmSpec extends SparkSuite {
       Bucketed.mergeByKey(spark, b,
         Seq((4L, "x", true)).toDF("j", "nm", "del"),
         deleteCol = Some("del"))
-      Ivm.refreshJoinAgg(spark, a, b, "j", view, 4, "nm", "v")
+      Ivm.refreshJoinAgg(spark, a, b, "j", view, 4, "nm", Seq("v"))
       assert(jaggServed(view) == jaggTruth(a, b))
       // retracted groups serve null extrema until the join-aware repair
       val mm = Ivm.serve(spark, view)
         .select("g", "min_q").as[(String, Option[Long])].collect().toMap
       assert(mm.values.exists(_.isEmpty))
-      assert(Ivm.repairJoinAgg(spark, a, b, "j", view, 4, "nm", "v") > 0)
+      assert(Ivm.repairJoinAgg(spark, a, b, "j", view, 4, "nm", Seq("v")) > 0)
       val exact = Bucketed.load(spark, a).join(Bucketed.load(spark, b), "j")
         .groupBy("nm")
         .agg(count(lit(1)).as("n"), sum("v").as("sum_q"),
@@ -628,7 +628,7 @@ class IvmSpec extends SparkSuite {
       // already committed — exactly-once makes it a strict no-op
       Ivm.writeJoinBookmark(spark, s"${view}_partials", 'b',
         Bucketed.generations(spark, b).head)
-      Ivm.refreshJoinAgg(spark, a, b, "j", view, 4, "nm", "v")
+      Ivm.refreshJoinAgg(spark, a, b, "j", view, 4, "nm", Seq("v"))
       assert(jaggServed(view) == jaggTruth(a, b))
     } finally {
       Seq(a, b, view, s"${view}_partials").foreach(t =>
@@ -645,12 +645,12 @@ class IvmSpec extends SparkSuite {
       .agg(count(lit(1)).as("n"), sum("v").as("s0"), sum("id").as("s1"))
       .select("nm", "n", "s0", "s1")
       .as[(String, Long, Long, Long)].collect().toSet
-    def servedM = Ivm.serveMulti(spark, view)
+    def servedM = Ivm.serve(spark, view)
       .select("g", "n", "sum_q_0", "sum_q_1")
       .as[(String, Long, Long, Long)].collect().toSet
     try {
       mkJoinSources(a, b)
-      Ivm.createJoinAggMulti(spark, a, b, "j", view, 4, "nm",
+      Ivm.createJoinAgg(spark, a, b, "j", view, 4, "nm",
         Seq("v", "id"))
       assert(servedM == truthM)
       // fact append + update + delete; dim rename (moves BOTH
@@ -668,14 +668,14 @@ class IvmSpec extends SparkSuite {
       Bucketed.mergeByKey(spark, b,
         Seq((4L, "x", true)).toDF("j", "nm", "del"),
         deleteCol = Some("del"))
-      Ivm.refreshJoinAggMulti(spark, a, b, "j", view, 4, "nm",
+      Ivm.refreshJoinAgg(spark, a, b, "j", view, 4, "nm",
         Seq("v", "id"))
       assert(servedM == truthM)
       // retraction-touched groups serve null extrema for EVERY
       // measure; the join-aware multi repair restores all of them
-      assert(Ivm.serveMulti(spark, view).select("min_q_1")
+      assert(Ivm.serve(spark, view).select("min_q_1")
         .as[Option[Long]].collect().exists(_.isEmpty))
-      assert(Ivm.repairJoinAggMulti(spark, a, b, "j", view, 4, "nm",
+      assert(Ivm.repairJoinAgg(spark, a, b, "j", view, 4, "nm",
         Seq("v", "id")) > 0)
       val exact = Bucketed.load(spark, a)
         .join(Bucketed.load(spark, b), "j")
@@ -684,14 +684,14 @@ class IvmSpec extends SparkSuite {
           min("id").as("m1"), max("id").as("x1"))
         .select("nm", "m0", "x0", "m1", "x1")
         .as[(String, Long, Long, Long, Long)].collect().toSet
-      val got = Ivm.serveMulti(spark, view)
+      val got = Ivm.serve(spark, view)
         .select("g", "min_q_0", "max_q_0", "min_q_1", "max_q_1")
         .as[(String, Long, Long, Long, Long)].collect().toSet
       assert(got == exact)
       // replay: rolled-back bookmark → tags skip, strict no-op
       Ivm.writeJoinBookmark(spark, s"${view}_partials", 'b',
         Bucketed.generations(spark, b).head)
-      Ivm.refreshJoinAggMulti(spark, a, b, "j", view, 4, "nm",
+      Ivm.refreshJoinAgg(spark, a, b, "j", view, 4, "nm",
         Seq("v", "id"))
       assert(servedM == truthM)
     } finally {
@@ -720,7 +720,7 @@ class IvmSpec extends SparkSuite {
     try {
       mkOuterSources(a, b) // A has j 0..9, B covers 0..4: j 5..9 start
                            // in the NULL group
-      Ivm.createJoinAggLeft(spark, a, b, "j", view, 4, "nm", "v")
+      Ivm.createJoinAggLeft(spark, a, b, "j", view, 4, "nm", Seq("v"))
       assert(jaggLeftServed(view) == jaggLeftTruth(a, b))
       assert(jaggLeftServed(view).exists(_._1.isEmpty),
         "partnerless rows must serve under the NULL group")
@@ -742,14 +742,14 @@ class IvmSpec extends SparkSuite {
       Bucketed.mergeByKey(spark, a,
         Seq((9L, 9L, 0L, true)).toDF("id", "j", "v", "del"),
         deleteCol = Some("del"))
-      Ivm.refreshJoinAggLeft(spark, a, b, "j", view, 4, "nm", "v")
+      Ivm.refreshJoinAggLeft(spark, a, b, "j", view, 4, "nm", Seq("v"))
       assert(jaggLeftServed(view) == jaggLeftTruth(a, b))
       assert(jaggLeftServed(view).exists(r =>
         r._1.contains("late7")), "j=7's rows must now group matched")
       // repair restores exact extrema INCLUDING the null group (the
       // null-safe group match — a plain equi-join would skip it)
       assert(Ivm.repairJoinAggLeft(spark, a, b, "j", view, 4,
-        "nm", "v") > 0)
+        "nm", Seq("v")) > 0)
       val exact = Bucketed.load(spark, a)
         .join(Bucketed.load(spark, b), Seq("j"), "left")
         .groupBy("nm")
@@ -765,7 +765,7 @@ class IvmSpec extends SparkSuite {
       // replay: rolled-back bookmark → tags skip, strict no-op
       Ivm.writeJoinBookmark(spark, s"${view}_partials", 'b',
         Bucketed.generations(spark, b).head)
-      Ivm.refreshJoinAggLeft(spark, a, b, "j", view, 4, "nm", "v")
+      Ivm.refreshJoinAggLeft(spark, a, b, "j", view, 4, "nm", Seq("v"))
       assert(jaggLeftServed(view) == jaggLeftTruth(a, b))
     } finally {
       Seq(a, b, view, s"${view}_partials").foreach(t =>
@@ -778,10 +778,10 @@ class IvmSpec extends SparkSuite {
     val view = "graft_jaggl_pview"
     try {
       mkOuterSources(a, b)
-      Ivm.createJoinAggLeft(spark, a, b, "j", view, 4, "nm", "v")
+      Ivm.createJoinAggLeft(spark, a, b, "j", view, 4, "nm", Seq("v"))
       Bucketed.mergeByKey(spark, b,
         Seq((2L, "renamed2")).toDF("j", "nm"))
-      Ivm.refreshJoinAggLeft(spark, a, b, "j", view, 4, "nm", "v")
+      Ivm.refreshJoinAggLeft(spark, a, b, "j", view, 4, "nm", Seq("v"))
       // phase-2 halves committed, crash before the side-b bookmark:
       // roll back + restore the durable pin, then move A with a row
       // that joins the changed dim (the lost-ΔA⋈ΔB scenario)
@@ -792,9 +792,9 @@ class IvmSpec extends SparkSuite {
         Bucketed.currentGeneration(spark, a))
       Bucketed.mergeByKey(spark, a,
         Seq((200L, 2L, 5000L)).toDF("id", "j", "v"))
-      Ivm.refreshJoinAggLeft(spark, a, b, "j", view, 4, "nm", "v")
+      Ivm.refreshJoinAggLeft(spark, a, b, "j", view, 4, "nm", Seq("v"))
       assert(jaggLeftServed(view) == jaggLeftTruth(a, b))
-      Ivm.refreshJoinAggLeft(spark, a, b, "j", view, 4, "nm", "v")
+      Ivm.refreshJoinAggLeft(spark, a, b, "j", view, 4, "nm", Seq("v"))
       assert(jaggLeftServed(view) == jaggLeftTruth(a, b))
     } finally {
       Seq(a, b, view, s"${view}_partials").foreach(t =>
@@ -807,10 +807,10 @@ class IvmSpec extends SparkSuite {
     val view = "graft_jagg_pview"
     try {
       mkJoinSources(a, b)
-      Ivm.createJoinAgg(spark, a, b, "j", view, 4, "nm", "v")
+      Ivm.createJoinAgg(spark, a, b, "j", view, 4, "nm", Seq("v"))
       Bucketed.mergeByKey(spark, b,
         Seq((2L, "renamed2")).toDF("j", "nm"))
-      Ivm.refreshJoinAgg(spark, a, b, "j", view, 4, "nm", "v")
+      Ivm.refreshJoinAgg(spark, a, b, "j", view, 4, "nm", Seq("v"))
       // simulate "phase-2 halves committed, crash before the side-b
       // bookmark write": roll the bookmark back one b generation and
       // restore the pin the crashed refresh had written (the A head
@@ -828,10 +828,10 @@ class IvmSpec extends SparkSuite {
       // forever.
       Bucketed.mergeByKey(spark, a,
         Seq((200L, 2L, 5000L)).toDF("id", "j", "v"))
-      Ivm.refreshJoinAgg(spark, a, b, "j", view, 4, "nm", "v")
+      Ivm.refreshJoinAgg(spark, a, b, "j", view, 4, "nm", Seq("v"))
       assert(jaggServed(view) == jaggTruth(a, b))
       // the pin is cleared on completion: a further refresh is a no-op
-      Ivm.refreshJoinAgg(spark, a, b, "j", view, 4, "nm", "v")
+      Ivm.refreshJoinAgg(spark, a, b, "j", view, 4, "nm", Seq("v"))
       assert(jaggServed(view) == jaggTruth(a, b))
     } finally {
       Seq(a, b, view, s"${view}_partials").foreach(t =>
@@ -847,14 +847,14 @@ class IvmSpec extends SparkSuite {
       .agg(count(lit(1)).as("n"), sum("v").as("s0"), sum("w").as("s1"))
       .select("g", "n", "s0", "s1")
       .as[(Long, Long, Long, Long)].collect().toSet
-    def servedM = Ivm.serveMulti(spark, view)
+    def servedM = Ivm.serve(spark, view)
       .select("g", "n", "sum_q_0", "sum_q_1")
       .as[(Long, Long, Long, Long)].collect().toSet
     try {
       Bucketed.save((0 until 60).map(i => (i.toLong, i % 5L, i.toLong,
         i * 3L)).toDF("id", "g", "v", "w"), table, Seq("id"), 4)
       Bucketed.setRetention(spark, table, 10)
-      Ivm.createMulti(spark, table, view, 4, "g", Seq("v", "w"))
+      Ivm.create(spark, table, view, 4, "g", Seq("v", "w"))
       assert(servedM == truthM)
       // append, keyed update (bumps ONE measure), keyed delete
       Bucketed.save((60 until 80).map(i => (i.toLong, i % 5L, i.toLong,
@@ -865,31 +865,31 @@ class IvmSpec extends SparkSuite {
       Bucketed.mergeByKey(spark, table,
         Seq((8L, 3L, 0L, 0L, true)).toDF("id", "g", "v", "w", "del"),
         deleteCol = Some("del"))
-      Ivm.refreshMulti(spark, table, view, 4, "g", Seq("v", "w"))
+      Ivm.refresh(spark, table, view, 4, "g", Seq("v", "w"))
       assert(servedM == truthM)
       // retraction-touched groups serve null extrema for EVERY measure
       // until repair; after repair both measures' extrema are exact
-      val touched = Ivm.serveMulti(spark, view)
+      val touched = Ivm.serve(spark, view)
         .filter(col("g").isin(2L, 3L))
         .select("min_q_0", "max_q_1")
         .as[(Option[Long], Option[Long])].collect()
       assert(touched.forall(t => t._1.isEmpty && t._2.isEmpty),
         "retracted groups must serve null extrema for all measures")
-      assert(Ivm.repairMulti(spark, table, view, 4, "g",
+      assert(Ivm.repair(spark, table, view, 4, "g",
         Seq("v", "w")) > 0)
       val exact = Bucketed.load(spark, table).groupBy("g")
         .agg(min("v").as("m0"), max("v").as("x0"),
           min("w").as("m1"), max("w").as("x1"))
         .select("g", "m0", "x0", "m1", "x1")
         .as[(Long, Long, Long, Long, Long)].collect().toSet
-      val got = Ivm.serveMulti(spark, view)
+      val got = Ivm.serve(spark, view)
         .select("g", "min_q_0", "max_q_0", "min_q_1", "max_q_1")
         .as[(Long, Long, Long, Long, Long)].collect().toSet
       assert(got == exact)
       // replay: rolled-back bookmark → tags skip, strict no-op
       graft.sources.Replication.writeBookmark(spark,
         s"${view}_partials", Bucketed.generations(spark, table).head)
-      Ivm.refreshMulti(spark, table, view, 4, "g", Seq("v", "w"))
+      Ivm.refresh(spark, table, view, 4, "g", Seq("v", "w"))
       assert(servedM == truthM)
     } finally {
       Seq(table, view, s"${view}_partials").foreach(t =>
@@ -907,7 +907,7 @@ class IvmSpec extends SparkSuite {
         coalesce(sum("bw"), lit(0L)).as("s1"))
       .select("nm", "n", "s0", "s1")
       .as[(Option[String], Long, Long, Long)].collect().toSet
-    def servedM = Ivm.serveMulti(spark, view)
+    def servedM = Ivm.serve(spark, view)
       .select("g", "n", "sum_q_0", "sum_q_1")
       .as[(Option[String], Long, Long, Long)].collect().toSet
     try {
@@ -920,7 +920,7 @@ class IvmSpec extends SparkSuite {
       Bucketed.save((0 until 5).map(c => (c.toLong, s"name$c", c * 100L))
         .toDF("j", "nm", "bw"), b, Seq("j"), 4)
       Bucketed.setRetention(spark, b, 10)
-      Ivm.createJoinAggLeftMulti(spark, a, b, "j", view, 4, "nm",
+      Ivm.createJoinAggLeft(spark, a, b, "j", view, 4, "nm",
         Seq("v", "bw"))
       assert(servedM == truthM)
       assert(servedM.exists(_._1.isEmpty),
@@ -938,10 +938,10 @@ class IvmSpec extends SparkSuite {
       Bucketed.mergeByKey(spark, a,
         Seq((9L, 9L, 0L, true)).toDF("id", "j", "v", "del"),
         deleteCol = Some("del"))
-      Ivm.refreshJoinAggLeftMulti(spark, a, b, "j", view, 4, "nm",
+      Ivm.refreshJoinAggLeft(spark, a, b, "j", view, 4, "nm",
         Seq("v", "bw"))
       assert(servedM == truthM)
-      assert(Ivm.repairJoinAggLeftMulti(spark, a, b, "j", view, 4,
+      assert(Ivm.repairJoinAggLeft(spark, a, b, "j", view, 4,
         "nm", Seq("v", "bw")) > 0)
       val exact = Bucketed.load(spark, a)
         .join(Bucketed.load(spark, b), Seq("j"), "left")
@@ -951,7 +951,7 @@ class IvmSpec extends SparkSuite {
         .select("nm", "m0", "x0", "m1", "x1")
         .as[(Option[String], Option[Long], Option[Long], Option[Long],
           Option[Long])].collect().toSet
-      val got = Ivm.serveMulti(spark, view)
+      val got = Ivm.serve(spark, view)
         .select("g", "min_q_0", "max_q_0", "min_q_1", "max_q_1")
         .as[(Option[String], Option[Long], Option[Long], Option[Long],
           Option[Long])].collect().toSet
@@ -960,7 +960,7 @@ class IvmSpec extends SparkSuite {
       // replay: rolled-back bookmark → tags skip, strict no-op
       Ivm.writeJoinBookmark(spark, s"${view}_partials", 'b',
         Bucketed.generations(spark, b).head)
-      Ivm.refreshJoinAggLeftMulti(spark, a, b, "j", view, 4, "nm",
+      Ivm.refreshJoinAggLeft(spark, a, b, "j", view, 4, "nm",
         Seq("v", "bw"))
       assert(servedM == truthM)
     } finally {
@@ -980,7 +980,7 @@ class IvmSpec extends SparkSuite {
         coalesce(sum("bw"), lit(0L)).as("s1"))
       .select("nm", "n", "s0", "s1")
       .as[(Option[String], Long, Long, Long)].collect().toSet
-    def servedR = Ivm.serveMulti(spark, roll)
+    def servedR = Ivm.serve(spark, roll)
       .select("g", "n", "sum_q_0", "sum_q_1")
       .as[(Option[String], Long, Long, Long)].collect().toSet
     try {
@@ -994,7 +994,7 @@ class IvmSpec extends SparkSuite {
         aKey = "id", bKey = "j")
       Bucketed.setRetention(spark, full, 16)
       Bucketed.setRetention(spark, s"${full}_orphans", 16)
-      Ivm.createOverFullMulti(spark, full, roll, 4, "nm",
+      Ivm.createOverFull(spark, full, roll, 4, "nm",
         Seq("v", "bw"))
       assert(servedR == truthR)
       // an orphan arrives (j=55: bw real, v null), a matched B row
@@ -1015,12 +1015,12 @@ class IvmSpec extends SparkSuite {
         a, Seq("id"), 4,
         mode = org.apache.spark.sql.SaveMode.Append)
       Ivm.refreshJoinFull(spark, a, b, "j", full)
-      Ivm.refreshOverFullMulti(spark, full, roll, 4, "nm",
+      Ivm.refreshOverFull(spark, full, roll, 4, "nm",
         Seq("v", "bw"))
       assert(servedR == truthR)
       assert(servedR.exists(r => r._1.contains("name3") && r._2 == 1L),
         "j=3's B row must count as an orphan: n=1, v-fold 0, bw real")
-      assert(Ivm.repairOverFullMulti(spark, full, roll, 4, "nm",
+      assert(Ivm.repairOverFull(spark, full, roll, 4, "nm",
         Seq("v", "bw")) > 0)
       assert(servedR == truthR)
     } finally {
@@ -1049,7 +1049,7 @@ class IvmSpec extends SparkSuite {
         aKey = "id", bKey = "j")
       Bucketed.setRetention(spark, full, 16)
       Bucketed.setRetention(spark, s"${full}_orphans", 16)
-      Ivm.createOverFull(spark, full, roll, 4, "nm", "v")
+      Ivm.createOverFull(spark, full, roll, 4, "nm", Seq("v"))
       assert(servedR == truthR)
       // churn: a B row arrives matched (j=7 — A covers 0..9), one
       // arrives a real orphan (j=55), ALL A rows of j=3 are deleted
@@ -1070,13 +1070,13 @@ class IvmSpec extends SparkSuite {
         a, Seq("id"), 4,
         mode = org.apache.spark.sql.SaveMode.Append)
       Ivm.refreshJoinFull(spark, a, b, "j", full)
-      Ivm.refreshOverFull(spark, full, roll, 4, "nm", "v")
+      Ivm.refreshOverFull(spark, full, roll, 4, "nm", Seq("v"))
       assert(servedR == truthR)
       assert(servedR.exists(r => r._1.contains("name3") && r._2 == 1L),
         "j=3's B row must have flipped to a counted orphan (n=1, null v)")
       // repair: extrema exact, the NULL group (partnerless A rows)
       // repaired like any other via the null-safe group match
-      assert(Ivm.repairOverFull(spark, full, roll, 4, "nm", "v") > 0)
+      assert(Ivm.repairOverFull(spark, full, roll, 4, "nm", Seq("v")) > 0)
       val exact = Bucketed.load(spark, a)
         .join(Bucketed.load(spark, b), Seq("j"), "full")
         .groupBy("nm")
@@ -1091,7 +1091,7 @@ class IvmSpec extends SparkSuite {
       for ((t, side) <- Seq((full, 'l'), (s"${full}_orphans", 'o')))
         Ivm.writeJoinBookmark(spark, s"${roll}_partials", side,
           Bucketed.generations(spark, t).head)
-      Ivm.refreshOverFull(spark, full, roll, 4, "nm", "v")
+      Ivm.refreshOverFull(spark, full, roll, 4, "nm", Seq("v"))
       assert(servedR == truthR)
     } finally {
       Seq(a, b, full, s"${full}_orphans", roll, s"${roll}_partials")

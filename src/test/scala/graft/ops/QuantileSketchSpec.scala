@@ -89,9 +89,9 @@ class QuantileSketchSpec extends SparkSuite {
   test("streaming form agrees with batch bit-for-bit across micro-batch splits") {
     import graft.streaming.Streaming
     val qs = Seq(0.5, 0.9)
-    val base = java.nio.file.Files.createTempDirectory("graft-qsk").toString
+    val base = tempDir("graft-qsk").toString
     def writeFile(name: String, rs: Seq[(String, Long, Long)]): Unit = {
-      val stage = java.nio.file.Files.createTempDirectory("graft-qsk-st")
+      val stage = tempDir("graft-qsk-st")
       rs.toDF("g", "id", "v").coalesce(1)
         .write.mode("overwrite").parquet(stage.toString)
       val part = stage.toFile.listFiles()
@@ -129,10 +129,10 @@ class QuantileSketchSpec extends SparkSuite {
   test("at-least-once redelivery of the same ids leaves estimates unchanged") {
     import graft.streaming.Streaming
     val qs = Seq(0.5)
-    val base = java.nio.file.Files.createTempDirectory("graft-qsk2").toString
+    val base = tempDir("graft-qsk2").toString
     def writeFile(name: String, mtime: Long,
                   rs: Seq[(String, Long, Long)]): Unit = {
-      val stage = java.nio.file.Files.createTempDirectory("graft-qsk2-st")
+      val stage = tempDir("graft-qsk2-st")
       rs.toDF("g", "id", "v").coalesce(1)
         .write.mode("overwrite").parquet(stage.toString)
       val part = stage.toFile.listFiles()

@@ -100,7 +100,7 @@ class AsofJoinNativeSpec extends SparkSuite {
   test("pushdown: left-column filter moves below the join, key filter to both sides") {
     import spark.implicits._
     import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter}
-    val dir = java.nio.file.Files.createTempDirectory("asof_push").toString
+    val dir = tempDir("asof_push").toString
     (1L to 100L).map(i => (i, i % 5, i * 10)).toDF("lid", "k", "t")
       .write.mode("overwrite").parquet(s"$dir/l")
     (1L to 50L).map(i => (i, i % 5, i * 7)).toDF("rid", "k", "t")
@@ -139,7 +139,7 @@ class AsofJoinNativeSpec extends SparkSuite {
 
   test("pruning: a narrow select above the join drops unused LEFT columns at the scan") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("asof_prune").toString
+    val dir = tempDir("asof_prune").toString
     // wide left table: 4 payload-irrelevant columns beside (lid, k, t)
     (1L to 100L).map(i => (i, i % 5, i * 10,
         s"w1_$i", s"w2_$i", s"w3_$i", s"w4_$i"))

@@ -46,7 +46,7 @@ class TurtleSpec extends graft.SparkSuite {
     val one = Seq(1).toDF("row")
     val triples = Build.flatten(one, RResource(lit("http://example.org/a"),
       Seq((NS.DCT + "title") -> RLit(lit("t")))))
-    val out = Files.createTempDirectory("graft-ttl").toString + "/g"
+    val out = tempDir("graft-ttl").toString + "/g"
     Turtle.write(triples, out)
     val files = new java.io.File(out).listFiles.filter(_.getName.endsWith(".txt"))
     assert(files.length == 1)
@@ -90,7 +90,7 @@ class JsonLdSpec extends graft.SparkSuite {
   }
 
   test("S4 read: per-file bnode remap keeps files distinct") {
-    val dir = Files.createTempDirectory("graft-jsonld").toString
+    val dir = tempDir("graft-jsonld").toString
     val json = JsonLd.documents(sampleTriples).collect().head.getString(1)
     Files.writeString(JPaths.get(s"$dir/f1.meta.json"), json)
     Files.writeString(JPaths.get(s"$dir/f2.meta.json"), json)

@@ -9,7 +9,7 @@ import graft.rdf.Triple
 class JsonLdSourceSpec extends graft.SparkSuite {
 
   private lazy val dir = {
-    val d = Files.createTempDirectory("graft-jsonld-src").toString
+    val d = tempDir("graft-jsonld-src").toString
     val doc1 =
       """{"@graph": [
         |  {"@id": "https://example.org/r/1",
@@ -67,7 +67,7 @@ class JsonLdSourceSpec extends graft.SparkSuite {
   }
 
   test("directory load skips hidden files and recurses, like JsonLd.read") {
-    val d = Files.createTempDirectory("graft-jsonld-hidden").toString
+    val d = tempDir("graft-jsonld-hidden").toString
     val doc =
       """{"@graph": [{"@id": "https://example.org/r/9",
         |  "https://data.razu.nl/def/ldto/naam": [{"@value": "Nine"}]}]}""".stripMargin
@@ -85,7 +85,7 @@ class JsonLdSourceSpec extends graft.SparkSuite {
   }
 
   test("write path: triples round-trip isomorphically through format(\"jsonld\")") {
-    val out = Files.createTempDirectory("graft-jsonld-write").toString
+    val out = tempDir("graft-jsonld-write").toString
     val triples = JsonLd.read(spark, s"$dir/*.meta.json")
     // co-locate each resource's bnode closure (the documented contract):
     // repartition on the resolved root key

@@ -48,13 +48,13 @@ class TripleOpsSpec extends graft.SparkSuite {
   }
 }
 
-class RunInfoSpec extends org.scalatest.funsuite.AnyFunSuite {
+class RunInfoSpec extends graft.SparkSuite {
   import graft.runinfo.RunInfo
 
   test("S9 round-trip + A5 earliest start") {
     val a = RunInfo("droid", "https://tools/droid", "2026-01-01T10:00:00",
       "2026-01-01T10:05:00", "ok \"quoted\"")
-    val f = java.nio.file.Files.createTempFile("graft-runinfo", ".json").toString
+    val f = tempDir("graft-runinfo").resolve("runinfo.json").toString
     a.save(f)
     assert(RunInfo.load(f) == a)
     val b = RunInfo("clamav", "https://tools/clamav", "2026-01-01T09:30:00", "")
@@ -73,7 +73,7 @@ class EventLogRecoverySpec extends graft.SparkSuite {
     val events = Events.emit(batch, Seq(col("obj")), Events.fix,
       subjectOf = col("obj"), outcome = col("ok"), startId = 41L,
       timestamp = "2026-01-01T00:00:00Z")
-    val dir = Files.createTempDirectory("graft-evlog").toString
+    val dir = tempDir("graft-evlog").toString
     // one JSON-LD doc per event resource on disk
     JsonLd.documents(events).collect().foreach { r =>
       val id = r.getString(0).split("-e").last
@@ -90,7 +90,7 @@ class StreamingMd5Spec extends graft.SparkSuite {
   import graft.manifest.Manifest
 
   test("H1 streaming MD5 equals content-based MD5") {
-    val dir = Files.createTempDirectory("graft-md5").toString
+    val dir = tempDir("graft-md5").toString
     Files.writeString(JPaths.get(s"$dir/a.txt"), "hello world")
     Files.write(JPaths.get(s"$dir/big.bin"),
       Array.tabulate(100000)(_.toByte)) // spans many 8192 chunks

@@ -94,7 +94,7 @@ class MimeSpec extends graft.SparkSuite {
 
   test("S13 text log read strips and drops blanks") {
     import spark.implicits._
-    val f = java.nio.file.Files.createTempFile("graft-log", ".txt")
+    val f = tempDir("graft-log").resolve("log.txt")
     java.nio.file.Files.writeString(f, "  line1  \n\n   \nline2\n")
     val lines = TextLog.read(spark, f.toString).collect().map(_.getString(0))
     assert(lines.toSeq == Seq("line1", "line2"))
@@ -110,7 +110,7 @@ class SipSpec extends graft.SparkSuite {
       .filter(col("subject").contains("-661-1") || col("objectValue").contains("-661-1"))
     val n = triples.count()
     assert(n > 0)
-    val dir = Files.createTempDirectory("graft-sip").toString
+    val dir = tempDir("graft-sip").toString
     val ids = graft.ids.Identifiers.default
     val manifest = Sip.save(spark, triples, dir, ids,
       timestamp = "2026-01-01T00:00:00Z")
@@ -144,7 +144,7 @@ class SipSpec extends graft.SparkSuite {
 class SipIdRecoverySpec extends graft.SparkSuite {
   test("STR3 max-id recovery from SIP filenames") {
     import java.nio.file.{Files, Paths => JPaths}
-    val dir = Files.createTempDirectory("graft-sipids").toString
+    val dir = tempDir("graft-sipids").toString
     val ids = graft.ids.Identifiers.default
     Seq(3L, 27L, 11L).foreach { id =>
       Files.writeString(JPaths.get(dir, ids.filenameFromId(id.toString)), "{}")

@@ -10,7 +10,7 @@ import graft.rdf.Triple
 class TurtleSourceSpec extends graft.SparkSuite {
 
   private lazy val dir = {
-    val d = Files.createTempDirectory("graft-turtle-src").toString
+    val d = tempDir("graft-turtle-src").toString
     Files.writeString(JPaths.get(d, "a.ttl"),
       """@prefix ldto: <https://data.razu.nl/def/ldto/> .
         |<https://example.org/r/1> ldto:naam "Titel 1" ;

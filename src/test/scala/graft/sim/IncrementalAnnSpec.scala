@@ -173,11 +173,10 @@ class IncrementalAnnSpec extends SparkSuite {
       val novelC = Array.tabulate(dim)(d =>
         (if (d < dim / 2) 1.0 else -0.5) * (d + 2) * 0.125)
       IncrementalAnn.buildIndex(corpus, table, buckets, cents)
-      val base = java.nio.file.Files
-        .createTempDirectory("graft-vnovel").toString
+      val base = tempDir("graft-vnovel").toString
       def writeFile(name: String, mtimeMs: Long,
                     rows: Seq[(Long, Array[Double])]): Unit = {
-        val stage = java.nio.file.Files.createTempDirectory("graft-vnovel-st")
+        val stage = tempDir("graft-vnovel-st")
         rows.toDF("id", "vec").coalesce(1)
           .write.mode("overwrite").parquet(stage.toString)
         val part = stage.toFile.listFiles()

@@ -263,10 +263,9 @@ class IncrementalPqSpec extends SparkSuite {
     try {
       IncrementalPq.buildIndex(vecs(0, 60), tCodes, 4, coarse, books)
       IncrementalAnn.buildIndex(vecs(0, 60), tVn, 4, coarse)
-      val base = java.nio.file.Files
-        .createTempDirectory("graft-pq-ingest").toString
+      val base = tempDir("graft-pq-ingest").toString
       def writeFile(fname: String, mtimeMs: Long, lo: Int, hi: Int): Unit = {
-        val stage = java.nio.file.Files.createTempDirectory("graft-pq-st")
+        val stage = tempDir("graft-pq-st")
         vecs(lo, hi).coalesce(1)
           .write.mode("overwrite").parquet(stage.toString)
         val part = stage.toFile.listFiles()

@@ -112,7 +112,7 @@ class BucketedManifestSpec extends SparkSuite {
       // as if the crash hit after the manifest commit but before the
       // old files were deleted
       val victim = dataFiles(table).head
-      val stash = java.nio.file.Files.createTempFile("graft-stash", ".parquet")
+      val stash = tempDir("graft-stash").resolve("stash.parquet")
       java.nio.file.Files.copy(victim.toPath, stash,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       assert(Bucketed.compactBuckets(spark, table, maxFilesPerBucket = 1) > 0)

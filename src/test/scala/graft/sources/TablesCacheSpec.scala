@@ -11,8 +11,7 @@ class TablesCacheSpec extends SparkSuite {
   import spark.implicits._
 
   test("invalidate(dir) makes a rewritten directory visible; without it the pin persists") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-tables-cache").toString
+    val dir = tempDir("graft-tables-cache").toString
     (1 to 5).map(i => (i.toLong, s"a$i")).toDF("id", "s")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/t.parquet")
     assert(Tables.table(spark, dir, "t").count() == 5)

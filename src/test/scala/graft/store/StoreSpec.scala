@@ -15,7 +15,7 @@ class StoreSpec extends graft.SparkSuite {
   }
 
   test("K5/K6 upload + listing + H2 verify") {
-    val root = Files.createTempDirectory("graft-store").toString
+    val root = tempDir("graft-store").toString
     val store = new LocalFsStore(root)
     val (up, skipped) = Store.upload(filesDF, store, spark)
     assert(up == 3 && skipped == 0)
@@ -35,7 +35,7 @@ class StoreSpec extends graft.SparkSuite {
   }
 
   test("F9/J5 onlyIfNew skips existing keys via anti-join") {
-    val root = Files.createTempDirectory("graft-store2").toString
+    val root = tempDir("graft-store2").toString
     val store = new LocalFsStore(root)
     Store.upload(filesDF.limit(2), store, spark)
     spark.catalog.refreshByPath(root)
@@ -52,7 +52,7 @@ class StoreSpec extends graft.SparkSuite {
   }
 
   test("K8 batched delete + verification anti-join") {
-    val root = Files.createTempDirectory("graft-store3").toString
+    val root = tempDir("graft-store3").toString
     val store = new LocalFsStore(root)
     Store.upload(filesDF, store, spark)
     import spark.implicits._
@@ -65,7 +65,7 @@ class StoreSpec extends graft.SparkSuite {
   }
 
   test("H2 multipart-ETag fallback re-hashes through the store") {
-    val root = Files.createTempDirectory("graft-store5").toString
+    val root = tempDir("graft-store5").toString
     val store = new LocalFsStore(root)
     Store.upload(filesDF, store, spark)
     import spark.implicits._
@@ -91,7 +91,7 @@ class StoreSpec extends graft.SparkSuite {
   }
 
   test("K8 delete log records Deleted / Errors / NotDeleted") {
-    val root = Files.createTempDirectory("graft-store6").toString
+    val root = tempDir("graft-store6").toString
     // a store that silently refuses to delete k2.bin, so the post-delete
     // verification listing finds it and the log records it as NotDeleted
     val base = new LocalFsStore(root)
@@ -108,7 +108,7 @@ class StoreSpec extends graft.SparkSuite {
     }
     Store.upload(filesDF, store, spark)
     import spark.implicits._
-    val log = JPaths.get(root + "-log", "delete_log.json").toString
+    val log = tempDir("graft-store-log").resolve("delete_log.json").toString
     val toDelete = Seq("a/k1.bin", "k2.bin").toDF("key")
     val survivors = Store.deleteByKeys(toDelete, store, spark, root,
       batchSize = 1, logPath = Some(log))
@@ -124,10 +124,10 @@ class StoreSpec extends graft.SparkSuite {
   }
 
   test("K8 delete log: zero requested keys still writes the valid empty log") {
-    val root = Files.createTempDirectory("graft-store-empty").toString
+    val root = tempDir("graft-store-empty").toString
     val store = new LocalFsStore(root)
     import spark.implicits._
-    val log = JPaths.get(root + "-log", "delete_log.json").toString
+    val log = tempDir("graft-store-log").resolve("delete_log.json").toString
     // an EMPTY requested set coalesces to zero partitions → no part file;
     // the sink must fall back to the canonical empty log, not abort
     val none = Seq.empty[String].toDF("key")
@@ -142,7 +142,7 @@ class StoreSpec extends graft.SparkSuite {
   }
 
   test("HadoopFsStore: same flows through the FileSystem API (file:// root)") {
-    val root = Files.createTempDirectory("graft-store-hfs").toString
+    val root = tempDir("graft-store-hfs").toString
     val store = new HadoopFsStore("file://" + root)
     val (up, skipped) = Store.upload(filesDF, store, spark)
     assert(up == 3 && skipped == 0)
@@ -160,7 +160,7 @@ class StoreSpec extends graft.SparkSuite {
   }
 
   test("K9 ACL sidecars") {
-    val root = Files.createTempDirectory("graft-store4").toString
+    val root = tempDir("graft-store4").toString
     val store = new LocalFsStore(root)
     Store.upload(filesDF.limit(1), store, spark)
     import spark.implicits._
@@ -569,13 +569,13 @@ class StreamingSpec extends graft.SparkSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.streaming.Trigger
-    val watch = java.nio.file.Files.createTempDirectory("graft-sess-mb")
+    val watch = tempDir("graft-sess-mb")
     // two time-ordered files; user 7's first session SPANS the file
     // boundary (events at 0s, 60s | 120s), so a state-overwriting
     // implementation would report maxSessionEvents=1 instead of 3
     def writeFile(name: String, mtimeMs: Long,
                   rows: Seq[(Long, Long, Long)]): Unit = {
-      val stage = java.nio.file.Files.createTempDirectory("graft-sess-stage")
+      val stage = tempDir("graft-sess-stage")
       rows.toDF("user_id", "ts_us", "event_id")
         .select(col("user_id"), timestamp_micros(col("ts_us")).as("ts"),
           col("event_id"))
@@ -599,8 +599,7 @@ class StreamingSpec extends graft.SparkSuite {
     val batches = new java.util.concurrent.atomic.AtomicInteger(0)
     val q = Streaming.sessionize(stream).toDF()
       .writeStream.outputMode("update")
-      .option("checkpointLocation", java.nio.file.Files
-        .createTempDirectory("graft-sess-ckpt").toString)
+      .option("checkpointLocation", tempDir("graft-sess-ckpt").toString)
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
         batches.incrementAndGet()
         df.collect().foreach(r =>
@@ -620,12 +619,12 @@ class StreamingSpec extends graft.SparkSuite {
        "boundaries and arrival order") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val base = java.nio.file.Files.createTempDirectory("graft-upsert").toString
+    val base = tempDir("graft-upsert").toString
     // file f1 (arrives FIRST) holds the NEWER rows for user 1 — a
     // last-writer-wins merge would let f2's older row clobber it
     def write(name: String, mtimeMs: Long,
               rows: Seq[(Long, Long, Long)]): Unit = {
-      val stage = java.nio.file.Files.createTempDirectory("graft-upsert-st")
+      val stage = tempDir("graft-upsert-st")
       rows.toDF("user_id", "ts_us", "event_id")
         .select(col("user_id"), timestamp_micros(col("ts_us")).as("ts"),
           col("event_id"))
@@ -657,8 +656,7 @@ class StreamingSpec extends graft.SparkSuite {
   test("streaming upsert rewrites only touched buckets; others stay byte-identical") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val target = java.nio.file.Files
-      .createTempDirectory("graft-bucket-merge").toString + "/t"
+    val target = tempDir("graft-bucket-merge").toString + "/t"
     val nB = 8
     def mk(rows: Seq[(Long, Long, Long)]) =
       rows.toDF("user_id", "ts_us", "event_id")
@@ -707,7 +705,7 @@ class StreamingSpec extends graft.SparkSuite {
   test("streaming heavy hitters: MG guarantee holds, state carries across batches") {
     import spark.implicits._
     import graft.streaming.Streaming
-    val base = java.nio.file.Files.createTempDirectory("graft-hh").toString
+    val base = tempDir("graft-hh").toString
     // zipfian-ish fixture split over two files: heavy tokens appear in
     // both, so the cross-batch state carry is load-bearing
     def toks(rep: Seq[(String, Int)]): Seq[String] =
@@ -717,7 +715,7 @@ class StreamingSpec extends graft.SparkSuite {
     val half2 = toks(Seq("alpha" -> 40, "beta" -> 30, "gamma" -> 4)) ++
       (0 until 30).map(i => s"raretok_b$i")
     def writeFile(name: String, rows: Seq[String]): Unit = {
-      val stage = java.nio.file.Files.createTempDirectory("graft-hh-st")
+      val stage = tempDir("graft-hh-st")
       rows.toDF("tok").coalesce(1).write.mode("overwrite").parquet(stage.toString)
       val part = stage.toFile.listFiles()
         .filter(_.getName.endsWith(".parquet")).head

@@ -13,8 +13,7 @@ class GateMetricsLogSpec extends SparkSuite {
       .select("batch", "n_in").as[(Long, Long)].collect().toSet
 
   test("file count stays bounded across >=16 batches with periodic folds") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-gmetrics").toString + "/m"
+    val dir = tempDir("graft-gmetrics").toString + "/m"
     GateMetricsLog.clear(spark, dir)
     val compactEvery = 4
     for (id <- 0L until 18L) {
@@ -31,8 +30,7 @@ class GateMetricsLogSpec extends SparkSuite {
   }
 
   test("crash mid-fold leaves duplicates that read() reconciles; re-running heals") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-gmetrics2").toString + "/m"
+    val dir = tempDir("graft-gmetrics2").toString + "/m"
     GateMetricsLog.clear(spark, dir)
     for (id <- 0L until 4L)
       GateMetricsLog.write(spark, dir, id, GateMetrics(100 + id, 1, 0, 0))
@@ -60,8 +58,7 @@ class GateMetricsLogSpec extends SparkSuite {
   }
 
   test("read() of a missing dir or torn-only entries is empty, not an error") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-gmetrics4").toString
+    val base = tempDir("graft-gmetrics4").toString
     // missing dir — the state right after a crash before the first write
     val missing = s"$base/never-written"
     assert(GateMetricsLog.read(spark, missing).count() == 0)
@@ -80,8 +77,7 @@ class GateMetricsLogSpec extends SparkSuite {
   }
 
   test("replayed write before a later fold changes nothing") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-gmetrics3").toString + "/m"
+    val dir = tempDir("graft-gmetrics3").toString + "/m"
     GateMetricsLog.clear(spark, dir)
     for (id <- 0L until 3L)
       GateMetricsLog.write(spark, dir, id, GateMetrics(id, 0, 0, 0))

@@ -14,7 +14,7 @@ class GovernedMergeStreamSpec extends SparkSuite {
 
   private def writeFile(base: String, fname: String, mtimeMs: Long,
                         rows: Seq[(Long, Long, Boolean)]): Unit = {
-    val stage = java.nio.file.Files.createTempDirectory("graft-gm-st")
+    val stage = tempDir("graft-gm-st")
     rows.toDF("k", "v", "del").coalesce(1)
       .write.mode("overwrite").parquet(stage.toString)
     val part = stage.toFile.listFiles()
@@ -37,8 +37,7 @@ class GovernedMergeStreamSpec extends SparkSuite {
         .toDF("k", "v"), table, Seq("k"), 4)
       Bucketed.setRetention(spark, table, 8)
       val g0 = Bucketed.currentGeneration(spark, table)
-      val base = java.nio.file.Files
-        .createTempDirectory("graft-gm-ingest").toString
+      val base = tempDir("graft-gm-ingest").toString
       // ordered batches: insert new keys, update, delete
       writeFile(base, "f1.parquet", 1000000L,
         (100 until 110).map(i => (i.toLong, i.toLong, false)))

@@ -19,7 +19,7 @@ class RunBatchesSpec extends SparkSuite {
 
   private def writeFile(src: String, name: String, mtimeMs: Long,
                         rows: Seq[(Long, String)]): Unit = {
-    val stage = Files.createTempDirectory("graft-runbatches-st")
+    val stage = tempDir("graft-runbatches-st")
     rows.toDF("doc_id", "text").coalesce(1)
       .write.mode("overwrite").parquet(stage.toString)
     val part = stage.toFile.listFiles()
@@ -32,7 +32,7 @@ class RunBatchesSpec extends SparkSuite {
 
   /** A fresh base dir whose `src` holds two one-row files, oldest first. */
   private def twoFileBase(): String = {
-    val base = Files.createTempDirectory("graft-runbatches").toString
+    val base = tempDir("graft-runbatches").toString
     writeFile(s"$base/src", "f1.parquet", 1000000L,
       Seq((1L, "alpha beta gamma delta")))
     writeFile(s"$base/src", "f2.parquet", 2000000L,
@@ -126,7 +126,7 @@ class RunBatchesSpec extends SparkSuite {
 
   test("a caller's checkpoint survives and resumes with only new files") {
     val src = twoFileBase() + "/src"
-    val ckpt = Files.createTempDirectory("graft-runbatches-ckpt").toString
+    val ckpt = tempDir("graft-runbatches-ckpt").toString
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
     def run(): Seq[(Long, Long)] = {
       seen.clear()

@@ -254,10 +254,9 @@ class IncrementalBm25Spec extends SparkSuite {
   test("streamAppend ingests micro-batches; replayed appends heal at the compaction tick") {
     try {
       IncrementalBm25.buildIndex(docs(0, 20), name, buckets)
-      val base = java.nio.file.Files
-        .createTempDirectory("graft-bm25-ingest").toString
+      val base = tempDir("graft-bm25-ingest").toString
       def writeFile(fname: String, mtimeMs: Long, lo: Int, hi: Int): Unit = {
-        val stage = java.nio.file.Files.createTempDirectory("graft-bm25-st")
+        val stage = tempDir("graft-bm25-st")
         docs(lo, hi).coalesce(1)
           .write.mode("overwrite").parquet(stage.toString)
         val part = stage.toFile.listFiles()

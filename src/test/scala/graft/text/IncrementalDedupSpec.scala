@@ -205,11 +205,10 @@ class IncrementalDedupSpec extends SparkSuite {
     val t2 = "graft_inc_persist_idx"
     try {
       IncrementalDedup.buildIndex(corpus, t2, buckets, batchTagged = true)
-      val base = java.nio.file.Files
-        .createTempDirectory("graft-novel-p").toString
+      val base = tempDir("graft-novel-p").toString
       def writeFile(name: String, mtimeMs: Long,
                     rows: Seq[(Long, String)]): Unit = {
-        val stage = java.nio.file.Files.createTempDirectory("graft-np-st")
+        val stage = tempDir("graft-np-st")
         rows.toDF("doc_id", "text").coalesce(1)
           .write.mode("overwrite").parquet(stage.toString)
         val part = stage.toFile.listFiles()
@@ -245,11 +244,10 @@ class IncrementalDedupSpec extends SparkSuite {
   test("streamNovel runs the gate per micro-batch over a file stream") {
     try {
       IncrementalDedup.buildIndex(corpus, table, buckets)
-      val base = java.nio.file.Files
-        .createTempDirectory("graft-novel").toString
+      val base = tempDir("graft-novel").toString
       def writeFile(name: String, mtimeMs: Long,
                     rows: Seq[(Long, String)]): Unit = {
-        val stage = java.nio.file.Files.createTempDirectory("graft-novel-st")
+        val stage = tempDir("graft-novel-st")
         rows.toDF("doc_id", "text").coalesce(1)
           .write.mode("overwrite").parquet(stage.toString)
         val part = stage.toFile.listFiles()

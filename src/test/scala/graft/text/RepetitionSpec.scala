@@ -53,7 +53,7 @@ class RepetitionSpec extends graft.SparkSuite {
   test("writeShards: one dir per shard, rows inside each file in pos order") {
     import spark.implicits._
     val docs = (0L until 200L).map(i => (i, s"text$i")).toDF("doc_id", "text")
-    val out = java.nio.file.Files.createTempDirectory("shards").toString
+    val out = tempDir("shards").toString
     Curation.writeShards(docs, out, nShards = 4)
     val dirs = new java.io.File(out).listFiles()
       .filter(_.getName.startsWith("shard=")).map(_.getName).sorted

@@ -15,7 +15,7 @@ class SparqlSnapshotSpec extends SparkSuite {
   // labelSnapshotQuery: plain, @nl and typed-literal bindings, plus a
   // second page file to prove multi-file globbing
   private lazy val dir = {
-    val d = Files.createTempDirectory("graft-sparql-snap").toString
+    val d = tempDir("graft-sparql-snap").toString
     Files.writeString(JPaths.get(d, "page1.srj"),
       s"""{"head": {"vars": ["uri", "p", "label"]},
          | "results": {"bindings": [
