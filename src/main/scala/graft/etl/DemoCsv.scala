@@ -72,7 +72,18 @@ object DemoCsv {
     *     (6 predicates × plain/@nl/@en, concept_resolver.py:86-100).
     * Both route through graft.vocab.Vocab's deterministic-precedence
     * lookup + broadcast join. Returns the complete triple graph
-    * (archive + series + records + bestanden). */
+    * (archive + series + records + bestanden), MATERIALIZED: the graph
+    * is computed once, here, as an eager `localCheckpoint`, and every
+    * later use (the SIP's JSON-LD documents and events, the eventlog,
+    * the Turtle export) reads those blocks instead of re-planning and
+    * re-running the scans, joins, id scan, flattener and dedup. This
+    * holds at scale because one call's graph is one archive's (a SIP):
+    * the 100 TB design point is many SIPs, not one graph. The blocks are
+    * MEMORY_AND_DISK, so a graph larger than storage memory spills to
+    * the executors' local disks, and they are released when the frame
+    * is garbage-collected. A checkpoint has no lineage, so losing an
+    * executor fails the job that reads the lost blocks (the save is
+    * re-run) rather than silently recomputing part of the graph. */
   def run(spark: SparkSession, metaCsv: String, droidCsv: String,
           vocab: DataFrame, orderCols: Seq[String] = Seq("Inventarisnummer"),
           ids: Identifiers = Identifiers.default): DataFrame = {
@@ -119,8 +130,15 @@ object DemoCsv {
     // time, and severs Catalyst lineage at its RDD boundary (filters
     // composed later do not push below this point).
     val order = orderCols.map(col)
+    // G1-G3 — RD parse + reprojection + WKT bounding box, computed in a
+    // projection AHEAD of the flattener: the polygon repeats each corner's
+    // polynomial, and only a Project eliminates the repeats (see
+    // Build.flattenAll's codegen discipline)
     val withIds = graft.ops.Relational.interleavedSerieIds(
       joined, order, col("Serie"))
+      .withColumn("__wkt", Geo.wktPolygonCol(
+        Geo.parseRdCoordCol(col("Coördinaat - Linksonder")),
+        Geo.parseRdCoordCol(col("Coördinaat Rechtsboven"))))
 
     val archiveUri = ids.uriFromId("1")
     val serieSubj = ids.uriCol(col("__serieId"))
@@ -128,8 +146,6 @@ object DemoCsv {
     val bestandSubj = ids.uriCol(col("__bestandId"))
 
     // M1 — record + bestand resource shapes (csv2rdf.py:117-227)
-    val ll = Geo.parseRdCoordCol(col("Coördinaat - Linksonder"))
-    val ur = Geo.parseRdCoordCol(col("Coördinaat Rechtsboven"))
     val record = RResource(recordSubj, Seq(
       NS.rdfType -> RUri(lit(NS.LDTO + "Informatieobject")),
       (NS.LDTO + "naam") -> RLit(col("Titel")),
@@ -147,9 +163,9 @@ object DemoCsv {
         cond = col("Datering").isNotNull),
       (NS.SCHEMA + "width") -> RLit(col("Breedte (cm)"), datatype = lit(NS.xsdInteger)),
       (NS.SCHEMA + "height") -> RLit(col("Hoogte (cm)"), datatype = lit(NS.xsdInteger)),
-      // G1-G3 — RD parse + reprojection + WKT bounding box
+      // G1-G3 — the WKT bounding box projected onto withIds above
       (NS.GEO + "hasGeometry") -> RNode(Seq(
-        (NS.GEO + "asWKT") -> RLit(Geo.wktPolygonCol(ll, ur),
+        (NS.GEO + "asWKT") -> RLit(col("__wkt"),
           datatype = lit(NS.wktLiteral))),
         cond = col("Coördinaat - Linksonder").isNotNull
           && col("Coördinaat Rechtsboven").isNotNull),
@@ -191,6 +207,6 @@ object DemoCsv {
         (NS.LDTO + "begin") -> RLit(col("earliest"), datatype = lit(NS.xsdDate)),
         (NS.LDTO + "eind") -> RLit(col("latest"), datatype = lit(NS.xsdDate)))))))
 
-    Build.dedup(rowTriples.unionByName(archive))
+    Build.dedup(rowTriples.unionByName(archive)).localCheckpoint(eager = true)
   }
 }

@@ -126,7 +126,11 @@ object Geo {
     lit(lon0) + polyCol(L, dx, dy) / lit(3600.0)
   }
 
-  /** G3 column: WKT polygon from two corner structs(x, y). */
+  /** G3 column: WKT polygon from two corner structs(x, y). The tree
+    * repeats each corner's polynomial (lat1 and lon1 3×, lat2 and lon2
+    * 2×); only a projection eliminates the repeats, so compute it as a
+    * column ahead of a generator such as [[graft.rdf.Build.flattenAll]],
+    * never inside one. */
   def wktPolygonCol(ll: Column, ur: Column): Column = {
     val lat1 = latCol(ll("x"), ll("y"))
     val lon1 = lonCol(ll("x"), ll("y"))

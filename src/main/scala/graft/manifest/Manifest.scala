@@ -146,7 +146,8 @@ object Manifest {
       } + "\""
     val json = rows.map(r => s"  ${q(r.getString(0))}: ${r.getString(1)}")
       .mkString("{\n", ",\n", "\n}")
-    graft.sources.FsUtil.writeString(outFile, json) // scheme-agnostic
+    graft.sources.FsUtil.writeString( // scheme-agnostic
+      manifest.sparkSession.sparkContext.hadoopConfiguration, outFile, json)
   }
 
   /** S7: load a saved manifest JSON object back into rows — the

@@ -145,7 +145,14 @@ object Build {
     * and RSplit multi-value props (STR7) run as separate
     * `explode(split(...))` union branches (the `transform`-to-struct HOF
     * would likewise knock the Generate out of whole-stage codegen).
-    * Column pruning keeps each branch's scan narrow. */
+    * Column pruning keeps each branch's scan narrow. A sub-expression a
+    * shape uses more than once (e.g. [[graft.functions.Geo.wktPolygonCol]],
+    * which repeats each corner's reprojection) must be computed as a
+    * column of `df` BEFORE this call: `Generate` does no common
+    * sub-expression elimination, so every copy is emitted into the
+    * generator's consume method, which then outgrows Janino's 64 KB
+    * limit and falls back to interpreted code; a Project deduplicates
+    * them. */
   def flattenAll(df: DataFrame, resources: Seq[RResource]): DataFrame = {
     val nullStr = lit(null).cast("string")
     val all = concat(resources.zipWithIndex.map { case (r, i) =>

@@ -1,11 +1,11 @@
 package graft.sip
 
+import org.apache.spark.SerializableWritable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.events.Events
 import graft.ids.Identifiers
 import graft.manifest.Manifest
-import graft.rdf.{Build, NS, Triple}
 import graft.rdf.io.JsonLd
 
 /** SIP packaging module — the E2 lifecycle (razu/sip.py) as DataFrame
@@ -27,27 +27,36 @@ object Sip {
     * <uid>.meta.json named via the id algebra. Files are written
     * per-partition (distributed), not via a driver loop like
     * csv2rdf.py:234-237's per-row save, through the Hadoop FileSystem
-    * API so a SIP directory can live on any scheme (file://, hdfs://,
-    * s3a://) exactly like [[graft.store.HadoopFsStore]]. Returns
-    * (root, filename). */
+    * API with the session's Hadoop configuration, so a SIP directory can
+    * live on any scheme (file://, hdfs://, s3a://) and `spark.hadoop.*`
+    * settings reach it. Returns (root, filename), MATERIALIZED: the
+    * documents are rendered once, in the eager pass that writes them,
+    * and the (root, filename) frame that pass yields is all the events
+    * and the eventlog read afterwards. It holds no JSON, one short row
+    * per resource, and its blocks spill to local disk like any
+    * `localCheckpoint`; a retried task rewrites the same files. */
   def saveResources(triples: DataFrame, dir: String,
                     ids: Identifiers = Identifiers.default): DataFrame = {
     import org.apache.hadoop.fs.{Path => HPath}
+    val spark = triples.sparkSession
+    import spark.implicits._
+    val conf = new SerializableWritable(spark.sparkContext.hadoopConfiguration)
     val base = new HPath(dir)
-    base.getFileSystem(new org.apache.hadoop.conf.Configuration()).mkdirs(base)
-    val docs = JsonLd.documents(triples)
-      .withColumn("id", ids.extractIdCol(col("root")))
-      .withColumn("filename", ids.filenameCol(col("id")))
-    docs.select("filename", "json").foreachPartition {
-      (it: Iterator[org.apache.spark.sql.Row]) =>
-        val fs = new HPath(dir)
-          .getFileSystem(new org.apache.hadoop.conf.Configuration())
-        it.foreach { r =>
-          val out = fs.create(new HPath(dir + "/" + r.getString(0)), true)
-          try out.write(r.getString(1).getBytes("UTF-8")) finally out.close()
+    base.getFileSystem(conf.value).mkdirs(base)
+    JsonLd.documents(triples)
+      .select(col("root"),
+        ids.filenameCol(ids.extractIdCol(col("root"))).as("filename"), col("json"))
+      .as[(String, String, String)]
+      .mapPartitions { it =>
+        val fs = base.getFileSystem(conf.value)
+        it.map { case (root, filename, json) =>
+          val out = fs.create(new HPath(base, filename), true)
+          try out.write(json.getBytes("UTF-8")) finally out.close()
+          (root, filename)
         }
-    }
-    docs.select("root", "filename")
+      }
+      .toDF("root", "filename")
+      .localCheckpoint(eager = true)
   }
 
   /** S5 — load a SIP directory: every *.meta.json parsed to triples with
@@ -64,7 +73,7 @@ object Sip {
                     ids: Identifiers = Identifiers.default): Long = {
     import org.apache.hadoop.fs.{Path => HPath}
     val p = new HPath(dir)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p) || !fs.getFileStatus(p).isDirectory) return 0L
     val names = fs.listStatus(p).map(_.getPath.getName)
       .filter(_.endsWith(s".${ids.cfg.metadataSuffix}.${ids.cfg.metadataExtension}"))
@@ -74,7 +83,12 @@ object Sip {
   }
 
   /** Full save lifecycle (sip.py:173-180): resources → files → manifest →
-    * events → eventlog. Returns the manifest DataFrame. */
+    * events → eventlog. Returns the manifest DataFrame. The resource
+    * documents are rendered once, by the pass that writes them; the
+    * events and the eventlog read only the materialized (root, filename)
+    * frame [[saveResources]] returns, one small row per resource. Pass a
+    * materialized graph (as [[graft.etl.DemoCsv.run]] returns) when the
+    * caller reads it again, e.g. for a Turtle export. */
   def save(spark: SparkSession, triples: DataFrame, dir: String,
            ids: Identifiers = Identifiers.default,
            timestamp: String = java.time.Instant.now().toString): DataFrame = {
@@ -130,7 +144,7 @@ object Sip {
         body ++ tail
       }
     lines.write.mode("overwrite").text(tmp)
-    graft.sources.FsUtil.promotePartFile(tmp,
+    graft.sources.FsUtil.promotePartFile(spark.sparkContext.hadoopConfiguration, tmp,
       graft.sources.FsUtil.child(dir, ids.eventlogFilename),
       emptyFallback = Some("[]"))
   }

@@ -18,7 +18,10 @@ private[sources] final class Memo[A](thunk: () => A) {
 
 /** Shared Hadoop-FileSystem file plumbing — one implementation of the
   * scheme-agnostic (file://, hdfs://, s3a://) single-file patterns the
-  * sinks use, so fixes apply everywhere at once. */
+  * sinks use, so fixes apply everywhere at once. Every call takes the
+  * caller's Hadoop `conf` (the session's
+  * `sparkContext.hadoopConfiguration`), so `spark.hadoop.*` settings such
+  * as s3a endpoints and credentials reach the file system. */
 object FsUtil {
 
   /** Join a base dir (possibly a URI) and a child name WITHOUT
@@ -32,9 +35,9 @@ object FsUtil {
     * source relation) writes no part file at all; `emptyFallback`, when
     * given, is written to `dest` in that case instead of aborting — the
     * caller's canonical empty-document shape. */
-  def promotePartFile(tmpDir: String, dest: String,
+  def promotePartFile(conf: Configuration, tmpDir: String, dest: String,
                       emptyFallback: Option[String] = None): Unit = {
-    val fs = new HPath(tmpDir).getFileSystem(new Configuration())
+    val fs = new HPath(tmpDir).getFileSystem(conf)
     // a zero-partition plan still yields a part file, but a ZERO-BYTE one
     // (FileFormatWriter's empty-RDD special case runs one task with an
     // empty iterator) — for sinks whose minimum valid document is
@@ -49,7 +52,7 @@ object FsUtil {
         Option(destPath.getParent).foreach(fs.mkdirs)
         fs.delete(destPath, false)
         fs.rename(p, destPath)
-      case (None, Some(fallback)) => writeString(dest, fallback)
+      case (None, Some(fallback)) => writeString(conf, dest, fallback)
       case (None, None) => sys.error(s"no part file written under $tmpDir")
     }
     fs.delete(new HPath(tmpDir), true)
@@ -57,19 +60,9 @@ object FsUtil {
 
   /** Driver-side small-file write through the FileSystem API (the
     * scheme-agnostic replacement for java.nio Files.writeString). */
-  def writeString(path: String, content: String): Unit = {
+  def writeString(conf: Configuration, path: String, content: String): Unit = {
     val p = new HPath(path)
-    val fs = p.getFileSystem(new Configuration())
-    val out = fs.create(p, true)
+    val out = p.getFileSystem(conf).create(p, true)
     try out.write(content.getBytes("UTF-8")) finally out.close()
-  }
-
-  /** Driver-side small-file read (scheme-agnostic). */
-  def readString(path: String): String = {
-    val p = new HPath(path)
-    val fs = p.getFileSystem(new Configuration())
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
   }
 }

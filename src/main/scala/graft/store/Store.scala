@@ -247,8 +247,8 @@ object Store {
       }
       head ++ body ++ tail
     }.write.mode("overwrite").text(tmp)
-    graft.sources.FsUtil.promotePartFile(tmp, path,
-      emptyFallback = Some("{\"Deleted\": [], \"Errors\": [], \"NotDeleted\": []}"))
+    graft.sources.FsUtil.promotePartFile(spark.sparkContext.hadoopConfiguration,
+      tmp, path, emptyFallback = Some("{\"Deleted\": [], \"Errors\": [], \"NotDeleted\": []}"))
   }
 
   /** K9 — ACL update for every manifest key (edepot.py:271-304). */

@@ -1,6 +1,5 @@
 package graft.etl
 
-import java.nio.file.{Files, Paths => JPaths}
 import org.apache.spark.sql.functions._
 import graft.rdf.NS
 
@@ -9,52 +8,20 @@ import graft.rdf.NS
 class DemoCsvSpec extends graft.SparkSuite {
 
   private lazy val dir = {
-    val d = tempDir("graft-demo").toString
-    val header = ("Plaats;Doos-nummer;Inventarisnummer;Volgnummer;Serie;" +
-      "Datering;Volgordenummer;Titel;Beschrijving voorkant;Bijzonderheden;" +
-      "Plaats 1;Plaats 2;Plaats 3;Schaal;Coördinaat - Linksonder;" +
-      "Coördinaat Rechtsboven;Breedte (cm);Hoogte (cm);Soort;Betrokkene type;" +
-      "Auteursrecht;Fotograaf naam;Gemeentenaam;Gemeente identificatie;Kleurtype")
-    val rows = (1 to 12).map { i =>
-      val serie = (i - 1) / 4 + 1 // 3 series of 4
-      val bijz = if (i % 3 == 0) "needs review" else ""
-      val plaats2 = if (i % 2 == 0) "Odijk" else ""
-      Seq("Utrecht", s"1984-$serie", i, i, serie, f"1984-${(i % 12) + 1}%02d-15",
-        "", s"Luchtfoto $i", s"Beschrijving $i", bijz,
-        "Bunnik", plaats2, "", "1:2000",
-        s"X ${136000000 + i * 1000} Y ${451000000 + i * 1000}",
-        s"X ${137000000 + i * 1000} Y ${452000000 + i * 1000}",
-        18, 18, "luchtfoto", "fotograaf", "publiek", "Aviodrome",
-        "Bunnik", "0312", "zwartwit").mkString(";")
-    }
-    Files.writeString(JPaths.get(d, "metadata.csv"),
-      (header +: rows).mkString("\n"))
-    val droidHeader = "ID,PARENT_ID,URI,FILE_PATH,NAME,METHOD,STATUS,SIZE," +
-      "TYPE,EXT,LAST_MODIFIED,EXTENSION_MISMATCH,MD5_HASH,FORMAT_COUNT," +
-      "PUID,MIME_TYPE,FORMAT_NAME,FORMAT_VERSION"
-    val droidRows = (1 to 12).map { i =>
-      val name = s"1984_0${(i - 1) / 4 + 1}_" + f"$i%03d" + ".jpg"
-      s"$i,0,file:/x/$name,/x/$name,$name,Signature,Done,${i * 1000}," +
-        s"File,jpg,2024-01-01T00:00:00,false,${"ab" * 16},1,fmt/43,image/jpeg,JPEG,1.01"
-    } :+ "99,0,file:/x/dir,/x/dir,somedir,,Done,,Folder,,2024-01-01T00:00:00,false,,0,,,," // empty-SIZE folder row
-    Files.writeString(JPaths.get(d, "droid.csv"),
-      (droidHeader +: droidRows).mkString("\n"))
+    val d = tempDir("graft-demo")
+    DemoCsvFixture.write(d)
     d
   }
 
-  private lazy val vocab = {
-    import spark.implicits._
-    Seq(
-      ("soort", "luchtfoto", "https://data.razu.nl/id/soort/luchtfoto"),
-      ("plaats", "Bunnik", "https://data.razu.nl/id/plaats/bunnik"),
-      ("plaats", "Odijk", "https://data.razu.nl/id/plaats/odijk"),
-      ("kleurtype", "zwartwit", "https://data.razu.nl/id/kleur/zwartwit"),
-      ("actor", "Aviodrome", "https://data.razu.nl/id/actor/aviodrome"))
-      .toDF("vocabulary", "term", "uri")
-  }
+  private lazy val triples = DemoCsvFixture.run(spark, dir)
 
-  private lazy val triples = DemoCsv.run(spark,
-    s"$dir/metadata.csv", s"$dir/droid.csv", vocab).cache()
+  test("every DemoCsv.run stage compiles in whole-stage codegen") {
+    // with the fallback off, a failed whole-stage compile (Janino's
+    // 64 KB method limit) throws instead of running interpreted code
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try assert(DemoCsvFixture.run(spark, dir).collect().nonEmpty)
+    finally spark.conf.unset("spark.sql.codegen.fallback")
+  }
 
   test("interleaved id assignment matches the reference's Incrementer") {
     // 12 rows, serie breaks at rows 1, 5, 9. Reference order: archive=1,
