@@ -64,6 +64,12 @@ object Events {
     * (preservation_events.py:71-179: `_add` + the per-type emitters).
     * Null-valued optional columns emit no triple (F1 semantics).
     *
+    * Every event is ONE flat node: its own root resource, with URI and
+    * literal objects only and no blank nodes. Renderers rely on this
+    * (`Sip.saveEventlog` renders each event's document with
+    * `root = subject`, without a root search), so a new property must
+    * stay a URI or a literal, not a nested node.
+    *
     * @param batch       one row per event
     * @param order       explicit total order for sequential event ids (W2)
     * @param eventType   PREMIS event type IRI (one of [[allEventTypes]])

@@ -49,8 +49,8 @@ object JsonLd {
     roots
   }
 
-  private def renderDoc(root: String,
-                        rows: Seq[(String, String, String, String, String, String)]): String = {
+  private[io] def renderDoc(root: String,
+                            rows: Seq[(String, String, String, String, String, String)]): String = {
     val mapper = new ObjectMapper()
     val doc = mapper.createObjectNode()
     val graph = doc.putArray("@graph")
@@ -82,18 +82,42 @@ object JsonLd {
     mapper.writerWithDefaultPrettyPrinter().writeValueAsString(doc)
   }
 
-  /** (root, json) — one JSON-LD document per root resource. Distributed:
-    * one shuffle on the root key, documents rendered executor-side. */
-  def documents(triples: DataFrame): DataFrame = {
-    val spark = triples.sparkSession
+  /** (root, json) — one JSON-LD document per root resource of a graph
+    * whose roots are not known: [[subjectRoots]]' self-joins find them,
+    * then [[rooted]] renders. Use this for graphs read from outside. */
+  def documents(triples: DataFrame): DataFrame =
+    rooted(triples.join(subjectRoots(triples), Seq("subject")))
+
+  /** (root, json) — one JSON-LD document per distinct `root`, from
+    * triples that already carry their root resource in a `root` column
+    * (a flat resource graph is rooted by `root = subject`). Distributed:
+    * one hash exchange on `root` into the session's
+    * `defaultParallelism` partitions, a partition-local sort, and each
+    * run of equal roots rendered executor-side. The exchange is by
+    * number, so AQE does not coalesce it: a caller that writes one file
+    * per document (`Sip.saveResources`) keeps one task per core. */
+  def rooted(withRoot: DataFrame): DataFrame = {
+    val spark = withRoot.sparkSession
     import spark.implicits._
-    val withRoot = triples.join(subjectRoots(triples), Seq("subject"))
     withRoot.select(col("root"), col("subject"), col("predicate"),
         col("objectValue"), col("objectKind"), col("datatype"), col("lang"))
+      .repartition(spark.sparkContext.defaultParallelism, col("root"))
+      .sortWithinPartitions("root")
       .as[(String, String, String, String, String, String, String)]
-      .groupByKey(_._1)
-      .mapGroups { (root, it) =>
-        (root, renderDoc(root, it.map(t => (t._2, t._3, t._4, t._5, t._6, t._7)).toSeq))
+      .mapPartitions { it =>
+        val rows = it.buffered
+        new Iterator[(String, String)] {
+          def hasNext: Boolean = rows.hasNext
+          def next(): (String, String) = {
+            val root = rows.head._1
+            val doc = mutable.ArrayBuffer[(String, String, String, String, String, String)]()
+            while (rows.hasNext && rows.head._1 == root) {
+              val t = rows.next()
+              doc += ((t._2, t._3, t._4, t._5, t._6, t._7))
+            }
+            (root, renderDoc(root, doc.toSeq))
+          }
+        }
       }
       .toDF("root", "json")
   }

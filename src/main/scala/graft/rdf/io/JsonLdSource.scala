@@ -3,6 +3,8 @@ package graft.rdf.io
 import java.util
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.spark.SerializableWritable
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -93,10 +95,12 @@ private[io] class JsonLdTable(paths: Seq[String])
 /** Shared one-InputPartition-per-file batch for whole-file RDF sources
   * (jsonld, turtle): lists files under the paths (glob ok), and each
   * partition parses its file with the supplied (text, bnodeSuffix) →
-  * triples function. */
+  * triples function. Listing and reads go through the session's Hadoop
+  * configuration, so `spark.hadoop.*` settings apply to them. */
 private[io] class RdfFileBatch(paths: Seq[String],
                                parse: (String, String) => Seq[Triple])
   extends Batch {
+  private val conf = SparkSession.active.sparkContext.hadoopConfiguration
   /** Spark's InMemoryFileIndex hidden-path rule: '_' and '.' prefixed
     * names (e.g. _SUCCESS, .part-*.crc in a Spark-written directory) are
     * not data. Applied here so format("jsonld") and JsonLd.read (which
@@ -114,7 +118,7 @@ private[io] class RdfFileBatch(paths: Seq[String],
   override def planInputPartitions(): Array[InputPartition] = {
     paths.toArray.flatMap { path =>
       val p = new HPath(path)
-      val fs = p.getFileSystem(new Configuration())
+      val fs = p.getFileSystem(conf)
       val matched: Array[FileStatus] =
         Option(fs.globStatus(p)).getOrElse(Array.empty)
       // an explicitly named hidden path is honored; hidden CHILDREN of a
@@ -123,13 +127,14 @@ private[io] class RdfFileBatch(paths: Seq[String],
     }.map(st => RdfFileInputPartition(st.getPath.toString): InputPartition)
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new RdfFileReaderFactory(parse)
+    new RdfFileReaderFactory(parse, new SerializableWritable(conf))
 }
 
 private[io] case class RdfFileInputPartition(file: String) extends InputPartition
 
 private[io] class RdfFileReaderFactory(
-    parse: (String, String) => Seq[Triple]) extends PartitionReaderFactory {
+    parse: (String, String) => Seq[Triple],
+    conf: SerializableWritable[Configuration]) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val file = partition.asInstanceOf[RdfFileInputPartition].file
     new PartitionReader[InternalRow] {
@@ -140,7 +145,7 @@ private[io] class RdfFileReaderFactory(
       override def next(): Boolean = {
         if (it == null) {
           val p = new HPath(file)
-          val fs = p.getFileSystem(new Configuration())
+          val fs = p.getFileSystem(conf.value)
           val in = fs.open(p)
           val json =
             try scala.io.Source.fromInputStream(in, "UTF-8").mkString

@@ -3,6 +3,8 @@ package graft.rdf.io
 import java.util
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.SerializableWritable
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import graft.rdf.Triple
@@ -25,7 +27,8 @@ import graft.rdf.Triple
   *
   * Commit protocol: tasks write to `_temporary_<queryId>/`, commit
   * renames into `dir` — an aborted job leaves no partial part files
-  * visible. */
+  * visible. Driver and tasks reach `dir` with the session's Hadoop
+  * configuration, so `spark.hadoop.*` settings apply to it. */
 private[io] class JsonLdWriteBuilder(path: String, info: LogicalWriteInfo)
   extends WriteBuilder with SupportsTruncate {
   // validate names AND types driver-side: a wrong-typed column would
@@ -48,19 +51,19 @@ private[io] class JsonLdWriteBuilder(path: String, info: LogicalWriteInfo)
 
 private[io] class JsonLdBatchWrite(path: String, queryId: String,
                                    truncate: Boolean) extends BatchWrite {
+  private val conf = SparkSession.active.sparkContext.hadoopConfiguration
+  private lazy val fs = new HPath(path).getFileSystem(conf)
   private def tempDir = new HPath(path, s"_temporary_$queryId")
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val fs = new HPath(path).getFileSystem(new Configuration())
     if (truncate && fs.exists(new HPath(path))) {
       fs.listStatus(new HPath(path))
         .filter(_.getPath.getName.endsWith(".jsonld"))
         .foreach(st => fs.delete(st.getPath, false))
     }
     fs.mkdirs(tempDir)
-    new JsonLdWriterFactory(path, queryId)
+    new JsonLdWriterFactory(path, queryId, new SerializableWritable(conf))
   }
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new HPath(path).getFileSystem(new Configuration())
     try messages.foreach {
       case JsonLdCommit(files) => files.foreach { name =>
         // rename returns false instead of throwing on e.g. an existing
@@ -72,22 +75,22 @@ private[io] class JsonLdBatchWrite(path: String, queryId: String,
       case _ => ()
     } finally fs.delete(tempDir, true)
   }
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new HPath(path).getFileSystem(new Configuration())
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
     fs.delete(tempDir, true)
-  }
 }
 
 private[io] case class JsonLdCommit(files: Seq[String]) extends WriterCommitMessage
 
-private[io] class JsonLdWriterFactory(path: String, queryId: String)
+private[io] class JsonLdWriterFactory(path: String, queryId: String,
+                                      conf: SerializableWritable[Configuration])
   extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new JsonLdDataWriter(path, queryId, partitionId)
+    new JsonLdDataWriter(path, queryId, partitionId, conf.value)
 }
 
 private[io] class JsonLdDataWriter(path: String, queryId: String,
-                                   partitionId: Int) extends DataWriter[InternalRow] {
+                                   partitionId: Int, conf: Configuration)
+  extends DataWriter[InternalRow] {
   private val rows = scala.collection.mutable.ArrayBuffer
     .empty[(String, String, String, String, String, String)]
 
@@ -103,7 +106,7 @@ private[io] class JsonLdDataWriter(path: String, queryId: String,
     // not collide on part-00000 (rename into place would drop one)
     val name = f"part-$partitionId%05d-$queryId.jsonld"
     val tmp = new HPath(new HPath(path, s"_temporary_$queryId"), name)
-    val fs = tmp.getFileSystem(new Configuration())
+    val fs = tmp.getFileSystem(conf)
     val out = fs.create(tmp, true)
     val w = new java.io.OutputStreamWriter(out, "UTF-8")
     // streamed render: one document's string at a time, never the whole

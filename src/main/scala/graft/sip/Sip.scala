@@ -14,8 +14,8 @@ import graft.rdf.io.JsonLd
   *   save:  resources (triples) → one JSON-LD file per root resource (K1)
   *          → manifest from the written tree (S6+H1+K3)
   *          → PREMIS metadata-modification events (K4)
-  *   load:  directory of *.meta.json (S5/S3/S4) → triple DF with ids
-  *          re-derived from filenames (STR3)
+  *   load:  directory of *.meta.json (S5/S3/S4) → triple DF; the
+  *          highest object id re-derived from filenames (STR3)
   *
   * The reference's deferred event queue disappears: event subjects are
   * derived from the saved-resources DF in ordinary dependency order
@@ -34,7 +34,16 @@ object Sip {
     * and the (root, filename) frame that pass yields is all the events
     * and the eventlog read afterwards. It holds no JSON, one short row
     * per resource, and its blocks spill to local disk like any
-    * `localCheckpoint`; a retried task rewrites the same files. */
+    * `localCheckpoint`; a retried task rewrites the same files.
+    *
+    * The render-and-write runs in one task per core
+    * (`defaultParallelism`, [[JsonLd.rooted]]'s by-number exchange),
+    * not in the partitions AQE would coalesce the shuffle to by bytes:
+    * the write's cost is per FILE, not per byte. Each create on a local
+    * file system without the native Hadoop library forks `chmod` for
+    * the file and again for its `.crc` sidecar (a few ms a file), and on an
+    * object store each file is a request; a SIP's documents are a few
+    * hundred KB that AQE would otherwise hand to a single task. */
   def saveResources(triples: DataFrame, dir: String,
                     ids: Identifiers = Identifiers.default): DataFrame = {
     import org.apache.hadoop.fs.{Path => HPath}
@@ -60,9 +69,10 @@ object Sip {
   }
 
   /** S5 — load a SIP directory: every *.meta.json parsed to triples with
-    * per-file bnode isolation; object ids re-derived from file names. */
-  def loadResources(spark: SparkSession, dir: String,
-                    ids: Identifiers = Identifiers.default): DataFrame =
+    * per-file bnode isolation. The triples are what the files say; the
+    * highest object id, which an Incrementer continues from, comes from
+    * [[maxResourceId]]. */
+  def loadResources(spark: SparkSession, dir: String): DataFrame =
     JsonLd.read(spark, s"$dir/*.meta.json")
 
   /** STR3/W2 — recover the highest object id from a SIP directory's
@@ -119,6 +129,13 @@ object Sip {
     * into a temp dir, and the part file is renamed into place. A single
     * parity file is inherently one writer; for event graphs too large for
     * one file, use `Events.save` (partitioned JSON-LD) instead.
+    *
+    * `events` must be an [[Events.emit]] graph: every event is one flat
+    * node, its own root, with no blank nodes, so each document is
+    * rendered with `root = subject` and no root search. In a graph
+    * whose events hold blank-node children, each blank node would
+    * become a document of its own; render such a graph with
+    * `JsonLd.documents`.
     */
   def saveEventlog(events: DataFrame, dir: String,
                    ids: Identifiers = Identifiers.default): Unit = {
@@ -126,7 +143,7 @@ object Sip {
     import spark.implicits._
     // URI-safe join (java.nio Paths.get would collapse a scheme's '//')
     val tmp = graft.sources.FsUtil.child(dir, s".${ids.eventlogFilename}.tmp")
-    val lines = JsonLd.documents(events)
+    val lines = JsonLd.rooted(events.withColumn("root", col("subject")))
       .select("root", "json").as[(String, String)]
       .coalesce(1).sortWithinPartitions("root")
       .mapPartitions { it =>

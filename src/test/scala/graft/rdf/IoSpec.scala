@@ -1,6 +1,7 @@
 package graft.rdf.io
 
 import java.nio.file.{Files, Paths => JPaths}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.rdf.{Build, NS, Triple}
 import graft.rdf.Build._
@@ -76,6 +77,40 @@ class JsonLdSpec extends graft.SparkSuite {
     assert(docs.head.getString(0) == "http://example.org/r1")
     assert(json.contains("\"@graph\""))
     assert(json.contains("_:sk")) // skolem bnode present
+  }
+
+  test("rooted renderer returns the root join's documents") {
+    import spark.implicits._
+    def docs(df: DataFrame): Seq[(String, String)] =
+      df.select("root", "json").as[(String, String)].collect().toSeq.sortBy(_._1)
+    // each root's document as one driver-side render of its collected rows
+    def driverRendered(withRoot: DataFrame): Seq[(String, String)] =
+      withRoot.select("root", Triple.columns: _*)
+        .as[(String, String, String, String, String, String, String)].collect().toSeq
+        .groupBy(_._1).toSeq.sortBy(_._1).map { case (root, ts) =>
+          root -> JsonLd.renderDoc(root, ts.map(t => (t._2, t._3, t._4, t._5, t._6, t._7)))
+        }
+
+    val events = graft.events.Events.emit((1 to 12).toDF("i"), Seq(col("i")),
+      graft.events.Events.mem,
+      subjectOf = concat(lit("https://example.org/o/"), col("i")), outcome = lit(true),
+      description = lit("Metadata object created."),
+      generated = concat(lit("https://example.org/f/"), col("i")),
+      timestamp = "2025-01-01T00:00:00Z")
+    val eventRooted = events.withColumn("root", col("subject"))
+    val eventDocs = docs(JsonLd.documents(events))
+    assert(eventDocs.size == 12)
+    assert(docs(JsonLd.rooted(eventRooted)) == eventDocs)
+    assert(driverRendered(eventRooted) == eventDocs)
+
+    val in = tempDir("graft-rooted-in")
+    graft.etl.DemoCsvFixture.write(in)
+    val graph = graft.etl.DemoCsvFixture.run(spark, in)
+    val graphRooted = graph.join(JsonLd.subjectRoots(graph), Seq("subject"))
+    val graphDocs = docs(JsonLd.documents(graph))
+    assert(graphDocs.size == 28) // 1 archive + 3 series + 12 × (record, bestand)
+    assert(docs(JsonLd.rooted(graphRooted)) == graphDocs)
+    assert(driverRendered(graphRooted) == graphDocs)
   }
 
   test("writer -> parser round-trip is the identity on the triple set") {
