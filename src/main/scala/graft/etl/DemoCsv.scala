@@ -72,11 +72,17 @@ object DemoCsv {
     *     (6 predicates × plain/@nl/@en, concept_resolver.py:86-100).
     * Both route through graft.vocab.Vocab's deterministic-precedence
     * lookup + broadcast join. Returns the complete triple graph
-    * (archive + series + records + bestanden), MATERIALIZED: the graph
-    * is computed once, here, as an eager `localCheckpoint`, and every
-    * later use (the SIP's JSON-LD documents and events, the eventlog,
-    * the Turtle export) reads those blocks instead of re-planning and
-    * re-running the scans, joins, id scan, flattener and dedup. This
+    * (archive + series + records + bestanden) as the [[graft.rdf.Triple]]
+    * columns, in their order and types, plus a trailing `root` column:
+    * the resource each triple belongs to (its own subject, or for a
+    * blank node's triples the record, bestand or archive that minted it;
+    * [[Build.flattenRooted]]). Select by name to drop it.
+    * [[graft.rdf.io.JsonLd.documents]] renders by it instead of running
+    * the root search. The graph is MATERIALIZED: it is computed once,
+    * here, as an eager `localCheckpoint`, and every later use (the SIP's
+    * JSON-LD documents and events, the eventlog, the Turtle export)
+    * reads those blocks instead of re-planning and re-running the
+    * scans, joins, id scan, flattener and dedup. This
     * holds at scale because one call's graph is one archive's (a SIP):
     * the 100 TB design point is many SIPs, not one graph. The blocks are
     * MEMORY_AND_DISK, so a graph larger than storage memory spills to
@@ -193,19 +199,19 @@ object DemoCsv {
         concat(lit("Serie "), col("Serie")))),
       (NS.LDTO + "isOnderdeelVan") -> RUri(when(col("__brk") === 1L, lit(archiveUri)))))
 
-    val rowTriples = Build.flattenAll(withIds,
+    val rowTriples = Build.flattenRooted(withIds,
       Seq(record, bestand, serieLink, serieRes))
 
     // archive resource + A1 temporal coverage (csv2rdf.py:239-254)
     val coverage = withIds.agg(
       min(DateTypes.dateValueCol(col("Datering"))).as("earliest"),
       max(DateTypes.dateValueCol(col("Datering"))).as("latest"))
-    val archive = Build.flatten(coverage, RResource(lit(archiveUri), Seq(
+    val archive = Build.flattenRooted(coverage, Seq(RResource(lit(archiveUri), Seq(
       NS.rdfType -> RUri(lit(NS.LDTO + "Archief")),
       (NS.LDTO + "naam") -> RLit(lit("Luchtfoto's")),
       (NS.LDTO + "dekkingInTijd") -> RNode(Seq(
         (NS.LDTO + "begin") -> RLit(col("earliest"), datatype = lit(NS.xsdDate)),
-        (NS.LDTO + "eind") -> RLit(col("latest"), datatype = lit(NS.xsdDate)))))))
+        (NS.LDTO + "eind") -> RLit(col("latest"), datatype = lit(NS.xsdDate))))))))
 
     Build.dedup(rowTriples.unionByName(archive)).localCheckpoint(eager = true)
   }

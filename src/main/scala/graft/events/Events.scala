@@ -124,10 +124,13 @@ object Events {
     Build.flatten(withId, shape)
   }
 
-  /** K4 — eventlog save: the event graph serializes through the JSON-LD
-    * writer like any resource graph. */
+  /** K4 — eventlog save: one (root, json) JSON-LD document per event,
+    * written as partitioned JSON. `eventGraph` must be an [[emit]] graph
+    * (one flat node per event, no blank nodes), so each event is its own
+    * root and renders with `root = subject`, without the root search of
+    * `JsonLd.documents`. */
   def save(eventGraph: DataFrame, outDir: String): Unit =
-    graft.rdf.io.JsonLd.documents(eventGraph)
+    graft.rdf.io.JsonLd.rooted(eventGraph.withColumn("root", col("subject")))
       .write.mode("overwrite").json(outDir)
 
   // ---- the reference's named emitters (preservation_events.py:105-179) —

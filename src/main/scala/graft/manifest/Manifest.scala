@@ -24,6 +24,10 @@ import graft.ops.Relational
   */
 object Manifest {
 
+  /** The `modified` field's format: file time to the second, in the
+    * session time zone. */
+  val modifiedFormat = "yyyy-MM-dd'T'HH:mm:ss"
+
   /** S6 + H1: recursive scan of `dir` → manifest rows. Column pruning
     * note: `md5(content)` forces reading file bytes; everything else comes
     * from file status only. `ignore` = F13 ignore-list filter.
@@ -38,7 +42,7 @@ object Manifest {
       .select(
         regexp_replace(col("path"), "^file:", "").as("abspath"),
         col("length").cast("long").as("size"),
-        date_format(col("modificationTime"), "yyyy-MM-dd'T'HH:mm:ss").as("modified"),
+        date_format(col("modificationTime"), modifiedFormat).as("modified"),
         md5(col("content")).as("md5hash"))
       .withColumn("path",
         expr(s"substring(abspath, ${base.length + 1})"))
@@ -64,7 +68,7 @@ object Manifest {
       .load(dir)
       .select(regexp_replace(col("path"), "^file:", "").as("abspath"),
         col("length").cast("long").as("size"),
-        date_format(col("modificationTime"), "yyyy-MM-dd'T'HH:mm:ss").as("modified"))
+        date_format(col("modificationTime"), modifiedFormat).as("modified"))
       // content column never selected → binaryFile reads status only
       .as[(String, Long, String)]
       .mapPartitions { it =>

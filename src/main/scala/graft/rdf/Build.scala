@@ -2,7 +2,7 @@ package graft.rdf
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.ArrayType
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField}
 
 /** X3 — the triple-flattening generator: declarative resource-shape →
   * `array<Triple-struct>` per row → one `explode`. Re-expresses the
@@ -63,49 +63,59 @@ object Build {
   def skolemCol(parent: Column, path: String): Column =
     concat(lit("_:sk"), substring(sha2(concat_ws("", parent, lit(path)), 256), 1, 32))
 
+  /** One triple struct. `root`, when given, is appended as a `root`
+    * field: the subject of the resource shape the triple belongs to. */
   private def tstruct(s: Column, p: String, o: Column, kind: String,
-                      dt: Column, lang: Column): Column =
-    struct(s.as("subject"), lit(p).as("predicate"), o.as("objectValue"),
+                      dt: Column, lang: Column, root: Option[Column]): Column = {
+    val fields = Seq(s.as("subject"), lit(p).as("predicate"), o.as("objectValue"),
       lit(kind).as("objectKind"),
       Option(dt).getOrElse(nullStr).as("datatype"),
       Option(lang).getOrElse(nullStr).as("lang"))
+    struct(fields ++ root.map(_.as("root")): _*)
+  }
 
   private val tripleArrayType =
     ArrayType(Triple.schema, containsNull = true)
 
-  private val emptyTriples: Column = array().cast(tripleArrayType)
+  private val rootedArrayType =
+    ArrayType(Triple.schema.add(StructField("root", StringType)), containsNull = true)
+
+  private def emptyTriples(root: Option[Column]): Column =
+    array().cast(if (root.isDefined) rootedArrayType else tripleArrayType)
 
   /** All triples of one object position as an array column (may contain
-    * nulls for null-valued scalars; stripped once at the end). */
+    * nulls for null-valued scalars; stripped once at the end). Nested
+    * nodes keep the enclosing shape's `root`. */
   private def objTriples(subject: Column, pred: String, obj: RObj,
-                         path: String): Column = obj match {
+                         path: String, root: Option[Column]): Column = obj match {
     case RLit(v, dt, lang) =>
       array(when(v.isNotNull,
-        tstruct(subject, pred, v.cast("string"), Triple.LITERAL, dt, lang)))
+        tstruct(subject, pred, v.cast("string"), Triple.LITERAL, dt, lang, root)))
     case RUri(v) =>
-      array(when(v.isNotNull, tstruct(subject, pred, v, Triple.URI, null, null)))
+      array(when(v.isNotNull, tstruct(subject, pred, v, Triple.URI, null, null, root)))
     case RSplit(v, sep) =>
       coalesce(
         transform(split(v, java.util.regex.Pattern.quote(sep)),
-          x => tstruct(subject, pred, x, Triple.LITERAL, null, null)),
-        emptyTriples)
+          x => tstruct(subject, pred, x, Triple.LITERAL, null, null, root)),
+        emptyTriples(root))
     case RList(vs) =>
       concat(vs.zipWithIndex.map { case (o, i) =>
-        objTriples(subject, pred, o, s"$path.$i")
+        objTriples(subject, pred, o, s"$path.$i", root)
       }: _*)
     case RNode(props, cond) =>
       val b = skolemCol(subject, s"$path/$pred")
-      val link = array(tstruct(subject, pred, b, Triple.BNODE, null, null))
-      val children = resourceTriples(b, props, s"$path/$pred")
+      val link = array(tstruct(subject, pred, b, Triple.BNODE, null, null, root))
+      val children = resourceTriples(b, props, s"$path/$pred", root)
       when(coalesce(cond, lit(false)), concat(link, children))
-        .otherwise(emptyTriples)
+        .otherwise(emptyTriples(root))
   }
 
-  /** Array of all triples for (subject, props). */
+  /** Array of all triples for (subject, props), each with a `root`
+    * field when `root` is given. */
   def resourceTriples(subject: Column, props: Seq[(String, RObj)],
-                      path: String = ""): Column =
-    if (props.isEmpty) emptyTriples
-    else concat(props.map { case (p, o) => objTriples(subject, p, o, path) }: _*)
+                      path: String = "", root: Option[Column] = None): Column =
+    if (props.isEmpty) emptyTriples(root)
+    else concat(props.map { case (p, o) => objTriples(subject, p, o, path, root) }: _*)
 
   /** Flatten one resource shape per input row into a triple DataFrame
     * (canonical Triple columns). Map-only; null-valued scalars dropped. */
@@ -153,28 +163,48 @@ object Build {
     * generator's consume method, which then outgrows Janino's 64 KB
     * limit and falls back to interpreted code; a Project deduplicates
     * them. */
-  def flattenAll(df: DataFrame, resources: Seq[RResource]): DataFrame = {
-    val nullStr = lit(null).cast("string")
+  def flattenAll(df: DataFrame, resources: Seq[RResource]): DataFrame =
+    flattenShapes(df, resources, rooted = false)
+
+  /** [[flattenAll]] plus a trailing `root` column: the subject of the
+    * resource shape each triple came from. A nested node's triples (and
+    * the link to it) carry the shape's subject, not the blank node's, so
+    * `root` is the resource whose JSON-LD document holds the triple, the
+    * same value [[graft.rdf.io.JsonLd.subjectRoots]] finds with its
+    * self-joins. */
+  def flattenRooted(df: DataFrame, resources: Seq[RResource]): DataFrame =
+    flattenShapes(df, resources, rooted = true)
+
+  private def flattenShapes(df: DataFrame, resources: Seq[RResource],
+                            rooted: Boolean): DataFrame = {
+    def rootOf(r: RResource): Option[Column] = Option.when(rooted)(r.subject)
+    val outCols = if (rooted) Triple.columns :+ "root" else Triple.columns
     val all = concat(resources.zipWithIndex.map { case (r, i) =>
-      resourceTriples(r.subject, stripSplits(r.props), s"#$i")
+      resourceTriples(r.subject, stripSplits(r.props), s"#$i", rootOf(r))
     }: _*)
     val main = df.select(explode(all).as("t"))
       .filter(col("t").isNotNull)
-      .select(Triple.columns.map(c => col(s"t.$c")): _*)
+      .select(outCols.map(c => col(s"t.$c")): _*)
     val splitBranches = resources.zipWithIndex.flatMap { case (r, i) =>
-      collectSplits(r.subject, r.props, s"#$i", lit(true))
-    }.map { case (subj, pred, RSplit(v, sep), cond) =>
-      df.filter(cond)
-        .select(subj.as("subject"), lit(pred).as("predicate"),
-          explode(split(v, java.util.regex.Pattern.quote(sep))).as("objectValue"))
-        .select(col("subject"), col("predicate"), col("objectValue"),
-          lit(Triple.LITERAL).as("objectKind"),
-          nullStr.as("datatype"), nullStr.as("lang"))
+      collectSplits(r.subject, r.props, s"#$i", lit(true)).map {
+        case (subj, pred, RSplit(v, sep), cond) =>
+          df.filter(cond)
+            .select(Seq(subj.as("subject"), lit(pred).as("predicate"),
+              explode(split(v, java.util.regex.Pattern.quote(sep))).as("objectValue")) ++
+              rootOf(r).map(_.as("root")): _*)
+            .select(Seq(col("subject"), col("predicate"), col("objectValue"),
+              lit(Triple.LITERAL).as("objectKind"),
+              nullStr.as("datatype"), nullStr.as("lang")) ++
+              Option.when(rooted)(col("root")): _*)
+      }
     }
     (main +: splitBranches).reduce(_ unionByName _)
   }
 
-  /** A7 — graph set semantics: collapse duplicate triples. */
+  /** A7 — graph set semantics: collapse duplicate triples. A carried
+    * `root` column ([[flattenRooted]]) is part of the key: it is a
+    * function of the subject, so the triple set is the same, and the
+    * dedup stays a plain group-by of its columns. */
   def dedup(triples: DataFrame): DataFrame =
-    triples.dropDuplicates(Triple.columns)
+    triples.dropDuplicates(Triple.columns ++ triples.columns.find(_ == "root"))
 }

@@ -82,27 +82,39 @@ object JsonLd {
     mapper.writerWithDefaultPrettyPrinter().writeValueAsString(doc)
   }
 
-  /** (root, json) — one JSON-LD document per root resource of a graph
-    * whose roots are not known: [[subjectRoots]]' self-joins find them,
-    * then [[rooted]] renders. Use this for graphs read from outside. */
+  /** (root, json) — one JSON-LD document per root resource. A graph
+    * that carries its roots in a `root` column ([[graft.etl.DemoCsv.run]],
+    * [[graft.rdf.Build.flattenRooted]]) renders by that column. Any other
+    * graph (read from JSON-LD or Turtle, or built by
+    * `Build.flattenAll`) has its roots found first by [[subjectRoots]]'
+    * self-joins. Either way [[rooted]] renders. */
   def documents(triples: DataFrame): DataFrame =
-    rooted(triples.join(subjectRoots(triples), Seq("subject")))
+    if (triples.columns.contains("root")) rooted(triples)
+    else rooted(triples.join(subjectRoots(triples), Seq("subject")))
 
   /** (root, json) — one JSON-LD document per distinct `root`, from
     * triples that already carry their root resource in a `root` column
     * (a flat resource graph is rooted by `root = subject`). Distributed:
     * one hash exchange on `root` into the session's
     * `defaultParallelism` partitions, a partition-local sort, and each
-    * run of equal roots rendered executor-side. The exchange is by
-    * number, so AQE does not coalesce it: a caller that writes one file
-    * per document (`Sip.saveResources`) keeps one task per core. */
-  def rooted(withRoot: DataFrame): DataFrame = {
-    val spark = withRoot.sparkSession
+    * run of equal roots rendered executor-side ([[renderRuns]]). The
+    * exchange is by number, so AQE does not coalesce it: a caller that
+    * writes one file per document (`Sip.saveResources`) keeps one task
+    * per core. */
+  def rooted(withRoot: DataFrame): DataFrame =
+    renderRuns(withRoot
+      .repartition(withRoot.sparkSession.sparkContext.defaultParallelism, col("root"))
+      .sortWithinPartitions("root"))
+
+  /** (root, json) — one document per run of equal `root`s, in partition
+    * order, without an exchange. Within each partition of `clustered`,
+    * the rows of one root must be consecutive (e.g. sorted by `root`);
+    * a root split over two runs would give two documents. */
+  private[graft] def renderRuns(clustered: DataFrame): DataFrame = {
+    val spark = clustered.sparkSession
     import spark.implicits._
-    withRoot.select(col("root"), col("subject"), col("predicate"),
+    clustered.select(col("root"), col("subject"), col("predicate"),
         col("objectValue"), col("objectKind"), col("datatype"), col("lang"))
-      .repartition(spark.sparkContext.defaultParallelism, col("root"))
-      .sortWithinPartitions("root")
       .as[(String, String, String, String, String, String, String)]
       .mapPartitions { it =>
         val rows = it.buffered

@@ -12,7 +12,7 @@ import graft.rdf.io.JsonLd
   * jobs over the triple model:
   *
   *   save:  resources (triples) → one JSON-LD file per root resource (K1)
-  *          → manifest from the written tree (S6+H1+K3)
+  *          → manifest of the written files (S6+H1+K3)
   *          → PREMIS metadata-modification events (K4)
   *   load:  directory of *.meta.json (S5/S3/S4) → triple DF; the
   *          highest object id re-derived from filenames (STR3)
@@ -29,12 +29,16 @@ object Sip {
     * csv2rdf.py:234-237's per-row save, through the Hadoop FileSystem
     * API with the session's Hadoop configuration, so a SIP directory can
     * live on any scheme (file://, hdfs://, s3a://) and `spark.hadoop.*`
-    * settings reach it. Returns (root, filename), MATERIALIZED: the
-    * documents are rendered once, in the eager pass that writes them,
-    * and the (root, filename) frame that pass yields is all the events
-    * and the eventlog read afterwards. It holds no JSON, one short row
-    * per resource, and its blocks spill to local disk like any
-    * `localCheckpoint`; a retried task rewrites the same files.
+    * settings reach it. Returns (root, filename, md5hash, size,
+    * modified), MATERIALIZED: the documents are rendered once, in the
+    * eager pass that writes them, and the frame that pass yields is all
+    * the manifest, the events and the eventlog read afterwards. It holds
+    * no JSON, one short row per resource, and its blocks spill to local
+    * disk like any `localCheckpoint`; a retried task rewrites the same
+    * files. `md5hash` and `size` are those of the bytes written (the MD5
+    * "of the just-written file", manifest.py:46-56), and `modified` is
+    * the file's modification time, read from its status after `close`
+    * and formatted as [[Manifest.scanDirectory]] formats it.
     *
     * The render-and-write runs in one task per core
     * (`defaultParallelism`, [[JsonLd.rooted]]'s by-number exchange),
@@ -59,12 +63,19 @@ object Sip {
       .mapPartitions { it =>
         val fs = base.getFileSystem(conf.value)
         it.map { case (root, filename, json) =>
-          val out = fs.create(new HPath(base, filename), true)
-          try out.write(json.getBytes("UTF-8")) finally out.close()
-          (root, filename)
+          val path = new HPath(base, filename)
+          val bytes = json.getBytes("UTF-8")
+          val out = fs.create(path, true)
+          try out.write(bytes) finally out.close()
+          val md5 = java.security.MessageDigest.getInstance("MD5").digest(bytes)
+            .map("%02x".format(_)).mkString
+          (root, filename, md5, bytes.length.toLong,
+            fs.getFileStatus(path).getModificationTime)
         }
       }
-      .toDF("root", "filename")
+      .toDF("root", "filename", "md5hash", "size", "mtime")
+      .select(col("root"), col("filename"), col("md5hash"), col("size"),
+        date_format(timestamp_millis(col("mtime")), Manifest.modifiedFormat).as("modified"))
       .localCheckpoint(eager = true)
   }
 
@@ -95,25 +106,37 @@ object Sip {
   /** Full save lifecycle (sip.py:173-180): resources → files → manifest →
     * events → eventlog. Returns the manifest DataFrame. The resource
     * documents are rendered once, by the pass that writes them; the
-    * events and the eventlog read only the materialized (root, filename)
+    * manifest, the events and the eventlog read only the materialized
     * frame [[saveResources]] returns, one small row per resource. Pass a
     * materialized graph (as [[graft.etl.DemoCsv.run]] returns) when the
-    * caller reads it again, e.g. for a Turtle export. */
+    * caller reads it again, e.g. for a Turtle export.
+    *
+    * The manifest comes from the write: each written file's MD5 and
+    * size from the bytes the write task held, its `modified` from the
+    * file's status, so no file is read back. One listing of `dir` that
+    * reads file status only (`listStatus`) checks that the tree holds
+    * nothing but the written files (and the manifest and eventlog,
+    * which stay out, F13). `listFiles` is avoided on purpose: each
+    * `LocatedFileStatus` it builds reads the file's permissions, which
+    * on a local file system without the native Hadoop library forks
+    * `ls` once per file. Any other entry (a re-save into a used
+    * directory, a foreign file, a subdirectory) makes the manifest a
+    * [[Manifest.scanDirectory]] of the whole tree instead, so every
+    * file still gets the entry the scan gives it. */
   def save(spark: SparkSession, triples: DataFrame, dir: String,
            ids: Identifiers = Identifiers.default,
            timestamp: String = java.time.Instant.now().toString): DataFrame = {
     val written = saveResources(triples, dir, ids)
-    spark.catalog.refreshByPath(dir)
-
-    // manifest over the written tree (K3); the manifest/eventlog files
-    // themselves stay out (F13)
-    val manifest = Manifest.scanDirectory(spark, dir,
-      ignore = Seq(ids.manifestFilename, ids.eventlogFilename))
+    val ignore = Seq(ids.manifestFilename, ids.eventlogFilename)
+    val manifest = writtenManifest(written, dir, ignore).getOrElse {
+      spark.catalog.refreshByPath(dir)
+      Manifest.scanDirectory(spark, dir, ignore)
+    }
     Manifest.saveJson(manifest, s"$dir/${ids.manifestFilename}")
 
     // one metadata-modification (mem) event per written resource
     // (sip.py:147-155: description + prov:generated = the metadata file)
-    val events = Events.emit(written, Seq(col("root")), Events.mem,
+    val events = Events.emit(written.select("root"), Seq(col("root")), Events.mem,
       subjectOf = col("root"), outcome = lit(true),
       description = lit("Metadata object created."),
       generated = ids.metadataFileUriCol(ids.extractIdCol(col("root"))),
@@ -122,11 +145,32 @@ object Sip {
     manifest
   }
 
+  /** The manifest rows of the [[saveResources]] frame `written`, when
+    * `dir` holds exactly its files besides the `ignore`d names; None
+    * otherwise. */
+  private def writtenManifest(written: DataFrame, dir: String,
+                              ignore: Seq[String]): Option[DataFrame] = {
+    import org.apache.hadoop.fs.{Path => HPath}
+    val spark = written.sparkSession
+    import spark.implicits._
+    val base = new HPath(dir)
+    val listed = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(base).filterNot(s => ignore.contains(s.getPath.getName))
+    val names = written.select("filename").as[String].collect()
+    val onlyWritten = listed.forall(_.isFile) && listed.length == names.length &&
+      listed.map(_.getPath.getName).toSet == names.toSet
+    Option.when(onlyWritten)(written.select(col("filename").as("path"),
+      col("md5hash"), col("size"), col("modified"),
+      graft.functions.Paths.fullExtensionCol(col("filename")).as("extension")))
+  }
+
   /** K4 — eventlog sink: the reference's single `<uid>.eventlog.json`
     * JSON array (preservation_events.py:61-68), written WITHOUT collecting
-    * documents to the driver: docs stream through one executor task
-    * (coalesce(1) + partition-local sort for a deterministic doc order)
-    * into a temp dir, and the part file is renamed into place. A single
+    * documents to the driver: the event triples stream through one
+    * executor task (coalesce(1) + partition-local sort by root, which
+    * gives a deterministic doc order and lets [[JsonLd.renderRuns]]
+    * render each event's run without an exchange) into a temp dir, and
+    * the part file is renamed into place. A single
     * parity file is inherently one writer; for event graphs too large for
     * one file, use `Events.save` (partitioned JSON-LD) instead.
     *
@@ -143,9 +187,9 @@ object Sip {
     import spark.implicits._
     // URI-safe join (java.nio Paths.get would collapse a scheme's '//')
     val tmp = graft.sources.FsUtil.child(dir, s".${ids.eventlogFilename}.tmp")
-    val lines = JsonLd.rooted(events.withColumn("root", col("subject")))
-      .select("root", "json").as[(String, String)]
-      .coalesce(1).sortWithinPartitions("root")
+    val lines = JsonLd.renderRuns(events.withColumn("root", col("subject"))
+        .coalesce(1).sortWithinPartitions("root"))
+      .as[(String, String)]
       .mapPartitions { it =>
         // stream the JSON array shape: "[", doc "," ... doc, "]"
         var prev: String = null

@@ -100,4 +100,19 @@ class EventsSpec extends SparkSuite {
     // imp is on by default (every reference event carries it)
     assert(preds.contains(NS.ERAR + "imp"))
   }
+
+  test("save writes JsonLd.documents' rows for an emitted batch") {
+    val events = Events.emit((1 to 12).toDF("i"), Seq(col("i")), Events.mem,
+      subjectOf = concat(lit("https://example.org/o/"), col("i")), outcome = lit(true),
+      description = lit("Metadata object created."),
+      generated = concat(lit("https://example.org/f/"), col("i")),
+      timestamp = "2025-01-01T00:00:00Z")
+    val out = tempDir("graft-events-save").resolve("log").toString
+    Events.save(events, out)
+    def docs(df: org.apache.spark.sql.DataFrame): Seq[(String, String)] =
+      df.select("root", "json").as[(String, String)].collect().toSeq.sortBy(_._1)
+    val expected = docs(graft.rdf.io.JsonLd.documents(events))
+    assert(expected.size == 12)
+    assert(docs(spark.read.json(out)) == expected)
+  }
 }

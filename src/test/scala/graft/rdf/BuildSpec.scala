@@ -129,6 +129,49 @@ class BuildSpec extends graft.SparkSuite {
     assert(df.count() == 2)
     assert(Build.dedup(df).count() == 1)
   }
+
+  /** Two shapes: one with a two-level nested node, split values at the
+    * top level and inside the nested node, and one flat. */
+  private val EX2 = "http://example.org/resource/2"
+  private val shapes = Seq(
+    RResource(lit(EX), Seq(
+      TITLE -> RLit(lit("Test Title")),
+      SUBJECT -> RSplit(lit("History;Science"), ";"),
+      CREATOR -> RNode(Seq(
+        NAME -> RLit(lit("John Doe")),
+        SUBJECT -> RNode(Seq(
+          TITLE -> RLit(lit("inner")),
+          SUBJECT -> RSplit(lit("a;b;c"), ";"))))))),
+    RResource(lit(EX2), Seq(TYPE -> RUri(lit(PERSON)))))
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[String]] =
+    df.collect().map(_.toSeq.map(v => Option(v).map(_.toString).orNull)).toSet
+
+  test("flattenRooted carries each triple's root: the join's, for nested nodes and splits") {
+    val rooted = Build.flattenRooted(one, shapes)
+    assert(rooted.columns.toSeq == Triple.columns :+ "root")
+    val flat = rooted.select(Triple.columns.map(col): _*)
+    assert(rows(flat) == rows(Build.flattenAll(one, shapes)))
+    val carried = rows(rooted.select("subject", "root").distinct())
+    assert(carried == rows(graft.rdf.io.JsonLd.subjectRoots(flat)))
+    assert(carried.map(_(1)) == Set(EX, EX2))
+    assert(carried.count(_.head.startsWith("_:")) == 2) // both nesting levels
+    assert(rooted.filter(col("predicate") === SUBJECT && col("objectKind") === Triple.LITERAL)
+      .count() == 5) // the top-level and the nested split values
+  }
+
+  test("flattenAll keeps the Triple schema: no root field in its generator") {
+    val df = Build.flattenAll(one, shapes)
+    assert(df.schema.map(f => f.name -> f.dataType) ==
+      Triple.schema.map(f => f.name -> f.dataType))
+    val structs = df.queryExecution.analyzed.collect {
+      case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g.generator.children
+    }.flatten.map(_.dataType).collect {
+      case org.apache.spark.sql.types.ArrayType(s: org.apache.spark.sql.types.StructType, _) => s
+    }
+    assert(structs.size == 1)
+    assert(structs.head.fieldNames.toSeq == Triple.columns)
+  }
 }
 
 /** RSplit nested inside an RList stays on the transform path with stable
