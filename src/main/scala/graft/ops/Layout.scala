@@ -71,23 +71,14 @@ object Layout {
     * a range over EITHER column. The Z key is dropped before the
     * write (it is layout, not data — the projection after the range
     * exchange preserves the clustered order). Same orphan-location
-    * preclear as the bucketed writer: a previous session's managed
-    * location can survive without a catalog entry, and Spark refuses
-    * to adopt it. */
+    * preclear as the bucketed writer
+    * ([[graft.sources.Bucketed.dropAndClear]]). */
   def saveClustered(df: DataFrame, table: String, xCol: String,
                     yCol: String, numFiles: Int): Unit = {
     val spark = df.sparkSession
     require(!table.contains("`") && !table.contains("."),
       s"expected an unqualified table name, got: $table")
-    spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    val db = spark.catalog.currentDatabase
-    if (spark.catalog.databaseExists(db)) {
-      val loc = new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(spark.catalog.getDatabase(db).locationUri),
-        table.toLowerCase(java.util.Locale.ROOT))
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-    }
+    graft.sources.Bucketed.dropAndClear(spark, table)
     zorderWrite(df, numFiles, xCol, yCol).drop("zorder")
       .write.mode("overwrite").format("parquet").saveAsTable(table)
   }

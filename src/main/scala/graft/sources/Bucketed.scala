@@ -102,7 +102,22 @@ object Bucketed {
         f"[prof] $tag ${(System.nanoTime() - t0) / 1e6}%.1f ms")
     }
 
-  /** Save `df` as a bucketed, sorted managed table (default database).
+  /** Save `df` as a bucketed, sorted managed table. Only
+    * `SaveMode.Append` and `SaveMode.Overwrite` are supported.
+    *
+    * One decision, then one write. An Append into an existing table
+    * commits the next generation through [[appendDirect]]. Anything
+    * else (an Overwrite, or an Append that creates the table) replaces
+    * the table's contents through [[replaceContents]]: the catalog
+    * entry stays when its provider, bucket spec, column names and types
+    * and writer options already match the request ([[compatible]]);
+    * otherwise, or when there is none, an Overwrite first drops the
+    * table and clears its location ([[dropAndClear]]) and a
+    * catalog-only create ([[createEntry]]) makes a fresh managed entry.
+    * Both writes go through [[writeClustered]]: one file per non-empty
+    * bucket, sorted by `sortCols` (default: the keys). A replace
+    * commits a fresh generation-1 `create` manifest.
+    *
     * `buckets` should be sized so a bucket of the LARGER recurring join
     * side fits an executor core's working set.
     *
@@ -118,21 +133,17 @@ object Bucketed {
     * writes as that many clustered sub-waves — per-task input bounded
     * at batch/(buckets × subSplits) — committed as ONE atomic
     * generation with subSplits files per touched bucket (the next
-    * compaction restores one file per bucket). Ignored (must be 1
-    * makes no sense) outside the existing-table Append path; creates
-    * size `buckets` to the full table by contract.
-    *
-    * A previous SESSION's managed-table location can survive in the
-    * warehouse dir while the (in-memory) catalog entry did not —
-    * SaveMode.Overwrite only clears locations the catalog knows about,
-    * and Spark refuses to adopt an orphaned one
-    * (LOCATION_ALREADY_EXISTS). Drop + clear explicitly first. */
+    * compaction restores one file per bucket). Ignored outside the
+    * existing-table Append path; creates size `buckets` to the full
+    * table by contract. */
   def save(df: DataFrame, table: String, keys: Seq[String],
            buckets: Int, mode: SaveMode = SaveMode.Overwrite,
            sortCols: Seq[String] = Nil,
            writeOptions: Map[String, String] = Map.empty,
            appendSubSplits: Int = 1): Unit = {
     require(appendSubSplits >= 1, "appendSubSplits must be >= 1")
+    require(mode == SaveMode.Overwrite || mode == SaveMode.Append,
+      s"Bucketed.save supports SaveMode.Overwrite and SaveMode.Append, got $mode")
     val spark = df.sparkSession
     // malformed names fail loudly BEFORE any catalog/path work: one
     // backtick pair around `db.tbl` would read as a single identifier,
@@ -142,135 +153,107 @@ object Bucketed {
       require(parts.length <= 2 && parts.forall(p => p.nonEmpty && !p.contains("`")),
         s"expected an unqualified or db-qualified table name, got: $table")
     }
-    // Overwrite of an EXISTING table whose schema/bucket spec/options
-    // all match the request replaces CONTENTS in place (direct write +
-    // fresh generation-1 manifest) and skips the DROP TABLE + delete +
-    // saveAsTable DDL round-trip — ~120 ms of pure catalog fixed cost
-    // per rebuild, paid by every fixture that rebuilds its index each
-    // execution. Identical observable state: same rows, same layout,
-    // generation numbering restarted, every per-location cache
-    // invalidated. Any mismatch falls through to the full drop+create.
-    if (mode == SaveMode.Overwrite &&
-        overwriteInPlace(spark, table, df, keys, buckets,
-          if (sortCols.nonEmpty) sortCols else keys, writeOptions)) return
-    // destructive pre-clear ONLY under Overwrite — Append/Ignore/
-    // ErrorIfExists must keep their SaveMode contracts
-    if (mode == SaveMode.Overwrite) profPhase(s"save($table,$mode) preclear") {
-      // qualified names: quote each part separately (one backtick pair
-      // around `db.tbl` makes it a single identifier) and resolve the
-      // orphan location from the DATABASE's catalog location — the
-      // string-derived `<warehouse>/<table>` is wrong for any
-      // non-default database (`<warehouse>/<db>.db/<tbl>`) or a
-      // database created with a custom LOCATION
-      val parts = table.split('.')
-      require(parts.length <= 2 && parts.forall(p => p.nonEmpty && !p.contains("`")),
-        s"expected an unqualified or db-qualified table name, got: $table")
-      spark.sql(s"DROP TABLE IF EXISTS ${parts.map(p => s"`$p`").mkString(".")}")
-      val (db, tbl) =
-        if (parts.length == 2) (parts(0), parts(1))
-        else (spark.catalog.currentDatabase, parts(0))
-      if (spark.catalog.databaseExists(db)) {
-        val loc = new Path(
-          new Path(spark.catalog.getDatabase(db).locationUri),
-          tbl.toLowerCase(java.util.Locale.ROOT))
-        val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(loc)) fs.delete(loc, true)
-        // a replaced table restarts its generation numbering, so every
-        // per-(location, generation) cache would otherwise serve the
-        // DEAD table's state under colliding keys
-        verifiedGenerations.remove(loc.toString)
-        lastSeenGen.remove(loc.toString)
-        invalidateSnapshots(loc.toString)
-        FileStats.invalidate(loc.toString)
-      }
-    }
+    val catalog = spark.sessionState.catalog
     val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    val existedBefore = spark.sessionState.catalog.tableExists(ident)
-    def locOf: Path =
-      new Path(spark.sessionState.catalog.getTableMetadata(ident).location)
-    // the append commit adds (post-write listing − pre-write listing)
-    // to the manifest; capture the pre-write listing while the table
-    // still has only its committed files
-    val beforeNames: Set[String] = profPhase(s"save($table,$mode) prelist") {
-      if (mode == SaveMode.Append && existedBefore) {
-        val loc = locOf
-        dataFileNames(fileSystemOf(spark, loc), loc)
-      } else Set.empty
-    }
-    val guard = if (existedBefore) Some(locOf.toString) else None
-    guard.foreach { l => verifiedGenerations.remove(l); appendBegin(l) }
-    try {
-      val sort = if (sortCols.nonEmpty) sortCols else keys
-      if (mode == SaveMode.Append && existedBefore) {
-        // DIRECT append (round 15): an append into an existing bucketed
-        // table bypasses `saveAsTable` entirely — the catalog entry,
-        // schema and bucket spec already exist, and the measured cost
-        // of the `saveAsTable` machinery (DDL resolution, insert
-        // command, relation-cache refresh) was ~100–150 ms of the
-        // ~430 ms a few-hundred-row append paid, pure fixed cost per
-        // micro-batch commit. The batch is clustered and written as
-        // plain parquet to a staging subdir, each file is renamed into
-        // the table dir under Spark's own bucketed-file naming (the
-        // clustering makes partition index == bucket id, so the name
-        // is derivable), and the manifest commit adds the EXACT staged
-        // names — no listing diff needed. Same rows, same layout, same
-        // generation sequence as the saveAsTable path it replaces.
-        appendDirect(spark, table, df, keys, buckets, sort, writeOptions,
-          beforeNames, appendSubSplits)
-      } else {
-      // Cluster rows by the bucket function BEFORE the bucketed write
-      // (guide §6 / Iceberg write.distribution-mode=hash): Spark's
-      // bucketBy writer emits one file per (task × bucket-present), so
-      // an un-clustered write fans out up to tasks×buckets small files
-      // PER COMMIT — the append-heavy index families were measured at
-      // ~283 files after one q151 fixture run, and every later read,
-      // footer stamp, manifest listing and compaction pays for them.
-      // repartition(buckets, keys) uses the SAME HashPartitioning
-      // (pmod(murmur3, n)) as the bucket-id assignment, so each task
-      // holds exactly one bucket: one file per non-empty bucket per
-      // commit, the layout stageSwapCommit already enforces for
-      // maintenance rewrites. Row sets (and therefore every query
-      // result) are unchanged; a caller's own repartition collapses
-      // into this one (CollapseRepartition).
-      val clustered = {
-        import org.apache.spark.sql.functions.col
-        df.repartition(buckets, keys.map(col): _*)
-      }
-      // writeOptions reach the parquet writer (e.g.
-      // `parquet.bloom.filter.enabled#col` for [[FileStats.loadEquals]]
-      // pruning) AND persist as table storage properties, so
-      // maintenance rewrites ([[stageSwapCommit]]) re-apply them — a
-      // compacted or merged file keeps its blooms
-      profPhase(s"save($table,$mode) write") {
-        clustered.write.mode(mode)
-          .options(writeOptions)
-          .bucketBy(buckets, keys.head, keys.tail: _*)
-          .sortBy(sort.head, sort.tail: _*)
-          .format("parquet")
-          .saveAsTable(table)
-      }
-      if (!(mode == SaveMode.Ignore && existedBefore)) {
-        val loc = locOf
-        val fs = fileSystemOf(spark, loc)
-        profPhase(s"save($table,$mode) commit") { withManifestLock(loc.toString) {
-          val names = dataFileNames(fs, loc)
-          // every mode reaching here wrote into a fresh or pre-cleared
-          // dir (appends into an EXISTING table take [[appendDirect]];
-          // an Append that CREATED the table is a create, as before):
-          // dir == manifest
-          val gen = writeNextManifest(fs, loc, names, op = "create",
-            prevNames = Some(Set.empty))
-          verifiedGenerations.put(loc.toString, gen)
-        } }
-        // commit-time sidecar stamping (opt-in, marker-gated, outside
-        // the lock): the committer footer-reads only its new files so
-        // the first reader pays zero footer opens
-        profPhase(s"save($table,$mode) stamp") {
-          FileStats.stampIfEnabled(spark, table, loc)
+    val existing =
+      if (catalog.tableExists(ident)) Some(catalog.getTableMetadata(ident))
+      else None
+    val sort = if (sortCols.nonEmpty) sortCols else keys
+    existing match {
+      case Some(meta) if mode == SaveMode.Append =>
+        val loc = new Path(meta.location)
+        // the append commit adds (post-write listing − pre-write listing)
+        // to the manifest; capture the pre-write listing while the table
+        // still has only its committed files
+        val beforeNames = profPhase(s"save($table,$mode) prelist") {
+          dataFileNames(fileSystemOf(spark, loc), loc)
         }
-      }
-      }
-    } finally guard.foreach(appendEnd)
+        verifiedGenerations.remove(loc.toString)
+        appendBegin(loc.toString)
+        try appendDirect(spark, table, df, keys, buckets, sort, writeOptions,
+          beforeNames, appendSubSplits)
+        finally appendEnd(loc.toString)
+      case _ =>
+        val meta = existing
+          .filter(compatible(_, df, keys, buckets, sort, writeOptions))
+          .getOrElse {
+            // destructive pre-clear ONLY under Overwrite — an Append
+            // that creates the table must not drop anything
+            if (mode == SaveMode.Overwrite)
+              profPhase(s"save($table,$mode) preclear") { dropAndClear(spark, table) }
+            createEntry(spark, ident, df, keys, buckets, sort, writeOptions)
+          }
+        replaceContents(spark, table, meta, df, keys, buckets, sort,
+          writeOptions)
+    }
+  }
+
+  /** Drop `table` and delete what is left at its default location. A
+    * previous SESSION's managed-table location can survive in the
+    * warehouse dir while the (in-memory) catalog entry did not, and
+    * Spark refuses to create a managed table over it
+    * (LOCATION_ALREADY_EXISTS). Qualified names quote each part
+    * separately (one backtick pair around `db.tbl` makes it a single
+    * identifier) and resolve the orphan location from the DATABASE's
+    * catalog location — the string-derived `<warehouse>/<table>` is
+    * wrong for any non-default database (`<warehouse>/<db>.db/<tbl>`)
+    * or a database created with a custom LOCATION. The caller checks
+    * that `table` has at most two parts and no backticks. */
+  private[graft] def dropAndClear(spark: SparkSession, table: String): Unit = {
+    val parts = table.split('.')
+    spark.sql(s"DROP TABLE IF EXISTS ${parts.map(p => s"`$p`").mkString(".")}")
+    val (db, tbl) =
+      if (parts.length == 2) (parts(0), parts(1))
+      else (spark.catalog.currentDatabase, parts(0))
+    if (spark.catalog.databaseExists(db)) {
+      val loc = new Path(
+        new Path(spark.catalog.getDatabase(db).locationUri),
+        tbl.toLowerCase(java.util.Locale.ROOT))
+      val fs = fileSystemOf(spark, loc)
+      if (fs.exists(loc)) fs.delete(loc, true)
+    }
+  }
+
+  /** Can `meta`'s catalog entry hold `df` as requested? Provider, bucket
+    * spec, column names+types (nullability-insensitive — the write
+    * aligns/casts to the CATALOG schema either way) and the requested
+    * writer options must all match. */
+  private def compatible(meta: org.apache.spark.sql.catalyst.catalog.CatalogTable,
+                         df: DataFrame, keys: Seq[String], buckets: Int,
+                         sort: Seq[String],
+                         writeOptions: Map[String, String]): Boolean =
+    meta.provider.exists(_.equalsIgnoreCase("parquet")) &&
+      meta.bucketSpec.exists(s => s.numBuckets == buckets &&
+        s.bucketColumnNames == keys && s.sortColumnNames == sort) &&
+      meta.schema.fields.toSeq.map(f => (f.name, f.dataType.catalogString)) ==
+        df.schema.fields.toSeq.map(f => (f.name, f.dataType.catalogString)) &&
+      writeOptions.forall { case (k, v) =>
+        meta.storage.properties.get(k).contains(v) }
+
+  /** Create the managed catalog entry for a bucketed parquet table
+    * without writing any data: `df`'s schema (nullable, as a
+    * data-source table stores it), the bucket spec, and `writeOptions`
+    * as storage properties — they reach the parquet writer on every
+    * later commit (e.g. `parquet.bloom.filter.enabled#col` for
+    * [[FileStats.loadEquals]] pruning), and [[stageSwapCommit]]
+    * re-applies their `parquet.*` part, so a compacted or merged file
+    * keeps its blooms. Managed, so `DROP TABLE` deletes the data. */
+  private def createEntry(spark: SparkSession,
+                          ident: org.apache.spark.sql.catalyst.TableIdentifier,
+                          df: DataFrame, keys: Seq[String], buckets: Int,
+                          sort: Seq[String],
+                          writeOptions: Map[String, String])
+      : org.apache.spark.sql.catalyst.catalog.CatalogTable = {
+    import org.apache.spark.sql.catalyst.catalog._
+    spark.sessionState.catalog.createTable(CatalogTable(
+      identifier = ident,
+      tableType = CatalogTableType.MANAGED,
+      storage = CatalogStorageFormat.empty.copy(properties = writeOptions),
+      schema = org.apache.spark.sql.GraftBridge.asNullable(df.schema),
+      provider = Some("parquet"),
+      bucketSpec = Some(BucketSpec(buckets, keys, sort))),
+      ignoreIfExists = false)
+    spark.sessionState.catalog.getTableMetadata(ident)
   }
 
   /** Staged plain-parquet file name → the same name under Spark's
@@ -292,10 +275,11 @@ object Bucketed {
 
   /** Write `df` bucket-clustered and sorted as plain parquet into a
     * staging subdir of `dir`, then rename each committed file to its
-    * bucketed name — the shared write half of [[appendDirect]] and
-    * [[stageSwapCommit]]. With `renameInto = Some(dir)` the files move
-    * straight into the table dir (append path — unlisted, so invisible
-    * until the manifest commit); with None they stay in the staging
+    * bucketed name — the one data write of every governed commit
+    * ([[replaceContents]], [[appendDirect]], [[stageSwapCommit]]). With
+    * `renameInto = Some(dir)` the files move straight into the table
+    * dir (create/append path — unlisted, so invisible until the
+    * manifest commit); with None they stay in the staging
     * dir under their bucketed names (rewrite path — the CAS-checked
     * commit renames them under the manifest lock). Returns the
     * bucketed names with their current paths. The caller owns deleting
@@ -325,37 +309,21 @@ object Bucketed {
       }
   }
 
-  /** [[save]]'s Overwrite fast path: when the existing table's
-    * provider, bucket spec, column names+types (nullability-insensitive
-    * — the write aligns/casts to the CATALOG schema either way) and
-    * requested writer options already match, replace the table's
-    * CONTENTS without touching the catalog: clear the dir (data,
-    * manifests, history, markers — the same reset the drop+delete path
-    * produced, so generation numbering restarts at 1), direct-write the
-    * clustered rows, commit a fresh `create` manifest. Returns false —
-    * caller falls back to the full drop+recreate — on any mismatch. */
-  private def overwriteInPlace(spark: SparkSession, table: String,
-                               df: DataFrame, keys: Seq[String],
-                               buckets: Int, sort: Seq[String],
-                               writeOptions: Map[String, String]): Boolean = {
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    if (!spark.sessionState.catalog.tableExists(ident)) return false
-    val meta = spark.sessionState.catalog.getTableMetadata(ident)
-    val compatible =
-      meta.provider.exists(_.equalsIgnoreCase("parquet")) &&
-        meta.bucketSpec.exists(s => s.numBuckets == buckets &&
-          s.bucketColumnNames == keys && s.sortColumnNames == sort) &&
-        meta.schema.fields.toSeq.map(f => (f.name, f.dataType.catalogString)) ==
-          df.schema.fields.toSeq.map(f => (f.name, f.dataType.catalogString)) &&
-        writeOptions.forall { case (k, v) =>
-          meta.storage.properties.get(k).contains(v) }
-    if (!compatible) return false
-    profPhase(s"save($table,Overwrite) in-place") {
+  /** Replace the contents of `meta`'s table with `df`: clear the dir
+    * (data, manifests, history, markers — so generation numbering
+    * restarts at 1), write the clustered rows straight into it, commit
+    * a fresh `create` manifest. */
+  private def replaceContents(spark: SparkSession, table: String,
+                              meta: org.apache.spark.sql.catalyst.catalog.CatalogTable,
+                              df: DataFrame, keys: Seq[String],
+                              buckets: Int, sort: Seq[String],
+                              writeOptions: Map[String, String]): Unit =
+    profPhase(s"save($table) replace") {
       val loc = new Path(meta.location)
       val fs = fileSystemOf(spark, loc)
-      // cache hygiene identical to the drop path: the replace restarts
-      // generation numbering, so stale per-(location, generation)
-      // entries would serve the dead table's state under colliding keys
+      // the replace restarts generation numbering, so stale
+      // per-(location, generation) entries would serve the dead
+      // table's state under colliding keys
       verifiedGenerations.remove(loc.toString)
       lastSeenGen.remove(loc.toString)
       invalidateSnapshots(loc.toString)
@@ -377,12 +345,13 @@ object Bucketed {
             verifiedGenerations.put(loc.toString, gen)
           }
           spark.catalog.refreshTable(table)
+          // commit-time sidecar stamping (opt-in, marker-gated): the
+          // committer footer-reads only its new files so the first
+          // reader pays zero footer opens
           FileStats.stampIfEnabled(spark, table, loc)
         } finally { fs.delete(stage, true); () }
       } finally appendEnd(loc.toString)
     }
-    true
-  }
 
   /** [[save]]'s Append fast path into an EXISTING table — plain
     * clustered parquet write + bucketed rename + manifest commit with
@@ -405,8 +374,7 @@ object Bucketed {
       s"append bucket spec (${keys.mkString(",")} x $buckets) does not " +
         s"match $table's (${spec.bucketColumnNames.mkString(",")} x " +
         s"${spec.numBuckets})")
-    // by-name append against the table's schema — the same resolution
-    // (and the same mismatch error) the saveAsTable path enforced
+    // by-name append against the table's schema
     require(df.columns.toSet == meta.schema.fieldNames.toSet,
       s"append columns [${df.columns.sorted.mkString(",")}] do not match " +
         s"$table's schema [${meta.schema.fieldNames.sorted.mkString(",")}]")
@@ -451,8 +419,7 @@ object Bucketed {
             verifiedGenerations.put(loc.toString, gen)
         }
       }
-      // saveAsTable refreshed the catalog relation cache as a side
-      // effect; the direct path must too, or a dir-scan reader
+      // refresh the catalog relation cache, or a dir-scan reader
       // ([[loadDirect]] / spark.table) would keep a stale file listing
       spark.catalog.refreshTable(table)
       FileStats.stampIfEnabled(spark, table, loc)
@@ -683,11 +650,10 @@ object Bucketed {
     * window.
     *
     * Runs as ONE job over only the oversized buckets' files: their
-    * rows are re-bucketed through a staging table written with the
-    * SAME bucket spec (the writer computes each row's bucket id from
-    * the bucket columns, so file↔bucket assignment is Spark's own, not
-    * re-derived here), pre-partitioned on the bucket key so each
-    * bucket lands in exactly one task and therefore one file. A
+    * rows are re-clustered by the table's bucket function
+    * ([[writeClustered]]: the same `pmod(murmur3, n)` Spark's bucketed
+    * writer uses), so each bucket lands in exactly one task and
+    * therefore one file. A
     * 4096-bucket index where only the 30 buckets touched since the
     * last pass are oversized reads and rewrites 30 buckets' files in
     * one 30-task wave — per-bucket selectivity AND full cluster
@@ -1036,7 +1002,7 @@ object Bucketed {
         foreignCommitCount(dir.toString))
     }
 
-  /** Stage `rows` through a same-bucket-spec staging table, rename the
+  /** Stage `rows` bucket-clustered in a staging subdir, rename the
     * staged files into `dir` (still INVISIBLE — unlisted), commit by
     * writing the next generation manifest (old file names out, new in,
     * entries appended concurrently preserved), then delete the old
@@ -1057,16 +1023,10 @@ object Bucketed {
     // strip the file features reads prune on
     val parquetOpts = meta.storage.properties
       .filter { case (k, _) => k.startsWith("parquet.") }
-    // DIRECT staging write (round 15): the new generation's rows are
-    // clustered and written as plain parquet into a staging SUBDIR of
-    // the table dir, then renamed under Spark's bucketed naming —
-    // replacing the former `<table>__rewrite` staging TABLE, whose
-    // catalog lifecycle (create + saveAsTable + drop, plus the staging
-    // table's own manifest commit) was ~200 ms of pure fixed cost per
-    // rewrite on top of the identical data write. Same clustering
-    // (partition index == bucket id), same sort, same one-manifest-PUT
-    // commit, same crash windows: staged files stay invisible until
-    // the rename+commit below.
+    // the new generation's rows are clustered and written as plain
+    // parquet into a staging SUBDIR of the table dir, then renamed
+    // under Spark's bucketed naming: staged files stay invisible until
+    // the rename+commit below
     val stage = new Path(dir,
       s"_graft_rewrite_stage-${java.util.UUID.randomUUID()}")
     val nNew =

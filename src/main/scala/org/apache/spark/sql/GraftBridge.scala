@@ -9,7 +9,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * split) — plus the two hooks a custom LogicalPlan operator needs:
   * reading a Dataset's analyzed plan and wrapping a plan back into a
   * DataFrame (`Dataset.ofRows`, the same entry every internal DataFrame
-  * construction uses). Nothing else from the private surface is
+  * construction uses), and the nullable schema a data-source table's
+  * catalog entry stores. Nothing else from the private surface is
   * touched. */
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -26,4 +27,8 @@ object GraftBridge {
     * see the node). */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `schema` with every field, element and value nullable — what
+    * `saveAsTable` stores for a file-source table. */
+  def asNullable(schema: types.StructType): types.StructType = schema.asNullable
 }

@@ -15,8 +15,13 @@ class BucketedSpec extends SparkSuite {
     try {
       val a = (1 to 5000).map(i => (s"path/$i", s"hash_a_$i")).toDF("path", "md5hash")
       val b = (1 to 5000).map(i => (s"path/$i", s"hash_b_$i")).toDF("path", "md5hash")
+      // both tables freshly CREATED: one by an Overwrite, one by an
+      // Append into a missing table
+      spark.sql("DROP TABLE IF EXISTS graft_bucketed_a")
+      spark.sql("DROP TABLE IF EXISTS graft_bucketed_b")
       Bucketed.save(a, "graft_bucketed_a", Seq("path"), buckets = 4)
-      Bucketed.save(b, "graft_bucketed_b", Seq("path"), buckets = 4)
+      Bucketed.save(b, "graft_bucketed_b", Seq("path"), buckets = 4,
+        mode = org.apache.spark.sql.SaveMode.Append)
       val la = Bucketed.load(spark, "graft_bucketed_a")
       val lb = Bucketed.load(spark, "graft_bucketed_b")
         .select(col("path"), col("md5hash").as("hash_b"))
