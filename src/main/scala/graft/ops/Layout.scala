@@ -72,7 +72,11 @@ object Layout {
     * write (it is layout, not data — the projection after the range
     * exchange preserves the clustered order). Same orphan-location
     * preclear as the bucketed writer
-    * ([[graft.sources.Bucketed.dropAndClear]]). */
+    * ([[graft.sources.Bucketed.dropAndClear]]); the written files are
+    * then committed as the table's generation-1 `create` manifest
+    * ([[graft.sources.Bucketed.commitCreated]]), so the table is an
+    * unbucketed governed table that [[graft.sources.Bucketed.load]] and
+    * [[graft.sources.FileStats]] resolve like any other. */
   def saveClustered(df: DataFrame, table: String, xCol: String,
                     yCol: String, numFiles: Int): Unit = {
     val spark = df.sparkSession
@@ -81,5 +85,6 @@ object Layout {
     graft.sources.Bucketed.dropAndClear(spark, table)
     zorderWrite(df, numFiles, xCol, yCol).drop("zorder")
       .write.mode("overwrite").format("parquet").saveAsTable(table)
+    graft.sources.Bucketed.commitCreated(spark, table)
   }
 }

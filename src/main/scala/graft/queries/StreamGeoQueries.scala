@@ -187,13 +187,16 @@ object StreamGeoQueries {
           .select(col("k"), col("v"), lit(true).as("del"))
         val base = Streaming.scratchBase.resolve(
           s"graft-q166-${Setup.dirTag(dir)}").toString
-        inserts.unionByName(updates).unionByName(deletes)
-          .repartition(3)
-          .write.mode("overwrite").parquet(s"$base/src")
-        Streaming.mergeStreamIntoBucketed(
-          Streaming.fileStream(s, s"$base/src", maxFilesPerTrigger = Some(1)),
-          name, deleteCol = Some("del"))
-        ()
+        // the merge drains AvailableNow and nothing reads the staged
+        // source afterwards, so it leaves the scratch base with the call
+        try {
+          inserts.unionByName(updates).unionByName(deletes)
+            .repartition(3)
+            .write.mode("overwrite").parquet(s"$base/src")
+          Streaming.mergeStreamIntoBucketed(
+            Streaming.fileStream(s, s"$base/src", maxFilesPerTrigger = Some(1)),
+            name, deleteCol = Some("del"))
+        } finally org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(base))
       }
       graft.sources.Bucketed.load(s, name).select("k", "v").orderBy("k")
     }))

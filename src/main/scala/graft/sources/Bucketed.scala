@@ -36,11 +36,11 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * inside the window can never observe a mixed generation OR a
   * FileNotFound. (At default retention 1 superseded files delete at
   * commit, so a frame held across a commit can hit the deleted file —
-  * retention is the concurrency dial.) The dir-scan read survives as
-  * [[loadDirect]], the documented opt-out, correct only at default
-  * retention because the dir holds multiple generations otherwise.
-  * Crash windows serve the OLD generation intact — no duplicate-rows
-  * window, no lost-rows window:
+  * retention is the concurrency dial.) Every table has a manifest from
+  * its first commit ([[save]], [[graft.ops.Layout.saveClustered]]) and
+  * an Overwrite is the next generation, never a restart, so no read
+  * falls back to a directory scan. Crash windows serve the OLD
+  * generation intact — no duplicate-rows window, no lost-rows window:
   *
   *   - crash before the manifest commit → new files are unlisted
   *     orphans; readers serve the old generation; the next [[load]] or
@@ -58,7 +58,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *
   * CONCURRENCY CONTRACT (single maintenance writer, ENFORCED): the
   * rewrite-based maintenance ops — [[compactBuckets]],
-  * [[rewriteBuckets]], [[rewriteAll]], [[replaceAll]] and their
+  * [[rewriteBuckets]], [[rewriteAll]], [[replaceAll]], a non-Append
+  * [[save]] and their
   * callers (index deletion, codebook reassignment, PQ refresh) — are
   * individually crash-safe but NOT safe to run concurrently with each
   * other on one table: two overlapping rewrites each read the pre-op
@@ -105,18 +106,27 @@ object Bucketed {
   /** Save `df` as a bucketed, sorted managed table. Only
     * `SaveMode.Append` and `SaveMode.Overwrite` are supported.
     *
-    * One decision, then one write. An Append into an existing table
+    * One decision, then one commit. An Append into an existing table
     * commits the next generation through [[appendDirect]]. Anything
-    * else (an Overwrite, or an Append that creates the table) replaces
-    * the table's contents through [[replaceContents]]: the catalog
-    * entry stays when its provider, bucket spec, column names and types
-    * and writer options already match the request ([[compatible]]);
-    * otherwise, or when there is none, an Overwrite first drops the
-    * table and clears its location ([[dropAndClear]]) and a
-    * catalog-only create ([[createEntry]]) makes a fresh managed entry.
-    * Both writes go through [[writeClustered]]: one file per non-empty
-    * bucket, sorted by `sortCols` (default: the keys). A replace
-    * commits a fresh generation-1 `create` manifest.
+    * else (an Overwrite, or an Append that creates the table) is one
+    * [[stageSwapCommit]], the commit [[replaceAll]] makes:
+    *   - a [[compatible]] catalog entry (provider, bucket spec, column
+    *     names and types, writer options) stays, and `df` becomes
+    *     generation N+1 (`replace`), keeping history and retention.
+    *     Nothing is cleared first, so a failed Overwrite leaves
+    *     generation N served and no reader sees an empty or partial
+    *     table. The pair pointer is deleted before the commit (a
+    *     failure then serves the old contents at head), the other
+    *     markers after it ([[dropMarkers]]: a crash between leaves a
+    *     stale marker that refuses loudly, never one that serves);
+    *   - otherwise an Overwrite drops the table and clears its
+    *     location ([[dropAndClear]]), and a catalog-only create
+    *     ([[createEntry]]) makes a fresh entry committed as generation
+    *     1 (`create`). Until that commit the table has no committed
+    *     rows; a Delta-style REPLACE swapping the entry after the write
+    *     would close that window if a caller needs it.
+    * The rows are written by [[writeClustered]]: one file per
+    * non-empty bucket, sorted by `sortCols` (default: the keys).
     *
     * `buckets` should be sized so a bucket of the LARGER recurring join
     * side fits an executor core's working set.
@@ -174,17 +184,26 @@ object Bucketed {
           beforeNames, appendSubSplits)
         finally appendEnd(loc.toString)
       case _ =>
-        val meta = existing
-          .filter(compatible(_, df, keys, buckets, sort, writeOptions))
-          .getOrElse {
-            // destructive pre-clear ONLY under Overwrite — an Append
-            // that creates the table must not drop anything
-            if (mode == SaveMode.Overwrite)
-              profPhase(s"save($table,$mode) preclear") { dropAndClear(spark, table) }
-            createEntry(spark, ident, df, keys, buckets, sort, writeOptions)
+        val create =
+          !existing.exists(compatible(_, df, keys, buckets, sort, writeOptions))
+        if (create) {
+          // destructive pre-clear ONLY under Overwrite — an Append
+          // that creates the table must not drop anything
+          if (mode == SaveMode.Overwrite)
+            profPhase(s"save($table,$mode) preclear") { dropAndClear(spark, table) }
+          createEntry(spark, ident, df, keys, buckets, sort, writeOptions)
+        }
+        profPhase(s"save($table,$mode) replace") {
+          withMaintenanceLock(spark, table) { (meta, dir, fs) =>
+            if (create) forgetLocation(dir.toString)
+            else withManifestLock(dir.toString) {
+              fs.delete(new Path(dir, PairName), false)
+            }
+            replaceLocked(spark, table, meta, dir, fs, df,
+              op = if (create) "create" else "replace")
+            if (!create) dropMarkers(fs, dir)
           }
-        replaceContents(spark, table, meta, df, keys, buckets, sort,
-          writeOptions)
+        }
     }
   }
 
@@ -211,6 +230,30 @@ object Bucketed {
         tbl.toLowerCase(java.util.Locale.ROOT))
       val fs = fileSystemOf(spark, loc)
       if (fs.exists(loc)) fs.delete(loc, true)
+    }
+  }
+
+  /** A create is the one commit that restarts generations at 1, at a
+    * location an earlier (dropped) table may have used: drop what this
+    * process cached per (location, generation), or the keys collide. */
+  private def forgetLocation(location: String): Unit = {
+    invalidateSnapshots(location)
+    FileStats.invalidate(location)
+  }
+
+  /** Commit the `part-` files a plain writer just put at `table`'s
+    * fresh location as its generation-1 `create` manifest — how
+    * [[graft.ops.Layout.saveClustered]]'s unbucketed table joins the
+    * governed read path. The caller cleared the location first. */
+  private[graft] def commitCreated(spark: SparkSession, table: String): Unit = {
+    val loc = new Path(spark.sessionState.catalog.getTableMetadata(
+      spark.sessionState.sqlParser.parseTableIdentifier(table)).location)
+    val fs = fileSystemOf(spark, loc)
+    forgetLocation(loc.toString)
+    withManifestLock(loc.toString) {
+      val gen = writeNextManifest(fs, loc, dataFileNames(fs, loc),
+        pinnedGen = Some(1L), op = "create", prevNames = Some(Set.empty))
+      verifiedGenerations.put(loc.toString, gen)
     }
   }
 
@@ -242,8 +285,7 @@ object Bucketed {
                           ident: org.apache.spark.sql.catalyst.TableIdentifier,
                           df: DataFrame, keys: Seq[String], buckets: Int,
                           sort: Seq[String],
-                          writeOptions: Map[String, String])
-      : org.apache.spark.sql.catalyst.catalog.CatalogTable = {
+                          writeOptions: Map[String, String]): Unit = {
     import org.apache.spark.sql.catalyst.catalog._
     spark.sessionState.catalog.createTable(CatalogTable(
       identifier = ident,
@@ -253,7 +295,6 @@ object Bucketed {
       provider = Some("parquet"),
       bucketSpec = Some(BucketSpec(buckets, keys, sort))),
       ignoreIfExists = false)
-    spark.sessionState.catalog.getTableMetadata(ident)
   }
 
   /** Staged plain-parquet file name → the same name under Spark's
@@ -276,12 +317,12 @@ object Bucketed {
   /** Write `df` bucket-clustered and sorted as plain parquet into a
     * staging subdir of `dir`, then rename each committed file to its
     * bucketed name — the one data write of every governed commit
-    * ([[replaceContents]], [[appendDirect]], [[stageSwapCommit]]). With
-    * `renameInto = Some(dir)` the files move straight into the table
-    * dir (create/append path — unlisted, so invisible until the
-    * manifest commit); with None they stay in the staging
-    * dir under their bucketed names (rewrite path — the CAS-checked
-    * commit renames them under the manifest lock). Returns the
+    * ([[appendDirect]], [[stageSwapCommit]]). With `renameInto =
+    * Some(dir)` the files move straight into the table dir (append
+    * path — unlisted, so invisible until the manifest commit); with
+    * None they stay in the staging dir under their bucketed names
+    * (replace and rewrite path — the CAS-checked commit renames them
+    * under the manifest lock). Returns the
     * bucketed names with their current paths. The caller owns deleting
     * `stage`. */
   private def writeClustered(df: DataFrame, schema: org.apache.spark.sql.types.StructType,
@@ -308,50 +349,6 @@ object Bucketed {
         name -> to
       }
   }
-
-  /** Replace the contents of `meta`'s table with `df`: clear the dir
-    * (data, manifests, history, markers — so generation numbering
-    * restarts at 1), write the clustered rows straight into it, commit
-    * a fresh `create` manifest. */
-  private def replaceContents(spark: SparkSession, table: String,
-                              meta: org.apache.spark.sql.catalyst.catalog.CatalogTable,
-                              df: DataFrame, keys: Seq[String],
-                              buckets: Int, sort: Seq[String],
-                              writeOptions: Map[String, String]): Unit =
-    profPhase(s"save($table) replace") {
-      val loc = new Path(meta.location)
-      val fs = fileSystemOf(spark, loc)
-      // the replace restarts generation numbering, so stale
-      // per-(location, generation) entries would serve the dead
-      // table's state under colliding keys
-      verifiedGenerations.remove(loc.toString)
-      lastSeenGen.remove(loc.toString)
-      invalidateSnapshots(loc.toString)
-      FileStats.invalidate(loc.toString)
-      appendBegin(loc.toString)
-      try {
-        if (fs.exists(loc))
-          fs.listStatus(loc).foreach(s => fs.delete(s.getPath, true))
-        else fs.mkdirs(loc)
-        val stage = new Path(loc,
-          s"_graft_append_stage-${java.util.UUID.randomUUID()}")
-        try {
-          val newNames = writeClustered(df, meta.schema, keys, buckets,
-            sort, writeOptions, fs, stage, renameInto = Some(loc))
-            .map(_._1).toSet
-          withManifestLock(loc.toString) {
-            val gen = writeNextManifest(fs, loc, newNames, op = "create",
-              prevNames = Some(Set.empty))
-            verifiedGenerations.put(loc.toString, gen)
-          }
-          spark.catalog.refreshTable(table)
-          // commit-time sidecar stamping (opt-in, marker-gated): the
-          // committer footer-reads only its new files so the first
-          // reader pays zero footer opens
-          FileStats.stampIfEnabled(spark, table, loc)
-        } finally { fs.delete(stage, true); () }
-      } finally appendEnd(loc.toString)
-    }
 
   /** [[save]]'s Append fast path into an EXISTING table — plain
     * clustered parquet write + bucketed rename + manifest commit with
@@ -419,8 +416,8 @@ object Bucketed {
             verifiedGenerations.put(loc.toString, gen)
         }
       }
-      // refresh the catalog relation cache, or a dir-scan reader
-      // ([[loadDirect]] / spark.table) would keep a stale file listing
+      // refresh the catalog relation cache, or a `spark.table` reader
+      // would keep a stale file listing
       spark.catalog.refreshTable(table)
       FileStats.stampIfEnabled(spark, table, loc)
     } finally { fs.delete(stage, true); () }
@@ -451,11 +448,12 @@ object Bucketed {
     * cache hit. The verify+reconcile pass runs once per table per
     * process; each commit advances the generation, so the next load
     * builds (and caches) the new snapshot with one dir listing under
-    * the manifest lock. With an append in flight (no verified head)
-    * the read still resolves through the manifest's last committed
-    * generation; only a table with NO manifest at all (pre-manifest
-    * layout) is served as the directory scan ([[loadDirect]] — the
-    * documented opt-out). */
+    * the manifest lock. With an append or maintenance op in flight (no
+    * verified head) the read still resolves through the manifest's
+    * last committed generation. Every table the engine writes has a
+    * manifest from its first commit, so a table with no valid manifest
+    * is never served: a directory scan would read uncommitted or
+    * superseded files as live rows. */
   def load(spark: SparkSession, table: String): DataFrame = {
     val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
     val meta = spark.sessionState.catalog.getTableMetadata(ident)
@@ -464,39 +462,26 @@ object Bucketed {
     val gen = verifiedGenerations.getOrDefault(loc.toString, -1L)
     if (gen >= 0L) snapshotFrame(spark, table, meta, loc, gen)
     else {
-      // no verified head — an append is in flight (its files are
-      // legitimately unlisted until its commit) or the table was never
-      // verified this round. Still resolve through the MANIFEST when
-      // one exists: on a retention>1 table the dir holds superseded
-      // in-place-retained generations, and a dir scan would read them
-      // as live rows. Only a truly pre-manifest table gets the dir
-      // scan. Cost inside an append window: one manifest read per
+      // no verified head — an append or maintenance op is in flight
+      // (its files are legitimately unlisted until its commit) or the
+      // table was never verified this round: resolve through the
+      // MANIFEST. Cost inside such a window: one manifest read per
       // load (the frame itself is memo-cached per generation) — paid
-      // only while the append runs, the price of never serving its
+      // only while the op runs, the price of never serving its
       // uncommitted files.
       val fs = fileSystemOf(spark, loc)
       withManifestLock(loc.toString) { readManifest(fs, loc) } match {
         case Some((g, _)) => snapshotFrame(spark, table, meta, loc, g)
-        case None => spark.table(table)
+        case None => throw noManifest(table, loc)
       }
     }
   }
 
-  /** The DIRECTORY-scan read (`spark.table`) behind the same
-    * verify+reconcile pass — the opt-out from [[load]]'s
-    * snapshot-resolved default for callers that specifically want the
-    * catalog relation (it retimes to whatever generation is current
-    * at each evaluation). Only correct under default retention:
-    * with [[setRetention]] > 1 superseded generations' files stay in
-    * the directory (unlisted) and a dir scan would read them as live
-    * rows. */
-  def loadDirect(spark: SparkSession, table: String): DataFrame = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table))
-    val loc = new Path(meta.location)
-    verifyOnce(spark, table, loc)
-    spark.table(table)
-  }
+  /** A table whose create never committed (a crash, a torn first
+    * manifest) or whose files were written outside the commit paths. */
+  private def noManifest(table: String, loc: Path): IllegalStateException =
+    new IllegalStateException(s"$table has no valid generation manifest " +
+      s"at $loc — re-run the Overwrite that creates it")
 
   /** [[load]]'s cold path: verify manifest↔disk agreement, reconcile
     * crash orphans, and mark the location verified — once per table
@@ -721,10 +706,12 @@ object Bucketed {
     * indexes whose new generation derives from somewhere OTHER than
     * their own files (the PQ-refresh shape: codes are lossy, so the
     * refreshed code postings re-encode from the companion full-vector
-    * index, not from the code table). Unlike [[save]](Overwrite) there
-    * is no window where the table is empty or partially written:
-    * staged files land unlisted, one manifest write flips readers from
-    * the complete old generation to the complete new one, and a crash
+    * index, not from the code table). The same commit as a compatible
+    * [[save]](Overwrite), but it keeps every marker: a pair-governed
+    * caller re-stamps through its pointer afterwards. There is no
+    * window where the table is empty or partially written: staged
+    * files land unlisted, one manifest write flips readers from the
+    * complete old generation to the complete new one, and a crash
     * anywhere leaves one of the two fully served. Files committed by
     * appends that land DURING the replace survive it (their manifest
     * entries are preserved); ordering an append's rows against the
@@ -733,16 +720,33 @@ object Bucketed {
   def replaceAll(spark: SparkSession, table: String,
                  rows: DataFrame): Int =
     withMaintenanceLock(spark, table) { (meta, dir, fs) =>
-      reconcileOrphans(spark, table, dir, fs)
-      val readSet = snapshotReadSet(fs, dir)
-      val all = listDataFiles(fs, dir)
-      val oldFiles = readSet.listed match {
-        case Some(names) => all.filter(f => names(f.getPath.getName))
-        case None => all
-      }
-      stageSwapCommit(spark, table, meta, dir, fs, rows, oldFiles,
-        legacyBase = oldFiles.map(_.getPath.getName).toSet, readSet,
-        op = "replace")
+      replaceLocked(spark, table, meta, dir, fs, rows, op = "replace")
+    }
+
+  /** [[replaceAll]]'s and [[save]]'s replace commit, superseding every
+    * file of the read set; the caller holds the maintenance lock. */
+  private def replaceLocked(spark: SparkSession, table: String,
+                            meta: org.apache.spark.sql.catalyst.catalog.CatalogTable,
+                            dir: Path, fs: FileSystem, rows: DataFrame,
+                            op: String): Int = {
+    reconcileOrphans(spark, table, dir, fs)
+    val readSet = snapshotReadSet(fs, dir)
+    stageSwapCommit(spark, table, meta, dir, fs, rows, readSet.files,
+      readSet, op)
+  }
+
+  /** Delete the markers a rebuilt table must not inherit (stream
+    * owner, follow, sync, stats stamp and sidecars, maintenance
+    * state): every plain `_graft_*` file but the manifests and the
+    * retention setting. */
+  private def dropMarkers(fs: FileSystem, dir: Path): Unit =
+    withManifestLock(dir.toString) {
+      fs.listStatus(dir).toSeq
+        .filter(f => f.isFile && f.getPath.getName.startsWith("_graft_"))
+        .map(_.getPath)
+        .filterNot(p =>
+          p.getName == RetentionName || ManifestName.matches(p.getName))
+        .foreach(p => fs.delete(p, false))
     }
 
   /** Keyed MERGE — delete-then-insert upsert in ONE atomic generation,
@@ -788,16 +792,11 @@ object Bucketed {
       val upd = updates.localCheckpoint(eager = false)
       reconcileOrphans(spark, table, dir, fs)
       val readSet = snapshotReadSet(fs, dir)
-      val all = listDataFiles(fs, dir)
-      val dataFiles = readSet.listed match {
-        case Some(names) => all.filter(f => names(f.getPath.getName))
-        case None => all
-      }
       // bounded collect: ≤ n distinct bucket ids, however large `upd` is
       val touched = upd
         .select(pmod(hash(keys.map(col): _*), lit(n)).cast("int").as("b"))
         .distinct().collect().map(_.getInt(0)).toSet
-      val oldFiles = dataFiles.filter(f =>
+      val oldFiles = readSet.files.filter(f =>
         bucketIdOfName(f.getPath.getName).exists(touched))
       val existing =
         if (oldFiles.isEmpty)
@@ -817,8 +816,7 @@ object Bucketed {
       val rows = existing
         .join(delKeys, keys, "left_anti")
         .unionByName(inserts)
-      stageSwapCommit(spark, table, meta, dir, fs, rows, oldFiles,
-        legacyBase = dataFiles.map(_.getPath.getName).toSet, readSet,
+      stageSwapCommit(spark, table, meta, dir, fs, rows, oldFiles, readSet,
         op = "merge")
     }
 
@@ -935,15 +933,9 @@ object Bucketed {
     // reassign) would commit a mix of two generations
     reconcileOrphans(spark, table, dir, fs)
     val readSet = snapshotReadSet(fs, dir)
-    val all = listDataFiles(fs, dir)
-    val listed = readSet.listed
-    val dataFiles = listed match {
-      case Some(names) => all.filter(f => names(f.getPath.getName))
-      case None => all
-    }
     // group the data files by the writer's bucket-id convention
     // ([[bucketIdOfName]]); anything unparseable is left untouched
-    val byBucket = dataFiles.groupBy(f => bucketIdOfName(f.getPath.getName))
+    val byBucket = readSet.files.groupBy(f => bucketIdOfName(f.getPath.getName))
       .collect { case (Some(b), fsOfB) => b -> fsOfB }
     // EXPLICIT bucket targets transform even when the bucket has no
     // files yet: an additive rewrite (repairGroups/rebuildGroups
@@ -975,20 +967,19 @@ object Bucketed {
       else spark.read.schema(meta.schema)
         .parquet(oldFiles.map(_.getPath.toString): _*)
     val rows = transform(base)
-    stageSwapCommit(spark, table, meta, dir, fs, rows, oldFiles,
-      legacyBase = dataFiles.map(_.getPath.getName).toSet, readSet, op)
+    stageSwapCommit(spark, table, meta, dir, fs, rows, oldFiles, readSet, op)
     chosen.size
   }
 
   /** What a maintenance op's read is based on, captured at op start
     * (under the maintenance lock, post-reconcile): the parent
-    * generation and the foreign-commit counter at that instant — the
-    * optimistic-CAS token [[stageSwapCommit]] validates at commit.
-    * Capturing also SYNCS [[lastSeenGen]] to the parent: a foreign
-    * generation committed BEFORE this op started is the op's
-    * legitimate base, not a conflict. */
+    * generation, its data files, and the foreign-commit counter at
+    * that instant — the optimistic-CAS token [[stageSwapCommit]]
+    * validates at commit. Capturing also SYNCS [[lastSeenGen]] to the
+    * parent: a foreign generation committed BEFORE this op started is
+    * the op's legitimate base, not a conflict. */
   private final case class ReadSet(parentGen: Long,
-                                   listed: Option[Set[String]],
+                                   files: Seq[FileStatus],
                                    foreignSeen: Long)
 
   private def snapshotReadSet(fs: FileSystem, dir: Path): ReadSet =
@@ -998,7 +989,11 @@ object Bucketed {
       // commit targets must never collide with an existing file name)
       val rawMax = manifestEntries(fs, dir).map(_._1).maxOption.getOrElse(0L)
       lastSeenGen.put(dir.toString, rawMax)
-      ReadSet(m.map(_._1).getOrElse(0L), m.map(_._2),
+      // no valid manifest (a torn first commit): every data file on
+      // disk is the parent — what lets a re-run Overwrite heal it
+      val all = listDataFiles(fs, dir)
+      ReadSet(m.map(_._1).getOrElse(0L),
+        m.fold(all)(m => all.filter(f => m._2(f.getPath.getName))),
         foreignCommitCount(dir.toString))
     }
 
@@ -1014,7 +1009,6 @@ object Bucketed {
                               meta: org.apache.spark.sql.catalyst.catalog.CatalogTable,
                               dir: Path, fs: FileSystem, rows: DataFrame,
                               oldFiles: Seq[FileStatus],
-                              legacyBase: Set[String],
                               readSet: ReadSet, op: String): Int = {
     val bucketSpec = meta.bucketSpec.getOrElse(
       throw new IllegalArgumentException(s"$table is not bucketed"))
@@ -1069,7 +1063,8 @@ object Bucketed {
           }
           val oldNames = oldFiles.map(_.getPath.getName).toSet
           val newNames = newFiles.map(_._1).toSet
-          val base = readManifest(fs, dir).map(_._2).getOrElse(legacyBase)
+          val base = readManifest(fs, dir).map(_._2)
+            .getOrElse(readSet.files.map(_.getPath.getName).toSet)
           // superseded files retire (move) instead of dying when the
           // table retains history; generations that fell out of the
           // window are pruned here so history stays bounded at the
@@ -1229,9 +1224,10 @@ object Bucketed {
       val loose = all
         .filter(_.getPath.getName.toLongOption.isDefined)
         .flatMap(f => parseHistory(fs, f.getPath))
-      // per-generation dedup (a crash between a fold's write and its
-      // deletes leaves both copies); LOOSE wins — on a replaced table
-      // generations restart and the loose record is the newer truth
+      // per-generation dedup: a crash between a fold's write and its
+      // deletes leaves two copies of the same record. Generations
+      // never restart within one history (a recreate clears the
+      // location, history included), so either copy serves
       (folded ++ loose).map(r => r._1 -> r).toMap.values.toSeq
         .sortBy(_._1)
     }
@@ -1415,10 +1411,12 @@ object Bucketed {
     * pinned snapshot frame ([[load]]/[[loadAsOf]]) stable across
     * racing commits: a move would break the explicit paths an
     * in-flight scan resolved. The directory therefore holds MULTIPLE
-    * generations when retention > 1 — fine for every manifest-resolved
-    * read, and exactly why the dir-scan ([[loadDirect]]) is only
-    * correct at default retention. With retention 1, superseded files
-    * delete at commit (the single-generation-dir invariant holds). */
+    * generations when retention > 1 — fine for every read, since every
+    * read resolves through a manifest (a directory scan such as
+    * `spark.table` is correct only at retention 1). Every commit that
+    * supersedes files retires them here, a compatible [[save]]
+    * Overwrite included. With retention 1, superseded files delete at
+    * commit (the single-generation-dir invariant holds). */
   private def retireFiles(fs: FileSystem, dir: Path, names: Seq[String],
                           retention: Int): Unit =
     if (names.nonEmpty && retention <= 1)
@@ -1628,14 +1626,6 @@ object Bucketed {
     verifyOnce(spark, table, loc)
     if (verifiedGenerations.getOrDefault(loc.toString, -1L) == gen)
       snapshotFrame(spark, table, meta, loc, gen)
-    else if (gen == 0L &&
-        withManifestLock(loc.toString) {
-          readManifest(fileSystemOf(spark, loc), loc)
-        }.isEmpty)
-      // generation 0 of a PRE-MANIFEST table: there is no manifest to
-      // resolve — serve the dir scan load() documents for this layout
-      // (loadAsOf would throw 'no readable generation 0')
-      spark.table(table)
     else loadAsOf(spark, table, gen)
   }
 
@@ -1748,7 +1738,7 @@ object Bucketed {
     * file deletion runs ONLY when at least one valid manifest is kept
     * — with nothing parseable there is no way to prove any file dead,
     * and deleting on an empty keep-set would wipe the live table (the
-    * torn-head / pre-manifest cases). Deletes (a) manifests — valid
+    * torn-head / torn-first-manifest cases). Deletes (a) manifests — valid
     * or torn — OLDER than the oldest kept valid generation (a torn
     * manifest NEWER than it may be another process's in-flight
     * commit: never touched), (b) legacy retired-dir files no kept
@@ -1976,8 +1966,8 @@ object Bucketed {
       case c => c.get()
     }
 
-  /** The table's current committed generation (0 for a pre-manifest
-    * table): a map lookup when this process has verified the table,
+  /** The table's current committed generation (0 while its create
+    * has not committed): a map lookup when this process has verified the table,
     * one manifest read under the lock otherwise. */
   def currentGeneration(spark: SparkSession, table: String): Long = {
     val loc = new Path(spark.sessionState.catalog.getTableMetadata(
@@ -2001,8 +1991,8 @@ object Bucketed {
 
   /** The head generation and its data files, resolved through the
     * manifest under the lock — the explicit file list stat-based
-    * pruning ([[FileStats]]) reads through. Pre-manifest tables list
-    * the dir (generation 0). */
+    * pruning ([[FileStats]]) reads through. A table without a valid
+    * manifest fails as in [[load]]. */
   private[sources] def currentDataFiles(
       spark: SparkSession, table: String): (Long, Seq[FileStatus]) = {
     val meta = spark.sessionState.catalog.getTableMetadata(
@@ -2013,7 +2003,7 @@ object Bucketed {
       readManifest(fs, dir) match {
         case Some((gen, names)) =>
           (gen, listDataFiles(fs, dir).filter(f => names(f.getPath.getName)))
-        case None => (0L, listDataFiles(fs, dir))
+        case None => throw noManifest(table, dir)
       }
     }
   }

@@ -88,9 +88,10 @@ object FileStats {
   private val cache =
     new ConcurrentHashMap[(String, Long), Memo[Map[String, FileStat]]]()
 
-  /** Drop cached stats for `location` — the hook for table REPLACEMENT
-    * (Bucketed.save Overwrite), which restarts generation numbering
-    * and would otherwise collide with the dead table's cache keys. */
+  /** Drop cached stats for `location` — run at a table's CREATE
+    * (Bucketed.save, Layout.saveClustered): the one commit that
+    * restarts generation numbering at a location, whose keys would
+    * otherwise collide with a dropped table's cached stats. */
   private[sources] def invalidate(location: String): Unit =
     cache.keySet.removeIf(_._1 == location)
 

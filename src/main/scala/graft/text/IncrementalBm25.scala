@@ -43,8 +43,8 @@ import org.apache.spark.sql.functions._
   *     appears once).
   *   - `<name>_stats` one (k=0, n_docs, tot_tok, pgen) row, 1 bucket:
   *     corpus-global N and avgdl, maintained INCREMENTALLY by
-  *     append/delete through [[graft.sources.Bucketed.replaceAll]]'s
-  *     atomic one-manifest swap — a probe must not pay an O(corpus)
+  *     append/delete through a [[graft.sources.Bucketed.save]]
+  *     Overwrite's atomic one-manifest swap — a probe must not pay an O(corpus)
   *     aggregation for two scalars. Each table's commit is atomic,
   *     and since round 12 the PAIR is too: every mutator ends with a
   *     [[stampPair]] pointer write
@@ -171,16 +171,10 @@ object IncrementalBm25 {
       .synchronized(body)
 
   private def writeStats(spark: SparkSession, name: String, nDocs: Long,
-                         totTok: Long, pgen: Long, fresh: Boolean): Unit = {
+                         totTok: Long, pgen: Long): Unit = {
     import spark.implicits._
-    val row = Seq((0, nDocs, totTok, pgen))
-      .toDF("k", "n_docs", "tot_tok", "pgen")
-    if (fresh)
-      graft.sources.Bucketed.save(row, statsTable(name), Seq("k"), 1)
-    else {
-      graft.sources.Bucketed.replaceAll(spark, statsTable(name), row)
-      ()
-    }
+    graft.sources.Bucketed.save(Seq((0, nDocs, totTok, pgen))
+      .toDF("k", "n_docs", "tot_tok", "pgen"), statsTable(name), Seq("k"), 1)
   }
 
   /** Recompute the stats row FROM the postings table — the healing op
@@ -206,7 +200,7 @@ object IncrementalBm25 {
       .agg(count(lit(1)), coalesce(sum("dl"), lit(0L)))
       .as[(Long, Long)].head()
     withStatsLock(name) {
-      writeStats(spark, name, n, tot, gen, fresh = false)
+      writeStats(spark, name, n, tot, gen)
       stampPair(spark, name, gen)
     }
     (n, tot)
@@ -227,7 +221,7 @@ object IncrementalBm25 {
     val (n, tot) = batchStats(dl)
     withStatsLock(name) {
       val gen = postingsGen(spark, name)
-      writeStats(spark, name, n, tot, gen, fresh = true)
+      writeStats(spark, name, n, tot, gen)
       // pair governance from birth: the first stamp also raises
       // retention (see [[stampPair]]) so a lagging pointer stays
       // readable across any single mutation's two commits
@@ -253,7 +247,7 @@ object IncrementalBm25 {
     withStatsLock(name) {
       val (n, tot, _) = statsOf(spark, name)
       val gen = postingsGen(spark, name)
-      writeStats(spark, name, n + dn, tot + dtot, gen, fresh = false)
+      writeStats(spark, name, n + dn, tot + dtot, gen)
       stampPair(spark, name, gen)
     }
   }
@@ -310,7 +304,7 @@ object IncrementalBm25 {
       val (n, tot, _) = statsOf(spark, name)
       val gen = postingsGen(spark, name)
       writeStats(spark, name, math.max(0L, n - dn), math.max(0L, tot - dtot),
-        gen, fresh = false)
+        gen)
       stampPair(spark, name, gen)
     }
     nRewritten
@@ -376,7 +370,7 @@ object IncrementalBm25 {
     if (n > 0) withStatsLock(name) {
       val (nd, tot, _) = statsOf(spark, name)
       val gen = postingsGen(spark, name)
-      writeStats(spark, name, nd, tot, gen, fresh = false)
+      writeStats(spark, name, nd, tot, gen)
       stampPair(spark, name, gen)
     }
     n

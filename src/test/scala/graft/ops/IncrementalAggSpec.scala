@@ -214,4 +214,22 @@ class IncrementalAggSpec extends SparkSuite {
       } finally drop()
     }
   }
+
+  test("a rebuild drops the stream owner: a new checkpoint's ingest is accepted") {
+    withSource { (base, stream) =>
+      try {
+        IncrementalAgg.buildIndex(rows(0, 0), name, buckets, "g", Seq("v"))
+        rows(0, 30).write.mode("append").parquet(s"$base/src")
+        IncrementalAgg.streamAppend(stream(), name, buckets, "g", Seq("v"))
+        // the one-shot ingest's checkpoint is gone; rebuilding the
+        // index over what it landed releases the claim
+        IncrementalAgg.buildIndex(rows(0, 30), name, buckets, "g", Seq("v"))
+        withSource { (base2, stream2) =>
+          rows(30, 64).write.mode("append").parquet(s"$base2/src")
+          IncrementalAgg.streamAppend(stream2(), name, buckets, "g", Seq("v"))
+        }
+        assert(served() == oracle(rows(0, 64)))
+      } finally drop()
+    }
+  }
 }

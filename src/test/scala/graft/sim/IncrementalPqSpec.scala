@@ -455,4 +455,25 @@ class IncrementalPqSpec extends SparkSuite {
       spark.sql(s"DROP TABLE IF EXISTS $vnT")
     }
   }
+
+  test("buildIndex over a pair-stamped code table: the probe serves the rebuilt codes") {
+    val codeT = "graft_incpq_rebuild_codes"
+    val vnT = "graft_incpq_rebuild_vn"
+    try {
+      IncrementalAnn.buildIndex(vecs(0, 100), vnT, 4, coarse)
+      IncrementalPq.buildIndex(vecs(0, 100), codeT, 4, coarse, books)
+      IncrementalPq.commitPair(spark, codeT, vnT)
+      // the rebuild's superseded codes stay on disk (retention 3), so
+      // a pointer that survived it would keep serving them
+      IncrementalPq.buildIndex(vecs(200, 260), codeT, 4, coarse, books)
+      assert(graft.sources.Bucketed.readPairPointer(spark, codeT).isEmpty)
+      val got = IncrementalPq.probe(spark, vecs(500, 503), codeT, coarse,
+          books, k = 5, nProbe = coarse.length)
+        .select("neighbor_id").as[Long].collect().toSet
+      assert(got.nonEmpty && got.subsetOf((200L until 260L).toSet), got)
+    } finally {
+      spark.sql(s"DROP TABLE IF EXISTS $codeT")
+      spark.sql(s"DROP TABLE IF EXISTS $vnT")
+    }
+  }
 }

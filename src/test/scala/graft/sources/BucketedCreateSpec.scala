@@ -12,8 +12,9 @@ import graft.SparkSuite
 
 /** The create/replace contract of [[Bucketed.save]]: what a create
   * leaves in the catalog and on disk, when an Overwrite keeps the
-  * catalog entry and when it recreates it, and that a created table's
-  * write options and bucket layout hold up under later maintenance. */
+  * catalog entry (and commits the next generation) and when it
+  * recreates it, and that a created table's write options and bucket
+  * layout hold up under later maintenance. */
 class BucketedCreateSpec extends SparkSuite {
   import spark.implicits._
 
@@ -109,7 +110,7 @@ class BucketedCreateSpec extends SparkSuite {
     } finally drop(table)
   }
 
-  test("a compatible Overwrite keeps the catalog entry and restarts the generation at 1") {
+  test("a compatible Overwrite keeps the entry and commits generation N+1 `replace`") {
     val table = "graft_create_inplace"
     drop(table)
     try {
@@ -120,11 +121,66 @@ class BucketedCreateSpec extends SparkSuite {
       val created = meta(table).createTime
       Bucketed.save(rows(500, 560), table, Seq("k"), buckets = 4)
       assert(meta(table).createTime == created, "entry was recreated")
-      assert(Bucketed.currentGeneration(spark, table) == 1L)
-      assert(ops(table) == Seq(1L -> "create"))
-      assert(manifest(table).contains(1L -> partNames(table)))
+      assert(Bucketed.currentGeneration(spark, table) == 3L)
+      assert(ops(table) == Seq(1L -> "create", 2L -> "append", 3L -> "replace"))
+      assert(manifest(table).contains(3L -> partNames(table)))
       assert(Bucketed.load(spark, table).count() == 60L)
       assertBucketLayout(table, rows(500, 560), Seq("k"), 4, "k")
+    } finally drop(table)
+  }
+
+  test("a failing Overwrite leaves the prior rows and history served to a cold reader") {
+    val table = "graft_create_failing"
+    drop(table)
+    try {
+      Bucketed.save(rows(0, 100), table, Seq("k"), buckets = 4)
+      Bucketed.save(rows(100, 150), table, Seq("k"), buckets = 4,
+        mode = SaveMode.Append)
+      // same schema and buckets (a compatible Overwrite); one task throws
+      val failing = rows(500, 560).withColumn("n",
+        when(col("n") === 530, raise_error(lit("boom"))).otherwise(col("n")))
+      intercept[Exception] {
+        Bucketed.save(failing, table, Seq("k"), buckets = 4)
+      }
+      Bucketed.forgetVerified()
+      assert(Bucketed.load(spark, table).count() == 150L)
+      assert(ops(table) == Seq(1L -> "create", 2L -> "append"))
+      assert(manifest(table).contains(2L -> partNames(table)))
+    } finally drop(table)
+  }
+
+  test("on a retention-3 table, a frame loaded before a compatible Overwrite still reads the old rows") {
+    val table = "graft_create_held"
+    drop(table)
+    try {
+      Bucketed.save(rows(0, 100), table, Seq("k"), buckets = 4)
+      Bucketed.setRetention(spark, table, 3)
+      val held = Bucketed.load(spark, table)
+      Bucketed.save(rows(500, 560), table, Seq("k"), buckets = 4)
+      assert(held.select("n").as[Int].collect().sorted.toSeq == (0 until 100))
+      assert(Bucketed.load(spark, table).select("n").as[Int].collect()
+        .sorted.toSeq == (500 until 560))
+      assert(Bucketed.describe(spark, table).retention == 3)
+    } finally drop(table)
+  }
+
+  test("Layout.saveClustered commits a generation-1 manifest; a location with no valid manifest is not served") {
+    val table = "graft_create_zorder"
+    drop(table)
+    try {
+      val grid = (0 until 40).flatMap(x => (0 until 40).map(y =>
+        (x.toLong, y.toLong))).toDF("x", "y")
+      graft.ops.Layout.saveClustered(grid, table, "x", "y", numFiles = 4)
+      assert(partNames(table).nonEmpty)
+      assert(manifest(table).contains(1L -> partNames(table)))
+      assert(ops(table) == Seq(1L -> "create"))
+      assert(Bucketed.load(spark, table).count() == 1600L)
+      val loc = locOf(table)
+      loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(new Path(loc, "_graft_manifest.1"), false)
+      Bucketed.forgetVerified()
+      val e = intercept[IllegalStateException](Bucketed.load(spark, table))
+      assert(e.getMessage.contains("no valid generation manifest"), e.getMessage)
     } finally drop(table)
   }
 

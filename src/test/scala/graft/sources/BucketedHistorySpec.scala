@@ -63,7 +63,7 @@ class BucketedHistorySpec extends SparkSuite {
     } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
-  test("a torn history record reads as absent; a replaced table restarts its history") {
+  test("a torn history record reads as absent; an Overwrite continues the history") {
     val table = "graft_hist_torn"
     try {
       Bucketed.save(rows(0, 10), table, Seq("k"), 2)
@@ -77,11 +77,11 @@ class BucketedHistorySpec extends SparkSuite {
       assert(Bucketed.history(spark, table).count() == 0,
         "torn record must read as absent, not crash or mis-parse")
       assert(Bucketed.describe(spark, table).lastOp.isEmpty)
-      // Overwrite clears the dir — history restarts with the table
+      // an Overwrite is the next generation — the history continues
       Bucketed.save(rows(0, 5), table, Seq("k"), 2)
       val h = Bucketed.history(spark, table)
         .select("generation", "op").as[(Long, String)].collect().toSeq
-      assert(h == Seq((1L, "create")))
+      assert(h == Seq((2L, "replace")))
     } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
