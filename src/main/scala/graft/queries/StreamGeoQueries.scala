@@ -89,35 +89,28 @@ object StreamGeoQueries {
 
     // Streaming MERGE sink (foreachBatch upsert): events split over 4
     // source files, streamed 1 file per micro-batch, each batch merged
-    // into a parquet target keeping the newest row per user (recency-
-    // aware — independent of batch boundaries and file order). The
-    // final table must equal the batch "latest event per user" oracle
+    // into a governed bucketed table as one mergeByKey generation that
+    // keeps the newest row per user (recency-aware — independent of
+    // batch boundaries and file order). The final table must equal the
+    // batch "latest event per user" oracle
     "q93_stream_upsert" -> ((s, dir) => {
-      // tmpfs scratch: the merge target and its staging dir are
-      // run-scoped — on RAM the per-batch read-merge-swap cycle stops
-      // paying disk latency 4 times over. The 4-file SOURCE is fixture
-      // INPUT, staged once per process (Setup.stageOnce, the
-      // q130/q132/q151 doctrine — round 15): split deterministically on
-      // event_id instead of round-robin repartition(4), which both
-      // makes the staged files reproducible and drops the per-execution
-      // source rewrite; the merge target, checkpoints and every batch's
-      // rewrite stay per-execution, and the sink's recency-aware merge
-      // is batch-boundary- and file-order-independent by contract, so
-      // the declared result is unchanged on any split
+      // The 4-file SOURCE is fixture INPUT, staged once per process
+      // (Setup.stageOnce), split deterministically on event_id so the
+      // staged files are reproducible. The table, the checkpoint and
+      // every batch's merge stay per-execution: each execution
+      // overwrites the table empty, then streams into it
       val events = graft.sources.Tables.events(s, dir)
       val src = Setup.stageOnce("q93", dir,
         (0 to 3).map(j => events.filter(pmod(col("event_id"), lit(4)) === j)))
-      val base = Streaming.scratchBase.resolve(
-        s"graft-q93-${System.getProperty("user.name", "u")}").toString
-      // nBuckets sized to the target per the sink's contract (150
-      // distinct users at this scale — 4 buckets keeps the per-batch
-      // bucket-dir FS overhead proportionate; the pruning win is
-      // invariant to the count)
-      Streaming.upsertAvailableNow(
-          Streaming.fileStream(s, src, maxFilesPerTrigger = Some(1)),
-          s"$base/target",
-          keys = Seq("user_id"), orderCols = Seq("ts", "event_id"),
-          nBuckets = 4)
+      val name = s"graft_q93_up_${Setup.dirTag(dir)}"
+      // 4 buckets for the 150 distinct users at this scale: a batch
+      // rewrites only the buckets its users hash to
+      graft.sources.Bucketed.save(s.read.parquet(src).limit(0), name,
+        Seq("user_id"), 4)
+      Streaming.mergeStreamIntoBucketed(
+        Streaming.fileStream(s, src, maxFilesPerTrigger = Some(1)), name,
+        orderCols = Seq("ts", "event_id"))
+      graft.sources.Bucketed.load(s, name)
         .select(col("user_id"), col("event_id").as("last_event_id"),
           unix_micros(col("ts")).as("last_ts_us"))
         .orderBy("user_id")

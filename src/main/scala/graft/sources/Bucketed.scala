@@ -419,7 +419,6 @@ object Bucketed {
       // refresh the catalog relation cache, or a `spark.table` reader
       // would keep a stale file listing
       spark.catalog.refreshTable(table)
-      FileStats.stampIfEnabled(spark, table, loc)
     } finally { fs.delete(stage, true); () }
   }
 
@@ -736,7 +735,7 @@ object Bucketed {
   }
 
   /** Delete the markers a rebuilt table must not inherit (stream
-    * owner, follow, sync, stats stamp and sidecars, maintenance
+    * owner, follow, sync, stats sidecars, maintenance
     * state): every plain `_graft_*` file but the manifests and the
     * retention setting. */
   private def dropMarkers(fs: FileSystem, dir: Path): Unit =
@@ -779,9 +778,20 @@ object Bucketed {
     * previously merged null-key row and replays would accumulate. At
     * 100 TB the cost is O(touched buckets) read + one staged write of
     * those buckets — never O(table). Returns the number of staged
-    * data files. */
+    * data files.
+    *
+    * Non-empty `orderCols` makes the merge RECENCY-AWARE instead of
+    * latest-batch-wins: each update key keeps exactly one row, the
+    * max under `orderCols` over its current rows and the update's
+    * rows, so a late or replayed batch never regresses a key and the
+    * final table is independent of batch boundaries and arrival
+    * order. Keys not in `updates` stay untouched, duplicates
+    * included. Not combinable with `deleteCol`. */
   def mergeByKey(spark: SparkSession, table: String, updates: DataFrame,
-                 deleteCol: Option[String] = None): Int =
+                 deleteCol: Option[String] = None,
+                 orderCols: Seq[String] = Nil): Int = {
+    require(orderCols.isEmpty || deleteCol.isEmpty,
+      "mergeByKey: orderCols and deleteCol are exclusive")
     withMaintenanceLock(spark, table) { (meta, dir, fs) =>
       import org.apache.spark.sql.functions.{col, hash, lit, not, pmod}
       val bucketSpec = meta.bucketSpec.getOrElse(
@@ -813,12 +823,15 @@ object Bucketed {
       // (unlike the index families' bounded delete batches) — AQE
       // picks the broadcast side when the keys fit, and the shuffle
       // alternative is over the touched buckets only, never the table
-      val rows = existing
-        .join(delKeys, keys, "left_anti")
-        .unionByName(inserts)
+      val rows = existing.join(delKeys, keys, "left_anti").unionByName(
+        if (orderCols.isEmpty) inserts
+        else graft.ops.Relational.keepFirst(
+          existing.join(delKeys, keys, "left_semi").unionByName(inserts),
+          keys.map(col), orderCols.map(col(_).desc)))
       stageSwapCommit(spark, table, meta, dir, fs, rows, oldFiles, readSet,
         op = "merge")
     }
+  }
 
   /** SCHEMA EVOLUTION — append a nullable column to a bucketed table
     * without touching a single data file: the catalog schema gains the
@@ -1080,9 +1093,8 @@ object Bucketed {
         newFiles.size
       } finally { fs.delete(stage, true); () }
     // drop the cached file listing so the next scan sees the new layout
-    profPhase(s"swap($table) refresh+stamp") {
+    profPhase(s"swap($table) refresh") {
       spark.catalog.refreshTable(table)
-      FileStats.stampIfEnabled(spark, table, dir)
     }
     nNew
   }
@@ -1814,7 +1826,7 @@ object Bucketed {
     * ONE copy: compaction selection, merge targeting, and the
     * auto-maintenance file profile must all parse the convention the
     * bucketed writer owns. */
-  private[sources] def bucketIdOfName(name: String): Option[Int] =
+  private[graft] def bucketIdOfName(name: String): Option[Int] =
     """.*_(\d+)(?:\..*)?$""".r.findFirstMatchIn(name).map(_.group(1).toInt)
 
   private def listDataFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =

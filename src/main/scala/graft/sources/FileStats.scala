@@ -683,45 +683,6 @@ object FileStats {
 
   private val StatsMagic = "graft-stats-v1"
   private val StatsName = """^_graft_stats\.(\d+)$""".r
-  private val StampName = "_graft_stats_stamp"
-  private val StampMagic = "graft-stats-stamp-v1"
-
-  /** Opt `table` in to COMMIT-TIME sidecar stamping: every commit ends
-    * by footer-reading ONLY its new files (just written by the same
-    * process — footers still in the page cache) and writing the head
-    * generation's sidecar, so the sidecar is current AT commit and the
-    * first reader after any commit — fresh appends included — pays
-    * zero footer opens. The default stays write-behind (commits pay
-    * nothing; the first reader amortizes): stamping moves that
-    * O(new files) cost onto the committer, the right trade for
-    * append-heavy tables with latency-sensitive readers. The setting
-    * is a marker beside the manifests (per-table, crash-safe,
-    * converges cross-process); the stamp itself stays best-effort
-    * DERIVED metadata — a failed stamp degrades to write-behind,
-    * never fails the commit. */
-  def enableCommitStamping(spark: SparkSession, table: String): Unit = {
-    val loc = new Path(spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table)).location)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Bucketed.writeMarker(fs, loc, StampName, StampMagic, "1")
-  }
-
-  /** The post-commit hook [[graft.sources.Bucketed]]'s commit paths
-    * call: when the table opted in ([[enableCommitStamping]] — one
-    * marker read per commit otherwise), resolve the fresh head's
-    * stats, which footer-reads the new files and writes the sidecar
-    * ([[statsOf]]'s normal tiers — prior sidecar entries reused for
-    * surviving files). Called OUTSIDE the manifest lock; best-effort
-    * like every sidecar write. */
-  private[sources] def stampIfEnabled(spark: SparkSession, table: String,
-                                      loc: Path): Unit =
-    try {
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (Bucketed.readMarker(fs, loc, StampName, StampMagic).contains("1")) {
-        statsOf(spark, table)
-        ()
-      }
-    } catch { case scala.util.control.NonFatal(_) => () }
 
   /** Footer opens performed by this process (footer-stat reads + bloom
     * consultations) — the instrumentation the cold-start spec pins:

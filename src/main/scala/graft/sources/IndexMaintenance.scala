@@ -204,9 +204,9 @@ object IndexMaintenance {
     *  3. stats SIDECAR lag: a sidecar behind the head means the next
     *     cold reader pays the new files' footer opens; stamping
     *     ([[FileStats.statsOf]]) moves that onto this maintenance
-    *     pass. Tables with commit-time stamping enabled
-    *     ([[FileStats.enableCommitStamping]]) are always current and
-    *     no-op here.
+    *     pass. Commits never write the sidecar (the first reader
+    *     after one does), so this pass keeps it current before a
+    *     reader arrives.
     *
     * Plus three HISTORY-DRIVEN signals (round 14 — the policy reads
     * [[Bucketed.history]] and [[Bucketed.describe]]'s pairLag and

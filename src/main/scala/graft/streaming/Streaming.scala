@@ -118,132 +118,40 @@ object Streaming {
     else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
   }
 
-  /** Deterministic key-hash bucket the MERGE target is laid out on. */
-  private def bucketCol(keys: Seq[String], nBuckets: Int) =
-    pmod(hash(keys.map(col): _*), lit(nBuckets))
-
-  /** One recency-aware MERGE of `batch` into the bucketed parquet
-    * target: reads ONLY the `__bucket=<i>` directories the batch's keys
-    * hash into, merges batch ∪ those buckets keeping the max-`orderCols`
-    * row per key, and swaps ONLY the touched bucket directories (each
-    * via its own staging rename). Untouched buckets are never read,
-    * never rewritten — their files stay byte-identical, which is the
-    * whole point: per-batch I/O is O(batch + touched buckets), not
-    * O(target). Exposed for StreamingSpec's direct-merge pruning test. */
-  private[graft] def mergeBatch(batch: DataFrame, targetDir: String,
-                                keys: Seq[String], orderCols: Seq[String],
-                                nBuckets: Int): Unit = {
-    val spark = batch.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val tPath = new org.apache.hadoop.fs.Path(targetDir)
-    val fs = tPath.getFileSystem(hconf)
-    val desc = orderCols.map(c => col(c).desc)
-    // lazy checkpoint: `latest` feeds BOTH the touched-bucket collect
-    // and the merge — without it the keepFirst window+shuffle over the
-    // batch executes twice per micro-batch
-    val latest = graft.ops.Relational.keepFirst(
-      batch.toDF(), keys.map(col), desc).localCheckpoint(eager = false)
-    // bounded driver state: ≤ nBuckets ids
-    val touched = latest.select(bucketCol(keys, nBuckets).as("__bucket"))
-      .distinct().collect().map(_.getInt(0)).sorted
-    val existing = touched.map(b => new org.apache.hadoop.fs.Path(
-        tPath, s"__bucket=$b")).filter(fs.exists(_))
-    val base =
-      if (existing.nonEmpty)
-        spark.read.parquet(existing.map(_.toString): _*)
-      else latest.limit(0)
-    val merged = graft.ops.Relational.keepFirst(
-        base.unionByName(latest), keys.map(col), desc)
-      .withColumn("__bucket", bucketCol(keys, nBuckets))
-    val staging = new org.apache.hadoop.fs.Path(targetDir + ".staging")
-    fs.delete(staging, true)
-    // cluster rows by bucket before the partitioned write: without it
-    // every task fans out a file into every touched bucket directory
-    // (tasks × buckets small files per batch); with it each bucket is
-    // written by exactly one task
-    merged.repartition(col("__bucket"))
-      .write.partitionBy("__bucket").mode("overwrite")
-      .parquet(staging.toString)
-    fs.mkdirs(tPath)
-    touched.foreach { b =>
-      val src = new org.apache.hadoop.fs.Path(staging, s"__bucket=$b")
-      val dst = new org.apache.hadoop.fs.Path(tPath, s"__bucket=$b")
-      if (fs.exists(src)) {
-        fs.delete(dst, true)
-        fs.rename(src, dst)
-      }
-    }
-    fs.delete(staging, true)
-  }
-
-  /** Streaming MERGE sink — the continuous-CDC "latest row per key"
-    * lakehouse pattern: each micro-batch is reduced to its newest row
-    * per key and merged into a key-hash-BUCKETED parquet target
-    * (`__bucket=<i>` directories) via [[mergeBatch]], rewriting only
-    * the buckets the batch touches — the same pruned rewrite+commit a
-    * partitioned lakehouse MERGE performs.
-    *
-    * The merge is RECENCY-AWARE, not last-writer-wins: the kept row per
-    * key is the max under `orderCols` across target ∪ batch, so the
-    * final table is INDEPENDENT of micro-batch boundaries and file
-    * arrival order (asserted by StoreSpec against 1-file-per-batch vs
-    * all-at-once runs). A plain "updates win" upsert would silently
-    * corrupt on out-of-order arrival — the usual CDC footgun.
-    *
-    * Scale: per batch, one shuffle of batch ∪ touched-buckets on the
-    * key — a 1 GB batch against a 100 TB target rewrites ~1/nBuckets
-    * of the target per touched bucket, not the whole table (the
-    * round-6 full-rewrite flag). Size `nBuckets` so target/nBuckets is
-    * a comfortable rewrite unit; batches touching few DISTINCT key
-    * buckets rewrite proportionally less. Atomicity is per bucket
-    * directory (each swap is one rename); the merge itself is
-    * idempotent, so a replayed batch converges to the same target.
-    * Returns the final merged table. */
-  def upsertAvailableNow(stream: DataFrame, targetDir: String,
-                         keys: Seq[String], orderCols: Seq[String],
-                         nBuckets: Int = 32): DataFrame = {
-    require(nBuckets >= 1, "nBuckets must be >= 1")
-    val spark = stream.sparkSession
-    val tPath = new org.apache.hadoop.fs.Path(targetDir)
-    tPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(tPath, true)
-    runBatches(stream, "upsert") { (batch, _) =>
-      mergeBatch(batch, targetDir, keys, orderCols, nBuckets)
-    }
-    spark.read.parquet(targetDir).drop("__bucket")
-  }
-
-  /** Streaming MERGE INTO the GOVERNED bucketed table — each
-    * micro-batch commits as ONE atomic
+  /** Streaming MERGE INTO the GOVERNED bucketed table — the engine's
+    * one stream-merge sink. Each micro-batch commits as ONE atomic
     * [[graft.sources.Bucketed.mergeByKey]] generation, so the target
     * keeps every contract the batch table has WHILE the stream runs:
     * readers flip whole generations (never a half-applied batch), the
     * table stays time-travelable, CDC-diffable, and replica-syncable
-    * mid-stream, and retention/vacuum govern its history. Contrast
-    * [[upsertAvailableNow]]: that sink owns a private recency-aware
-    * `__bucket=` directory layout (keeps the max-orderCols row per
-    * key, late batches can't regress it); this one is LATEST-BATCH-
-    * WINS on the catalog table — ordering across batches is the
-    * stream's contract, so streams whose batches may interleave per
-    * key should carry an order column and pre-reduce, or use the
-    * recency-aware sink.
+    * mid-stream, and retention/vacuum govern its history. Cost per
+    * batch is O(buckets the batch's keys hash to), never O(table).
+    *
+    * Two merge rules. With `orderCols` empty the merge is LATEST-
+    * BATCH-WINS: ordering across batches is the stream's contract, and
+    * rows with `deleteCol` = true delete their keys, so CDC-style
+    * streams apply directly. With `orderCols` set it is RECENCY-AWARE
+    * (the continuous-CDC "latest row per key" pattern): each key keeps
+    * its max row under `orderCols` across table ∪ batch, so a late
+    * batch cannot regress a key and the final table is independent of
+    * micro-batch boundaries and file arrival order — where a plain
+    * "updates win" upsert would silently corrupt on out-of-order
+    * arrival.
     *
     * Exactly-once EFFECT from at-least-once foreachBatch: a replayed
-    * batch re-merges idempotently (delete-then-insert of the same
-    * keys). Rows with `deleteCol` = true delete their keys —
-    * CDC-style streams apply directly. Cost per batch is
-    * O(buckets the batch's keys hash to), never O(table).
+    * batch re-merges idempotently under either rule.
     *
-    * `checkpointDir`: see [[runBatches]]. Being latest-batch-wins,
-    * a second ONE-SHOT call over the same source would also regress
+    * `checkpointDir`: see [[runBatches]]. Under latest-batch-wins, a
+    * second ONE-SHOT call over the same source would also regress
     * keys other writers updated in between back to the re-streamed
     * values — continuing ingest must resume a persistent checkpoint. */
   def mergeStreamIntoBucketed(stream: DataFrame, table: String,
                               deleteCol: Option[String] = None,
-                              checkpointDir: Option[String] = None): Unit =
+                              checkpointDir: Option[String] = None,
+                              orderCols: Seq[String] = Nil): Unit =
     runBatches(stream, "gmerge", checkpointDir) { (batch, _) =>
       graft.sources.Bucketed.mergeByKey(stream.sparkSession, table, batch,
-        deleteCol)
+        deleteCol, orderCols)
     }
 
   /** In-stream exact dedup — the continuous-ingest form of

@@ -8,7 +8,10 @@ import graft.SparkSuite
   * hash to (untouched buckets' files survive BY NAME), inserts land
   * even in buckets that had no files, replay is idempotent, and
   * [[Bucketed.applyChanges]] replays a diffGenerations delta onto a
-  * replica so replica ≡ source after each applied diff. */
+  * replica so replica ≡ source after each applied diff. With
+  * `orderCols` the merge is recency-aware: one max row per batch key,
+  * late rows never regress a key, and a failed batch leaves the prior
+  * generation. */
 class BucketedMergeSpec extends SparkSuite {
   import spark.implicits._
 
@@ -82,6 +85,84 @@ class BucketedMergeSpec extends SparkSuite {
       // the previously merged rows before re-inserting them)
       Bucketed.mergeByKey(spark, table, updates)
       assert(stateOf(table) == Set("a" -> 7L, "b" -> 3L))
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+  }
+
+  /** A recency table: key `k`, order column `ts`, payload `v`. */
+  private def mkTs(table: String, rows: Seq[(String, Long, Long)]): Unit =
+    Bucketed.save(rows.toDF("k", "ts", "v"), table, Seq("k"), 4)
+
+  private def tsState(table: String): Seq[(String, Long, Long)] =
+    Bucketed.load(spark, table).as[(String, Long, Long)].collect()
+      .toSeq.sorted
+
+  private def recencyMerge(table: String,
+                           rows: Seq[(String, Long, Long)]): Int =
+    Bucketed.mergeByKey(spark, table, rows.toDF("k", "ts", "v"),
+      orderCols = Seq("ts"))
+
+  test("recency merge keeps one max-ts row per batch key; other keys keep their duplicates; replay is idempotent") {
+    val table = "graft_merge_recency"
+    try {
+      mkTs(table, Seq(("a", 5L, 1L), ("a", 3L, 2L), ("b", 1L, 3L),
+        ("b", 1L, 3L)))
+      // a: the table's ts=5 row beats the batch's ts=4; c: the batch's
+      // newer of two rows wins; b is not in the batch
+      val batch = Seq(("a", 4L, 10L), ("c", 1L, 20L), ("c", 2L, 21L))
+      recencyMerge(table, batch)
+      val want = Seq(("a", 5L, 1L), ("b", 1L, 3L), ("b", 1L, 3L),
+        ("c", 2L, 21L))
+      assert(tsState(table) == want)
+      // at-least-once foreachBatch: the redelivered batch changes nothing
+      recencyMerge(table, batch)
+      assert(tsState(table) == want)
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+  }
+
+  test("a recency batch older than the table's row neither regresses the key nor adds a row") {
+    val table = "graft_merge_recency_late"
+    try {
+      mkTs(table, Seq(("a", 10L, 1L), ("b", 10L, 2L)))
+      recencyMerge(table, Seq(("a", 7L, 99L), ("b", 11L, 98L)))
+      assert(tsState(table) == Seq(("a", 10L, 1L), ("b", 11L, 98L)))
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+  }
+
+  test("a recency batch that throws in one task leaves the prior generation and history to a cold reader") {
+    val table = "graft_merge_recency_failing"
+    try {
+      mkTs(table, (0 until 40).map(i => (s"k$i", 1L, i.toLong)))
+      recencyMerge(table, Seq(("k1", 2L, 100L)))
+      val before = tsState(table)
+      val gen = Bucketed.currentGeneration(spark, table)
+      val hist = Bucketed.history(spark, table).select("generation", "op")
+        .as[(Long, String)].collect().toSeq
+      // every key of the table in the batch, over 4 tasks; one throws
+      val failing = (0 until 40).map(i => (s"k$i", 5L, -i.toLong))
+        .toDF("k", "ts", "v").repartition(4)
+        .withColumn("v", when(col("k") === "k7", raise_error(lit("boom")))
+          .otherwise(col("v")))
+      intercept[Exception] {
+        Bucketed.mergeByKey(spark, table, failing, orderCols = Seq("ts"))
+      }
+      Bucketed.forgetVerified()
+      assert(tsState(table) == before)
+      assert(Bucketed.currentGeneration(spark, table) == gen)
+      assert(Bucketed.history(spark, table).select("generation", "op")
+        .as[(Long, String)].collect().toSeq == hist)
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+  }
+
+  test("orderCols together with deleteCol is rejected") {
+    val table = "graft_merge_recency_del"
+    try {
+      mkTs(table, Seq(("a", 1L, 1L)))
+      intercept[IllegalArgumentException] {
+        Bucketed.mergeByKey(spark, table,
+          Seq(("a", 2L, 2L, true)).toDF("k", "ts", "v", "del"),
+          deleteCol = Some("del"), orderCols = Seq("ts"))
+      }
+      assert(tsState(table) == Seq(("a", 1L, 1L)))
     } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 

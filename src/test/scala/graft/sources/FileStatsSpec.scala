@@ -363,37 +363,6 @@ class FileStatsSpec extends SparkSuite {
     } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
-  test("commit-time stamping: an append stamps the sidecar, fresh-process reads open zero footers") {
-    val table = "graft_stats_stamped"
-    try {
-      mk(table)
-      FileStats.enableCommitStamping(spark, table)
-      // the next commit stamps at commit time: the committer pays the
-      // new files' footer reads, the first reader pays NOTHING — even
-      // though no reader has touched the table since the append
-      Bucketed.save(slice(300, 330), table, Seq("k"), 2,
-        mode = org.apache.spark.sql.SaveMode.Append)
-      FileStats.forgetCached()
-      val before = FileStats.footerOpens.get()
-      assert(FileStats.countWhere(spark, table, "v", 0L, 10000L)
-        .count == 330L)
-      val (_, pruned) = FileStats.splitFiles(spark, table, "v", 330L, 360L)
-      assert(pruned.nonEmpty)
-      assert(FileStats.footerOpens.get() == before,
-        s"append was stamped at commit — a fresh process must open " +
-          s"zero footers, got ${FileStats.footerOpens.get() - before}")
-      // maintenance rewrites stamp too
-      Bucketed.mergeByKey(spark, table,
-        Seq((5L, java.sql.Date.valueOf("1994-01-06"), "s0005", 999L))
-          .toDF("k", "d", "s", "v"))
-      FileStats.forgetCached()
-      val before2 = FileStats.footerOpens.get()
-      assert(FileStats.countWhere(spark, table, "v", 0L, 10000L)
-        .count == 330L)
-      assert(FileStats.footerOpens.get() == before2)
-    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
-  }
-
   test("writeSidecar never clobbers a fresher process's sidecar (skips the stale write)") {
     val table = "graft_stats_noclobber"
     try {

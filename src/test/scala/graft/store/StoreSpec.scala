@@ -639,33 +639,41 @@ class StreamingSpec extends graft.SparkSuite {
     val S = 1000000L
     write("f1.parquet", 1000000L, Seq((1L, 50 * S, 10L), (2L, 1 * S, 11L)))
     write("f2.parquet", 2000000L, Seq((1L, 10 * S, 12L), (3L, 5 * S, 13L)))
-    def run(maxFiles: Option[Int], target: String) =
-      graft.streaming.Streaming.upsertAvailableNow(
-          graft.streaming.Streaming.fileStream(spark, s"$base/src", maxFiles),
-          s"$base/$target", keys = Seq("user_id"),
-          orderCols = Seq("ts", "event_id"))
+    // each run merges into its own governed table, created empty
+    def run(maxFiles: Option[Int], target: String) = {
+      graft.sources.Bucketed.save(spark.read.parquet(s"$base/src").limit(0),
+        target, Seq("user_id"), 4)
+      graft.streaming.Streaming.mergeStreamIntoBucketed(
+        graft.streaming.Streaming.fileStream(spark, s"$base/src", maxFiles),
+        target, orderCols = Seq("ts", "event_id"))
+      graft.sources.Bucketed.load(spark, target)
         .select(col("user_id"), col("event_id"), unix_micros(col("ts")))
         .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
-    val perFile = run(Some(1), "t1") // 2 micro-batches
-    val oneShot = run(None, "t2")    // 1 micro-batch
-    val expected = Seq((1L, 10L, 50 * S), (2L, 11L, 1 * S), (3L, 13L, 5 * S))
-    assert(perFile == expected, s"per-file run: $perFile")
-    assert(oneShot == expected, s"one-shot run: $oneShot")
+    }
+    try {
+      val perFile = run(Some(1), "graft_upsert_t1") // 2 micro-batches
+      val oneShot = run(None, "graft_upsert_t2")    // 1 micro-batch
+      val expected = Seq((1L, 10L, 50 * S), (2L, 11L, 1 * S), (3L, 13L, 5 * S))
+      assert(perFile == expected, s"per-file run: $perFile")
+      assert(oneShot == expected, s"one-shot run: $oneShot")
+    } finally Seq("graft_upsert_t1", "graft_upsert_t2")
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
   test("streaming upsert rewrites only touched buckets; others stay byte-identical") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val target = tempDir("graft-bucket-merge").toString + "/t"
+    import graft.sources.Bucketed
+    val table = "graft_bucket_merge"
     val nB = 8
     def mk(rows: Seq[(Long, Long, Long)]) =
       rows.toDF("user_id", "ts_us", "event_id")
         .select(col("user_id"), timestamp_micros(col("ts_us")).as("ts"),
           col("event_id"))
     def merge(rows: Seq[(Long, Long, Long)]): Unit =
-      graft.streaming.Streaming.mergeBatch(mk(rows), target,
-        Seq("user_id"), Seq("ts", "event_id"), nB)
-    // the sink's bucket function, replicated: pmod(hash(key), nB)
+      Bucketed.mergeByKey(spark, table, mk(rows),
+        orderCols = Seq("ts", "event_id"))
+    // the table's bucket function, replicated: pmod(hash(key), nB)
     def bucketOf(ids: Long*): Set[Int] =
       ids.toDF("user_id").select(pmod(hash(col("user_id")), lit(nB)))
         .collect().map(_.getInt(0)).toSet
@@ -674,32 +682,38 @@ class StreamingSpec extends graft.SparkSuite {
     val (kA, bA) = probe.head
     val (kB, bB) = probe.find(_._2 != bA).get
     val S = 1000000L
-    merge(Seq((kA, 10 * S, 1L), (kB, 20 * S, 2L)))
-    def snapshot(except: Int): Map[String, String] = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      walk(new java.io.File(target))
-        .filterNot(_.getPath.contains(s"__bucket=$except"))
-        .map { f =>
-          val bytes = java.nio.file.Files.readAllBytes(f.toPath)
-          f.getPath -> java.util.Base64.getEncoder.encodeToString(
-            java.security.MessageDigest.getInstance("MD5").digest(bytes))
-        }.toMap
-    }
-    val before = snapshot(except = bB)
-    assert(before.nonEmpty, s"expected files outside __bucket=$bB")
-    // batch 2 touches ONLY kB's bucket: newer row for kB, new key in bB
-    val kB2 = probe.find(p => p._2 == bB && p._1 != kB)
-      .map(_._1).getOrElse(kB)
-    merge(Seq((kB, 30 * S, 3L), (kB2, 5 * S, 4L)))
-    assert(snapshot(except = bB) == before,
-      "files outside the touched bucket must be byte-identical")
-    val got = spark.read.parquet(target).drop("__bucket")
-      .select(col("user_id"), col("event_id"), unix_micros(col("ts")))
-      .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
-    val expected = (Seq((kA, 1L, 10 * S), (kB, 3L, 30 * S)) ++
-      (if (kB2 != kB) Seq((kB2, 4L, 5 * S)) else Nil)).sortBy(_._1)
-    assert(got == expected, s"merged table: $got")
+    try {
+      Bucketed.save(mk(Nil), table, Seq("user_id"), nB)
+      merge(Seq((kA, 10 * S, 1L), (kB, 20 * S, 2L)))
+      val loc = new java.io.File(new java.net.URI(
+        spark.sessionState.catalog.getTableMetadata(
+          spark.sessionState.sqlParser.parseTableIdentifier(table))
+          .location.toString))
+      // data files of every bucket but `except`, by name → MD5
+      def snapshot(except: Int): Map[String, String] =
+        loc.listFiles().toSeq
+          .filter(f => f.getName.startsWith("part-") &&
+            !Bucketed.bucketIdOfName(f.getName).contains(except))
+          .map { f =>
+            val bytes = java.nio.file.Files.readAllBytes(f.toPath)
+            f.getName -> java.util.Base64.getEncoder.encodeToString(
+              java.security.MessageDigest.getInstance("MD5").digest(bytes))
+          }.toMap
+      val before = snapshot(except = bB)
+      assert(before.nonEmpty, s"expected files outside bucket $bB")
+      // batch 2 touches ONLY kB's bucket: newer row for kB, new key in bB
+      val kB2 = probe.find(p => p._2 == bB && p._1 != kB)
+        .map(_._1).getOrElse(kB)
+      merge(Seq((kB, 30 * S, 3L), (kB2, 5 * S, 4L)))
+      assert(snapshot(except = bB) == before,
+        "files outside the touched bucket must be byte-identical")
+      val got = Bucketed.load(spark, table)
+        .select(col("user_id"), col("event_id"), unix_micros(col("ts")))
+        .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
+      val expected = (Seq((kA, 1L, 10 * S), (kB, 3L, 30 * S)) ++
+        (if (kB2 != kB) Seq((kB2, 4L, 5 * S)) else Nil)).sortBy(_._1)
+      assert(got == expected, s"merged table: $got")
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
   test("streaming heavy hitters: MG guarantee holds, state carries across batches") {
