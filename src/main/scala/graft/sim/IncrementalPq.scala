@@ -496,7 +496,7 @@ object IncrementalPq {
     // into the pruned scan, so non-matching postings never enter the
     // ADC sum (exact pre-filtered top-k, the FilteredAnnSpec contract)
     val idx0 = pair
-      .map { case (gc, _) => graft.sources.Bucketed.loadAt(spark, table, gc) }
+      .map { case (gc, _) => graft.sources.Bucketed.loadAsOf(spark, table, gc) }
       .getOrElse(graft.sources.Bucketed.load(spark, table))
       .filter(col("centroid").isin(probed: _*))
     val idx = filter.fold(idx0)(idx0.filter)
@@ -561,7 +561,7 @@ object IncrementalPq {
     // shortlist came from — a shortlisted id always finds its vector,
     // whatever crash window the writer died in
     val vnIdx = pp.vnGen
-      .map(g => graft.sources.Bucketed.loadAt(spark, vnTable, g))
+      .map(g => graft.sources.Bucketed.loadAsOf(spark, vnTable, g))
       .getOrElse(graft.sources.Bucketed.load(spark, vnTable))
       .filter(col("centroid").isin(pp.probed.toIndexedSeq: _*))
       .select(col("id").as("neighbor_id"), col("vn"))

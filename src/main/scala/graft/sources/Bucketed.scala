@@ -301,8 +301,8 @@ object Bucketed {
     * BUCKETED naming convention (`part-<task>-<uuid>_<bucket>.c000.*`,
     * the `_<bucket>` suffix `BucketingUtils.getBucketId` and
     * [[bucketIdOfName]] both parse). Valid ONLY for a write that was
-    * `repartition(buckets, bucketKeys)`-clustered first: that uses the
-    * exact bucket-id function (`pmod(murmur3, n)` —
+    * `repartition(buckets, struct(bucketKeys))`-clustered first: that
+    * uses the exact bucket-id function (`pmod(murmur3, n)` —
     * `HashPartitioning.partitionIdExpression`), so the task/partition
     * index in the staged name IS the file's bucket id. */
   private val StagedPartName = """^part-(\d+)-(.*?)-(c\d+)(\..*)?$""".r
@@ -331,10 +331,19 @@ object Bucketed {
                              writeOptions: Map[String, String],
                              fs: FileSystem, stage: Path,
                              renameInto: Option[Path]): Seq[(String, Path)] = {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{col, struct}
     val aligned = df.select(
       schema.fields.map(f => col(f.name).cast(f.dataType)).toIndexedSeq: _*)
-    val clustered = aligned.repartition(buckets, keys.map(col): _*)
+    // clustered on struct(keys), not on the keys: murmur3 folds a
+    // struct's fields exactly as it folds top-level columns, so the
+    // partition index is still the bucket id, but the partitioning is
+    // never semantically equal to a bucketed scan's. On the keys
+    // themselves, EnsureRequirements drops the shuffle above a [[load]]
+    // or [[relation]] scan with this bucket spec, after which
+    // DisableUnnecessaryBucketedScan turns that scan into a plain one:
+    // the write would then name files by split, not by bucket.
+    val clustered = aligned
+      .repartition(buckets, struct(keys.map(col): _*))
       .sortWithinPartitions(sort.map(col): _*)
     profPhase(s"writeClustered(${stage.getName}) write") {
       clustered.write.mode("overwrite").options(writeOptions)
@@ -459,7 +468,7 @@ object Bucketed {
     val loc = new Path(meta.location)
     verifyOnce(spark, table, loc)
     val gen = verifiedGenerations.getOrDefault(loc.toString, -1L)
-    if (gen >= 0L) snapshotFrame(spark, table, meta, loc, gen)
+    if (gen >= 0L) snapshotFrame(spark, table, loc, gen)
     else {
       // no verified head — an append or maintenance op is in flight
       // (its files are legitimately unlisted until its commit) or the
@@ -470,7 +479,7 @@ object Bucketed {
       // uncommitted files.
       val fs = fileSystemOf(spark, loc)
       withManifestLock(loc.toString) { readManifest(fs, loc) } match {
-        case Some((g, _)) => snapshotFrame(spark, table, meta, loc, g)
+        case Some((g, _)) => snapshotFrame(spark, table, loc, g)
         case None => throw noManifest(table, loc)
       }
     }
@@ -516,7 +525,8 @@ object Bucketed {
     * snapshot read to one generation. No partitions (the bucketed
     * contract's tables are unpartitioned; bucket pruning and parquet
     * pushdown still apply through the scan exec), no refresh (the
-    * list IS the snapshot). */
+    * list IS the snapshot), and no listing: the files arrive as
+    * `FileStatus`es, so planning neither globs nor lists them. */
   private final class ExplicitFileIndex(files: Seq[FileStatus])
     extends org.apache.spark.sql.execution.datasources.FileIndex {
     override val rootPaths: Seq[Path] = files.map(_.getPath).toSeq
@@ -534,6 +544,78 @@ object Bucketed {
       new org.apache.spark.sql.types.StructType()
   }
 
+  /** One generation of a table resolved to its files: the catalog
+    * metadata, the generation, and every data file its manifest
+    * lists. */
+  private[sources] final case class Resolved(
+      meta: org.apache.spark.sql.catalyst.catalog.CatalogTable,
+      gen: Long, files: Seq[FileStatus])
+
+  /** THE generation → files resolver: every read of a table's files
+    * ([[snapshotFrame]], [[loadAsOf]], [[diffGenerations]],
+    * [[FileStats]], [[IndexMaintenance]]) starts here. Resolves
+    * generation `gen` (None = the head, the highest valid manifest)
+    * under the manifest lock, looking each listed name up in the table
+    * directory. A listed file that is not there fails LOUDLY — serving
+    * fewer files than the manifest lists would be a lost-rows read. */
+  private[sources] def resolveGeneration(spark: SparkSession, table: String,
+                                         gen: Option[Long] = None): Resolved = {
+    val meta = spark.sessionState.catalog.getTableMetadata(
+      spark.sessionState.sqlParser.parseTableIdentifier(table))
+    val dir = new Path(meta.location)
+    val fs = fileSystemOf(spark, dir)
+    withManifestLock(dir.toString) {
+      val (g, names) = gen match {
+        case None => readManifest(fs, dir).getOrElse(throw noManifest(table, dir))
+        case Some(want) => want -> manifestEntries(fs, dir).collectFirst {
+          case (g, p) if g == want => parseManifest(fs, p)
+        }.flatten.getOrElse {
+          val have = manifestEntries(fs, dir)
+            .filter { case (_, p) => parseManifest(fs, p).isDefined }
+            .map(_._1)
+          throw new IllegalArgumentException(
+            s"$table has no readable generation $want — retained: " +
+              s"[${have.mkString(", ")}] (vacuumed, never committed, or " +
+              "retention was never enabled; see Bucketed.setRetention)")
+        }
+      }
+      val files = listDataFiles(fs, dir).filter(f => names(f.getPath.getName))
+      val missing = names -- files.map(_.getPath.getName)
+      if (missing.nonEmpty) throw new IllegalStateException(
+        if (retentionOf(fs, dir) <= 1 && !readManifest(fs, dir).exists(_._1 == g))
+          s"$table generation $g is no longer readable: default " +
+            "retention deletes superseded files at each commit (its " +
+            "manifest survives only as torn-write fallback) — " +
+            "setRetention(n > 1) BEFORE the commits whose history you " +
+            "want to read"
+        else
+          s"$table generation $g lists ${missing.size} file(s) no longer " +
+            s"in the directory (e.g. ${missing.head}) — vacuumed or " +
+            "deleted while resolving; retry, or enable retention for " +
+            "reads concurrent with maintenance")
+      Resolved(meta, g, files)
+    }
+  }
+
+  /** THE relation every read of a table's files plans over: `files`
+    * (all of a [[Resolved]] generation, or any subset of it) as a
+    * parquet relation with the table's schema, options and bucket spec
+    * — so co-located joins plan without an Exchange and filters push
+    * into the scan. An empty list is an empty frame. */
+  private[sources] def relation(
+      spark: SparkSession,
+      meta: org.apache.spark.sql.catalyst.catalog.CatalogTable,
+      files: Seq[FileStatus]): DataFrame =
+    spark.baseRelationToDataFrame(
+      org.apache.spark.sql.execution.datasources.HadoopFsRelation(
+        new ExplicitFileIndex(files),
+        partitionSchema = new org.apache.spark.sql.types.StructType(),
+        dataSchema = meta.schema,
+        bucketSpec = meta.bucketSpec,
+        fileFormat =
+          new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
+        options = meta.storage.properties)(spark))
+
   // (session, location, generation) -> the snapshot frame. Session in
   // the key: DataFrames are session-bound (stopped sessions evicted
   // lazily, the Tables-cache pattern). Superseded generations evicted
@@ -550,16 +632,12 @@ object Bucketed {
   private def invalidateSnapshots(location: String): Unit =
     snapshotFrames.keySet.removeIf(_._2 == location)
 
-  /** Build (or serve cached) the explicit-file-list, bucket-spec-
-    * preserving frame of generation `gen`. One dir listing under the
-    * manifest lock per (table, generation); hot calls are a map
-    * lookup. The build is PINNED to `gen` even when a commit races it
-    * (the raced branch resolves that generation's own manifest), and
-    * a listed file missing from the dir fails LOUDLY — silently
-    * serving fewer files than the manifest lists would be a
-    * lost-rows read. */
+  /** Build (or serve cached) the [[relation]] over generation `gen`'s
+    * [[resolveGeneration]]d files. One resolution per (table,
+    * generation); hot calls are a map lookup. The build is PINNED to
+    * `gen` even when a commit races it (it resolves that generation's
+    * own manifest). */
   private def snapshotFrame(spark: SparkSession, table: String,
-                            meta: org.apache.spark.sql.catalyst.catalog.CatalogTable,
                             loc: Path, gen: Long): DataFrame = {
     // hot path = ONE map get; the sweep (superseded generations of
     // this location, stopped sessions' frames) runs only on a miss —
@@ -575,33 +653,8 @@ object Bucketed {
     }
     snapshotFrames.computeIfAbsent(key,
       _ => new Memo(() => {
-        val fs = fileSystemOf(spark, loc)
-        val files = withManifestLock(loc.toString) {
-          val names = readManifest(fs, loc) match {
-            case Some((g, ns)) if g == gen => ns
-            case _ => listedOf(fs, loc, table, gen) // raced: pin to gen
-          }
-          val found = listDataFiles(fs, loc)
-            .filter(f => names(f.getPath.getName))
-          if (found.size != names.size) {
-            val missing = names -- found.map(_.getPath.getName)
-            throw new IllegalStateException(
-              s"$table generation $gen lists ${missing.size} file(s) " +
-                s"no longer in the directory (e.g. ${missing.head}) — " +
-                "vacuumed or deleted while resolving; retry, or enable " +
-                "retention for reads concurrent with maintenance")
-          }
-          found
-        }
-        val rel = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-          new ExplicitFileIndex(files),
-          partitionSchema = new org.apache.spark.sql.types.StructType(),
-          dataSchema = meta.schema,
-          bucketSpec = meta.bucketSpec,
-          fileFormat =
-            new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
-          options = meta.storage.properties)(spark)
-        spark.baseRelationToDataFrame(rel)
+        val r = resolveGeneration(spark, table, Some(gen))
+        relation(spark, r.meta, r.files)
       })).value
   }
 
@@ -808,12 +861,7 @@ object Bucketed {
         .distinct().collect().map(_.getInt(0)).toSet
       val oldFiles = readSet.files.filter(f =>
         bucketIdOfName(f.getPath.getName).exists(touched))
-      val existing =
-        if (oldFiles.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], meta.schema)
-        else spark.read.schema(meta.schema)
-          .parquet(oldFiles.map(_.getPath.toString): _*)
+      val existing = relation(spark, meta, oldFiles)
       val delKeys = upd.select(keys.map(col): _*).distinct()
       val inserts = deleteCol
         .map(c => upd.filter(not(col(c))))
@@ -973,13 +1021,7 @@ object Bucketed {
       return 0
     }
     val oldFiles = chosen.values.flatten.toSeq
-    val base =
-      if (oldFiles.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], meta.schema)
-      else spark.read.schema(meta.schema)
-        .parquet(oldFiles.map(_.getPath.toString): _*)
-    val rows = transform(base)
+    val rows = transform(relation(spark, meta, oldFiles))
     stageSwapCommit(spark, table, meta, dir, fs, rows, oldFiles, readSet, op)
     chosen.size
   }
@@ -1333,9 +1375,6 @@ object Bucketed {
 
   private val RetentionName = "_graft_retention"
   private val RetentionMagic = "graft-retention-v1"
-  private val RetiredDirName = "_graft_retired"
-
-  private def retiredDir(dir: Path): Path = new Path(dir, RetiredDirName)
 
   /** Keep the last `n` generations readable via [[loadAsOf]]: from
     * the next maintenance commit on, superseded data files stay IN
@@ -1538,107 +1577,29 @@ object Bucketed {
 
   /** TIME-TRAVEL read: the table EXACTLY as generation `gen` committed
     * it, as long as that generation is still retained ([[setRetention]]
-    * / [[vacuum]]). Resolution goes through the generation's manifest
-    * to an EXPLICIT file list — data files are immutable and stay in
-    * place for as long as any retained generation lists them (see
-    * [[retireFiles]]), so the snapshot is fully stable under further
-    * appends and maintenance commits inside the retention window; only
-    * a vacuum that drops the generation can invalidate it. The
-    * returned frame carries the table's schema but NOT its bucket
-    * metadata (audit, diff, and recovery reads — the time-travel
-    * consumers — do not need co-located joins; the head-generation
-    * [[load]] keeps the bucket spec). */
+    * / [[vacuum]]). Data files are immutable and stay in place for as
+    * long as any retained generation lists them (see [[retireFiles]]),
+    * so the snapshot is fully stable under further appends and
+    * maintenance commits inside the retention window; only a vacuum
+    * that drops the generation can invalidate it. Every generation
+    * keeps the table's bucket spec: the verified head serves
+    * [[load]]'s cached [[snapshotFrame]], any other generation an
+    * uncached [[relation]] over its [[resolveGeneration]]d files — so
+    * audit, diff, recovery and pair-pointer reads plan co-located
+    * joins like any head read. NO re-resolution after the head check:
+    * the frame is pinned to `gen` by construction, so a reader is
+    * never handed a NEWER generation than it asked for — the
+    * mixed-pair window the pair pointer exists to close. */
   def loadAsOf(spark: SparkSession, table: String, gen: Long): DataFrame = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table))
-    val dir = new Path(meta.location)
-    val fs = fileSystemOf(spark, dir)
-    val paths = withManifestLock(dir.toString) {
-      resolvePaths(fs, dir, table, gen,
-        listedOf(fs, dir, table, gen).toSeq.sorted)
-    }
-    readExplicit(spark, meta.schema, paths)
-  }
-
-  /** Generation `gen`'s listed file names, or a loud error naming what
-    * IS retained. Callers hold the manifest lock. */
-  private def listedOf(fs: FileSystem, dir: Path, table: String,
-                       gen: Long): Set[String] =
-    manifestEntries(fs, dir).collectFirst {
-      case (g, p) if g == gen => parseManifest(fs, p)
-    }.flatten.getOrElse {
-      val have = manifestEntries(fs, dir)
-        .filter { case (_, p) => parseManifest(fs, p).isDefined }
-        .map(_._1)
-      throw new IllegalArgumentException(
-        s"$table has no readable generation $gen — retained: " +
-          s"[${have.mkString(", ")}] (vacuumed, never committed, or " +
-          "retention was never enabled; see Bucketed.setRetention)")
-    }
-
-  /** Resolve listed names to concrete paths (hot dir for files the
-    * current generation still shares, retired dir for superseded
-    * ones). Callers hold the manifest lock. */
-  private def resolvePaths(fs: FileSystem, dir: Path, table: String,
-                           gen: Long, names: Seq[String]): Seq[String] = {
-    val hot = dataFileNames(fs, dir)
-    val retired =
-      if (fs.exists(retiredDir(dir)))
-        fs.listStatus(retiredDir(dir)).toSeq.filter(_.isFile)
-          .map(_.getPath.getName).toSet
-      else Set.empty[String]
-    names.map { n =>
-      if (hot(n)) new Path(dir, n).toString
-      else if (retired(n)) new Path(retiredDir(dir), n).toString
-      else if (retentionOf(fs, dir) <= 1) throw new IllegalStateException(
-        s"$table generation $gen is no longer readable: default " +
-          "retention deletes superseded files at each commit (its " +
-          "manifest survives only as torn-write fallback) — " +
-          "setRetention(n > 1) BEFORE the commits whose history you " +
-          "want to read")
-      else throw new IllegalStateException(
-        s"$table generation $gen lists $n but the file is neither " +
-          "hot nor retired — vacuumed while this generation's " +
-          "manifest survived, or removed outside the maintenance ops")
-    }
-  }
-
-  private def readExplicit(spark: SparkSession,
-                           schema: org.apache.spark.sql.types.StructType,
-                           paths: Seq[String]): DataFrame =
-    if (paths.isEmpty) spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(paths: _*)
-
-  /** The current generation pinned as an explicit-file-list read.
-    * Since round 12 this is [[loadAt]] of the head: the common case
-    * serves the bucket-spec-preserving cached snapshot frame (plans
-    * identical to [[load]] — which is itself snapshot-resolved now),
-    * and a commit racing the head lookup degrades to the explicit
-    * [[loadAsOf]] list, still pinned to the looked-up generation. */
-  def loadSnapshot(spark: SparkSession, table: String): DataFrame =
-    loadAt(spark, table, currentGeneration(spark, table))
-
-  /** Generation `gen` as a read, planning the BEST available shape:
-    * when `gen` is the current head (the steady-state case for
-    * pair-pointer readers) this is the bucket-spec-preserving
-    * snapshot frame — plans identical to every head read; otherwise
-    * [[loadAsOf]]'s explicit file list (a pointer lagging its table
-    * inside a crash window — correctness over plan shape, and only
-    * until the next pair commit). NO re-resolution after the head
-    * check: the frame served is pinned to `gen` by construction
-    * ([[snapshotFrame]] resolves gen's own manifest even when a
-    * commit races the check), so a reader can never be handed a
-    * NEWER generation than it asked for — the mixed-pair window the
-    * pair pointer exists to close. */
-  def loadAt(spark: SparkSession, table: String, gen: Long): DataFrame = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table))
-    val loc = new Path(meta.location)
+    val loc = new Path(spark.sessionState.catalog.getTableMetadata(
+      spark.sessionState.sqlParser.parseTableIdentifier(table)).location)
     verifyOnce(spark, table, loc)
     if (verifiedGenerations.getOrDefault(loc.toString, -1L) == gen)
-      snapshotFrame(spark, table, meta, loc, gen)
-    else loadAsOf(spark, table, gen)
+      snapshotFrame(spark, table, loc, gen)
+    else {
+      val r = resolveGeneration(spark, table, Some(gen))
+      relation(spark, r.meta, r.files)
+    }
   }
 
   // ---- two-table pair pointer -----------------------------------------
@@ -1698,30 +1659,27 @@ object Bucketed {
     * rows are in `toGen` but not `fromGen`, `delete` rows the
     * reverse — a pure rewrite (compaction) diffs empty. Output: the
     * table's columns plus a `change` column. The shuffle is over the
-    * changed files' rows only. */
+    * changed files' rows only; both sides plan over [[relation]] and
+    * keep the bucket spec. */
   def diffGenerations(spark: SparkSession, table: String,
                       fromGen: Long, toGen: Long): DataFrame = {
     import org.apache.spark.sql.functions.lit
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table))
-    val dir = new Path(meta.location)
-    val fs = fileSystemOf(spark, dir)
-    val (fromPaths, toPaths) = withManifestLock(dir.toString) {
-      val from = listedOf(fs, dir, table, fromGen)
-      val to = listedOf(fs, dir, table, toGen)
-      (resolvePaths(fs, dir, table, fromGen, (from -- to).toSeq.sorted),
-        resolvePaths(fs, dir, table, toGen, (to -- from).toSeq.sorted))
+    val from = resolveGeneration(spark, table, Some(fromGen))
+    val to = resolveGeneration(spark, table, Some(toGen))
+    def only(a: Resolved, b: Resolved) = {
+      val inB = b.files.map(_.getPath.getName).toSet
+      relation(spark, to.meta, a.files.filterNot(f => inB(f.getPath.getName)))
     }
-    val fromOnly = readExplicit(spark, meta.schema, fromPaths)
-    val toOnly = readExplicit(spark, meta.schema, toPaths)
+    val fromOnly = only(from, to)
+    val toOnly = only(to, from)
     toOnly.exceptAll(fromOnly).withColumn("change", lit("insert"))
       .unionByName(
         fromOnly.exceptAll(toOnly).withColumn("change", lit("delete")))
   }
 
   /** Drop history beyond the newest `retain` VALID generations:
-    * delete their manifests and every data file (hot in-place-retired
-    * or legacy retired-dir) no kept generation lists. Kept
+    * delete their manifests and every in-place-retired data file no
+    * kept generation lists. Kept
     * generations' files — the head always among them — are never
     * touched, and a table with no parseable manifest is a loud no-op
     * for file deletion (nothing is provably dead). Runs under the
@@ -1753,11 +1711,10 @@ object Bucketed {
     * torn-head / torn-first-manifest cases). Deletes (a) manifests — valid
     * or torn — OLDER than the oldest kept valid generation (a torn
     * manifest NEWER than it may be another process's in-flight
-    * commit: never touched), (b) legacy retired-dir files no kept
-    * generation lists, and (c) HOT files no kept generation lists —
-    * the in-place-retired files of dropped generations (retire
-    * leaves files put; this is their collector). Kept generations'
-    * files are never touched. Hot deletion is skipped while an
+    * commit: never touched) and (b) data files no kept generation
+    * lists — the in-place-retired files of dropped generations
+    * (retire leaves files put; this is their collector). Kept
+    * generations' files are never touched. File deletion is skipped while an
     * append is in flight in this process: an append's files are
     * legitimately unlisted until its commit. */
   private def vacuumLocked(fs: FileSystem, dir: Path, retain: Int): (Int, Int) = {
@@ -1780,7 +1737,7 @@ object Bucketed {
     // (verifyOnce: "manifest lists files not on disk") instead of a
     // clean winner; and a torn manifest cannot be parsed for the
     // file names to exclude. Parse failure already means "possibly
-    // in-flight": skip BOTH file sweeps this pass — the torn
+    // in-flight": skip the file sweep this pass — the torn
     // manifest falls below the kept WINDOW as valid commits land
     // and the following vacuum collects normally (or it completes
     // and its files become referenced). Deleting nothing is always
@@ -1797,13 +1754,6 @@ object Bucketed {
     val tornPossiblyInFlight =
       parsed.exists(e => e._1 >= minKeptGen && e._3.isEmpty)
     if (tornPossiblyInFlight) return (drop.size, 0)
-    val rd = retiredDir(dir)
-    if (fs.exists(rd))
-      fs.listStatus(rd).toSeq.filter(_.isFile).foreach { f =>
-        if (!kept(f.getPath.getName)) {
-          fs.delete(f.getPath, false); deleted += 1
-        }
-      }
     if (!appendInFlight(dir.toString))
       listDataFiles(fs, dir).foreach { f =>
         if (!kept(f.getPath.getName)) {
@@ -1997,25 +1947,6 @@ object Bucketed {
       val fs = fileSystemOf(spark, loc)
       withManifestLock(key) {
         readManifest(fs, loc).map(_._1).getOrElse(0L)
-      }
-    }
-  }
-
-  /** The head generation and its data files, resolved through the
-    * manifest under the lock — the explicit file list stat-based
-    * pruning ([[FileStats]]) reads through. A table without a valid
-    * manifest fails as in [[load]]. */
-  private[sources] def currentDataFiles(
-      spark: SparkSession, table: String): (Long, Seq[FileStatus]) = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table))
-    val dir = new Path(meta.location)
-    val fs = fileSystemOf(spark, dir)
-    withManifestLock(dir.toString) {
-      readManifest(fs, dir) match {
-        case Some((gen, names)) =>
-          (gen, listDataFiles(fs, dir).filter(f => names(f.getPath.getName)))
-        case None => throw noManifest(table, dir)
       }
     }
   }

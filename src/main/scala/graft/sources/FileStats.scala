@@ -3,12 +3,13 @@ package graft.sources
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.StructType
 
 /** FILE-LEVEL data skipping on the bucketed contract — the missing
   * layer between the generation manifest (which files exist) and
@@ -37,6 +38,15 @@ import org.apache.spark.sql.functions.{col, lit}
   * short stage of footer opens across the cluster, not a sequential
   * driver crawl; under the threshold the driver reads them directly
   * (no job-scheduling overhead on the handful-of-files case).
+  *
+  * Every entry point resolves the head generation ONCE
+  * ([[Bucketed.resolveGeneration]]): its stats, the kept/pruned
+  * classification and the scan of the kept files all come from that
+  * one file list, and a listed file missing from disk fails the call
+  * loudly instead of reading fewer rows. Scans go through
+  * [[Bucketed.relation]], the relation every governed read plans
+  * over, so a pruned frame keeps the table's bucket spec (a join on
+  * the bucket key with a co-bucketed table plans no Exchange).
   *
   * Pruning is CONSERVATIVE — a file is dropped only when its stats
   * PROVE it cannot match: its column's [min, max] misses [lo, hi] in a
@@ -98,7 +108,8 @@ object FileStats {
   // below this many files a driver loop beats a job's scheduling cost
   private val DriverReadMax = 32
 
-  /** Per-file footer stats of the table's HEAD generation. Three
+  /** Per-file footer stats of the table's HEAD generation (resolved
+    * here; the entry points below pass their own resolution). Three
     * tiers, cheapest first: the in-process (location, generation)
     * cache; the PERSISTED stats sidecar (`_graft_stats.<gen>` beside
     * the manifests — one small-file read covers every file it lists,
@@ -113,10 +124,17 @@ object FileStats {
     * amortizes), a single small PUT whose torn write degrades to
     * footer reads, never to wrong stats. */
   def statsOf(spark: SparkSession,
-              table: String): Map[String, FileStat] = {
-    val (gen, files) = Bucketed.currentDataFiles(spark, table)
-    val loc = new Path(spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table)).location)
+              table: String): Map[String, FileStat] =
+    statsOf(spark, Bucketed.resolveGeneration(spark, table))
+
+  /** [[statsOf]] over an already-resolved head — what each entry point
+    * below calls, so stats, classification and the read of the kept
+    * files all come from ONE resolution. */
+  private def statsOf(spark: SparkSession,
+                      head: Bucketed.Resolved): Map[String, FileStat] = {
+    val gen = head.gen
+    val files = head.files
+    val loc = new Path(head.meta.location)
     // a run-forever process commits thousands of generations; stats of
     // superseded ones are dead weight — keep only the head's per table
     cache.keySet.removeIf(k => k._1 == loc.toString && k._2 != gen)
@@ -174,10 +192,20 @@ object FileStats {
     * (kept, pruned). Kept = stats cannot rule the file out. */
   def splitFiles(spark: SparkSession, table: String, column: String,
                  lo: Any, hi: Any): (Seq[Path], Seq[Path]) = {
-    val stats = statsOf(spark, table)
-    val (_, files) = Bucketed.currentDataFiles(spark, table)
-    val (loK, hiK) = boundKeys(spark, table, column, lo, hi)
-    val (kept, pruned) = files.partition { f =>
+    val head = Bucketed.resolveGeneration(spark, table)
+    val (kept, pruned) =
+      splitOf(head.meta.schema, head.files, statsOf(spark, head), column,
+        lo, hi)
+    (kept.map(_.getPath), pruned.map(_.getPath))
+  }
+
+  /** `files` split by the range predicate on `column` of `schema`:
+    * (kept, pruned). */
+  private def splitOf(schema: StructType, files: Seq[FileStatus],
+                      stats: Map[String, FileStat], column: String,
+                      lo: Any, hi: Any): (Seq[FileStatus], Seq[FileStatus]) = {
+    val (loK, hiK) = boundKeys(schema, column, lo, hi)
+    files.partition { f =>
       stats.get(f.getPath.getName).flatMap(_.cols.get(column)) match {
         case Some(st) if st.allNull => false
         case Some(ColStat(Some(mn), Some(mx), _, _)) =>
@@ -190,7 +218,6 @@ object FileStats {
         case _ => true // no stats → keep (safe)
       }
     }
-    (kept.map(_.getPath), pruned.map(_.getPath))
   }
 
   /** How [[countWhere]] answered: rows counted, files answered from
@@ -210,11 +237,11 @@ object FileStats {
     * conservative (anything uncertain is scanned, never guessed). */
   def countWhere(spark: SparkSession, table: String, column: String,
                  lo: Any, hi: Any): CountResult = {
-    val stats = statsOf(spark, table)
-    val (_, files) = Bucketed.currentDataFiles(spark, table)
-    val (loK, hiK) = boundKeys(spark, table, column, lo, hi)
+    val head = Bucketed.resolveGeneration(spark, table)
+    val stats = statsOf(spark, head)
+    val (loK, hiK) = boundKeys(head.meta.schema, column, lo, hi)
     // 0 = pruned, 1 = covered (metadata), 2 = scan
-    def classOf(f: org.apache.hadoop.fs.FileStatus): Int =
+    def classOf(f: FileStatus): Int =
       stats.get(f.getPath.getName) match {
         case Some(fs) => fs.cols.get(column) match {
           case Some(st) if st.allNull => 0
@@ -231,20 +258,16 @@ object FileStats {
         }
         case None => 2
       }
-    val classed = files.map(f => f -> classOf(f))
+    val classed = head.files.map(f => f -> classOf(f))
     val covered = classed.collect { case (f, 1) =>
       val fs = stats(f.getPath.getName)
       fs.rows - fs.cols(column).nullCount.get
     }
-    val toScan = classed.collect { case (f, 2) => f.getPath.toString }
+    val toScan = classed.collect { case (f, 2) => f }
     val scanned =
       if (toScan.isEmpty) 0L
-      else {
-        val schema = spark.sessionState.catalog.getTableMetadata(
-          spark.sessionState.sqlParser.parseTableIdentifier(table)).schema
-        spark.read.schema(schema).parquet(toScan: _*)
-          .filter(col(column).between(lit(lo), lit(hi))).count()
-      }
+      else Bucketed.relation(spark, head.meta, toScan)
+        .filter(col(column).between(lit(lo), lit(hi))).count()
     CountResult(covered.sum + scanned, covered.size, toScan.size,
       classed.count(_._2 == 0))
   }
@@ -267,18 +290,13 @@ object FileStats {
   def loadWhere(spark: SparkSession, table: String,
                 ranges: Seq[(String, Any, Any)]): DataFrame = {
     require(ranges.nonEmpty, "at least one (column, lo, hi) range")
-    val schema = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table)).schema
-    val kept = ranges.map { case (c, lo, hi) =>
-      splitFiles(spark, table, c, lo, hi)._1.map(_.toString).toSet
-    }.reduce(_ intersect _)
-    val base =
-      if (kept.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else spark.read.schema(schema).parquet(kept.toSeq.sorted: _*)
-    ranges.foldLeft(base) { case (df, (c, lo, hi)) =>
-      df.filter(col(c).between(lit(lo), lit(hi)))
+    val head = Bucketed.resolveGeneration(spark, table)
+    val stats = statsOf(spark, head)
+    val kept = ranges.foldLeft(head.files) { case (fs, (c, lo, hi)) =>
+      splitOf(head.meta.schema, fs, stats, c, lo, hi)._1
+    }
+    ranges.foldLeft(Bucketed.relation(spark, head.meta, kept)) {
+      case (df, (c, lo, hi)) => df.filter(col(c).between(lit(lo), lit(hi)))
     }
   }
 
@@ -297,16 +315,10 @@ object FileStats {
     * re-applies to the survivors. */
   def loadEquals(spark: SparkSession, table: String, column: String,
                  value: Any): DataFrame = {
-    val schema = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table)).schema
-    val (surviving, _) = splitFilesEquals(spark, table, column, value)
-    val base =
-      if (surviving.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else spark.read.schema(schema)
-        .parquet(surviving.map(_.toString): _*)
-    base.filter(col(column) === lit(value))
+    val head = Bucketed.resolveGeneration(spark, table)
+    val (surviving, _) = splitEqualsOf(spark, head, column, value)
+    Bucketed.relation(spark, head.meta, surviving)
+      .filter(col(column) === lit(value))
   }
 
   /** The head generation's files split by an equality predicate:
@@ -318,16 +330,25 @@ object FileStats {
     * stats at all — pay the open. */
   def splitFilesEquals(spark: SparkSession, table: String,
                        column: String, value: Any): (Seq[Path], Seq[Path]) = {
-    val (kept, prunedMm) = splitFiles(spark, table, column, value, value)
-    val stats = statsOf(spark, table)
-    val (bloomless, toCheck) = kept.partition(p =>
-      stats.get(p.getName).exists(st => !st.bloomCols(column)))
+    val (kept, pruned) = splitEqualsOf(spark,
+      Bucketed.resolveGeneration(spark, table), column, value)
+    (kept.map(_.getPath), pruned.map(_.getPath))
+  }
+
+  private def splitEqualsOf(spark: SparkSession, head: Bucketed.Resolved,
+                            column: String, value: Any)
+      : (Seq[FileStatus], Seq[FileStatus]) = {
+    val stats = statsOf(spark, head)
+    val (kept, prunedMm) =
+      splitOf(head.meta.schema, head.files, stats, column, value, value)
+    val (bloomless, toCheck) = kept.partition(f =>
+      stats.get(f.getPath.getName).exists(st => !st.bloomCols(column)))
     val conf = spark.sparkContext.hadoopConfiguration
     import scala.concurrent.{Await, Future, ExecutionContext}
     implicit val ec: ExecutionContext = ExecutionContext.global
     val checked = Await.result(
-      Future.traverse(toCheck)(p => Future(
-        p -> bloomMightContain(conf, p, column, value))),
+      Future.traverse(toCheck)(f => Future(
+        f -> bloomMightContain(conf, f.getPath, column, value))),
       scala.concurrent.duration.Duration(600, "s"))
     val (surviving, bloomPruned) = checked.partition(_._2)
     (bloomless ++ surviving.map(_._1), prunedMm ++ bloomPruned.map(_._1))
@@ -398,12 +419,14 @@ object FileStats {
     * Spark values (None when no row matches). */
   def minMaxWhere(spark: SparkSession, table: String, column: String,
                   lo: Any, hi: Any): (Option[Any], Option[Any]) = {
-    val (kept, _) = splitFiles(spark, table, column, lo, hi)
+    val head = Bucketed.resolveGeneration(spark, table)
+    val stats = statsOf(spark, head)
+    val (kept, _) =
+      splitOf(head.meta.schema, head.files, stats, column, lo, hi)
     if (kept.isEmpty) return (None, None)
-    val stats = statsOf(spark, table)
-    val (loK, hiK) = boundKeys(spark, table, column, lo, hi)
-    def statOf(p: Path): Option[ColStat] =
-      stats.get(p.getName).flatMap(_.cols.get(column))
+    val (loK, hiK) = boundKeys(head.meta.schema, column, lo, hi)
+    def statOf(f: FileStatus): Option[ColStat] =
+      stats.get(f.getPath.getName).flatMap(_.cols.get(column))
     // a file whose span is fully inside the range (and null-countable)
     // PROVES its min/max are attained in-range
     // min/max need no null count: defined stats imply ≥1 non-null
@@ -414,8 +437,8 @@ object FileStats {
           cmp(mn, l) >= 0 && cmp(mx, h) <= 0
       case _ => false
     }
-    def provenBounds(p: Path): Option[(Key, Key)] =
-      statOf(p) match {
+    def provenBounds(f: FileStatus): Option[(Key, Key)] =
+      statOf(f) match {
         case Some(ColStat(Some(mn), Some(mx), false, _))
           if spanInRange(mn, mx) => Some((mn, mx))
         case _ => None
@@ -427,8 +450,8 @@ object FileStats {
       if (cmp(a, b) >= 0) a else b)
     // scan only files whose stats admit beating the proven bounds
     // inside the range (or whose stats are unusable)
-    val toScan = kept.filter { p =>
-      (statOf(p), provenBounds(p)) match {
+    val toScan = kept.filter { f =>
+      (statOf(f), provenBounds(f)) match {
         // fully covered: its in-range min/max ARE its file min/max,
         // already folded into the proven bounds — never scanned
         case (_, Some(_)) => false
@@ -445,11 +468,8 @@ object FileStats {
     if (toScan.isEmpty)
       (provenMin.map(fromKey(_, lo)), provenMax.map(fromKey(_, lo)))
     else {
-      val schema = spark.sessionState.catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(table)).schema
       import org.apache.spark.sql.functions.{max => smax, min => smin}
-      val r = spark.read.schema(schema)
-        .parquet(toScan.map(_.toString): _*)
+      val r = Bucketed.relation(spark, head.meta, toScan)
         .filter(col(column).between(lit(lo), lit(hi)))
         .agg(smin(col(column)), smax(col(column))).head()
       val scanMin = Option(r.get(0))
@@ -528,26 +548,24 @@ object FileStats {
            collectMax: Int = 4096): TopKResult = {
     require(k > 0, "k must be positive")
     import org.apache.spark.sql.functions.{asc, asc_nulls_last, desc}
-    val stats = statsOf(spark, table)
-    val (_, allFiles) = Bucketed.currentDataFiles(spark, table)
-    val schema = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table)).schema
-    val files = range match {
-      case Some((rc, lo, hi)) =>
-        val keptNames = splitFiles(spark, table, rc, lo, hi)._1
-          .map(_.getName).toSet
-        allFiles.filter(f => keptNames(f.getPath.getName))
-      case None => allFiles
+    val head = Bucketed.resolveGeneration(spark, table)
+    val stats = statsOf(spark, head)
+    val schema = head.meta.schema
+    val files = range.fold(head.files) { case (rc, lo, hi) =>
+      splitOf(schema, head.files, stats, rc, lo, hi)._1
     }
     val rangeFilter: DataFrame => DataFrame = range match {
       case Some((rc, lo, hi)) =>
         df => df.filter(col(rc).between(lit(lo), lit(hi)))
       case None => identity
     }
-    if (files.isEmpty)
-      return TopKResult(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema), 0, 0)
-    def statOf(f: org.apache.hadoop.fs.FileStatus): Option[ColStat] =
+    val order = (if (ascending) asc_nulls_last(column) else desc(column)) +:
+      tieCols.map(asc)
+    def result(prefix: Seq[FileStatus]) =
+      rangeFilter(Bucketed.relation(spark, head.meta, prefix))
+        .orderBy(order: _*).limit(k)
+    if (files.isEmpty) return TopKResult(result(Nil), 0, 0)
+    def statOf(f: FileStatus): Option[ColStat] =
       stats.get(f.getPath.getName).flatMap(_.cols.get(column))
     // the file-level bound the visit order and stop condition run on:
     // the footer MAX bounds what a file can contribute to a DESC
@@ -566,19 +584,13 @@ object FileStats {
       }
     }(Ordering.Tuple2(Ordering.Int, Ordering.Option(
       if (ascending) cmpOrdering else cmpOrdering.reverse)))
-    val order = (if (ascending) asc_nulls_last(column) else desc(column)) +:
-      tieCols.map(asc)
-    def result(prefix: Seq[org.apache.hadoop.fs.FileStatus]) =
-      rangeFilter(spark.read.schema(schema)
-          .parquet(prefix.map(_.getPath.toString): _*))
-        .orderBy(order: _*).limit(k)
     def frameOf(rows: Array[org.apache.spark.sql.Row]) =
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
     val colIdx = schema.fieldIndex(column)
     // (filled k rows?, k-th row's ordering value or null, the rows
     // when small-k collected them — see the scaladoc's driver-safety
     // contract)
-    def checkOf(prefix: Seq[org.apache.hadoop.fs.FileStatus])
+    def checkOf(prefix: Seq[FileStatus])
       : (Boolean, Any, Option[Array[org.apache.spark.sql.Row]]) =
       if (k <= collectMax) {
         val rows = result(prefix).collect()
@@ -595,7 +607,7 @@ object FileStats {
         (total >= k, if (total >= k && nonNull >= k) r.get(2) else null,
           None)
       }
-    def serve(prefix: Seq[org.apache.hadoop.fs.FileStatus],
+    def serve(prefix: Seq[FileStatus],
               collected: Option[Array[org.apache.spark.sql.Row]],
               scanned: Int) = TopKResult(
       collected.map(frameOf).getOrElse(result(prefix)), scanned,
@@ -941,13 +953,11 @@ object FileStats {
     * TIMESTAMP_NTZ, String ↔ STRING); anything else — including a
     * column absent from the schema — yields None and every file is
     * KEPT, with the exact predicate still applied to the scan. */
-  private def boundKeys(spark: SparkSession, table: String,
+  private def boundKeys(schema: StructType,
                         column: String, lo: Any,
                         hi: Any): (Option[Key], Option[Key]) = {
     import org.apache.spark.sql.types._
-    val dt = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table))
-      .schema.fields.find(_.name == column).map(_.dataType)
+    val dt = schema.fields.find(_.name == column).map(_.dataType)
     def ok(v: Any): Boolean = (dt, v) match {
       case (Some(_: ByteType | _: ShortType | _: IntegerType |
                  _: LongType | _: FloatType | _: DoubleType |

@@ -145,8 +145,7 @@ object IndexMaintenance {
                        maxFilesPerBucket: Int = 4,
                        skewThresholdE6: Long = 4000000L,
                        refresh: Option[() => Unit] = None): MaintenanceDecision = {
-    val (_, files) = Bucketed.currentDataFiles(spark, table)
-    val maxFiles = files
+    val maxFiles = Bucketed.resolveGeneration(spark, table).files
       .flatMap(f => Bucketed.bucketIdOfName(f.getPath.getName))
       .groupBy(identity).values.map(_.size).maxOption.getOrElse(0)
     val compacted =
@@ -248,8 +247,8 @@ object IndexMaintenance {
     // expose per-bucket file names); sidecarGeneration adds one
     // sidecar-name listing — the healthy-path decision scan is those
     // two resolutions, nothing per-file
-    val (head0, files) = Bucketed.currentDataFiles(spark, table)
-    val maxFiles = files
+    val head0 = Bucketed.resolveGeneration(spark, table)
+    val maxFiles = head0.files
       .flatMap(f => Bucketed.bucketIdOfName(f.getPath.getName))
       .groupBy(identity).values.map(_.size).maxOption.getOrElse(0)
     // the cadence signal: commits the history shows past the head
@@ -289,7 +288,7 @@ object IndexMaintenance {
     val head =
       if (compacted > 0 || vacuumed > 0)
         Bucketed.currentGeneration(spark, table)
-      else head0
+      else head0.gen
     val lagging =
       !FileStats.sidecarGeneration(spark, table).contains(head)
     if (lagging) { FileStats.statsOf(spark, table); () }

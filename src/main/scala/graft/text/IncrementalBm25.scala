@@ -458,7 +458,7 @@ object IncrementalBm25 {
       spark, postingsTable(name))
     val (nDocs, totTok) = pair match {
       case Some((_, gs)) =>
-        val r = graft.sources.Bucketed.loadAt(spark, statsTable(name), gs)
+        val r = graft.sources.Bucketed.loadAsOf(spark, statsTable(name), gs)
           .select("n_docs", "tot_tok").head()
         (r.getLong(0), r.getLong(1))
       case None => trustedStats(spark, name)
@@ -467,7 +467,7 @@ object IncrementalBm25 {
     val avgdl = totTok.toDouble / nDocs.toDouble
     val pruned = pair
       .map { case (gp, _) =>
-        graft.sources.Bucketed.loadAt(spark, postingsTable(name), gp) }
+        graft.sources.Bucketed.loadAsOf(spark, postingsTable(name), gp) }
       .getOrElse(graft.sources.Bucketed.load(spark, postingsTable(name)))
       .filter(col("tok").isin(terms.toIndexedSeq: _*))
     val tf = filter.fold(pruned)(pruned.filter)

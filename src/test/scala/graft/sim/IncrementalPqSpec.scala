@@ -415,7 +415,7 @@ class IncrementalPqSpec extends SparkSuite {
       def servedIds(): Set[Long] = {
         val (gc, _) = graft.sources.Bucketed
           .readPairPointer(spark, codeT).get
-        graft.sources.Bucketed.loadAt(spark, codeT, gc)
+        graft.sources.Bucketed.loadAsOf(spark, codeT, gc)
           .select("id").as[Long].collect().toSet
       }
       def probeOk(): Unit = assert(

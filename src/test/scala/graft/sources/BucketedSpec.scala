@@ -78,4 +78,43 @@ class BucketedSpec extends SparkSuite {
       spark.sql("DROP DATABASE IF EXISTS graft_bdb CASCADE")
     }
   }
+
+  /** Every row of every listed file of `table` hashes to the bucket id
+    * the file's name carries — what a bucketed scan and a co-located
+    * join assume. */
+  private def assertFilesBucketed(table: String, keys: Seq[String],
+                                  buckets: Int): Unit =
+    Bucketed.load(spark, table).inputFiles.foreach { f =>
+      val id = Bucketed.bucketIdOfName(new org.apache.hadoop.fs.Path(f).getName)
+      val got = spark.read.parquet(f)
+        .select(pmod(hash(keys.map(col): _*), lit(buckets)).as("b"))
+        .distinct().as[Int].collect().toSet
+      assert(got.forall(b => id.contains(b)), s"$f holds buckets $got")
+    }
+
+  test("writes from a bucketed read of the same layout still cluster by bucket") {
+    val src = "graft_bucketed_reread_src"
+    val dst = "graft_bucketed_reread_dst"
+    // one key, and two keys of different types (Ivm's join views are
+    // bucketed on (aKey, bKey))
+    for (keys <- Seq(Seq("bkey"), Seq("bkey", "doc2"))) try {
+      def rows(r: Range) = r.map(i => (s"k${i % 7}", i % 3, i.toLong))
+        .toDF("bkey", "doc2", "doc")
+      Bucketed.save(rows(0 until 400), src, keys, 4)
+      Bucketed.save(rows(400 until 500), src, keys, 4,
+        mode = org.apache.spark.sql.SaveMode.Append)
+      // an Overwrite whose input is a bucketed scan with the same spec
+      Bucketed.save(Bucketed.load(spark, src).filter(col("doc") % 2 === 0),
+        dst, keys, 4)
+      assertFilesBucketed(dst, keys, 4)
+      // a rewrite, which reads the table's own files through its relation
+      Bucketed.rewriteAll(spark, src, _.filter(col("doc") % 3 =!= 0))
+      assertFilesBucketed(src, keys, 4)
+      assert(Bucketed.load(spark, src).count() ==
+        (0 until 500).count(_ % 3 != 0).toLong)
+    } finally {
+      spark.sql(s"DROP TABLE IF EXISTS $src")
+      spark.sql(s"DROP TABLE IF EXISTS $dst")
+    }
+  }
 }

@@ -54,7 +54,8 @@ class BucketedTimeTravelSpec extends SparkSuite {
       assert(docsOf(Bucketed.load(spark, table))
         == (0L until 60L by 2).toSet)
       // snapshot-isolated current read ≡ hot read
-      assert(docsOf(Bucketed.loadSnapshot(spark, table))
+      assert(docsOf(Bucketed.loadAsOf(spark, table,
+        Bucketed.currentGeneration(spark, table)))
         == (0L until 60L by 2).toSet)
     } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }

@@ -450,7 +450,7 @@ class FileStatsSpec extends SparkSuite {
         == (194L to 199L).toSet)
       // the range's provably-matchless files never entered the visit
       // at all: totalFiles is the FILTERED candidate set
-      val (_, allHead) = Bucketed.currentDataFiles(spark, table)
+      val allHead = Bucketed.resolveGeneration(spark, table).files
       assert(r.totalFiles < allHead.size,
         s"range must prune files out of the candidate set: $r vs ${allHead.size}")
       // ascending composes with the range too (bottom-k of the band)
@@ -502,5 +502,27 @@ class FileStatsSpec extends SparkSuite {
       spark.sql(s"DROP TABLE IF EXISTS $table")
       spark.sql("DROP TABLE IF EXISTS graft_stats_bigk_nullk")
     }
+  }
+
+  test("a listed file missing from disk fails countWhere and loadWhere loudly instead of reading fewer rows") {
+    val table = "graft_stats_lost_file"
+    try {
+      // two commits over two buckets: four listed files
+      Bucketed.save(slice(0, 100), table, Seq("k"), 2)
+      Bucketed.save(slice(100, 200), table, Seq("k"), 2,
+        mode = org.apache.spark.sql.SaveMode.Append)
+      val listed = Bucketed.load(spark, table).inputFiles
+      assert(listed.length == 4, listed.mkString(", "))
+      // one listed file vanishes out of band
+      val lost = new org.apache.hadoop.fs.Path(listed.head)
+      assert(lost.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(lost, false))
+      intercept[IllegalStateException] {
+        FileStats.countWhere(spark, table, "v", 0L, 10000L)
+      }
+      intercept[IllegalStateException] {
+        FileStats.loadWhere(spark, table, Seq(("v", 0L, 10000L))).count()
+      }
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 }

@@ -43,20 +43,35 @@ class SnapshotLoadSpec extends SparkSuite {
     } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
-  test("snapshot frames keep the bucket spec (zero-Exchange co-located join) and push filters") {
+  /** No Exchange in `df`'s executed plan, with AQE and broadcast joins
+    * off so the bucketed layout is the only way to avoid one. */
+  private def assertNoExchange(df: org.apache.spark.sql.DataFrame): Unit = {
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("SortMergeJoin"), plan)
+    assert(!plan.contains("Exchange"),
+      s"co-bucketed join must not shuffle:\n$plan")
+  }
+
+  private def withoutAqeOrBroadcast(tables: String*)(body: => Unit): Unit = {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try body
+    finally {
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    }
+  }
+
+  test("snapshot frames keep the bucket spec (zero-Exchange co-located join) and push filters") {
+    withoutAqeOrBroadcast("graft_snap_a", "graft_snap_b") {
       val a = (1 to 3000).map(i => (i.toLong, s"a$i")).toDF("k", "va")
       val b = (1 to 3000).map(i => (i.toLong, s"b$i")).toDF("k", "vb")
       Bucketed.save(a, "graft_snap_a", Seq("k"), 4)
       Bucketed.save(b, "graft_snap_b", Seq("k"), 4)
       val joined = Bucketed.load(spark, "graft_snap_a")
         .join(Bucketed.load(spark, "graft_snap_b"), Seq("k"))
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin"), plan)
-      assert(!plan.contains("Exchange"),
-        s"snapshot-resolved co-bucketed join must not shuffle:\n$plan")
+      assertNoExchange(joined)
       assert(joined.count() == 3000)
       // predicate pushdown reaches the explicit-file-list scan
       val filtered = Bucketed.load(spark, "graft_snap_a")
@@ -65,11 +80,6 @@ class SnapshotLoadSpec extends SparkSuite {
       assert(fplan.contains("PushedFilters: [IsNotNull(k), EqualTo(k,17)]"),
         s"filter must push into the snapshot scan:\n$fplan")
       assert(filtered.count() == 1)
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.sql("DROP TABLE IF EXISTS graft_snap_a")
-      spark.sql("DROP TABLE IF EXISTS graft_snap_b")
     }
   }
 
@@ -89,5 +99,45 @@ class SnapshotLoadSpec extends SparkSuite {
       assert(evolved.columns.toSeq == Seq("k", "v", "note"))
       assert(evolved.filter(col("note").isNull).count() == 100)
     } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+  }
+
+  test("an older generation read through loadAsOf keeps the bucket spec and returns exactly its rows") {
+    withoutAqeOrBroadcast("graft_snap_asof_a", "graft_snap_asof_b") {
+      val a = "graft_snap_asof_a"
+      Bucketed.save((1 to 3000).map(i => (i.toLong, s"a$i")).toDF("k", "va"),
+        a, Seq("k"), 4)
+      Bucketed.setRetention(spark, a, 3)
+      val g0 = Bucketed.currentGeneration(spark, a)
+      Bucketed.save((3001 to 3500).map(i => (i.toLong, s"a$i")).toDF("k", "va"),
+        a, Seq("k"), 4, mode = org.apache.spark.sql.SaveMode.Append)
+      assert(Bucketed.currentGeneration(spark, a) == g0 + 1)
+      Bucketed.save((1 to 3500).map(i => (i.toLong, s"b$i")).toDF("k", "vb"),
+        "graft_snap_asof_b", Seq("k"), 4)
+      val joined = Bucketed.loadAsOf(spark, a, g0)
+        .join(Bucketed.load(spark, "graft_snap_asof_b"), Seq("k"))
+      assertNoExchange(joined)
+      assert(joined.select("k").as[Long].collect().toSet
+        == (1L to 3000L).toSet)
+      assert(joined.count() == 3000L)
+    }
+  }
+
+  test("a FileStats.loadWhere pruned frame keeps the bucket spec (zero-Exchange co-located join)") {
+    withoutAqeOrBroadcast("graft_snap_where_a", "graft_snap_where_b") {
+      val a = "graft_snap_where_a"
+      // two commits over disjoint v ranges: the range prunes the second
+      Bucketed.save((1 to 1500).map(i => (i.toLong, i.toLong)).toDF("k", "v"),
+        a, Seq("k"), 4)
+      Bucketed.save((1501 to 3000).map(i => (i.toLong, i.toLong)).toDF("k", "v"),
+        a, Seq("k"), 4, mode = org.apache.spark.sql.SaveMode.Append)
+      Bucketed.save((1 to 3000).map(i => (i.toLong, s"b$i")).toDF("k", "vb"),
+        "graft_snap_where_b", Seq("k"), 4)
+      val (kept, pruned) = FileStats.splitFiles(spark, a, "v", 1L, 1500L)
+      assert(kept.nonEmpty && pruned.nonEmpty, s"$kept / $pruned")
+      val joined = FileStats.loadWhere(spark, a, Seq(("v", 1L, 1500L)))
+        .join(Bucketed.load(spark, "graft_snap_where_b"), Seq("k"))
+      assertNoExchange(joined)
+      assert(joined.count() == 1500L)
+    }
   }
 }
